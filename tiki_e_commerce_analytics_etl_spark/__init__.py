@@ -1,20 +1,24 @@
-"""tiki_e_commerce_analytics_etl_spark — a PySpark-native analytics
-engine with the query and data-processing capabilities of
+"""tiki_e_commerce_analytics_etl_spark — the daily-batch ELT of
 MrSevennnn/Tiki-E-commerce-Analytics-ETL, re-expressed Spark-first.
+
+Each logical day fx → trends → tiki → analytics run as dependency DAGs,
+commit through ``acid`` and build the Golden Join mart, which readers
+query through ``acid.read_atomic``.
 
 Layout:
   session     — configured SparkSession factory (AQE, UTC, dynamic
                 partition overwrite)
   schemas     — explicit StructTypes for every table
   functions   — the scalar expression library (SURVEY.md §2.4)
-  io          — partitioned parquet read/write + schema conformance
-  operators   — dedup, merge/upsert, reshape, quality, similarity,
-                text analysis, multimodal plumbing
-  plans       — end-to-end query plans (golden join, snapshot
-                transform, trends, fx)
-  sources     — driver-side ingest adapters (REST → DataFrame)
-  streaming   — Structured Streaming wrappers for the incremental /
-                late-data semantics
+  acid        — manifest-committed tables: atomic partition overwrite,
+                snapshot reads, compaction and vacuum
+  operators   — merge/upsert, quality checks, reshape
+  plans       — the query plans (snapshot transform, trends, golden
+                join) plus the fixtures and testdata mapping the
+                oracle queries run on
+  sources     — driver-side ingest adapters (REST, trends CSV)
+  pipelines   — the DAG runner and the four daily pipelines plus
+                table maintenance
 """
 
 __version__ = "0.1.0"

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from tiki_e_commerce_analytics_etl_spark import schemas
 from tiki_e_commerce_analytics_etl_spark.functions import (
@@ -41,8 +42,6 @@ from tiki_e_commerce_analytics_etl_spark.functions import (
     parse_sales_volume,
     parse_snapshot_date,
 )
-from tiki_e_commerce_analytics_etl_spark.io import conform_schema
-from tiki_e_commerce_analytics_etl_spark.operators.dedup import keep_latest
 
 # P1 — rename map (transform_tiki.py:431-440).  Deliberately does NOT
 # rename _category_name (reference comment :432-434).
@@ -54,6 +53,42 @@ RENAME_MAP = {
     "quantity_sold": "sales_volume",
     "rating": "rating_average",
 }
+
+
+def conform_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """Project ``df`` onto ``schema``: missing columns become typed NULLs,
+    extra columns are dropped, order and types are enforced — the
+    reference's ordered-schema enforcement (transform_tiki.py:751-761)
+    as one ``select``."""
+    cols = []
+    existing = {c.lower(): c for c in df.columns}
+    for field in schema.fields:
+        src = existing.get(field.name.lower())
+        if src is not None:
+            cols.append(F.col(src).cast(field.dataType).alias(field.name))
+        else:
+            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
+    return df.select(*cols)
+
+
+def keep_latest(df: DataFrame, keys: list[str], order_col: str, tiebreakers: list[str] | None = None) -> DataFrame:
+    """D1 — latest row per key ≡ row_number() OVER (PARTITION BY keys
+    ORDER BY order_col DESC) = 1 (transform_tiki.py:582-587).
+
+    Implemented as ``max_by(struct(<all>), struct(order, tiebreak…))``
+    rather than a ranking window: the aggregate combines map-side, so
+    each input partition ships at most one candidate row per key to the
+    shuffle instead of sorting every row.  ``tiebreakers`` pins
+    determinism on order_col ties (struct ordering is lexicographic;
+    "latest, then highest tiebreaker" matches the desc/desc window
+    ordering).
+    """
+    order_struct = F.struct(order_col, *(tiebreakers or []))
+    row_struct = F.struct(*df.columns)
+    picked = df.groupBy(*keys).agg(
+        F.max_by(row_struct, order_struct).alias("__row")
+    )
+    return picked.select([F.col(f"__row.{c}").alias(c) for c in df.columns])
 
 
 def read_raw(spark: SparkSession, path: str, multiline: bool = True) -> DataFrame:

@@ -24,7 +24,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tiki_e_commerce_analytics_etl_spark.io import read_table
+
+
+def read_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
+    """Read one driver testdata table (TESTDATA.md layout).
+
+    The events table's ``ts`` has varied across driver testdata
+    generations — TIMESTAMP(NANOS) (reads as long nanos under
+    ``nanosAsLong``; converted with exact integer division because
+    ns-since-epoch exceeds double's 2^53 range) or naive TIMESTAMP(US)
+    (reads as TIMESTAMP_NTZ; cast to session-UTC TIMESTAMP).  Both
+    normalize to the same µs-UTC timestamp the engine standardizes on.
+    """
+    df = spark.read.parquet(f"{base_dir}/{name}.parquet")
+    if name == "events":
+        ts_type = dict(df.dtypes).get("ts")
+        if ts_type == "bigint":
+            # TIMESTAMP(NANOS) parquet under nanosAsLong
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        elif ts_type == "timestamp_ntz":
+            # Naive µs parquet (isAdjustedToUTC=false) infers as NTZ;
+            # the cast interprets the naive value in the (UTC) session
+            # zone — same instant, same wall-clock, oracle-identical.
+            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def build_mart_inputs(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -61,7 +61,7 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # Parquet TIMESTAMP(NANOS) columns (the driver's events table)
-        # surface as long nanos; io.read_table converts them to µs
+        # surface as long nanos; testdata_mapping.read_table converts them to µs
         # timestamps with exact integer math.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Local mode runs executors inside the driver JVM; pyspark's
