@@ -1,19 +1,13 @@
-"""Tests for the analytics mart (§3.3): the Golden Join plus its
-quality gate, as ``analytics_pipeline`` runs them, and the trends CSV
-source (S2)."""
+"""Tests for the analytics mart orchestration (§3.3) and the trends
+CSV source (S2)."""
 
 import datetime
 
 import pytest
 from pyspark.sql import functions as F
 
-from tiki_e_commerce_analytics_etl_spark.operators.quality import (
-    QualityCheckError,
-    mart_checks,
-    run_checks,
-    summary,
-)
-from tiki_e_commerce_analytics_etl_spark.plans.golden_join import golden_join
+from tiki_e_commerce_analytics_etl_spark.operators.quality import QualityCheckError
+from tiki_e_commerce_analytics_etl_spark.plans.analytics import build_daily_mart
 from tiki_e_commerce_analytics_etl_spark.sources.trends_csv import read_trends_csv
 
 
@@ -45,33 +39,38 @@ def mart_inputs(spark):
     return fact, dim_p, dim_c, mapping, trends, fx
 
 
-def test_golden_join_derived_columns_and_summary(spark, mart_inputs):
-    mart = golden_join(*mart_inputs, ds="2026-01-18")
+def test_build_daily_mart_writes_and_checks(spark, mart_inputs, tmp_path):
+    out = str(tmp_path / "mart")
+    mart, quality_row, summary_df = build_daily_mart(
+        *mart_inputs, ds="2026-01-18", output_path=out
+    )
     rows = {r.product_id: r for r in mart.collect()}
     assert rows["1"].trend_signal_status == "Full Data"
     assert rows["1"].price_usd_real == 1000.0
     assert rows["2"].trend_signal_status == "Unmapped"  # inactive mapping filtered
-    assert "inserted_at" not in mart.columns  # appended only by the writer
-    s = summary(mart).collect()[0]
+    s = summary_df.collect()[0]
     assert s.total_rows == 2 and s.full_data_rows == 1 and s.unmapped_rows == 1
 
+    written = spark.read.parquet(out)
+    assert written.count() == 2
+    assert "inserted_at" in written.columns  # appended only at write time
+    assert "inserted_at" not in mart.columns
 
-def test_mart_quality_gate_fails(spark, mart_inputs):
+
+def test_build_daily_mart_quality_gate_fails(spark, mart_inputs):
     fact, dim_p, dim_c, mapping, trends, fx = mart_inputs
     bad_fact = fact.withColumn("current_price", F.lit(-1).cast("long"))
-    mart = golden_join(bad_fact, dim_p, dim_c, mapping, trends, fx, ds="2026-01-18")
-    with pytest.raises(QualityCheckError, match="no_nonpositive_price"):
-        run_checks(mart, mart_checks())
+    with pytest.raises(QualityCheckError):
+        build_daily_mart(bad_fact, dim_p, dim_c, mapping, trends, fx, ds="2026-01-18")
 
 
-def test_golden_join_day_slice_only(spark, mart_inputs):
+def test_build_daily_mart_day_slice_only(spark, mart_inputs):
     fact, *rest = mart_inputs
     other_day = spark.createDataFrame(
         [(datetime.date(2026, 1, 17), 3, 5000, 5000, 0)], fact.schema
     )
-    mart = golden_join(fact.union(other_day), *rest, ds="2026-01-18")
+    mart, _, _ = build_daily_mart(fact.union(other_day), *rest, ds="2026-01-18")
     assert {str(r.date) for r in mart.collect()} == {"2026-01-18"}
-    assert run_checks(mart, mart_checks()).ok_partition_nonempty
 
 
 def test_read_trends_csv_date_column_variants(spark, tmp_path):

@@ -55,6 +55,26 @@ def test_write_bucketed_table_recovers_orphaned_location(spark):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+def test_write_bucketed_table_orphan_cleanup_stays_in_current_database(spark):
+    """With a non-default current database, overwriting an unqualified
+    name that is new there must clear only that database's location —
+    never the files of the same-named table in ``default``."""
+    table = "orphan_scope_tbl"
+    db = "orphan_scope_db"
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+    df = spark.range(0, 10).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    try:
+        write_bucketed_table(df, f"default.{table}", ["k"], n_buckets=2)
+        spark.catalog.setCurrentDatabase(db)
+        write_bucketed_table(df.filter(F.col("k") < 3), table, ["k"], n_buckets=2)
+        assert spark.table(f"{db}.{table}").count() == 3
+        assert spark.table(f"default.{table}").count() == 10
+    finally:
+        spark.catalog.setCurrentDatabase("default")
+        spark.sql(f"DROP TABLE IF EXISTS default.{table}")
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
 def test_golden_join_bucketed_fact_fact_no_shuffle(spark):
     """J4 fact-fact regime: the bucketed snapshot↔trends join runs with
     ZERO shuffle exchanges — only the keyword-mapping/product broadcasts

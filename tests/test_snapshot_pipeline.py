@@ -1,6 +1,6 @@
 """End-to-end test of the daily snapshot transform (SURVEY.md §3.1):
-raw crawler JSON → cleaned fact/dim tables → ``acid`` partition
-commits that replace only the days they carry.
+raw crawler JSON → cleaned fact/dim tables → partitioned parquet with
+idempotent dynamic-partition overwrite.
 
 Fixture rows follow FIXTURES.md §1: mixed-type price/discount/
 quantity_sold, duplicate product_ids with differing _extracted_at
@@ -13,7 +13,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from tiki_e_commerce_analytics_etl_spark import acid
+from tiki_e_commerce_analytics_etl_spark.io import write_partitioned
 from tiki_e_commerce_analytics_etl_spark.plans.snapshot import (
     conform_dom_strings,
     read_raw,
@@ -144,17 +144,18 @@ def test_dom_string_records_end_to_end(spark):
 
 
 def test_partition_overwrite_idempotent(spark, tmp_path):
-    """K3/K7 — a partition commit replaces only the written day; other
-    partitions survive (the reference's partition-decorator truncate
-    load, load_to_bq.py:159-199)."""
+    """K3/K7 — dynamic partition overwrite replaces only the written
+    day; other partitions survive (the reference's partition-decorator
+    truncate load, load_to_bq.py:159-199)."""
     path = str(tmp_path / "fact")
     day1 = spark.createDataFrame([(1, "2026-01-18", 10.0)], "id: long, d: string, v: double")
     day2 = spark.createDataFrame([(2, "2026-01-19", 20.0)], "id: long, d: string, v: double")
-    acid.atomic_overwrite_partitions(day1, path, ["d"])
-    acid.atomic_overwrite_partitions(day2, path, ["d"])
-    assert acid.read_atomic(spark, path).count() == 2  # day1 not clobbered
+    write_partitioned(day1, path, ["d"])
+    write_partitioned(day2, path, ["d"])
+    assert spark.read.parquet(path).count() == 2  # day1 not clobbered
 
     day2_fixed = spark.createDataFrame([(3, "2026-01-19", 99.0)], "id: long, d: string, v: double")
-    acid.atomic_overwrite_partitions(day2_fixed, path, ["d"])
-    rows = {(r.id, str(r.d), r.v) for r in acid.read_atomic(spark, path).collect()}
+    write_partitioned(day2_fixed, path, ["d"])
+    # partition-column values come back type-inferred (date), so compare as str
+    rows = {(r.id, str(r.d), r.v) for r in spark.read.parquet(path).collect()}
     assert rows == {(1, "2026-01-18", 10.0), (3, "2026-01-19", 99.0)}

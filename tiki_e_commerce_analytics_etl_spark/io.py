@@ -19,19 +19,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def conform_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Project ``df`` onto ``schema``: missing columns become typed NULLs,
-    extra columns are dropped, order and types are enforced."""
-    cols = []
-    existing = {c.lower(): c for c in df.columns}
-    for field in schema.fields:
-        src = existing.get(field.name.lower())
-        if src is not None:
-            cols.append(F.col(src).cast(field.dataType).alias(field.name))
-        else:
-            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-    return df.select(*cols)
+# Defined beside their daily-batch callers so the DAGs import them
+# without this module; re-exported for the existing callers.
+from tiki_e_commerce_analytics_etl_spark.plans.snapshot import conform_schema
+from tiki_e_commerce_analytics_etl_spark.plans.testdata_mapping import read_table
 
 
 def spread_small_scan(df: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
@@ -83,50 +74,14 @@ def spread_small_scan(df: DataFrame, bytes_per_task: int | None = None) -> DataF
         except ValueError:
             bytes_per_task = 65536
     est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    try:
-        max_pb = int(
-            df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes")
-        )
-    except Exception:  # noqa: BLE001 — conf may carry a "128m" suffix form
-        max_pb = 134217728
+    # The SQLConf getter parses size-suffixed values ("64m") to bytes.
+    max_pb = int(
+        df.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    )
     if est >= par * max_pb:
         return df  # the scan already yields >= parallelism splits
     width = min(par, max(2, -(-est // max(bytes_per_task, 1))))
     return df.repartition(width)
-
-
-def read_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
-    """Read one driver testdata table (TESTDATA.md layout).
-
-    The events table's ``ts`` has varied across driver testdata
-    generations — TIMESTAMP(NANOS) (reads as long nanos under
-    ``nanosAsLong``; converted with exact integer division because
-    ns-since-epoch exceeds double's 2^53 range) or naive TIMESTAMP(US)
-    (reads as TIMESTAMP_NTZ; cast to session-UTC TIMESTAMP).  Both
-    normalize to the same µs-UTC timestamp the engine standardizes on.
-
-    Note on scan parallelism: the local testdata tables are
-    single-row-group parquet files, so the FileScan yields one
-    partition.  A keyed repartition floor here was measured end-to-end
-    and REJECTED: the extra exchange plus forced-32-partition Arrow
-    batches cost more than the scan parallelism buys, because the
-    CPU-heavy per-document work is vectorized (operators/dedup.py
-    Arrow stages) rather than per-row.  On a real multi-file layout
-    the scan parallelism comes from splits, not from a repartition.
-    """
-    df = spark.read.parquet(f"{base_dir}/{name}.parquet")
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # TIMESTAMP(NANOS) parquet under nanosAsLong
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            # Naive µs parquet (isAdjustedToUTC=false) infers as NTZ;
-            # the engine standardizes on session-UTC TIMESTAMP, and the
-            # cast interprets the naive value in the (UTC) session zone
-            # — same instant, same wall-clock, oracle-identical.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
 
 
 def read_partitioned(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
@@ -264,7 +219,10 @@ def write_bucketed_table(
     LOCATION_ALREADY_EXISTS and ``DROP TABLE IF EXISTS`` can't help.
     For mode='overwrite' on an uncataloged table we remove the
     orphaned location first — same end state an overwrite of a
-    cataloged table would produce.
+    cataloged table would produce.  The location is derived from the
+    database the name resolves to (the current one when unqualified),
+    the same database ``tableExists`` looked in, so a table of another
+    database is never touched.
     """
     spark = df.sparkSession
     if mode == "overwrite" and not spark.catalog.tableExists(table):
@@ -272,16 +230,14 @@ def write_bucketed_table(
         import shutil as _shutil
         from urllib.parse import urlparse as _urlparse
 
-        warehouse = _urlparse(spark.conf.get("spark.sql.warehouse.dir"))
-        if warehouse.scheme in ("", "file"):  # local warehouse only; remote FS never orphans here
-            if "." in table:
-                db, _, name = table.rpartition(".")
-                rel = _os.path.join(f"{db.lower()}.db", name.lower())
-            else:
-                rel = table.lower()
-            path = _os.path.join(warehouse.path, rel)
-            if _os.path.isdir(path):
-                _shutil.rmtree(path, ignore_errors=True)
+        db, _, name = table.rpartition(".")
+        db = db or spark.catalog.currentDatabase()
+        if spark.catalog.databaseExists(db):
+            db_loc = _urlparse(spark.catalog.getDatabase(db).locationUri)
+            if db_loc.scheme in ("", "file"):  # local warehouse only; remote FS never orphans here
+                path = _os.path.join(db_loc.path, name.lower())
+                if _os.path.isdir(path):
+                    _shutil.rmtree(path, ignore_errors=True)
     writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)

@@ -21,34 +21,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# D1 keep_latest lives beside the snapshot transform so the daily DAGs
+# import it without numpy/pandas; re-exported here with its variants.
+from tiki_e_commerce_analytics_etl_spark.plans.snapshot import keep_latest
+
 
 # --------------------------------------------------------------------------
 # Reference dedup operators
 # --------------------------------------------------------------------------
-
-def keep_latest(df: DataFrame, keys: list[str], order_col: str, tiebreakers: list[str] | None = None) -> DataFrame:
-    """D1 — latest row per key ≡ row_number() OVER (PARTITION BY keys
-    ORDER BY order_col DESC) = 1 (transform_tiki.py:582-587).
-
-    Implemented as ``max_by(struct(<all>), struct(order, tiebreak…))``
-    rather than a ranking window: the aggregate does map-side partial
-    combining (Spark plans SortAggregate here — struct buffers aren't
-    hash-aggregable — but the partial step still runs before the
-    exchange), so each input partition ships at most one candidate row
-    per key to the shuffle — versus the window's full sort of every
-    row.  At 100 TB of daily crawl data that's the difference between
-    shuffling per-key winners and shuffling the whole table.
-    ``tiebreakers`` pins determinism on order_col ties (struct ordering
-    is lexicographic; "latest, then highest tiebreaker" matches the
-    desc/desc window ordering).
-    """
-    order_struct = F.struct(order_col, *(tiebreakers or []))
-    row_struct = F.struct(*df.columns)
-    picked = df.groupBy(*keys).agg(
-        F.max_by(row_struct, order_struct).alias("__row")
-    )
-    return picked.select([F.col(f"__row.{c}").alias(c) for c in df.columns])
-
 
 def keep_latest_window(df: DataFrame, keys: list[str], order_col: str, tiebreakers: list[str] | None = None) -> DataFrame:
     """Window-function formulation of keep_latest — same result; kept

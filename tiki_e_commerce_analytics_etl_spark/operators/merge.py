@@ -1,7 +1,7 @@
 """MERGE / upsert operators (SURVEY.md §2.1 K4-K6, §2.6 J6).
 
 The reference's three MERGE patterns, re-expressed as full-outer-join
-plans:
+plans over plain parquet (no ACID table format required):
 
   K4  dim_products   — MATCHED → take source attrs, keep target
                        created_at; NOT MATCHED → insert
@@ -13,15 +13,16 @@ plans:
                        (trends_dag.py:652-677)
 
 Scale notes: the join shuffles both sides on the merge key.  For a dim
-table this is small; a fact upsert should be bounded by partition
-(merge only the affected date partitions).  The pipelines commit the
-merged frame through ``acid.atomic_overwrite_partitions``, which keeps
-the read-modify-write idempotent.
+table this is small; for a 100 TB fact the upsert should be bounded by
+partition (merge only the affected date partitions — pass the
+incremental slice, not the full history).  Writing goes
+temp-path-then-swap via ``apply_merge`` to keep the read-modify-write
+idempotent.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -31,6 +32,7 @@ def merge_upsert(
     keys: list[str],
     target_wins: list[str] | tuple[str, ...] = (),
     immutable: list[str] | tuple[str, ...] = (),
+    update_timestamp_col: str | None = None,
 ) -> DataFrame:
     """Full-outer-join MERGE: one output row per key.
 
@@ -39,8 +41,12 @@ def merge_upsert(
         existing rows keep their original value; new rows take source's]
       - in ``target_wins``  → COALESCE(target, source)   [K5 manual-wins
         hybrid for category_name / standard_category]
-      - otherwise           → source's value on matched rows [source
-        wins — the plain MATCHED→UPDATE arm]
+      - otherwise           → COALESCE(source, target)   [source wins —
+        the plain MATCHED→UPDATE arm]
+
+    ``update_timestamp_col``: on rows present in source, take source's
+    value unconditionally (the reference sets ``updated_at =
+    CURRENT_TIMESTAMP()`` in the UPDATE arm, load_to_bq.py:283).
     """
     # Qualified-name references ("t.c"/"s.c") rather than df[col] so
     # target and source may share lineage (self-derived merges would
@@ -67,6 +73,8 @@ def merge_upsert(
     for c in target.columns:
         if c in keys:
             out_cols.append(F.coalesce(tc(c), sc(c)).alias(c))
+        elif c == update_timestamp_col:
+            out_cols.append(F.when(in_source, sc(c)).otherwise(tc(c)).alias(c))
         elif c in protected:
             out_cols.append(F.coalesce(tc(c), sc(c)).alias(c))
         elif c in source.columns:
@@ -86,3 +94,225 @@ def antijoin_new_rows(target: DataFrame, source: DataFrame, keys: list[str]) -> 
     """The WHEN NOT MATCHED INSERT arm alone (load_to_bq.py:288-298) —
     source rows whose key is absent from target."""
     return source.join(target.select(*keys), keys, "left_anti")
+
+
+def apply_merge(spark, merged: DataFrame, final_path: str, tmp_path: str) -> None:
+    """Materialize a merge result with the temp-write-then-swap dance so
+    the target is never read and overwritten in the same job (the
+    MERGE-without-ACID hazard, SURVEY.md §7.3)."""
+    merged.write.mode("overwrite").parquet(tmp_path)
+    spark.read.parquet(tmp_path).write.mode("overwrite").parquet(final_path)
+
+
+def scd2_from_history(
+    history: DataFrame,
+    keys: list[str],
+    attrs: list[str],
+    date_col: str,
+) -> DataFrame:
+    """SCD Type-2 dimension from an observed-state history: collapse
+    consecutive observations with unchanged ``attrs`` into validity
+    intervals (key, attrs, valid_from, valid_to), valid_to NULL for the
+    current version — the dimensional-modeling step the reference's
+    SCD1 MERGE loads (K4-K6) skip by overwriting in place.
+
+    Change detection is a lag over (keys ORDER BY date) on the attr
+    tuple; version ids are the running sum of change flags; intervals
+    close with lead(valid_from).  All three windows share the same
+    (keys, date/version) partitioning+ordering, so the plan is ONE
+    shuffle on the key (window nodes reuse the exchange) followed by a
+    partial-agg groupBy on (keys, version).  History rows per key are
+    bounded by the observation calendar, not corpus size — no skew.
+    """
+    attr_struct = F.struct(*attrs)
+    w = Window.partitionBy(*keys).orderBy(date_col)
+    # Null-safe change detection (IS DISTINCT FROM): a NULL attr value
+    # must compare equal to NULL, not poison the flag to "unchanged".
+    changed = F.when(
+        ~F.lag(attr_struct).over(w).eqNullSafe(attr_struct), 1
+    ).otherwise(0)
+    versioned = history.withColumn(
+        "__ver",
+        F.sum(changed).over(w.rowsBetween(Window.unboundedPreceding, 0)),
+    )
+    spans = versioned.groupBy(*keys, "__ver").agg(
+        *[F.first(a).alias(a) for a in attrs],
+        F.min(date_col).alias("valid_from"),
+    )
+    wv = Window.partitionBy(*keys).orderBy("__ver")
+    return spans.select(
+        *keys,
+        *attrs,
+        "valid_from",
+        F.lead("valid_from").over(wv).alias("valid_to"),
+    )
+
+
+def scd2_lookup(
+    facts: DataFrame,
+    dim: DataFrame,
+    keys: list[str],
+    ts_col: str,
+    valid_from: str = "valid_from",
+    valid_to: str = "valid_to",
+    how: str = "inner",
+) -> DataFrame:
+    """Point-in-time dimension lookup: each fact row joins the SCD2
+    version valid at its timestamp — key equality plus
+    ``valid_from <= ts < valid_to`` (NULL valid_to = open version).
+
+    Catalyst extracts the key equalities into a hash/sort-merge join
+    with the interval predicate as a residual filter, so this is ONE
+    key shuffle with no range binning: per-key version intervals are
+    non-overlapping by construction (each fact row matches at most
+    one), and versions per key are bounded by the change calendar, not
+    data volume — the dim side stays dimension-sized.  This is the
+    dimensional-modeling consumption step for ``scd2_from_history``'s
+    output (the reference's SCD1 overwrites cannot answer "what was
+    the price THEN" at all).
+    """
+    # explicit aliases: facts and dim often share lineage (the dim is
+    # built FROM the fact history), and DataFrame[col] == DataFrame[col]
+    # on a self-join can resolve both sides to one attribute (Spark
+    # warns "trivially true equals predicate"); alias-qualified columns
+    # are unambiguous on any Spark version
+    f, d = facts.alias("__scd_f"), dim.alias("__scd_d")
+    cond = None
+    for k in keys:
+        c = F.col(f"__scd_f.{k}") == F.col(f"__scd_d.{k}")
+        cond = c if cond is None else cond & c
+    cond = (
+        cond
+        & (F.col(f"__scd_f.{ts_col}") >= F.col(f"__scd_d.{valid_from}"))
+        & (
+            F.col(f"__scd_d.{valid_to}").isNull()
+            | (F.col(f"__scd_f.{ts_col}") < F.col(f"__scd_d.{valid_to}"))
+        )
+    )
+    joined = f.join(d, cond, how)
+    for k in keys:
+        joined = joined.drop(F.col(f"__scd_d.{k}"))
+    return joined
+
+
+def combine_aggregates(
+    existing: DataFrame | None,
+    delta: DataFrame,
+    keys: list[str],
+    sums: list[str] = (),
+    counts: list[str] = (),
+    mins: list[str] = (),
+    maxs: list[str] = (),
+) -> DataFrame:
+    """Incremental materialized-aggregate maintenance: fold a DELTA
+    batch into an existing aggregate table without re-reading history.
+
+    ``delta`` is raw rows; ``existing`` is a prior output of this
+    function (or None on the first run).  The combine is re-aggregation
+    of partials — union the existing aggregate rows with the delta's
+    partial aggregate and aggregate again (sum-of-sums, min-of-mins,
+    ...), the standard decomposable-aggregate identity.  One shuffle
+    on the keys; the existing side contributes one row per key, so the
+    cost is O(delta + |keys|) however large the history.  AVG callers
+    store sum+count and divide at read time; non-decomposable
+    aggregates (exact median/distinct) need sketches instead
+    (sketch_summary).
+
+    Output columns: keys, then ``{c}_sum``, ``{c}_count``, ``{c}_min``,
+    ``{c}_max``.  Sum columns should be decimal-cast upstream when
+    bit-exact cross-engine totals matter (see __spark_entry__._dec).
+    """
+    aggs = (
+        [F.sum(c).alias(f"{c}_sum") for c in sums]
+        + [F.count(c).alias(f"{c}_count") for c in counts]
+        + [F.min(c).alias(f"{c}_min") for c in mins]
+        + [F.max(c).alias(f"{c}_max") for c in maxs]
+    )
+    if not aggs:
+        raise ValueError("no aggregate columns requested")
+    partial = delta.groupBy(*keys).agg(*aggs)
+    if existing is None:
+        return partial
+    re_aggs = (
+        [F.sum(f"{c}_sum").alias(f"{c}_sum") for c in sums]
+        + [F.sum(f"{c}_count").alias(f"{c}_count") for c in counts]
+        + [F.min(f"{c}_min").alias(f"{c}_min") for c in mins]
+        + [F.max(f"{c}_max").alias(f"{c}_max") for c in maxs]
+    )
+    return existing.unionByName(partial).groupBy(*keys).agg(*re_aggs)
+
+
+def incremental_distinct(
+    existing: DataFrame | None,
+    delta: DataFrame,
+    keys: list[str],
+    col: str,
+    lg_k: int = 12,
+) -> DataFrame:
+    """Incremental APPROX-DISTINCT maintenance — the aggregate
+    ``combine_aggregates`` cannot fold (distinct is not decomposable
+    into scalar partials) becomes foldable as a mergeable DataSketches
+    HLL state: the delta aggregates to one sketch per key
+    (``hll_sketch_agg``), existing sketch rows union in
+    (``hll_union_agg``), and the estimate is read with
+    ``hll_sketch_estimate`` WITHOUT consuming the state.
+
+    Output: keys + ``{col}_hll`` (binary, feed back as ``existing``) +
+    ``{col}_approx_distinct``.  Standard HLL error ~1.04/sqrt(2^lg_k)
+    (~1.6% at lg_k=12).  Union of sketches is exactly the sketch of
+    the union, so a year of daily refreshes drifts no further than a
+    one-shot aggregate.  O(delta + keys·2^lg_k) per refresh.
+    """
+    sk = f"{col}_hll"
+    partial = delta.groupBy(*keys).agg(F.hll_sketch_agg(col, F.lit(lg_k)).alias(sk))
+    if existing is not None:
+        partial = (
+            existing.select(*keys, sk)
+            .unionByName(partial)
+            .groupBy(*keys)
+            .agg(F.hll_union_agg(sk).alias(sk))
+        )
+    return partial.withColumn(f"{col}_approx_distinct", F.hll_sketch_estimate(sk))
+
+
+def refresh_from_feed(
+    existing: DataFrame | None,
+    feed: DataFrame,
+    keys: list[str],
+    sums: list[str] = (),
+    change_col: str = "_change_type",
+) -> DataFrame:
+    """Maintain a materialized SUM/COUNT aggregate from a change-data
+    feed (``acid.changes_between`` rows tagged 'insert'/'delete') —
+    the delete-capable sibling of ``combine_aggregates``: inserts fold
+    in positively, deletes NEGATIVELY, so partition overwrites and
+    row deletions keep the aggregate exact without re-reading history.
+
+    Output: keys, ``{c}_sum`` per sum column, and ``n_rows`` (the live
+    row count per key); keys whose rows are all deleted drop out
+    (n_rows = 0).  Only decomposable-with-inverse aggregates are
+    possible here — MIN/MAX have no inverse, so a feed with deletes
+    cannot maintain them incrementally (recompute affected keys from
+    the snapshot instead).
+
+    Cost: O(feed + |keys|) — one hash agg of the feed, one re-agg
+    against the one-row-per-key existing table.  Sum columns should be
+    decimal upstream when bit-exact totals matter.
+    """
+    if not sums:
+        raise ValueError("no sum columns requested")
+    sign = F.when(F.col(change_col) == "insert", F.lit(1)).otherwise(F.lit(-1))
+    partial = feed.groupBy(*keys).agg(
+        *[F.sum(F.col(c) * sign).alias(f"{c}_sum") for c in sums],
+        F.sum(sign).alias("n_rows"),
+    )
+    if existing is not None:
+        partial = (
+            existing.unionByName(partial)
+            .groupBy(*keys)
+            .agg(
+                *[F.sum(f"{c}_sum").alias(f"{c}_sum") for c in sums],
+                F.sum("n_rows").alias("n_rows"),
+            )
+        )
+    return partial.where(F.col("n_rows") != 0)

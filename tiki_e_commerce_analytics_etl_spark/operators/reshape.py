@@ -1,5 +1,5 @@
-"""Reshaping operators (SURVEY.md §2.5): melt wide→long and
-union-concat.
+"""Reshaping operators (SURVEY.md §2.5): melt wide→long, union-concat,
+and the fact/dim split.
 
 R1 melt (transform_google_trends.py:44-78): trends CSV arrives wide —
 (date, <kw1>, …, <kwN>, isPartial) — and must become long
@@ -62,3 +62,11 @@ def union_concat(frames: list[DataFrame]) -> DataFrame:
     for f in frames[1:]:
         out = out.unionByName(f, allowMissingColumns=True)
     return out
+
+
+def split_projections(df: DataFrame, projections: dict[str, list]) -> dict[str, DataFrame]:
+    """R3 — one wide cleaned table → N conformed outputs in one pass.
+    Caches the parent so the common subplan is computed once, then
+    projects each output (transform_tiki.py:601-749)."""
+    df = df.cache()
+    return {name: df.select(*cols) for name, cols in projections.items()}

@@ -7,13 +7,14 @@ trigger rules.  This package gives the same operational semantics
 (dependencies, retries with delay, trigger rules, per-logical-date
 resume, single-active-run locking) without an Airflow dependency, and
 wires the reference's task graphs to the Spark-first plans in
-``plans/`` and the transactional sinks in ``acid``.
+``plans/`` and the transactional sinks in ``acid``/``io``.
 """
 
 from .runner import Context, Pipeline, PipelineLocked, Task, TaskResult
 from .dags import (
     analytics_pipeline,
     fx_pipeline,
+    ingest_maintenance_pipeline,
     maintenance_pipeline,
     tiki_pipeline,
     trends_pipeline,
@@ -27,6 +28,7 @@ __all__ = [
     "TaskResult",
     "analytics_pipeline",
     "fx_pipeline",
+    "ingest_maintenance_pipeline",
     "maintenance_pipeline",
     "tiki_pipeline",
     "trends_pipeline",

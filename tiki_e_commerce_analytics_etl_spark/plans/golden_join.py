@@ -7,10 +7,11 @@ price_usd_real (F17), trend_signal_status (F18) and the OBT casts (F16).
 
 Plan shape at scale: the fact is the only large input.  Every dim is
 broadcast (explicit hint; AQE would also pick this up from size) so
-the whole 5-way join is a single fact scan with no shuffle.  The
-is_active residual (J3) and the currency predicate (J5) are pushed
-into the build sides before the join, which keeps the broadcast
-tables minimal and makes the residual a plain equi-join.
+the whole 5-way join is a single fact scan with no shuffle until the
+optional write repartition.  The is_active residual (J3) and the
+currency predicate (J5) are pushed into the build sides before the
+join, which keeps the broadcast tables minimal and makes the residual
+a plain equi-join.
 """
 
 from __future__ import annotations
@@ -23,6 +24,71 @@ from tiki_e_commerce_analytics_etl_spark.functions import trend_signal_status, u
 FX_FALLBACK_RATE = 25400.0  # analytics_dag.py:57
 
 
+def golden_join_bucketed(
+    fact: DataFrame,
+    keyword_mapping: DataFrame,
+    dim_products: DataFrame,
+    trends: DataFrame,
+    n_buckets: int = 32,
+    fact_table: str = "gj_fact_bucketed",
+    trends_table: str = "gj_trends_bucketed",
+) -> DataFrame:
+    """J4 at the 100× fact-fact regime: when ``fact_google_trends`` is
+    itself a large fact (full keyword×date history), the broadcast in
+    ``golden_join`` stops applying and the J4 join becomes a sort-merge
+    with BOTH sides shuffling on (keyword, date) — per SURVEY §2.6.
+    This variant removes that shuffle entirely by pre-bucketing:
+
+      1. enrich the fact with ``trend_keyword`` via the (genuinely
+         small) keyword-mapping broadcast — the only broadcast left;
+      2. write the enriched fact AND the trends fact as bucketed tables
+         on the identical (trend_keyword, snapshot_date) key with the
+         same bucket count (io.write_bucketed_table; sorted within
+         buckets so the merge needs no sort);
+      3. join the catalog tables: zero Exchange on either side — the
+         plan a daily OBT rebuild wants when both inputs are rewritten
+         once and joined many times.
+
+    Returns (snapshot_date, product_id, current_price, trend_keyword,
+    trend_score).
+    The write is part of the demonstrated contract (bucket metadata
+    lives in the catalog), so this is a prepare-then-join builder, not
+    a pure plan function — tests/test_bucketed_join.py asserts the
+    no-shuffle property on the executed plan.
+    """
+    from tiki_e_commerce_analytics_etl_spark.io import write_bucketed_table
+
+    m = keyword_mapping.filter(F.col("is_active")).select(
+        "tiki_category_id", "trend_keyword"
+    )
+    p = dim_products.select("product_id", "category_id")
+    enriched = (
+        fact.join(F.broadcast(p), "product_id", "left")
+        .join(F.broadcast(m), p["category_id"] == m["tiki_category_id"], "left")
+        .select("snapshot_date", "product_id", "current_price", "trend_keyword")
+        .filter(F.col("trend_keyword").isNotNull())
+    )
+    t = trends.select(
+        F.col("keyword").alias("trend_keyword"),
+        F.col("date").alias("snapshot_date"),
+        "score",
+    )
+    keys = ["trend_keyword", "snapshot_date"]
+    write_bucketed_table(enriched, fact_table, keys, n_buckets, sort_cols=keys)
+    write_bucketed_table(t, trends_table, keys, n_buckets, sort_cols=keys)
+
+    spark = fact.sparkSession
+    fb = spark.table(fact_table)
+    tb = spark.table(trends_table)
+    return fb.join(tb, keys, "left").select(
+        "snapshot_date",
+        "product_id",
+        "current_price",
+        "trend_keyword",
+        F.col("score").cast("long").alias("trend_score"),
+    )
+
+
 def golden_join(
     fact: DataFrame,
     dim_products: DataFrame,
@@ -31,10 +97,18 @@ def golden_join(
     trends: DataFrame,
     fx: DataFrame,
     ds: str | None = None,
+    broadcast_dims: bool = True,
 ) -> DataFrame:
     """Build the One-Big-Table mart (deterministic core; the
     non-deterministic ``inserted_at`` is appended by the writer so
-    oracle hashing stays stable — SURVEY.md §7.3)."""
+    oracle hashing stays stable — SURVEY.md §7.3).
+
+    ``broadcast_dims=False`` drops the explicit broadcast hints for
+    deployments where a dim outgrows executor memory (e.g. a
+    billion-product dim_products): AQE then chooses per-join between
+    broadcast and shuffle from runtime sizes — prefer bucketing the
+    fact and dim on the join key (io.write_bucketed_table) to keep the
+    join exchange-free in that regime."""
     f = fact
     if ds is not None:
         # P7 — incremental day slice; prunes the fact scan to one partition.
@@ -51,16 +125,17 @@ def golden_join(
         .select(F.col("date").alias("e_date"), "rate")
     )
 
+    hint = F.broadcast if broadcast_dims else (lambda d: d)
     joined = (
-        f.join(F.broadcast(p), "product_id", "left")
-        .join(F.broadcast(c), "category_id", "left")
-        .join(F.broadcast(m), p["category_id"] == m["tiki_category_id"], "left")
+        f.join(hint(p), "product_id", "left")
+        .join(hint(c), "category_id", "left")
+        .join(hint(m), p["category_id"] == m["tiki_category_id"], "left")
         .join(
-            F.broadcast(t),
+            hint(t),
             (m["trend_keyword"] == t["keyword"]) & (f["snapshot_date"] == t["t_date"]),
             "left",
         )
-        .join(F.broadcast(e), f["snapshot_date"] == e["e_date"], "left")
+        .join(hint(e), f["snapshot_date"] == e["e_date"], "left")
     )
 
     return joined.select(

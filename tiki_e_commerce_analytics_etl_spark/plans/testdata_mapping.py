@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-
 def read_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
     """Read one driver testdata table (TESTDATA.md layout).
 
@@ -35,6 +34,15 @@ def read_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
     ns-since-epoch exceeds double's 2^53 range) or naive TIMESTAMP(US)
     (reads as TIMESTAMP_NTZ; cast to session-UTC TIMESTAMP).  Both
     normalize to the same µs-UTC timestamp the engine standardizes on.
+
+    Note on scan parallelism: the local testdata tables are
+    single-row-group parquet files, so the FileScan yields one
+    partition.  A keyed repartition floor here was measured end-to-end
+    and REJECTED: the extra exchange plus forced-32-partition Arrow
+    batches cost more than the scan parallelism buys, because the
+    CPU-heavy per-document work is vectorized (operators/dedup.py
+    Arrow stages) rather than per-row.  On a real multi-file layout
+    the scan parallelism comes from splits, not from a repartition.
     """
     df = spark.read.parquet(f"{base_dir}/{name}.parquet")
     if name == "events":

@@ -121,6 +121,17 @@ DIM_CATEGORIES_SCHEMA = T.StructType(
     ]
 )
 
+DIM_KEYWORD_MAPPING_SCHEMA = T.StructType(
+    [
+        T.StructField("mapping_id", T.LongType()),
+        T.StructField("tiki_category_id", T.LongType()),
+        T.StructField("tiki_category_name", T.StringType()),
+        T.StructField("trend_keyword", T.StringType()),
+        T.StructField("is_active", T.BooleanType()),
+        T.StructField("created_at", T.TimestampType()),
+    ]
+)
+
 FACT_GOOGLE_TRENDS_SCHEMA = T.StructType(
     [
         T.StructField("date", T.DateType()),
@@ -162,6 +173,17 @@ ANALYTICS_MART_SCHEMA = T.StructType(
         T.StructField("inserted_at", T.TimestampType()),
     ]
 )
+
+TABLE_SCHEMAS = {
+    "raw_products": RAW_PRODUCT_SCHEMA,
+    "fact_daily_snapshot": FACT_DAILY_SNAPSHOT_SCHEMA,
+    "dim_products": DIM_PRODUCTS_SCHEMA,
+    "dim_categories": DIM_CATEGORIES_SCHEMA,
+    "dim_keyword_mapping": DIM_KEYWORD_MAPPING_SCHEMA,
+    "fact_google_trends": FACT_GOOGLE_TRENDS_SCHEMA,
+    "dim_exchange_rate": DIM_EXCHANGE_RATE_SCHEMA,
+    "analytics_product_market_daily": ANALYTICS_MART_SCHEMA,
+}
 
 # Driver-supplied synthetic test tables (TESTDATA.md).
 TESTDATA_TABLES = (
