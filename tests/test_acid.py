@@ -390,6 +390,121 @@ def test_compact_conflict_with_concurrent_append(spark, tmp_path, monkeypatch):
     assert set(os.listdir(os.path.join(path, "data"))) <= refs
 
 
+def test_compact_conflict_when_writer_lands_after_snapshot_read(
+    spark, tmp_path, monkeypatch
+):
+    """The other CAS instant: a transactional writer commits right
+    after compaction READ its snapshot, so the stale compaction must
+    conflict before it stages any data and redo from the new snapshot.
+    The writer's rows and its (app, version) cursor both survive, so a
+    replay of its batch after the compaction is still a no-op."""
+    path = str(tmp_path / "t")
+    acid.atomic_overwrite_partitions(_mk(spark, "base"), path, ["p"])
+    late = _mk(spark, "late", n=20)
+
+    real_read = acid.read_atomic
+    injected = {"done": False}
+
+    def racing_read(spark_, p, *a, **kw):
+        df = real_read(spark_, p, *a, **kw)
+        if not injected["done"]:
+            injected["done"] = True
+            acid.atomic_overwrite_partitions(
+                late, path, ["p"], mode="append", txn_app="w", txn_version=1
+            )
+        return df
+
+    monkeypatch.setattr(acid, "read_atomic", racing_read)
+    v = acid.compact(spark, path, target_partitions=1)
+    monkeypatch.undo()
+
+    assert v == acid.latest_version(path) == 2  # base, late, compacted
+    assert _snapshot(spark, path) == (70, {"base", "late"}, {"a", "b"})
+    assert acid.last_txn_version(path, "w") == 1
+    assert acid.atomic_overwrite_partitions(
+        late, path, ["p"], mode="append", txn_app="w", txn_version=1
+    ) == -1
+    assert acid.latest_version(path) == 2
+    # the conflict fired before staging: no unreferenced txn dir
+    refs = set()
+    for ver in acid._list_versions(path):
+        for files in acid._read_manifest(path, ver)["partitions"].values():
+            refs |= {rel.split(os.sep)[1] for rel in files}
+    assert set(os.listdir(os.path.join(path, "data"))) == refs
+
+
+def test_txn_app_replay_is_skipped(spark, tmp_path):
+    """Idempotent producers: a commit whose (app, version) is at or
+    below the app's recorded cursor returns -1 without writing data or
+    burning a version; other apps keep their own cursors."""
+    path = str(tmp_path / "t")
+    with pytest.raises(ValueError, match="together"):
+        acid.atomic_overwrite_partitions(_mk(spark, "x"), path, ["p"], txn_app="a")
+    assert acid.last_txn_version(path, "a") == -1
+    assert acid.atomic_overwrite_partitions(
+        _mk(spark, "b0"), path, ["p"], txn_app="a", txn_version=0
+    ) == 0
+    assert acid.atomic_overwrite_partitions(
+        _mk(spark, "b1"), path, ["p"], txn_app="a", txn_version=1
+    ) == 1
+    txn_dirs = set(os.listdir(os.path.join(path, "data")))
+
+    # a replay is skipped before its data is written: this frame fails
+    # if any Spark job evaluates it
+    replay_df = _mk(spark, "replay").withColumn("boom", F.raise_error(F.lit("written")))
+    for replay in (1, 0):
+        assert acid.atomic_overwrite_partitions(
+            replay_df, path, ["p"], txn_app="a", txn_version=replay
+        ) == -1
+    assert acid.latest_version(path) == 1
+    assert set(os.listdir(os.path.join(path, "data"))) == txn_dirs
+    assert _snapshot(spark, path)[1] == {"b1"}
+
+    # another app's first batch lands; both cursors are carried forward
+    assert acid.atomic_overwrite_partitions(
+        _mk(spark, "other"), path, ["p"], txn_app="b", txn_version=0
+    ) == 2
+    assert (acid.last_txn_version(path, "a"), acid.last_txn_version(path, "b")) == (1, 0)
+    assert acid.table_history(path)[0]["app_versions"] == {"a": 1, "b": 0}
+
+
+def test_txn_app_replay_racing_inside_commit_loop(spark, tmp_path, monkeypatch):
+    """Two deliveries of the same (app, version) race: the second
+    passes the pre-write cursor check, then loses the manifest race to
+    the first.  Its retry must see the cursor inside the serialized
+    commit loop and return -1, dropping its staged copy, so the batch
+    lands exactly once."""
+    path = str(tmp_path / "t")
+    acid.atomic_overwrite_partitions(_mk(spark, "base"), path, ["p"])
+
+    real_open = os.open
+    injected = {"done": False}
+
+    def deliver_twice(p, *a, **kw):
+        sp = str(p)
+        if not injected["done"] and acid._MANIFEST_DIR in sp and sp.endswith(".tmp"):
+            injected["done"] = True
+            assert acid.atomic_overwrite_partitions(
+                _mk(spark, "first"), path, ["p"], txn_app="s", txn_version=5
+            ) == 1
+        return real_open(p, *a, **kw)
+
+    monkeypatch.setattr(os, "open", deliver_twice)
+    got = acid.atomic_overwrite_partitions(
+        _mk(spark, "second"), path, ["p"], txn_app="s", txn_version=5
+    )
+    monkeypatch.undo()
+
+    assert got == -1
+    assert acid.latest_version(path) == 1
+    assert _snapshot(spark, path)[1] == {"first"}
+    refs = set()
+    for ver in acid._list_versions(path):
+        for files in acid._read_manifest(path, ver)["partitions"].values():
+            refs |= {rel.split(os.sep)[1] for rel in files}
+    assert set(os.listdir(os.path.join(path, "data"))) == refs
+
+
 def test_partition_layout_mismatch_rejected(spark, tmp_path):
     path = str(tmp_path / "t")
     acid.atomic_overwrite_partitions(_mk(spark, "flat"), path)  # unpartitioned

@@ -121,88 +121,3 @@ def test_full_platform_e2e(spark, tmp_path):
     written = read_partitioned(spark, str(tmp_path / "mart"))
     assert written.count() == 8
     assert written.filter(F.col("trend_signal_status") == "Full Data").count() == 8
-
-
-def test_corpus_store_lifecycle_e2e(spark, tmp_path):
-    """The training-data platform loop in one flow: near-dup streaming
-    ingest (mixed plain/neardup variants on one store) → streaming
-    CMS+HLL stats maintenance → right-to-be-forgotten → chain-aware
-    maintenance DAG (compact + heal-before-vacuum) → cross-checked
-    final state: corpus/hashes/bands aligned, bloom has no false
-    negatives, sketch stats track the surviving corpus, forgotten
-    content is admissible again, and replays stay no-ops."""
-    from tiki_e_commerce_analytics_etl_spark import acid
-    from tiki_e_commerce_analytics_etl_spark.operators import bloom as bloom_ops
-    from tiki_e_commerce_analytics_etl_spark.operators import sketch as sketch_ops
-    from tiki_e_commerce_analytics_etl_spark.pipelines import (
-        ingest as ingest_mod,
-        ingest_maintenance_pipeline,
-    )
-    from tiki_e_commerce_analytics_etl_spark.streaming.incremental import (
-        foreach_batch_sketch_merge,
-        read_sketch_stats,
-    )
-
-    store = ingest_mod.IngestStore(str(tmp_path / "store"), m_bits=1 << 12)
-    stats_root = str(tmp_path / "stats")
-    sketch_sink = foreach_batch_sketch_merge(stats_root, "content_hash", app_id="st", width=256)
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu"
-
-    def docs(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    # batch 0 (neardup variant): one pair of in-batch near-dups
-    b0 = docs([(1, base), (2, base + " extra"), (3, "independent first topic words here")])
-    r0 = ingest_mod.ingest_batch_neardup(spark, store, b0, 0)
-    assert r0["admitted"] == 2
-    # batch 1 (PLAIN variant on the same store): band index must follow
-    wave = "second wave of entirely new content arriving with many extra words here"
-    b1 = docs([(4, wave), (5, base)])  # 5 = exact dup
-    r1 = ingest_mod.ingest_batch(spark, store, b1, 1)
-    assert r1["admitted"] == 1
-    # batch 2 (neardup): near-dup of the PLAIN-ingested doc 4
-    b2 = docs([(6, wave + " plus"), (7, "third topic closing words")])
-    r2 = ingest_mod.ingest_batch_neardup(spark, store, b2, 2)
-    assert r2["near_dup_rejected_history"] == 1 and r2["admitted"] == 1
-
-    # streaming stats: fold the admitted hashes (one micro-batch)
-    sketch_sink(acid.read_atomic(spark, store.corpus).select("content_hash"), 0)
-
-    # forget doc 1 (its near-dup family becomes admissible again)
-    ingest_mod.forget(spark, store, spark.createDataFrame([(1,)], "doc_id long"), 10)
-
-    # maintenance DAG: compact + heal + vacuum with tight retention
-    mp = ingest_maintenance_pipeline(str(tmp_path / "mstate"))
-    res = mp.run(
-        ds="2024-03-02",
-        spark=spark,
-        params={"store_root": str(tmp_path / "store"), "keep_versions": 1, "grace_seconds": 0.0},
-    )
-    assert all(t.state == "success" for t in res.values()), res
-
-    corpus = acid.read_atomic(spark, store.corpus)
-    ids = sorted(r.doc_id for r in corpus.collect())
-    assert ids == [3, 4, 7]
-    hashes = acid.read_atomic(spark, store.hashes)
-    assert hashes.count() == hashes.distinct().count() == 3
-    band_ids = sorted(set(r["__id"] for r in acid.read_atomic(spark, store.bands).collect()))
-    assert band_ids == ids
-    words = acid.read_atomic(spark, store.bloom)
-    flags = bloom_ops.bloom_probe(hashes, words, "content_hash", m_bits=store.m_bits, k=store.k)
-    assert flags.where(~F.col("maybe_seen")).count() == 0
-
-    # sketch stats (built pre-forget over 4 admitted hashes): HLL ~4
-    cells, hll = read_sketch_stats(spark, stats_root)
-    est = hll.collect()[0]["n_distinct"]
-    assert abs(est - 4) <= 1
-    # CMS point estimate for an admitted hash is >= its true count (1)
-    one_hash = hashes.limit(1)
-    got = sketch_ops.cms_estimate(one_hash, cells, "content_hash", width=256).collect()
-    assert got and got[0]["est"] >= 1
-
-    # forgotten content is admissible again through the neardup screen
-    r3 = ingest_mod.ingest_batch_neardup(spark, store, docs([(8, base)]), 3)
-    assert r3["admitted"] == 1
-    # and replays of every earlier batch remain no-ops
-    assert ingest_mod.ingest_batch(spark, store, b1, 1) == {"replay_skipped": True}
-    assert ingest_mod.ingest_batch_neardup(spark, store, b2, 2) == {"replay_skipped": True}

@@ -1,7 +1,5 @@
 """Tests for multimodal plumbing, streaming upsert, and REST adapters."""
 
-import time
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -361,16 +359,6 @@ def test_fx_fallback(spark):
     assert row["rate"] == 25400.0 and row["source"] == "Fallback"
     df = rest.to_fx_df(spark, row)
     assert df.collect()[0].rate == 25400.0
-
-
-def test_response_cache(tmp_path):
-    cache = rest.ResponseCache(str(tmp_path), ttl_s=60)
-    assert cache.get("k") is None
-    cache.put("k", {"v": 1})
-    assert cache.get("k") == {"v": 1}
-    expired = rest.ResponseCache(str(tmp_path), ttl_s=0.0)
-    time.sleep(0.01)
-    assert expired.get("k") is None
 
 
 def test_http_fetch_against_local_server(spark):

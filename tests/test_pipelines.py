@@ -335,63 +335,6 @@ def test_maintenance_pipeline_compacts_and_vacuums(spark, platform_dirs):
     assert acid._list_versions(path) == [acid.latest_version(path)]
 
 
-def test_ingest_maintenance_pipeline_heals_compacts_vacuums(spark, tmp_path, monkeypatch):
-    """The ingest-store maintenance DAG: compaction covers all four
-    chain tables, healing runs BEFORE the prune (a crashed chain left
-    behind converges), and retention drops superseded versions without
-    losing any invariant."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import (
-        ingest as ingest_mod,
-        ingest_maintenance_pipeline,
-    )
-
-    root = str(tmp_path / "store")
-    store = ingest_mod.IngestStore(root, m_bits=1 << 12)
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu"
-    ingest_mod.ingest_batch_neardup(
-        spark, store, _mk_docs(spark, [(1, base), (2, "distinct second doc words")]), 0
-    )
-    # crash batch 1 after the corpus commit (chain left un-healed)
-    orig = ingest_mod._commit_admitted
-
-    def crash(spark_, store_, admitted, batch_id, app_id):
-        acid_mod.atomic_overwrite_partitions(
-            admitted, store_.corpus, mode="append", txn_app=app_id, txn_version=batch_id
-        )
-        raise RuntimeError("crash after corpus commit")
-
-    monkeypatch.setattr(ingest_mod, "_commit_admitted", crash)
-    with pytest.raises(RuntimeError):
-        ingest_mod.ingest_batch_neardup(
-            spark, store, _mk_docs(spark, [(3, "third doc that crashes mid chain")]), 1
-        )
-    monkeypatch.setattr(ingest_mod, "_commit_admitted", orig)
-
-    mp = ingest_maintenance_pipeline(str(tmp_path / "state"))
-    res = mp.run(
-        ds="2024-03-05",
-        spark=spark,
-        params={"store_root": root, "keep_versions": 1, "grace_seconds": 0.0},
-    )
-    assert all(t.state == "success" for t in res.values()), res
-    # chain healed: bands cursor reached the crashed batch
-    assert acid_mod.last_txn_version(store.bands, "ingest") == 1
-    ids = sorted(r.doc_id for r in acid_mod.read_atomic(spark, store.corpus).collect())
-    assert ids == [1, 2, 3]
-    band_ids = sorted(
-        set(r["__id"] for r in acid_mod.read_atomic(spark, store.bands).collect())
-    )
-    assert band_ids == ids
-    # vacuumed to retention on every table
-    for t in (store.corpus, store.hashes, store.bloom, store.bands):
-        assert acid_mod._list_versions(t) == [acid_mod.latest_version(t)]
-    # replay of the crashed batch is a clean no-op post-maintenance
-    assert ingest_mod.ingest_batch_neardup(
-        spark, store, _mk_docs(spark, [(3, "third doc that crashes mid chain")]), 1
-    ) == {"replay_skipped": True}
-
-
 def test_parallel_execution_overlaps_independent_tasks():
     p = Pipeline("par")
     for name in ("a", "b", "c"):
@@ -463,1285 +406,22 @@ def test_keyboard_interrupt_aborts_run_not_retried():
     assert calls["n"] == 1 and slept == []  # no retry, no sleep
 
 
-def test_incremental_ingest_dedups_across_batches_exactly_once(spark, tmp_path):
-    """The bloom-gated ingest pipeline: in-batch dups collapse,
-    cross-batch dups are rejected via the maybe-seen exact check,
-    definitely-new rows skip the exact join (no false negatives ==
-    nothing new is ever dropped), replays are whole-batch no-ops, and
-    the final corpus is exactly the distinct content set."""
-    from tiki_e_commerce_analytics_etl_spark import acid
-    from tiki_e_commerce_analytics_etl_spark.pipelines.ingest import (
-        IngestStore,
-        ingest_batch,
+def test_pipelines_import_leaves_operator_library_unloaded():
+    """The daily batch imports only what its DAGs run: importing
+    ``pipelines`` in a fresh interpreter must not load pandas, the
+    curation dedup family, the legacy ``io`` sinks or ``streaming``."""
+    import subprocess
+    import sys
+
+    pkg = "tiki_e_commerce_analytics_etl_spark"
+    banned = ["pandas", f"{pkg}.operators.dedup", f"{pkg}.io", f"{pkg}.streaming"]
+    code = (
+        f"import sys, {pkg}.pipelines\n"
+        f"print([m for m in {banned!r} if m in sys.modules])\n"
     )
-
-    store = IngestStore(str(tmp_path / "corpus_root"), m_bits=1 << 12)
-    b0 = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta"), (3, "alpha  BETA")],  # 3 ~ 1
-        "doc_id long, text string",
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True, text=True, check=True, cwd=repo_root,
     )
-    r0 = ingest_batch(spark, store, b0, 0)
-    assert r0["admitted"] == 2 and r0["in_batch_dups"] == 1
-
-    b1 = spark.createDataFrame(
-        [(4, "gamma delta"), (5, "epsilon zeta")],  # 4 dups batch-0 content
-        "doc_id long, text string",
-    )
-    r1 = ingest_batch(spark, store, b1, 1)
-    assert r1["admitted"] == 1
-    # the cross-batch dup had to take the maybe-seen path (no FN)
-    assert r1["maybe_seen"] >= 1
-
-    # replay of batch 1: skipped whole
-    assert ingest_batch(spark, store, b1, 1) == {"replay_skipped": True}
-
-    corpus = acid.read_atomic(spark, store.corpus)
-    assert sorted(r.doc_id for r in corpus.collect()) == [1, 2, 5]
-    hashes = acid.read_atomic(spark, store.hashes)
-    assert hashes.count() == 3 == hashes.distinct().count()
-
-    # a third batch of entirely new content: everything admitted
-    b2 = spark.createDataFrame([(6, "eta theta")], "doc_id long, text string")
-    r2 = ingest_batch(spark, store, b2, 2)
-    assert r2["admitted"] == 1
-    assert acid.read_atomic(spark, store.corpus).count() == 4
-
-
-def test_forget_makes_content_admissible_again(spark, tmp_path):
-    """GDPR deletion over the ingest store: forgotten docs leave the
-    corpus AND their content becomes admissible again (hash + bloom
-    rebuilt); replays are no-ops."""
-    from tiki_e_commerce_analytics_etl_spark import acid
-    from tiki_e_commerce_analytics_etl_spark.pipelines.ingest import (
-        IngestStore,
-        forget,
-        ingest_batch,
-    )
-
-    store = IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    b0 = spark.createDataFrame(
-        [(1, "to be forgotten"), (2, "kept content")], "doc_id long, text string"
-    )
-    assert ingest_batch(spark, store, b0, 0)["admitted"] == 2
-
-    gone = spark.createDataFrame([(1,)], "doc_id long")
-    assert forget(spark, store, gone, 1) == {
-        "removed": 1,
-        "removed_quarantined": 0,
-    }
-    assert forget(spark, store, gone, 1) == {"replay_skipped": True}
-    assert sorted(r.doc_id for r in acid.read_atomic(spark, store.corpus).collect()) == [2]
-
-    # the same content re-ingests successfully; the kept content stays deduped
-    b1 = spark.createDataFrame(
-        [(9, "to be  FORGOTTEN"), (10, "kept content")], "doc_id long, text string"
-    )
-    r = ingest_batch(spark, store, b1, 2)
-    assert r["admitted"] == 1
-    assert sorted(r.doc_id for r in acid.read_atomic(spark, store.corpus).collect()) == [2, 9]
-
-
-def test_ingest_partial_crash_recovers_exact_admitted_set(spark, tmp_path, monkeypatch):
-    """Crash between the corpus commit and the downstream hashes/bloom
-    commits: the replay must NOT recompute admission from live state
-    (the exact check would now see the batch's own hashes and admit
-    nothing, leaving bloom missing those bits — silent duplicate
-    admission later).  It must recover the corpus commit's exact row
-    set from the change feed and finish the chain."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    b0 = spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string")
-    assert ingest_mod.ingest_batch(spark, store, b0, 0)["admitted"] == 1
-
-    # crash injection: let the corpus commit land, die before hashes
-    real_commit = acid_mod.atomic_overwrite_partitions
-    state = {"calls": 0}
-
-    def crashing(df, path, **kw):
-        state["calls"] += 1
-        if state["calls"] == 2:  # first call = corpus, second = hashes
-            raise RuntimeError("injected crash before hashes commit")
-        return real_commit(df, path, **kw)
-
-    b1 = spark.createDataFrame(
-        [(2, "gamma delta"), (3, "epsilon zeta")], "doc_id long, text string"
-    )
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", crashing)
-    with pytest.raises(RuntimeError, match="injected"):
-        ingest_mod.ingest_batch(spark, store, b1, 1)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", real_commit)
-
-    # corpus has batch 1, hashes/bloom do not
-    assert acid_mod.last_txn_version(store.corpus, "ingest") == 1
-    assert acid_mod.last_txn_version(store.hashes, "ingest") == 0
-    assert acid_mod.last_txn_version(store.bloom, "ingest") == 0
-
-    # replay finishes the chain with the EXACT committed set
-    r = ingest_mod.ingest_batch(spark, store, b1, 1)
-    assert r == {"recovered_replay": True, "healed_commits": 1}
-    assert acid_mod.last_txn_version(store.bloom, "ingest") == 1
-    assert acid_mod.read_atomic(spark, store.hashes).count() == 3
-
-    # second replay: fully durable now, skipped whole
-    assert ingest_mod.ingest_batch(spark, store, b1, 1) == {"replay_skipped": True}
-
-    # the invariant the bug would break: batch-1 content re-offered in
-    # a LATER batch must be rejected (bloom has the bits, hashes the rows)
-    b2 = spark.createDataFrame([(9, "gamma  DELTA")], "doc_id long, text string")
-    r2 = ingest_mod.ingest_batch(spark, store, b2, 2)
-    assert r2["admitted"] == 0 and r2["maybe_seen"] == 1
-    corpus = acid_mod.read_atomic(spark, store.corpus)
-    assert sorted(r.doc_id for r in corpus.collect()) == [1, 2, 3]
-
-
-def test_direct_vacuum_floor_keeps_unhealed_chain_recoverable(
-    spark, tmp_path, monkeypatch
-):
-    """The heal-before-vacuum invariant ENFORCED for direct
-    ``acid.vacuum`` calls (not just the vacuum_store wrapper): healing
-    a crashed commit diffs its corpus manifest against the
-    predecessor's, so an aggressive direct vacuum must retain both.
-    ``unhealed_floor`` computes the oldest manifest recovery needs;
-    vacuum with that floor retains it past keep_versions, and the
-    chain then heals to the exact admitted set."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    b0 = spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string")
-    assert ingest_mod.ingest_batch(spark, store, b0, 0)["admitted"] == 1
-    # healed store: no constraint on vacuum
-    assert ingest_mod.unhealed_floor(store) is None
-
-    # crash batch 1 between the corpus commit and the hashes commit
-    real_commit = acid_mod.atomic_overwrite_partitions
-    state = {"calls": 0}
-
-    def crashing(df, path, **kw):
-        state["calls"] += 1
-        if state["calls"] == 2:
-            raise RuntimeError("injected crash before hashes commit")
-        return real_commit(df, path, **kw)
-
-    b1 = spark.createDataFrame(
-        [(2, "gamma delta"), (3, "epsilon zeta")], "doc_id long, text string"
-    )
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", crashing)
-    with pytest.raises(RuntimeError, match="injected"):
-        ingest_mod.ingest_batch(spark, store, b1, 1)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", real_commit)
-
-    versions = acid_mod._list_versions(store.corpus)
-    # the floor is the PREDECESSOR of the un-healed commit (its change
-    # feed is a diff against it), i.e. the batch-0 manifest
-    floor = ingest_mod.unhealed_floor(store)
-    assert floor == versions[-2]
-
-    # aggressive direct vacuum WITH the floor: keep_versions=1 would
-    # normally retain only the latest manifest, but the floor keeps
-    # the predecessor recovery needs
-    acid_mod.vacuum(
-        store.corpus, keep_versions=1, grace_seconds=0.0, min_retain_version=floor
-    )
-    assert set(acid_mod._list_versions(store.corpus)) >= {versions[-2], versions[-1]}
-
-    # the chain still heals to the exact admitted set
-    r = ingest_mod.ingest_batch(spark, store, b1, 1)
-    assert r == {"recovered_replay": True, "healed_commits": 1}
-    assert sorted(
-        row.doc_id for row in acid_mod.read_atomic(spark, store.corpus).collect()
-    ) == [1, 2, 3]
-    assert acid_mod.read_atomic(spark, store.hashes).count() == 3
-    # healed: the floor constraint is gone and retention-only vacuum
-    # is safe again
-    assert ingest_mod.unhealed_floor(store) is None
-
-
-def test_forget_partial_crash_replay_converges(spark, tmp_path, monkeypatch):
-    """forget crash between corpus and hashes commits: the replay
-    re-derives from live state (idempotent) and finishes the chain —
-    the forgotten content ends admissible again."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    b0 = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta")], "doc_id long, text string"
-    )
-    ingest_mod.ingest_batch(spark, store, b0, 0)
-
-    real_commit = acid_mod.atomic_overwrite_partitions
-    state = {"calls": 0}
-
-    def crashing(df, path, **kw):
-        state["calls"] += 1
-        if state["calls"] == 2:
-            raise RuntimeError("injected crash")
-        return real_commit(df, path, **kw)
-
-    gone = spark.createDataFrame([(1,)], "doc_id long")
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", crashing)
-    with pytest.raises(RuntimeError, match="injected"):
-        ingest_mod.forget(spark, store, gone, 10)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", real_commit)
-
-    # bloom cursor has not advanced -> replay runs and converges
-    r = ingest_mod.forget(spark, store, gone, 10)
-    assert r["removed"] == 0  # already gone from corpus; commits catch up
-    assert acid_mod.last_txn_version(store.bloom, "forget") == 10
-
-    # the content is admissible again end to end
-    b1 = spark.createDataFrame([(7, "ALPHA beta")], "doc_id long, text string")
-    assert ingest_mod.ingest_batch(spark, store, b1, 1)["admitted"] == 1
-
-
-def _mk_docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_neardup_ingest_rejects_in_batch_and_history(spark, tmp_path):
-    """The persistent band index: in-batch near-dups drop the larger
-    id, later batches' near-dups of ADMITTED history are rejected via
-    the index probe + exact Jaccard rerank, exact dups still go the
-    hash path, and the band table only ever holds admitted docs."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu"
-    b0 = _mk_docs(
-        spark,
-        [
-            (1, base),
-            (2, base + " extra"),  # near-dup of 1 (jaccard 8/9), not exact
-            (3, "totally different words about another topic entirely here now"),
-        ],
-    )
-    r0 = ingest_mod.ingest_batch_neardup(spark, store, b0, 0)
-    assert r0["admitted"] == 2 and r0["near_dup_rejected_in_batch"] == 1
-    assert sorted(
-        r.doc_id for r in acid_mod.read_atomic(spark, store.corpus).collect()
-    ) == [1, 3]
-    # band index holds exactly the admitted docs
-    assert sorted(
-        set(r["__id"] for r in acid_mod.read_atomic(spark, store.bands).collect())
-    ) == [1, 3]
-
-    b1 = _mk_docs(
-        spark,
-        [
-            (10, base + " more"),   # near-dup of history doc 1
-            (11, base),             # EXACT dup of doc 1 -> hash path
-            (12, "completely fresh content nothing shared with anything prior at all"),
-        ],
-    )
-    r1 = ingest_mod.ingest_batch_neardup(spark, store, b1, 1)
-    assert r1["admitted"] == 1
-    assert r1["near_dup_rejected_history"] == 1
-    assert r1["content_new"] == 2  # exact dup died before the index probe
-    assert sorted(
-        r.doc_id for r in acid_mod.read_atomic(spark, store.corpus).collect()
-    ) == [1, 3, 12]
-
-    # replay: whole-batch no-op
-    assert ingest_mod.ingest_batch_neardup(spark, store, b1, 1) == {
-        "replay_skipped": True
-    }
-
-
-def test_neardup_ingest_partial_crash_recovers_band_index(spark, tmp_path, monkeypatch):
-    """Crash before the bands commit: replay must finish the index from
-    the corpus commit's recovered rows — otherwise later near-dups of
-    that batch sail past the probe."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    base = "one two three four five six seven eight nine ten eleven twelve"
-
-    real_commit = acid_mod.atomic_overwrite_partitions
-    state = {"calls": 0}
-
-    def crashing(df, path, **kw):
-        state["calls"] += 1
-        if state["calls"] == 4:  # corpus, hashes, bloom ok; die on bands
-            raise RuntimeError("injected crash before bands commit")
-        return real_commit(df, path, **kw)
-
-    b0 = _mk_docs(spark, [(1, base)])
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", crashing)
-    with pytest.raises(RuntimeError, match="injected"):
-        ingest_mod.ingest_batch_neardup(spark, store, b0, 0)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", real_commit)
-
-    r = ingest_mod.ingest_batch_neardup(spark, store, b0, 0)
-    assert r == {"recovered_replay": True, "healed_commits": 1}
-    assert acid_mod.last_txn_version(store.bands, "ingest") == 0
-
-    # the index now protects against near-dups of the recovered batch
-    b1 = _mk_docs(spark, [(2, base + " thirteen")])
-    r1 = ingest_mod.ingest_batch_neardup(spark, store, b1, 1)
-    assert r1["admitted"] == 0 and r1["near_dup_rejected_history"] == 1
-
-
-def test_variant_mixing_plain_ingest_maintains_band_index(spark, tmp_path):
-    """ingest_batch on a store that HAS a band index must keep the
-    index complete: its admitted docs get band rows, its replay cursor
-    and heal tail move to bands, and a later neardup batch rejects
-    near-dups of the plain-ingested content (the under-rejection
-    window the round-4 advice flagged)."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu"
-    # batch 0 through the neardup variant creates the band index
-    ingest_mod.ingest_batch_neardup(
-        spark, store, _mk_docs(spark, [(1, "seed words for the index alpha beta gamma delta epsilon zeta")]), 0
-    )
-    # batch 1 through the PLAIN variant — must still append band rows
-    r1 = ingest_mod.ingest_batch(spark, store, _mk_docs(spark, [(2, base)]), 1)
-    assert r1["admitted"] == 1
-    band_ids = set(
-        r["__id"] for r in acid_mod.read_atomic(spark, store.bands).collect()
-    )
-    assert 2 in band_ids, "plain ingest left the band index stale"
-    # plain replay keys on the bands cursor now
-    assert ingest_mod.ingest_batch(spark, store, _mk_docs(spark, [(2, base)]), 1) == {
-        "replay_skipped": True
-    }
-    # batch 2: near-dup of the PLAIN-ingested doc 2 must be rejected
-    r2 = ingest_mod.ingest_batch_neardup(
-        spark, store, _mk_docs(spark, [(3, base + " extra")]), 2
-    )
-    assert r2["near_dup_rejected_history"] == 1 and r2["admitted"] == 0
-
-
-def test_vacuum_store_heals_before_pruning(spark, tmp_path, monkeypatch):
-    """A crashed chain + an immediate aggressive vacuum: vacuum_store
-    must heal first, so the downstream tables converge and the crash
-    recovery never depends on files the prune removed."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    ingest_mod.ingest_batch(
-        spark, store, _mk_docs(spark, [(1, "first batch content words here")]), 0
-    )
-    # crash batch 1 after the corpus commit, before hashes/bloom
-    orig = ingest_mod._commit_admitted
-
-    def crash(spark_, store_, admitted, batch_id, app_id):
-        acid_mod.atomic_overwrite_partitions(
-            admitted, store_.corpus, mode="append", txn_app=app_id, txn_version=batch_id
-        )
-        raise RuntimeError("crash after corpus commit")
-
-    monkeypatch.setattr(ingest_mod, "_commit_admitted", crash)
-    with pytest.raises(RuntimeError):
-        ingest_mod.ingest_batch(
-            spark, store, _mk_docs(spark, [(2, "second batch brand new words")]), 1
-        )
-    monkeypatch.setattr(ingest_mod, "_commit_admitted", orig)
-
-    # aggressive vacuum with zero grace — must heal the chain first
-    ingest_mod.vacuum_store(spark, store, keep_versions=1, grace_seconds=0)
-    assert acid_mod.last_txn_version(store.bloom, "ingest") == 1
-    hashes = {
-        r["content_hash"]
-        for r in acid_mod.read_atomic(spark, store.hashes).collect()
-    }
-    assert len(hashes) == 2
-    # and a replay of the crashed batch is now a clean no-op
-    assert ingest_mod.ingest_batch(
-        spark, store, _mk_docs(spark, [(2, "second batch brand new words")]), 1
-    ) == {"replay_skipped": True}
-
-
-def test_pair_jaccard_rerank_is_exact(spark):
-    from tiki_e_commerce_analytics_etl_spark.pipelines.ingest import _pair_jaccard
-
-    df = spark.createDataFrame(
-        [
-            ("a b c d e f", "a b c d e f"),        # identical: j = 1.0
-            ("a b c d e f", "a b c d e g"),        # 2 shingles, 1 shared: 1/3
-            ("a b c d e", "v w x y z"),            # disjoint singles: 0.0
-        ],
-        "ta string, tb string",
-    )
-    js = [r["__j"] for r in _pair_jaccard(df, "ta", "tb", 5).collect()]
-    assert js[0] == 1.0
-    assert abs(js[1] - 1 / 3) < 1e-12
-    assert js[2] == 0.0
-
-
-def test_ingest_out_of_order_after_crash_heals_chain(spark, tmp_path, monkeypatch):
-    """A batch crashes mid-chain and is NEVER redelivered before the
-    next batch arrives: the next ingest must heal the chain first —
-    otherwise its screen runs against hashes/bloom missing committed
-    content and silently re-admits it."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    b0 = spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string")
-    ingest_mod.ingest_batch(spark, store, b0, 0)
-
-    real_commit = acid_mod.atomic_overwrite_partitions
-    state = {"calls": 0}
-
-    def crashing(df, path, **kw):
-        state["calls"] += 1
-        if state["calls"] == 2:  # corpus lands, hashes/bloom don't
-            raise RuntimeError("injected crash")
-        return real_commit(df, path, **kw)
-
-    b1 = spark.createDataFrame([(2, "gamma delta")], "doc_id long, text string")
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", crashing)
-    with pytest.raises(RuntimeError, match="injected"):
-        ingest_mod.ingest_batch(spark, store, b1, 1)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", real_commit)
-
-    # batch 2 arrives directly — containing batch 1's content again
-    b2 = spark.createDataFrame(
-        [(3, "GAMMA delta"), (4, "fresh words")], "doc_id long, text string"
-    )
-    r2 = ingest_mod.ingest_batch(spark, store, b2, 2)
-    assert r2["admitted"] == 1  # the re-offered gamma-delta is rejected
-    assert acid_mod.last_txn_version(store.bloom, "ingest") == 2  # chain level
-    corpus = acid_mod.read_atomic(spark, store.corpus)
-    assert sorted(r.doc_id for r in corpus.collect()) == [1, 2, 4]
-    hashes = acid_mod.read_atomic(spark, store.hashes)
-    assert hashes.count() == 3 == hashes.distinct().count()
-
-
-def test_forget_scrubs_band_index(spark, tmp_path):
-    """Band rows are content-derived data: forget must remove the
-    forgotten docs' rows from the index (and the content must be
-    re-admissible through the near-dup screen afterwards)."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu"
-    b0 = _mk_docs(spark, [(1, base), (2, "other topic entirely with different words")])
-    ingest_mod.ingest_batch_neardup(spark, store, b0, 0)
-
-    ingest_mod.forget(spark, store, spark.createDataFrame([(1,)], "doc_id long"), 10)
-    assert sorted(
-        set(r["__id"] for r in acid_mod.read_atomic(spark, store.bands).collect())
-    ) == [2]
-
-    # a NEAR-dup of the forgotten content is admissible again (exact
-    # screen passes — different hash — and no band rows remain to match)
-    b1 = _mk_docs(spark, [(3, base + " extra")])
-    r1 = ingest_mod.ingest_batch_neardup(spark, store, b1, 1)
-    assert r1["admitted"] == 1
-
-
-def test_forget_after_crashed_ingest_does_not_resurrect(spark, tmp_path, monkeypatch):
-    """The interleaving that used to resurrect forgotten content:
-    ingest batch N crashes after its corpus commit, a forget for a doc
-    of batch N then completes, and a later ingest heals the chain.
-    forget must heal FIRST — otherwise the later heal replays batch
-    N's change feed into the forget-rewritten hashes/bloom and the
-    forgotten content becomes permanently inadmissible."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    b0 = spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string")
-    ingest_mod.ingest_batch(spark, store, b0, 0)
-
-    real_commit = acid_mod.atomic_overwrite_partitions
-    state = {"calls": 0}
-
-    def crashing(df, path, **kw):
-        state["calls"] += 1
-        if state["calls"] == 2:  # corpus commit lands, hashes/bloom don't
-            raise RuntimeError("injected crash")
-        return real_commit(df, path, **kw)
-
-    b1 = spark.createDataFrame([(2, "gamma delta")], "doc_id long, text string")
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", crashing)
-    with pytest.raises(RuntimeError, match="injected"):
-        ingest_mod.ingest_batch(spark, store, b1, 1)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", real_commit)
-
-    # forget doc 2 (committed to corpus by the crashed batch)
-    ingest_mod.forget(spark, store, spark.createDataFrame([(2,)], "doc_id long"), 10)
-    assert sorted(
-        r.doc_id for r in acid_mod.read_atomic(spark, store.corpus).collect()
-    ) == [1]
-
-    # a later ingest heals whatever is left — and must NOT resurrect
-    # doc 2's hash: its content stays admissible
-    b2 = spark.createDataFrame([(3, "GAMMA  delta")], "doc_id long, text string")
-    r2 = ingest_mod.ingest_batch(spark, store, b2, 2)
-    assert r2["admitted"] == 1
-    corpus = acid_mod.read_atomic(spark, store.corpus)
-    assert sorted(r.doc_id for r in corpus.collect()) == [1, 3]
-    hashes = acid_mod.read_atomic(spark, store.hashes)
-    assert hashes.count() == hashes.distinct().count() == 2
-
-
-@pytest.mark.parametrize("crash_at", [1, 2, 3, 4])
-def test_ingest_crash_matrix_invariants(spark, tmp_path, monkeypatch, crash_at):
-    """Exhaustive crash positions across the neardup commit chain
-    (corpus=1, hashes=2, bloom=3, bands=4): after the NEXT batch heals,
-    the store invariants hold regardless of where the crash landed —
-    hashes are exactly one distinct row per corpus doc, the band index
-    covers exactly the corpus ids, and the bloom has no false
-    negatives against the hash table.  A crash BEFORE the corpus
-    commit loses the batch until the source redelivers it (exactly the
-    streaming checkpoint contract); any later crash point preserves
-    it."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.operators import bloom as bloom_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    b0 = _mk_docs(spark, [(1, "seed content for the store with many words")])
-    ingest_mod.ingest_batch_neardup(spark, store, b0, 0)
-
-    real_commit = acid_mod.atomic_overwrite_partitions
-    state = {"calls": 0}
-
-    def crashing(df, path, **kw):
-        state["calls"] += 1
-        if state["calls"] == crash_at:
-            raise RuntimeError("injected crash")
-        return real_commit(df, path, **kw)
-
-    b1 = _mk_docs(spark, [(2, "crashing batch body with distinctive vocabulary here")])
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", crashing)
-    with pytest.raises(RuntimeError, match="injected"):
-        ingest_mod.ingest_batch_neardup(spark, store, b1, 1)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", real_commit)
-
-    # the next batch arrives out-of-order (no redelivery of batch 1)
-    b2 = _mk_docs(spark, [(3, "an entirely separate third document about nothing")])
-    ingest_mod.ingest_batch_neardup(spark, store, b2, 2)
-
-    corpus = acid_mod.read_atomic(spark, store.corpus)
-    ids = sorted(r.doc_id for r in corpus.collect())
-    # crash before the corpus commit loses the batch until redelivery;
-    # any crash after it must preserve the batch through healing
-    assert ids == ([1, 3] if crash_at == 1 else [1, 2, 3])
-
-    hashes = acid_mod.read_atomic(spark, store.hashes)
-    assert hashes.count() == hashes.distinct().count() == len(ids)
-    band_ids = sorted(set(r["__id"] for r in acid_mod.read_atomic(spark, store.bands).collect()))
-    assert band_ids == ids
-    # bloom no-false-negative invariant vs the hash table
-    words = acid_mod.read_atomic(spark, store.bloom)
-    flags = bloom_mod.bloom_probe(
-        hashes, words, "content_hash", m_bits=store.m_bits, k=store.k
-    )
-    assert flags.where(~F.col("maybe_seen")).count() == 0
-
-
-@pytest.mark.parametrize("crash_at", [1, 2, 3, 4])
-def test_crash_matrix_with_aggressive_vacuum_floor(
-    spark, tmp_path, monkeypatch, crash_at
-):
-    """The round-6 vacuum floor under the full crash matrix: after a
-    crash at EVERY chain position, an aggressive direct vacuum
-    (keep_versions=1, zero grace, ``min_retain_version`` from
-    ``unhealed_floor``) runs over every store table BEFORE the next
-    batch arrives — and healing must still recover the exact admitted
-    set and all store invariants.  Without the floor, positions 2-4
-    (crash after the corpus commit) would lose the predecessor
-    manifest the change-feed replay diffs against."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.operators import bloom as bloom_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    b0 = _mk_docs(spark, [(1, "seed content for the store with many words")])
-    ingest_mod.ingest_batch_neardup(spark, store, b0, 0)
-
-    real_commit = acid_mod.atomic_overwrite_partitions
-    state = {"calls": 0}
-
-    def crashing(df, path, **kw):
-        state["calls"] += 1
-        if state["calls"] == crash_at:
-            raise RuntimeError("injected crash")
-        return real_commit(df, path, **kw)
-
-    b1 = _mk_docs(spark, [(2, "crashing batch body with distinctive vocabulary here")])
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", crashing)
-    with pytest.raises(RuntimeError, match="injected"):
-        ingest_mod.ingest_batch_neardup(spark, store, b1, 1)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", real_commit)
-
-    # aggressive direct vacuum mid-crash: the floor must keep recovery
-    # possible (None when the crash landed before the corpus commit)
-    floor = ingest_mod.unhealed_floor(store)
-    assert (floor is None) == (crash_at == 1)
-    for t in (store.corpus, store.hashes, store.bloom, store.bands):
-        if ingest_mod._has_table(t):
-            acid_mod.vacuum(
-                t,
-                keep_versions=1,
-                grace_seconds=0.0,
-                min_retain_version=floor if t == store.corpus else None,
-            )
-
-    b2 = _mk_docs(spark, [(3, "an entirely separate third document about nothing")])
-    ingest_mod.ingest_batch_neardup(spark, store, b2, 2)
-
-    ids = sorted(
-        r.doc_id for r in acid_mod.read_atomic(spark, store.corpus).collect()
-    )
-    assert ids == ([1, 3] if crash_at == 1 else [1, 2, 3])
-    hashes = acid_mod.read_atomic(spark, store.hashes)
-    assert hashes.count() == hashes.distinct().count() == len(ids)
-    band_ids = sorted(
-        set(r["__id"] for r in acid_mod.read_atomic(spark, store.bands).collect())
-    )
-    assert band_ids == ids
-    words = acid_mod.read_atomic(spark, store.bloom)
-    flags = bloom_mod.bloom_probe(
-        hashes, words, "content_hash", m_bits=store.m_bits, k=store.k
-    )
-    assert flags.where(~F.col("maybe_seen")).count() == 0
-
-
-def _store_state(spark, acid_mod, store):
-    """(corpus multiset, hashes multiset, band-index multiset) — the
-    byte-comparable state of an ingest store."""
-    corpus = sorted(
-        (r.doc_id, r.text, r.content_hash)
-        for r in acid_mod.read_atomic(spark, store.corpus).collect()
-    )
-    hashes = sorted(
-        r.content_hash for r in acid_mod.read_atomic(spark, store.hashes).collect()
-    )
-    try:
-        bands = sorted(
-            tuple(r) for r in acid_mod.read_atomic(spark, store.bands).collect()
-        )
-    except FileNotFoundError:
-        bands = []
-    return corpus, hashes, bands
-
-
-def _run_batches(spark, ingest_mod, store, batches):
-    for i, b in enumerate(batches):
-        ingest_mod.ingest_batch_neardup(spark, store, b, i)
-
-
-@pytest.mark.parametrize("compact_after", [1, 2, 3, 4])
-def test_compact_interleaves_mid_ingest_chain(spark, tmp_path, monkeypatch, compact_after):
-    """Maintenance compaction fires at EVERY position inside a live
-    ingest commit chain (after corpus=1 / hashes=2 / bloom=3 /
-    bands=4): the chain keeps committing on top of the compacted
-    versions, a following batch ingests normally, and the final corpus
-    multiset + hash set + band index are identical to the serial
-    schedule (all batches, then compact).  Extends the crash matrix:
-    same positions, but the interleaver is a concurrent WRITER, not a
-    crash."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu"
-    mk = lambda rows: _mk_docs(spark, rows)  # noqa: E731
-    batches = [
-        [(1, base), (2, "another topic with its own distinct vocabulary set")],
-        [(3, base + " extra"), (4, "fresh content for the second batch here")],
-        [(5, "third batch document entirely unlike the previous ones")],
-    ]
-
-    # serial reference: all batches, then compact everything
-    serial = ingest_mod.IngestStore(str(tmp_path / "serial"), m_bits=1 << 12)
-    _run_batches(spark, ingest_mod, serial, [mk(b) for b in batches])
-    for t in (serial.corpus, serial.hashes, serial.bloom, serial.bands):
-        acid_mod.compact(spark, t)
-    want = _store_state(spark, acid_mod, serial)
-
-    # raced store: compact ALL tables mid-chain of batch 1
-    raced = ingest_mod.IngestStore(str(tmp_path / "raced"), m_bits=1 << 12)
-    ingest_mod.ingest_batch_neardup(spark, raced, mk(batches[0]), 0)
-
-    real_commit = acid_mod.atomic_overwrite_partitions
-    state = {"calls": 0, "in_compact": False}
-
-    def interleaving(df, path, *a, **kw):
-        if state["in_compact"]:
-            return real_commit(df, path, *a, **kw)
-        out = real_commit(df, path, *a, **kw)
-        state["calls"] += 1
-        if state["calls"] == compact_after:
-            state["in_compact"] = True
-            try:
-                for t in (raced.corpus, raced.hashes, raced.bloom, raced.bands):
-                    if acid_mod.latest_version(t) is not None:
-                        acid_mod.compact(spark, t)
-            finally:
-                state["in_compact"] = False
-        return out
-
-    monkeypatch.setattr(acid_mod, "atomic_overwrite_partitions", interleaving)
-    ingest_mod.ingest_batch_neardup(spark, raced, mk(batches[1]), 1)
-    monkeypatch.setattr(acid_mod, "atomic_overwrite_partitions", real_commit)
-    ingest_mod.ingest_batch_neardup(spark, raced, mk(batches[2]), 2)
-    for t in (raced.corpus, raced.hashes, raced.bloom, raced.bands):
-        acid_mod.compact(spark, t)
-
-    assert _store_state(spark, acid_mod, raced) == want
-    # replay of the raced batch is still a whole-batch no-op
-    assert ingest_mod.ingest_batch_neardup(spark, raced, mk(batches[1]), 1) == {
-        "replay_skipped": True
-    }
-
-
-def test_compact_loses_race_to_ingest_and_retries(spark, tmp_path, monkeypatch):
-    """The CAS race from the compact side: an ingest commit lands
-    BETWEEN compaction's snapshot read and its commit.  The stale
-    commit must raise CommitConflict internally and the retry must
-    recompact from the new snapshot — the concurrent batch's rows
-    survive, byte-identical to the serial schedule."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    b0 = _mk_docs(spark, [(1, "first committed document with several words")])
-    b1 = _mk_docs(spark, [(2, "the racing batch that lands mid compaction")])
-
-    serial = ingest_mod.IngestStore(str(tmp_path / "serial"), m_bits=1 << 12)
-    ingest_mod.ingest_batch(spark, serial, b0, 0)
-    ingest_mod.ingest_batch(spark, serial, b1, 1)
-    acid_mod.compact(spark, serial.corpus)
-    want = _store_state(spark, acid_mod, serial)
-
-    raced = ingest_mod.IngestStore(str(tmp_path / "raced"), m_bits=1 << 12)
-    ingest_mod.ingest_batch(spark, raced, b0, 0)
-
-    real_read = acid_mod.read_atomic
-    state = {"injected": False}
-
-    def racing_read(spark_, path, version=None, **kw):
-        df = real_read(spark_, path, version=version, **kw)
-        if path == raced.corpus and not state["injected"]:
-            state["injected"] = True  # set FIRST: ingest reads too
-            ingest_mod.ingest_batch(spark, raced, b1, 1)
-        return df
-
-    monkeypatch.setattr(acid_mod, "read_atomic", racing_read)
-    acid_mod.compact(spark, raced.corpus)
-    monkeypatch.setattr(acid_mod, "read_atomic", real_read)
-    # batch 1's chain finished inside the race; states must match
-    assert _store_state(spark, acid_mod, raced) == want
-    assert ingest_mod.ingest_batch(spark, raced, b1, 1) == {"replay_skipped": True}
-
-
-def test_substring_ingest_incremental_equals_oneshot(spark, tmp_path):
-    """Round 10: batch-incremental exact-substring dedup ≡ the
-    one-shot operator on the union.  Three batches with in-batch,
-    adjacent-batch, and batch-1-vs-batch-3 shared spans: the union of
-    per-batch pairs_df outputs AND substring_pairs_from_index must
-    both equal exact_substring_pairs over the final corpus."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.operators import dedup as dedup_ops
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    span = "the quick brown fox jumps over the lazy dog tonight"
-    other = "completely different words about ships and harbors on tuesday"
-    batches = [
-        [  # in-batch pair (1, 2)
-            (1, f"intro words then {span} and a tail"),
-            (2, f"{span} with another ending entirely"),
-            (3, other),
-        ],
-        [  # cross-batch pair (1, 4), (2, 4)
-            (4, f"prefix {span} suffix words here"),
-            (5, "no shared content in this document at all whatsoever"),
-        ],
-        [  # batch-1-vs-batch-3 pair incl. doc 3's other-span; short doc
-            (6, f"{other} trailing extra"),
-            (7, "tiny doc"),
-        ],
-    ]
-    incremental = []
-    for i, rows in enumerate(batches):
-        r = ingest_mod.ingest_batch_substring(spark, store, _mk_docs(spark, rows), i)
-        assert r["admitted"] == len(rows)
-        incremental += [
-            (p["id_a"], p["id_b"], p["shared_windows"], p["max_run_words"])
-            for p in r["pairs_df"].collect()
-        ]
-
-    corpus = acid_mod.read_atomic(spark, store.corpus)
-    want = sorted(
-        (p["id_a"], p["id_b"], p["shared_windows"], p["max_run_words"])
-        for p in dedup_ops.exact_substring_pairs(
-            corpus, min_words=store.substring_k
-        ).collect()
-    )
-    assert sorted(incremental) == want
-    assert want  # the fixture genuinely creates pairs
-    got_index = sorted(
-        (p["id_a"], p["id_b"], p["shared_windows"], p["max_run_words"])
-        for p in ingest_mod.substring_pairs_from_index(spark, store).collect()
-    )
-    assert got_index == want
-
-    # replay: whole-batch no-op, no duplicate index rows
-    assert ingest_mod.ingest_batch_substring(
-        spark, store, _mk_docs(spark, batches[0]), 0
-    ) == {"replay_skipped": True}
-    anchors = acid_mod.read_atomic(spark, store.anchors)
-    assert anchors.count() == anchors.distinct().count()
-
-
-@pytest.mark.parametrize("crash_at", [1, 2, 3, 4])
-def test_substring_ingest_crash_matrix_invariants(spark, tmp_path, monkeypatch, crash_at):
-    """Exhaustive crash positions across the substring commit chain
-    (corpus=1, hashes=2, bloom=3, anchors=4): after the NEXT batch
-    heals, anchor rows cover exactly the corpus docs (>= k words) and
-    the index-derived pair set still equals the one-shot operator on
-    the healed corpus — the anchor table obeys the same
-    reconstructible-from-change-feed contract as bands."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.operators import dedup as dedup_ops
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    span = "many moons ago a caravan crossed the salt desert slowly"
-    b0 = _mk_docs(spark, [(1, f"begin {span} end")])
-    ingest_mod.ingest_batch_substring(spark, store, b0, 0)
-
-    real_commit = acid_mod.atomic_overwrite_partitions
-    state = {"calls": 0}
-
-    def crashing(df, path, **kw):
-        state["calls"] += 1
-        if state["calls"] == crash_at:
-            raise RuntimeError("injected crash")
-        return real_commit(df, path, **kw)
-
-    b1 = _mk_docs(spark, [(2, f"another copy holding {span} within it")])
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", crashing)
-    with pytest.raises(RuntimeError, match="injected"):
-        ingest_mod.ingest_batch_substring(spark, store, b1, 1)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", real_commit)
-
-    # next batch arrives out-of-order (no redelivery of batch 1) and
-    # shares the span too: its probe must see the HEALED index
-    b2 = _mk_docs(spark, [(3, f"third rendition of {span} again")])
-    r2 = ingest_mod.ingest_batch_substring(spark, store, b2, 2)
-
-    corpus = acid_mod.read_atomic(spark, store.corpus)
-    ids = sorted(r.doc_id for r in corpus.collect())
-    assert ids == ([1, 3] if crash_at == 1 else [1, 2, 3])
-    anchor_ids = sorted(
-        set(r["__id"] for r in acid_mod.read_atomic(spark, store.anchors).collect())
-    )
-    assert anchor_ids == ids
-    # batch 2's own pair detection saw the healed batch-1 doc
-    expected_partners = {1} if crash_at == 1 else {1, 2}
-    got_partners = {
-        p["id_a"] for p in r2["pairs_df"].collect() if p["id_b"] == 3
-    }
-    assert got_partners == expected_partners
-    # index-derived pairs == one-shot on the healed corpus
-    want = sorted(
-        (p["id_a"], p["id_b"], p["shared_windows"], p["max_run_words"])
-        for p in dedup_ops.exact_substring_pairs(
-            corpus, min_words=store.substring_k
-        ).collect()
-    )
-    got = sorted(
-        (p["id_a"], p["id_b"], p["shared_windows"], p["max_run_words"])
-        for p in ingest_mod.substring_pairs_from_index(spark, store).collect()
-    )
-    assert got == want
-
-
-def test_forget_scrubs_anchor_index(spark, tmp_path):
-    """Forget over a store with a substring index: the forgotten doc's
-    anchor rows leave with it (content-derived data), its pairs vanish
-    from the index-derived set, and its content becomes admissible
-    again through the substring entry point."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    span = "seven silver spoons sat silently on the shelf upstairs today"
-    b0 = _mk_docs(
-        spark,
-        [(1, f"first {span} alpha"), (2, f"second {span} beta")],
-    )
-    r0 = ingest_mod.ingest_batch_substring(spark, store, b0, 0)
-    assert r0["substring_pairs"] == 1
-
-    ingest_mod.forget(spark, store, spark.createDataFrame([(2,)], "doc_id long"), 10)
-    anchors = acid_mod.read_atomic(spark, store.anchors)
-    assert sorted(set(r["__id"] for r in anchors.collect())) == [1]
-    assert ingest_mod.substring_pairs_from_index(spark, store).count() == 0
-
-    # the forgotten content is admissible again and re-pairs with doc 1
-    b1 = _mk_docs(spark, [(9, f"second {span} beta")])
-    r1 = ingest_mod.ingest_batch_substring(spark, store, b1, 1)
-    assert r1["admitted"] == 1 and r1["substring_pairs"] == 1
-
-
-def test_lm_ingest_incremental_equals_oneshot(spark, tmp_path):
-    """Round 10b: the incremental LM-count chain ≡ the one-shot
-    trainer.  Three batches; after each, kn_lm_from_chain must equal
-    text.kn_bigram_lm over the corpus so far — every column including
-    prob_ppb (both paths share kn_bigram_lm_from_counts)."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    batches = [
-        [(1, "the cat sat on the mat"), (2, "the dog sat on the log")],
-        [(3, "a cat and a dog and a bird"), (4, "one two one two one")],
-        [(5, "the bird sat on the cat quietly")],
-    ]
-    for i, rows in enumerate(batches):
-        r = ingest_mod.ingest_batch_lm(spark, store, _mk_docs(spark, rows), i)
-        assert r["admitted"] == len(rows)
-        got = sorted(
-            tuple(row) for row in ingest_mod.kn_lm_from_chain(spark, store).collect()
-        )
-        corpus = acid_mod.read_atomic(spark, store.corpus)
-        want = sorted(
-            tuple(row) for row in text_ops.kn_bigram_lm(corpus).collect()
-        )
-        assert got == want and want
-
-    # replay: whole-batch no-op off the ngrams cursor, no row growth
-    n_before = acid_mod.read_atomic(spark, store.ngrams).count()
-    assert ingest_mod.ingest_batch_lm(
-        spark, store, _mk_docs(spark, batches[0]), 0
-    ) == {"replay_skipped": True}
-    assert acid_mod.read_atomic(spark, store.ngrams).count() == n_before
-
-
-@pytest.mark.parametrize("crash_at", [1, 2, 3, 4])
-def test_lm_ingest_crash_matrix_invariants(spark, tmp_path, monkeypatch, crash_at):
-    """Crash positions across the LM commit chain (corpus=1, hashes=2,
-    bloom=3, ngrams=4): after the next (out-of-order) batch heals, the
-    chain-derived model equals the one-shot trainer on the healed
-    corpus — the ngrams table obeys the reconstructible-from-change-
-    feed contract."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    ingest_mod.ingest_batch_lm(
-        spark, store, _mk_docs(spark, [(1, "alpha beta gamma alpha beta")]), 0
-    )
-
-    real_commit = acid_mod.atomic_overwrite_partitions
-    state = {"calls": 0}
-
-    def crashing(df, path, **kw):
-        state["calls"] += 1
-        if state["calls"] == crash_at:
-            raise RuntimeError("injected crash")
-        return real_commit(df, path, **kw)
-
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", crashing)
-    with pytest.raises(RuntimeError, match="injected"):
-        ingest_mod.ingest_batch_lm(
-            spark, store, _mk_docs(spark, [(2, "beta gamma delta beta gamma")]), 1
-        )
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", real_commit)
-
-    ingest_mod.ingest_batch_lm(
-        spark, store, _mk_docs(spark, [(3, "gamma delta epsilon gamma")]), 2
-    )
-    corpus = acid_mod.read_atomic(spark, store.corpus)
-    ids = sorted(r.doc_id for r in corpus.collect())
-    assert ids == ([1, 3] if crash_at == 1 else [1, 2, 3])
-    got = sorted(
-        tuple(row) for row in ingest_mod.kn_lm_from_chain(spark, store).collect()
-    )
-    want = sorted(tuple(row) for row in text_ops.kn_bigram_lm(corpus).collect())
-    assert got == want
-
-
-def test_forget_scrubs_lm_counts(spark, tmp_path):
-    """Forget over a store with an LM-count index: the forgotten doc's
-    count rows leave with it and the chain-derived model equals the
-    one-shot trainer on the surviving corpus."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    ingest_mod.ingest_batch_lm(
-        spark,
-        store,
-        _mk_docs(
-            spark,
-            [(1, "red fish blue fish red fish"), (2, "green eggs and ham again")],
-        ),
-        0,
-    )
-    ingest_mod.forget(spark, store, spark.createDataFrame([(2,)], "doc_id long"), 10)
-    ngrams = acid_mod.read_atomic(spark, store.ngrams)
-    assert sorted(set(r["__id"] for r in ngrams.collect())) == [1]
-    corpus = acid_mod.read_atomic(spark, store.corpus)
-    got = sorted(
-        tuple(row) for row in ingest_mod.kn_lm_from_chain(spark, store).collect()
-    )
-    want = sorted(tuple(row) for row in text_ops.kn_bigram_lm(corpus).collect())
-    assert got == want and want
-
-
-def test_variant_mixing_substring_ingest_maintains_lm_index(spark, tmp_path):
-    """A store whose first batch went through ingest_batch_lm: a later
-    ingest_batch_substring batch must maintain the ngrams index too
-    (chain extends downstream), so the chain model never silently
-    misses a batch."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    ingest_mod.ingest_batch_lm(
-        spark, store, _mk_docs(spark, [(1, "winter comes after autumn every year")]), 0
-    )
-    ingest_mod.ingest_batch_substring(
-        spark, store, _mk_docs(spark, [(2, "spring comes after winter every year")]), 1
-    )
-    corpus = acid_mod.read_atomic(spark, store.corpus)
-    assert corpus.count() == 2
-    got = sorted(
-        tuple(row) for row in ingest_mod.kn_lm_from_chain(spark, store).collect()
-    )
-    want = sorted(tuple(row) for row in text_ops.kn_bigram_lm(corpus).collect())
-    assert got == want
-
-
-def _mk_vdocs(spark, rows):
-    return spark.createDataFrame(
-        rows, "doc_id long, text string, embedding array<float>"
-    )
-
-
-def test_vector_ingest_rejects_semantic_dups_and_serves_ann(spark, tmp_path):
-    """Round 10: the incremental SemDeDup face — a persistent IVF
-    vector table rejects embedding near-dups (cosine >= threshold)
-    in-batch and against all admitted history, and doubles as an ANN
-    index (vector_index_topk == brute-force cosine over the admitted
-    corpus when probing every cell)."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(
-        str(tmp_path / "root"), m_bits=1 << 12, ivf_clusters=2, sem_threshold=0.95
-    )
-    b0 = _mk_vdocs(
-        spark,
-        [
-            (1, "alpha doc", [1.0, 0.0]),
-            (2, "beta doc", [0.8, 0.6]),      # cos vs doc1 = 0.8 < 0.95: admitted
-            (3, "gamma doc", [0.0, 1.0]),
-            (4, "delta doc", [0.05, 1.0]),    # cos vs doc3 ~ 0.9988: in-batch reject
-        ],
-    )
-    r0 = ingest_mod.ingest_batch_vectors(spark, store, b0, 0)
-    assert r0["sem_rejected_in_batch"] == 1 and r0["admitted"] == 3
-
-    b1 = _mk_vdocs(
-        spark,
-        [
-            (5, "epsilon doc", [0.99, 0.14]),  # cos vs doc1 ~ 0.990: history reject
-            (6, "zeta doc", [-1.0, 0.5]),      # far from everything: admitted
-        ],
-    )
-    r1 = ingest_mod.ingest_batch_vectors(spark, store, b1, 1)
-    assert r1["sem_rejected_history"] == 1 and r1["admitted"] == 1
-
-    corpus = acid_mod.read_atomic(spark, store.corpus)
-    assert sorted(r.doc_id for r in corpus.collect()) == [1, 2, 3, 6]
-
-    # ANN from the incremental index == brute force when probing all cells
-    queries = _mk_vdocs(spark, [(100, "q", [0.9, 0.1])]).select(
-        F.col("doc_id").alias("vec_id"), "embedding"
-    )
-    got = [
-        (r["neighbor_id"], r["rank"])
-        for r in ingest_mod.vector_index_topk(
-            spark, store, queries, k=3, nprobe=2
-        ).orderBy("rank").collect()
-    ]
-    want_df = similarity.brute_force_topk(
-        corpus.select(F.col("doc_id").alias("vec_id"), "embedding"), queries, k=3
-    )
-    want = [(r["neighbor_id"], r["rank"]) for r in want_df.orderBy("rank").collect()]
-    assert got == want and len(got) == 3
-
-    # replay: whole-batch no-op, no duplicate index rows
-    assert ingest_mod.ingest_batch_vectors(spark, store, b0, 0) == {
-        "replay_skipped": True
-    }
-    vrows = acid_mod.read_atomic(spark, store.vectors)
-    assert vrows.count() == 4
-    assert sorted(r["__id"] for r in vrows.collect()) == [1, 2, 3, 6]
-
-
-@pytest.mark.parametrize("crash_at", [1, 2, 3, 4])
-def test_vector_ingest_crash_matrix_invariants(spark, tmp_path, monkeypatch, crash_at):
-    """Exhaustive crash positions across the vector commit chain
-    (corpus=1, hashes=2, bloom=3, vectors=4): after the NEXT batch
-    heals, vector rows cover exactly the corpus docs (reconstructed
-    from the change feed against the persisted centroid basis) and the
-    healed index still rejects a semantic dup of the crashed batch's
-    doc."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(
-        str(tmp_path / "root"), m_bits=1 << 12, ivf_clusters=2, sem_threshold=0.95
-    )
-    b0 = _mk_vdocs(
-        spark, [(1, "first doc", [1.0, 0.0]), (2, "second doc", [0.0, 1.0])]
-    )
-    ingest_mod.ingest_batch_vectors(spark, store, b0, 0)
-
-    real_commit = acid_mod.atomic_overwrite_partitions
-    state = {"calls": 0}
-
-    def crashing(df, path, **kw):
-        state["calls"] += 1
-        if state["calls"] == crash_at:
-            raise RuntimeError("injected crash")
-        return real_commit(df, path, **kw)
-
-    b1 = _mk_vdocs(spark, [(3, "third doc", [0.7, 0.7])])
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", crashing)
-    with pytest.raises(RuntimeError, match="injected"):
-        ingest_mod.ingest_batch_vectors(spark, store, b1, 1)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", real_commit)
-
-    # next batch arrives out-of-order: a near-dup of doc 3 (cos ~ 0.9999)
-    # plus a genuinely new doc; the probe must see the HEALED index
-    b2 = _mk_vdocs(
-        spark,
-        [(4, "fourth doc", [0.71, 0.69]), (5, "fifth doc", [-1.0, 0.0])],
-    )
-    r2 = ingest_mod.ingest_batch_vectors(spark, store, b2, 2)
-
-    corpus = acid_mod.read_atomic(spark, store.corpus)
-    ids = sorted(r.doc_id for r in corpus.collect())
-    if crash_at == 1:
-        # batch 1 never committed: doc 4 has no history partner
-        assert ids == [1, 2, 4, 5]
-        assert r2["sem_rejected_history"] == 0
-    else:
-        assert ids == [1, 2, 3, 5]
-        assert r2["sem_rejected_history"] == 1
-    vrow_ids = sorted(
-        r["__id"] for r in acid_mod.read_atomic(spark, store.vectors).collect()
-    )
-    assert vrow_ids == ids
-
-
-def test_forget_scrubs_vector_index(spark, tmp_path):
-    """Forget over a store with a vector index: the forgotten doc's
-    vector rows leave with it, the centroid basis survives (it is a
-    coordinate system, not content), and the content becomes both
-    exactly and semantically admissible again."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(
-        str(tmp_path / "root"), m_bits=1 << 12, ivf_clusters=2, sem_threshold=0.95
-    )
-    b0 = _mk_vdocs(
-        spark, [(1, "one doc", [1.0, 0.0]), (2, "two doc", [0.0, 1.0])]
-    )
-    ingest_mod.ingest_batch_vectors(spark, store, b0, 0)
-
-    ingest_mod.forget(spark, store, spark.createDataFrame([(2,)], "doc_id long"), 10)
-    vrows = acid_mod.read_atomic(spark, store.vectors)
-    assert sorted(r["__id"] for r in vrows.collect()) == [1]
-    assert acid_mod.read_atomic(spark, store.centroids).count() > 0
-
-    # semantically identical content under a new id is admissible again
-    b1 = _mk_vdocs(spark, [(9, "two doc again", [0.0, 1.0])])
-    r1 = ingest_mod.ingest_batch_vectors(spark, store, b1, 1)
-    assert r1["admitted"] == 1 and r1["sem_rejected_history"] == 0
-
-
-def test_vector_ingest_multiprobe_catches_cell_boundary_dup(spark, tmp_path):
-    """The multi-probe recall lever: a semantic dup whose vector lands
-    in a DIFFERENT cell than its history partner is missed at
-    nprobe=1 (the documented IVF trade) and caught at nprobe=2 —
-    candidate fan-out touches the new side only, the persisted index
-    keeps one row per vector either way."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    def mk_store(name):
-        return ingest_mod.IngestStore(
-            str(tmp_path / name), m_bits=1 << 12, ivf_clusters=2, sem_threshold=0.95
-        )
-
-    # Basis trained on batch 0's two axis vectors: Lloyd converges to
-    # cells AT [1,0] and [0,1], boundary exactly x = y.  History doc 3
-    # sits just x-side of the boundary, the incoming dup (cos ~ 0.9998)
-    # just y-side — they quantize into DIFFERENT cells by construction.
-    b0 = [(1, "one", [1.0, 0.0]), (2, "two", [0.0, 1.0])]
-    b1 = [(3, "three", [0.505, 0.495])]
-    b2 = [(4, "four", [0.495, 0.505])]
-
-    results = {}
-    for nprobe in (1, 2):
-        store = mk_store(f"root{nprobe}")
-        ingest_mod.ingest_batch_vectors(spark, store, _mk_vdocs(spark, b0), 0)
-        r1 = ingest_mod.ingest_batch_vectors(spark, store, _mk_vdocs(spark, b1), 1)
-        assert r1["admitted"] == 1
-        r2 = ingest_mod.ingest_batch_vectors(
-            spark, store, _mk_vdocs(spark, b2), 2, nprobe=nprobe
-        )
-        results[nprobe] = r2["sem_rejected_history"]
-        # index rows stay one per vector regardless of nprobe
-        vrows = acid_mod.read_atomic(spark, store.vectors)
-        assert vrows.count() == vrows.select("__id").distinct().count()
-
-    assert results[1] == 0, "nprobe=1 misses the cross-cell dup (the IVF trade)"
-    assert results[2] == 1, "nprobe=2 must catch the boundary dup"
-
-
-def test_text_variants_refuse_vector_store(spark, tmp_path):
-    """A store with a vector index must route every batch through
-    ingest_batch_vectors: text-only commits cannot be healed into
-    vector rows, so the other entry points fail LOUD instead of
-    leaving an index that silently misses rows."""
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(
-        str(tmp_path / "root"), m_bits=1 << 12, ivf_clusters=2
-    )
-    b0 = _mk_vdocs(
-        spark, [(1, "one doc", [1.0, 0.0]), (2, "two doc", [0.0, 1.0])]
-    )
-    ingest_mod.ingest_batch_vectors(spark, store, b0, 0)
-    plain = _mk_docs(spark, [(3, "text only")])
-    for entry in (
-        ingest_mod.ingest_batch,
-        ingest_mod.ingest_batch_neardup,
-        ingest_mod.ingest_batch_substring,
-        ingest_mod.ingest_batch_lm,
-    ):
-        with pytest.raises(ValueError, match="vector index"):
-            entry(spark, store, plain, 1)
-    # the vector entry point still works afterwards
-    r = ingest_mod.ingest_batch_vectors(
-        spark, store, _mk_vdocs(spark, [(3, "three doc", [0.5, -0.5])]), 1
-    )
-    assert r["admitted"] == 1
+    assert out.stdout.strip() == "[]"

@@ -1,16 +1,9 @@
 """Round 11: regression tests for the round-10 ADVICE items plus the
 new round-11 surface (blocklist broadcast-join route, byte-level BPE,
-quality gating at ingest admission, scale-proportional shard default,
-_auto_agree sidecar hint)."""
+scale-proportional shard default, _auto_agree sidecar hint)."""
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def _mk_vdocs(spark, rows):
-    return spark.createDataFrame(
-        rows, "doc_id long, text string, embedding array<float>"
-    )
 
 
 def _mk_docs(spark, rows):
@@ -20,70 +13,6 @@ def _mk_docs(spark, rows):
 # ---------------------------------------------------------------------------
 # ADVICE (round 10) regressions
 # ---------------------------------------------------------------------------
-
-
-def test_empty_first_vector_batch_does_not_create_empty_index(spark, tmp_path):
-    """ADVICE r10: a first vector batch with zero content-new rows must
-    NOT create an empty vectors table (which would permanently block
-    text variants via _require_no_vector_index and break
-    _stored_centroids); the next non-empty batch bootstraps normally
-    and probing before bootstrap raises a clear error."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(
-        str(tmp_path / "root"), m_bits=1 << 12, ivf_clusters=2, sem_threshold=0.95
-    )
-    empty = _mk_vdocs(spark, []).limit(0)
-    r0 = ingest_mod.ingest_batch_vectors(spark, store, empty, 0)
-    assert r0["admitted"] == 0
-    # neither the index nor the basis exists yet
-    assert acid_mod.latest_version(store.vectors) is None
-    assert acid_mod.latest_version(store.centroids) is None
-
-    # probing before bootstrap fails LOUD with an actionable message
-    q = _mk_vdocs(spark, [(9, "q", [1.0, 0.0])]).select(
-        F.col("doc_id").alias("vec_id"), "embedding"
-    )
-    with pytest.raises(ValueError, match="no centroid basis"):
-        ingest_mod.vector_index_topk(spark, store, q, k=1)
-
-    # a plain text batch is NOT blocked (no vector index exists)
-    ingest_mod.ingest_batch(
-        spark, store, _mk_docs(spark, [(1, "plain text doc")]), 1
-    )
-
-    # the next non-empty vector batch bootstraps the basis normally
-    b2 = _mk_vdocs(
-        spark, [(2, "alpha doc", [1.0, 0.0]), (3, "beta doc", [0.0, 1.0])]
-    )
-    r2 = ingest_mod.ingest_batch_vectors(spark, store, b2, 2)
-    assert r2["admitted"] == 2
-    assert acid_mod.latest_version(store.centroids) is not None
-    got = ingest_mod.vector_index_topk(spark, store, q, k=1, nprobe=2).collect()
-    assert [r["neighbor_id"] for r in got] == [2]
-
-
-def test_foreach_batch_ingest_passes_nprobe_through(spark, tmp_path, monkeypatch):
-    """ADVICE r10: the streaming vectors mode must forward nprobe to
-    ingest_batch_vectors so the multi-probe recall lever is reachable
-    from streaming ingest."""
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-    from tiki_e_commerce_analytics_etl_spark.streaming.incremental import (
-        foreach_batch_ingest,
-    )
-
-    seen = {}
-
-    def spy(spark_, store_, batch_, batch_id_, **kw):
-        seen.update(kw)
-        return {}
-
-    monkeypatch.setattr(ingest_mod, "ingest_batch_vectors", spy)
-    store = ingest_mod.IngestStore(str(tmp_path / "root"))
-    apply_fn = foreach_batch_ingest(store, vectors=True, nprobe=4)
-    apply_fn(_mk_vdocs(spark, [(1, "doc", [1.0, 0.0])]), 0)
-    assert seen.get("nprobe") == 4
 
 
 def test_shard_manifest_detects_pos_edit_not_physical_order(spark, tmp_path):
@@ -432,285 +361,6 @@ def test_byte_bpe_tokenize_out_of_training(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round 11 #3: quality gating at ingest admission (quarantine chain table)
-# ---------------------------------------------------------------------------
-
-_GOOD = (
-    "the quick brown fox jumps over the lazy dog and then runs back to "
-    "the barn with all of the other animals that have been waiting there "
-    "since early morning because they wanted to see what would happen "
-    "when the farmer finally came home with the new supplies for winter"
-)
-_BAD = "xx yy zz"  # fails min_words and stop-word rules
-
-
-def _logreg_store(tmp_path, min_margin=0):
-    import hashlib
-
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    dim = 512
-    f_good = int(hashlib.md5(b"good").hexdigest()[:12], 16) % dim
-    f_bad = int(hashlib.md5(b"bad").hexdigest()[:12], 16) % dim
-    assert f_good != f_bad
-    store = ingest_mod.IngestStore(
-        str(tmp_path / "root"),
-        m_bits=1 << 12,
-        quality_mode="logreg",
-        quality_weights={f_good: 1000, f_bad: -1000},
-        quality_bias=0,
-        quality_dim=dim,
-        quality_min_margin=min_margin,
-    )
-    return store, f_good, f_bad
-
-
-def test_quality_gate_gopher_matches_one_shot_and_separates_audit(
-    spark, tmp_path
-):
-    """Incremental admission-time gating ≡ one-shot gopher_quality by
-    shared code: across two batches, quarantine holds exactly the docs
-    the batch operator fails, the corpus exactly the passes — and a
-    DUPLICATE of a bad doc is rejected as a duplicate, never double-
-    counted in quarantine (the two audit categories stay separate)."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(
-        str(tmp_path / "root"), m_bits=1 << 12, quality_mode="gopher"
-    )
-    b0 = _mk_docs(spark, [(1, _GOOD), (2, _BAD)])
-    r0 = ingest_mod.ingest_batch(spark, store, b0, 0)
-    assert r0["admitted"] == 1 and r0["quarantined"] == 1
-    b1 = _mk_docs(spark, [(3, _BAD), (4, _GOOD + " again"), (5, _BAD)])
-    r1 = ingest_mod.ingest_batch(spark, store, b1, 1)
-    # doc 5 is an exact dup of doc 3 (in-batch): rejected as DUP, not
-    # quarantined twice
-    assert r1["admitted"] == 1 and r1["quarantined"] == 1
-    assert r1["in_batch_dups"] == 1
-
-    union = _mk_docs(spark, [(1, _GOOD), (2, _BAD), (3, _BAD), (4, _GOOD + " again")])
-    want_fail = {
-        r["id"]
-        for r in text_ops.gopher_quality(union).collect()
-        if not r["pass_gopher"]
-    }
-    got_q = {
-        r["doc_id"]
-        for r in acid_mod.read_atomic(spark, store.quarantine).collect()
-    }
-    assert got_q == want_fail == {2, 3}
-    got_c = sorted(
-        r["doc_id"] for r in acid_mod.read_atomic(spark, store.corpus).collect()
-    )
-    assert got_c == [1, 4]
-    # quarantine rows carry the stored score and the full text (audits)
-    qrow = acid_mod.read_atomic(spark, store.quarantine).filter(
-        F.col("doc_id") == 2
-    ).collect()[0]
-    assert qrow["q_score"] == 0 and qrow["text"] == _BAD
-
-
-def test_quality_gate_logreg_margin_matches_one_shot(spark, tmp_path):
-    """logreg mode: the stored q_score is the exact micro-unit margin
-    features.logreg_margins computes one-shot under the same weights."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store, _fg, _fb = _logreg_store(tmp_path)
-    b0 = _mk_docs(
-        spark,
-        [
-            (1, "good good content here"),   # margin +2000
-            (2, "bad bad bad content"),      # margin -3000
-            (3, "neutral words only"),       # margin 0 (>= floor 0: admit)
-        ],
-    )
-    r0 = ingest_mod.ingest_batch(spark, store, b0, 0)
-    assert r0["admitted"] == 2 and r0["quarantined"] == 1
-    one_shot = {
-        r[0]: r[1]
-        for r in ingest_mod._quality_scores(store, b0, "text", "doc_id").collect()
-    }
-    assert one_shot == {1: 2000, 2: -3000, 3: 0}
-    qrows = acid_mod.read_atomic(spark, store.quarantine).collect()
-    assert [(r["doc_id"], r["q_score"]) for r in qrows] == [(2, -3000)]
-
-
-@pytest.mark.parametrize("crash_at", [1, 2, 3, 4])
-def test_quality_crash_matrix(spark, tmp_path, monkeypatch, crash_at):
-    """Crash positions across the quality chain (quarantine=1,
-    corpus=2, hashes=3, bloom=4): after redelivery the store converges
-    to exactly one copy of each quarantine row and each corpus row —
-    the quarantine-commits-FIRST ordering makes every position
-    recoverable (quarantine rows are not reconstructible from corpus
-    feeds, so they must be durable before anything downstream)."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(
-        str(tmp_path / "root"), m_bits=1 << 12, quality_mode="gopher"
-    )
-    ingest_mod.ingest_batch(
-        spark, store, _mk_docs(spark, [(1, _GOOD), (2, _BAD)]), 0
-    )
-
-    real_commit = acid_mod.atomic_overwrite_partitions
-    state = {"calls": 0}
-
-    def crashing(df, path, **kw):
-        state["calls"] += 1
-        if state["calls"] == crash_at:
-            raise RuntimeError("injected crash")
-        return real_commit(df, path, **kw)
-
-    monkeypatch.setattr(acid_mod, "atomic_overwrite_partitions", crashing)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", crashing)
-    b1 = _mk_docs(spark, [(3, _GOOD + " fresh"), (4, _BAD + " ww")])
-    with pytest.raises(RuntimeError, match="injected crash"):
-        ingest_mod.ingest_batch(spark, store, b1, 1)
-    monkeypatch.setattr(acid_mod, "atomic_overwrite_partitions", real_commit)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", real_commit)
-
-    ingest_mod.ingest_batch(spark, store, b1, 1)  # redelivery
-    q = sorted(
-        r["doc_id"] for r in acid_mod.read_atomic(spark, store.quarantine).collect()
-    )
-    c = sorted(
-        r["doc_id"] for r in acid_mod.read_atomic(spark, store.corpus).collect()
-    )
-    assert q == [2, 4] and c == [1, 3]
-    # and a later dup of the crashed batch's doc is still rejected
-    r2 = ingest_mod.ingest_batch(
-        spark, store, _mk_docs(spark, [(9, _GOOD + " fresh")]), 2
-    )
-    assert r2["admitted"] == 0
-
-
-def test_quarantine_readmission_on_threshold_change(spark, tmp_path):
-    """Lowering the logreg floor and calling readmit_quarantine moves
-    the now-passing rows into the corpus (through the exact-dedup
-    screen), keeps still-failing rows quarantined, and is exactly-once;
-    raising the floor never reaches back into the corpus."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store, _fg, _fb = _logreg_store(tmp_path, min_margin=1500)
-    b0 = _mk_docs(
-        spark,
-        [
-            (1, "good good content"),        # +2000: admitted
-            (2, "good words here"),          # +1000: quarantined at 1500
-            (3, "bad bad bad bad stuff"),    # -4000: quarantined
-        ],
-    )
-    r0 = ingest_mod.ingest_batch(spark, store, b0, 0)
-    assert r0["admitted"] == 1 and r0["quarantined"] == 2
-
-    # equal content to doc 2 admitted later from another batch: on
-    # readmission doc 2 must leave quarantine but NOT duplicate corpus
-    lenient0 = ingest_mod.IngestStore(
-        str(tmp_path / "root"),
-        m_bits=1 << 12,
-        quality_mode="logreg",
-        quality_weights=store.quality_weights,
-        quality_dim=store.quality_dim,
-        quality_min_margin=500,
-    )
-    ingest_mod.ingest_batch(
-        spark, lenient0, _mk_docs(spark, [(20, "good words here")]), 1
-    )
-
-    r = ingest_mod.readmit_quarantine(spark, lenient0, 2)
-    assert r["rescored"] == 2
-    assert r["left_quarantine"] == 1      # doc 2 passes at floor 500
-    assert r["readmitted"] == 0           # but its content is already in
-    assert r["still_quarantined"] == 1    # doc 3 stays
-    q = sorted(
-        r2["doc_id"]
-        for r2 in acid_mod.read_atomic(spark, lenient0.quarantine).collect()
-    )
-    assert q == [3]
-    c = sorted(
-        r2["doc_id"] for r2 in acid_mod.read_atomic(spark, lenient0.corpus).collect()
-    )
-    assert c == [1, 20]
-
-    # now drop the floor below doc 3's margin: genuine readmission
-    lenient1 = ingest_mod.IngestStore(
-        str(tmp_path / "root"),
-        m_bits=1 << 12,
-        quality_mode="logreg",
-        quality_weights=store.quality_weights,
-        quality_dim=store.quality_dim,
-        quality_min_margin=-5000,
-    )
-    r = ingest_mod.readmit_quarantine(spark, lenient1, 3)
-    assert r["readmitted"] == 1 and r["still_quarantined"] == 0
-    assert acid_mod.read_atomic(spark, lenient1.quarantine).count() == 0
-    c = sorted(
-        r2["doc_id"] for r2 in acid_mod.read_atomic(spark, lenient1.corpus).collect()
-    )
-    assert c == [1, 3, 20]
-    # replay is a whole-batch no-op
-    assert ingest_mod.readmit_quarantine(spark, lenient1, 3) == {
-        "replay_skipped": True
-    }
-    # raising the floor again removes nothing from the corpus
-    strict = ingest_mod.IngestStore(
-        str(tmp_path / "root"),
-        m_bits=1 << 12,
-        quality_mode="logreg",
-        quality_weights=store.quality_weights,
-        quality_dim=store.quality_dim,
-        quality_min_margin=10_000,
-    )
-    ingest_mod.readmit_quarantine(spark, strict, 4)
-    assert acid_mod.read_atomic(spark, strict.corpus).count() == 3
-
-
-def test_forget_scrubs_quarantine(spark, tmp_path):
-    """Right-to-be-forgotten reaches quarantined text too."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(
-        str(tmp_path / "root"), m_bits=1 << 12, quality_mode="gopher"
-    )
-    ingest_mod.ingest_batch(
-        spark, store, _mk_docs(spark, [(1, _GOOD), (2, _BAD)]), 0
-    )
-    r = ingest_mod.forget(
-        spark, store, spark.createDataFrame([(2,)], "doc_id long"), 1
-    )
-    assert r == {"removed": 0, "removed_quarantined": 1}
-    assert acid_mod.read_atomic(spark, store.quarantine).count() == 0
-
-
-def test_quality_gate_composes_with_neardup_screen(spark, tmp_path):
-    """Quality gating is store config, orthogonal to the dedup
-    variant: on a near-dup store, junk quarantines BEFORE the band
-    screen and near-dups of admitted history are still rejected."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(
-        str(tmp_path / "root"), m_bits=1 << 12, quality_mode="gopher"
-    )
-    r0 = ingest_mod.ingest_batch_neardup(
-        spark, store, _mk_docs(spark, [(1, _GOOD), (2, _BAD)]), 0
-    )
-    assert r0["admitted"] == 1 and r0["quarantined"] == 1
-    r1 = ingest_mod.ingest_batch_neardup(
-        spark, store, _mk_docs(spark, [(3, _GOOD + " tweak"), (4, _BAD + " qq")]), 1
-    )
-    assert r1["near_dup_rejected_history"] == 1
-    assert r1["quarantined"] == 1 and r1["admitted"] == 0
-    assert acid_mod.read_atomic(spark, store.corpus).count() == 1
-
-
-# ---------------------------------------------------------------------------
 # Round 11 #5: scale-proportional n_shards default
 # ---------------------------------------------------------------------------
 
@@ -735,137 +385,6 @@ def test_auto_shards_scales_with_rows_and_respects_floor(spark, tmp_path):
     # shuffle_shards(n_shards=None) routes through the default
     out = sampling.shuffle_shards(pq, n_shards=None)
     assert out.select("shard").distinct().count() == 8            # floor at 1k rows
-
-
-def test_streaming_quality_gate_quarantines_exactly_once(spark, tmp_path):
-    """The quality gate rides the STORE config through the streaming
-    face: foreachBatch micro-batches quarantine failing docs with the
-    batch id as txn version, availableNow replays are no-ops, and the
-    quarantine set equals the one-shot gopher verdicts."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines.ingest import IngestStore
-    from tiki_e_commerce_analytics_etl_spark.streaming.incremental import (
-        foreach_batch_ingest,
-    )
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    store = IngestStore(
-        str(tmp_path / "root"), m_bits=1 << 12, quality_mode="gopher"
-    )
-    schema = "doc_id long, text string"
-    spark.createDataFrame([(1, _GOOD), (2, _BAD)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    def run_once():
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .writeStream.option("checkpointLocation", ckpt)
-            .foreachBatch(foreach_batch_ingest(store))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    spark.createDataFrame(
-        [(3, _GOOD + " more"), (4, _BAD + " zz")], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-    run_once()  # idempotent restart: nothing new, state unchanged
-    assert sorted(
-        r.doc_id for r in acid_mod.read_atomic(spark, store.corpus).collect()
-    ) == [1, 3]
-    assert sorted(
-        r.doc_id for r in acid_mod.read_atomic(spark, store.quarantine).collect()
-    ) == [2, 4]
-
-
-def test_bootstrap_vector_index_bulk_seed(spark, tmp_path):
-    """Bulk index bootstrap: exact-dedup-only seed of a fresh store
-    (no semantic screen — the initial-load path for already-curated
-    corpora); afterwards incremental batches screen against the bulk
-    history exactly as if it had been ingested batch-wise, ANN serves
-    it, replay is a no-op, and a non-empty store is refused."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(
-        str(tmp_path / "root"), m_bits=1 << 12, ivf_clusters=2, sem_threshold=0.95
-    )
-    seed = _mk_vdocs(
-        spark,
-        [
-            (1, "alpha doc", [1.0, 0.0]),
-            (2, "alpha doc", [1.0, 0.0]),     # exact dup: dropped
-            (3, "near of one", [0.99, 0.14]), # semantic dup: KEPT (bulk)
-            (4, "ortho doc", [0.0, 1.0]),
-        ],
-    )
-    r = ingest_mod.bootstrap_vector_index(spark, store, seed, 0)
-    assert r == {"seeded": 3, "in_batch_dups": 1, "quarantined": 0}
-    assert sorted(
-        x["doc_id"] for x in acid_mod.read_atomic(spark, store.corpus).collect()
-    ) == [1, 3, 4]
-    # incremental batch screens against the bulk history
-    b1 = _mk_vdocs(
-        spark, [(5, "close to four", [0.05, 1.0]), (6, "far away", [-1.0, 0.3])]
-    )
-    r1 = ingest_mod.ingest_batch_vectors(spark, store, b1, 1)
-    assert r1["sem_rejected_history"] == 1 and r1["admitted"] == 1
-    # ANN serves bulk + incremental rows
-    q = _mk_vdocs(spark, [(9, "q", [0.0, 1.0])]).select(
-        F.col("doc_id").alias("vec_id"), "embedding"
-    )
-    got = ingest_mod.vector_index_topk(spark, store, q, k=1, nprobe=2).collect()
-    assert [x["neighbor_id"] for x in got] == [4]
-    # replay no-op; non-empty store refused for a NEW seed
-    assert ingest_mod.bootstrap_vector_index(spark, store, seed, 0) == {
-        "replay_skipped": True
-    }
-    with pytest.raises(ValueError, match="EMPTY store"):
-        ingest_mod.bootstrap_vector_index(spark, store, seed, 7)
-
-
-def test_bootstrap_vector_index_crash_recovers(spark, tmp_path, monkeypatch):
-    """Crash after the bootstrap's corpus commit: redelivery finishes
-    hashes/bloom/vectors from the change feed against the
-    already-committed centroid basis."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = ingest_mod.IngestStore(
-        str(tmp_path / "root"), m_bits=1 << 12, ivf_clusters=2
-    )
-    seed = _mk_vdocs(
-        spark, [(1, "one doc", [1.0, 0.0]), (2, "two doc", [0.0, 1.0])]
-    )
-    real_commit = acid_mod.atomic_overwrite_partitions
-    state = {"calls": 0}
-
-    def crashing(df, path, **kw):
-        state["calls"] += 1
-        if state["calls"] == 3:  # centroids=1, corpus=2, crash at hashes
-            raise RuntimeError("injected crash")
-        return real_commit(df, path, **kw)
-
-    monkeypatch.setattr(acid_mod, "atomic_overwrite_partitions", crashing)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", crashing)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        ingest_mod.bootstrap_vector_index(spark, store, seed, 0)
-    monkeypatch.setattr(acid_mod, "atomic_overwrite_partitions", real_commit)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", real_commit)
-    r = ingest_mod.bootstrap_vector_index(spark, store, seed, 0)
-    assert r["recovered_replay"] is True
-    vrows = acid_mod.read_atomic(spark, store.vectors)
-    assert sorted(x["__id"] for x in vrows.collect()) == [1, 2]
-    # and the healed store keeps screening
-    r1 = ingest_mod.ingest_batch_vectors(
-        spark, store, _mk_vdocs(spark, [(3, "near one", [0.999, 0.01])]), 1
-    )
-    assert r1["sem_rejected_history"] == 1
 
 
 def test_write_training_shards_auto_resolves_in_manifest(spark, tmp_path):

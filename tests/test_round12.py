@@ -1,6 +1,6 @@
-"""Round-12 surface: multi-word PHRASE blocklist route, quarantine
-readmission on vector-indexed stores, IVF×PQ (IVFADC) composed ANN,
-self-healing bench canary, and the round-11 ADVICE fixes."""
+"""Round-12 surface: multi-word PHRASE blocklist route, IVF×PQ
+(IVFADC) composed ANN, self-healing bench canary, and the round-11
+ADVICE fixes."""
 
 from __future__ import annotations
 
@@ -171,233 +171,6 @@ def test_solo_candidates_rank_both_drift_directions():
 
 
 # ---------------------------------------------------------------------------
-# Round 12 #2: quarantine readmission on vector-indexed stores
-# ---------------------------------------------------------------------------
-
-_VGOOD = (
-    "the farmer walked slowly across the wide green field this morning and "
-    "carried a heavy wooden bucket full of fresh water toward the barn where "
-    "all of the other animals had been waiting since early light for their "
-    "share of the winter supplies that finally arrived on the old cart"
-)
-
-
-def _mk_vdocs(spark, rows):
-    return spark.createDataFrame(
-        rows, "doc_id long, text string, embedding array<float>"
-    )
-
-
-def _vstore(tmp_path, min_margin=1500):
-    """logreg-gated vector store: 'good' terms score +1000 each,
-    'bad' terms -1000 each (hashed unigram features)."""
-    import hashlib
-
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    dim = 512
-    f_good = int(hashlib.md5(b"good").hexdigest()[:12], 16) % dim
-    f_bad = int(hashlib.md5(b"bad").hexdigest()[:12], 16) % dim
-    return ingest_mod.IngestStore(
-        str(tmp_path / "root"),
-        m_bits=1 << 12,
-        ivf_clusters=2,
-        sem_threshold=0.95,
-        quality_mode="logreg",
-        quality_weights={f_good: 1000, f_bad: -1000},
-        quality_dim=dim,
-        quality_min_margin=min_margin,
-    )
-
-
-_VB0 = [
-    (1, "good good alpha", [1.0, 0.0]),     # +2000: admitted
-    (2, "good beta words", [0.0, 1.0]),     # +1000: quarantined at 1500
-    (3, "bad bad bad stuff", [0.98, 0.2]),  # -3000: quarantined; ~cos 0.98 to doc 1
-]
-
-
-def test_readmit_on_vector_indexed_store(spark, tmp_path):
-    """Round-11 verdict #2: a vector-indexed store readmits through
-    the SAME semantic screen as ingest — now-passing rows that are
-    semantic near-dups of history leave quarantine but are rejected,
-    genuinely new rows are admitted WITH their vector rows, and the
-    ANN index serves them (a later semantic dup of a readmitted doc is
-    caught)."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = _vstore(tmp_path, min_margin=1500)
-    r0 = ingest_mod.ingest_batch_vectors(spark, store, _mk_vdocs(spark, _VB0), 0)
-    assert r0["admitted"] == 1 and r0["quarantined"] == 2
-
-    lenient = _vstore(tmp_path, min_margin=-5000)
-    r = ingest_mod.readmit_quarantine(spark, lenient, 1)
-    assert r == {
-        "rescored": 2,
-        "readmitted": 1,            # doc 2 (orthogonal to history)
-        "left_quarantine": 2,       # both now pass quality
-        "still_quarantined": 0,
-        "sem_rejected": 1,          # doc 3 ~cos 0.98 to admitted doc 1
-        "readmitted_durable_in_prior_attempt": False,
-    }
-    assert acid_mod.read_atomic(spark, lenient.quarantine).count() == 0
-    assert sorted(
-        x["doc_id"] for x in acid_mod.read_atomic(spark, lenient.corpus).collect()
-    ) == [1, 2]
-    assert sorted(
-        x["__id"] for x in acid_mod.read_atomic(spark, lenient.vectors).collect()
-    ) == [1, 2]
-    # ANN serves the readmitted doc ...
-    q = _mk_vdocs(spark, [(9, "q", [0.1, 1.0])]).select(
-        F.col("doc_id").alias("vec_id"), "embedding"
-    )
-    got = ingest_mod.vector_index_topk(spark, lenient, q, k=1, nprobe=2).collect()
-    assert [x["neighbor_id"] for x in got] == [2]
-    # ... and the admission screen rejects a semantic dup of it
-    b2 = _mk_vdocs(spark, [(7, "good fresh words", [0.02, 1.0])])
-    r2 = ingest_mod.ingest_batch_vectors(spark, lenient, b2, 2)
-    assert r2["sem_rejected_history"] == 1 and r2["admitted"] == 0
-    # whole-batch replay is a no-op
-    assert ingest_mod.readmit_quarantine(spark, lenient, 1) == {
-        "replay_skipped": True
-    }
-
-
-def test_readmit_vector_crash_replay_reports_durable_count(
-    spark, tmp_path, monkeypatch
-):
-    """Crash after readmit's corpus chain but before the vectors
-    append: the retry heals the vector rows from the change feed,
-    reports the DURABLE readmitted count (not 0) flagged as
-    prior-attempt-durable, finishes the quarantine rewrite, and the
-    index serves the readmitted doc."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = _vstore(tmp_path, min_margin=1500)
-    ingest_mod.ingest_batch_vectors(spark, store, _mk_vdocs(spark, _VB0), 0)
-
-    lenient = _vstore(tmp_path, min_margin=-5000)
-    real_commit = acid_mod.atomic_overwrite_partitions
-    state = {"calls": 0}
-
-    def crashing(df, path, **kw):
-        state["calls"] += 1
-        if state["calls"] == 4:  # corpus=1 hashes=2 bloom=3 VECTORS=4
-            raise RuntimeError("injected crash")
-        return real_commit(df, path, **kw)
-
-    monkeypatch.setattr(acid_mod, "atomic_overwrite_partitions", crashing)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", crashing)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        ingest_mod.readmit_quarantine(spark, lenient, 1)
-    monkeypatch.setattr(acid_mod, "atomic_overwrite_partitions", real_commit)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", real_commit)
-
-    r = ingest_mod.readmit_quarantine(spark, lenient, 1)
-    assert r["readmitted"] == 1
-    assert r["readmitted_durable_in_prior_attempt"] is True
-    assert r["left_quarantine"] == 2 and r["still_quarantined"] == 0
-    assert acid_mod.read_atomic(spark, lenient.quarantine).count() == 0
-    assert sorted(
-        x["__id"] for x in acid_mod.read_atomic(spark, lenient.vectors).collect()
-    ) == [1, 2]
-    q = _mk_vdocs(spark, [(9, "q", [0.1, 1.0])]).select(
-        F.col("doc_id").alias("vec_id"), "embedding"
-    )
-    got = ingest_mod.vector_index_topk(spark, lenient, q, k=1, nprobe=2).collect()
-    assert [x["neighbor_id"] for x in got] == [2]
-
-
-def test_batch_ingest_heals_crashed_readmit_chain(spark, tmp_path, monkeypatch):
-    """Round-11 ADVICE (medium): a crashed readmit leaves APPEND
-    commits under the 'readmit' app; the next ingest_batch_vectors
-    call must heal that chain BEFORE screening (else its semantic
-    screen misses the readmitted docs), and the default
-    unhealed_floor must protect the un-healed commit in between."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = _vstore(tmp_path, min_margin=1500)
-    ingest_mod.ingest_batch_vectors(spark, store, _mk_vdocs(spark, _VB0), 0)
-
-    lenient = _vstore(tmp_path, min_margin=-5000)
-    real_commit = acid_mod.atomic_overwrite_partitions
-    state = {"calls": 0}
-
-    def crashing(df, path, **kw):
-        state["calls"] += 1
-        if state["calls"] == 4:
-            raise RuntimeError("injected crash")
-        return real_commit(df, path, **kw)
-
-    monkeypatch.setattr(acid_mod, "atomic_overwrite_partitions", crashing)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", crashing)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        ingest_mod.readmit_quarantine(spark, lenient, 1)
-    monkeypatch.setattr(acid_mod, "atomic_overwrite_partitions", real_commit)
-    monkeypatch.setattr(ingest_mod.acid, "atomic_overwrite_partitions", real_commit)
-
-    # the un-healed 'readmit' commit constrains the DEFAULT vacuum floor
-    assert ingest_mod.unhealed_floor(lenient) is not None
-
-    # an interleaved ingest batch (NOT a readmit retry) heals the
-    # readmit chain first, so its screen sees the readmitted doc 2
-    b2 = _mk_vdocs(spark, [(7, "good fresh words", [0.02, 1.0])])
-    r2 = ingest_mod.ingest_batch_vectors(spark, lenient, b2, 2)
-    assert r2["sem_rejected_history"] == 1 and r2["admitted"] == 0
-    assert sorted(
-        x["__id"] for x in acid_mod.read_atomic(spark, lenient.vectors).collect()
-    ) == [1, 2]
-    # healed: no floor constraint remains, and vacuum_store defaults are safe
-    assert ingest_mod.unhealed_floor(lenient) is None
-    ingest_mod.vacuum_store(spark, lenient, grace_seconds=0.0)
-    # the readmit retry replays the quarantine rewrite cleanly; the
-    # aggressive vacuum pruned the manifests the durable count needs,
-    # so it reports 0 WITH the durable flag (an honest floor, never a
-    # fabricated number)
-    r = ingest_mod.readmit_quarantine(spark, lenient, 1)
-    assert r["readmitted_durable_in_prior_attempt"] is True
-    assert r["readmitted"] == 0
-    # the corpus itself, of course, still has the readmitted doc
-    assert sorted(
-        x["doc_id"] for x in acid_mod.read_atomic(spark, lenient.corpus).collect()
-    ) == [1, 2]
-
-
-def test_readmit_refuses_pre_index_quarantine_rows(spark, tmp_path):
-    """A row quarantined BEFORE the vector index existed carries no
-    embedding (NULL after the quarantine's schema widened); if it
-    would now PASS, readmission must refuse loudly — admitting it
-    would silently hole the index.  Still-failing embedding-less rows
-    are harmless and stay put."""
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store = _vstore(tmp_path, min_margin=1500)
-    # text-only batch BEFORE any index: doc 2 (+1000) quarantines
-    r0 = ingest_mod.ingest_batch(
-        spark, store, spark.createDataFrame(
-            [(1, "good good intro"), (2, "good beta words")],
-            "doc_id long, text string",
-        ), 0
-    )
-    assert r0["quarantined"] == 1
-    # the index arrives later, from a vector batch that passes quality
-    r1 = ingest_mod.ingest_batch_vectors(
-        spark, store, _mk_vdocs(spark, [(3, "good good again", [1.0, 0.0])]), 1
-    )
-    assert r1["admitted"] == 1
-    # floor unchanged: doc 2 still fails -> readmit is a clean no-admit
-    r2 = ingest_mod.readmit_quarantine(spark, store, 2)
-    assert r2["readmitted"] == 0 and r2["still_quarantined"] == 1
-    # floor lowered: doc 2 would pass but has no embedding -> refuse
-    lenient = _vstore(tmp_path, min_margin=-5000)
-    with pytest.raises(ValueError, match="cannot be healed into vector rows"):
-        ingest_mod.readmit_quarantine(spark, lenient, 3)
-
-
-# ---------------------------------------------------------------------------
 # Round 12 #3: IVF×PQ (IVFADC) composed ANN route
 # ---------------------------------------------------------------------------
 
@@ -514,106 +287,6 @@ def test_byte_bpe_corpus_oracle_twin_lockstep(spark, tmp_path):
             entry._byte_bpe_corpus_oracle(6, "TRUE")
         ).fetchall()
         assert got == [tuple(r) for r in want], f"case {case} diverged"
-
-
-# ---------------------------------------------------------------------------
-# Round 12 (beyond asks): PQ serving sidecar for the incremental vector index
-# ---------------------------------------------------------------------------
-
-
-def _seed_vector_store(spark, tmp_path, n=40, dim=8, cells=4):
-    import random
-
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    rng = random.Random(3)
-    store = ingest_mod.IngestStore(
-        str(tmp_path / "root"), m_bits=1 << 12, ivf_clusters=cells,
-        sem_threshold=0.999,
-    )
-    rows = [
-        (i, f"doc number {i} text", [round(rng.uniform(-1, 1), 3) for _ in range(dim)])
-        for i in range(n)
-    ]
-    batch = spark.createDataFrame(
-        rows, "doc_id long, text string, embedding array<float>"
-    )
-    r = ingest_mod.ingest_batch_vectors(spark, store, batch, 0)
-    assert r["admitted"] == n
-    return store, rows
-
-
-def test_pq_sidecar_total_budget_equals_exact_route(spark, tmp_path):
-    """route='pq' with probe-all + total refine must equal the exact
-    route bit-for-bit (same rerank expressions) — the law every
-    approximate knob relaxes from; and the build is idempotent at an
-    unchanged vectors version."""
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store, rows = _seed_vector_store(spark, tmp_path)
-    r = ingest_mod.build_vector_pq_sidecar(spark, store, m=4, n_codes=8)
-    assert r["rebuilt"] is True and r["rows"] == 40
-    assert ingest_mod.build_vector_pq_sidecar(spark, store)["rebuilt"] is False
-
-    qs = spark.createDataFrame(
-        [(i, v) for i, _t, v in rows[:5]], "vec_id long, embedding array<float>"
-    )
-    exact = ingest_mod.vector_index_topk(
-        spark, store, qs, k=5, nprobe=4, route="exact"
-    ).collect()
-    pq = ingest_mod.vector_index_topk(
-        spark, store, qs, k=5, nprobe=4, route="pq", refine=8
-    ).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    assert {key(r): (r["neighbor_id"], r["score"]) for r in pq} == {
-        key(r): (r["neighbor_id"], r["score"]) for r in exact
-    }
-
-
-def test_pq_sidecar_staleness_and_auto_route(spark, tmp_path):
-    """Any vectors commit makes the sidecar stale: the pq route
-    refuses loudly, auto falls back to exact, the rebuild re-serves,
-    and forget DELETES the sidecar (content-derived codes must not
-    linger in a cache)."""
-    from tiki_e_commerce_analytics_etl_spark import acid as acid_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    store, rows = _seed_vector_store(spark, tmp_path)
-    ingest_mod.build_vector_pq_sidecar(spark, store, m=4, n_codes=8)
-    qs = spark.createDataFrame(
-        [(0, rows[0][2])], "vec_id long, embedding array<float>"
-    )
-    assert ingest_mod.vector_index_topk(
-        spark, store, qs, k=3, route="auto"
-    ).count() == 3
-
-    b1 = spark.createDataFrame(
-        [(100, "a genuinely fresh doc", [0.9] * 8)],
-        "doc_id long, text string, embedding array<float>",
-    )
-    ingest_mod.ingest_batch_vectors(spark, store, b1, 1)
-    with pytest.raises(ValueError, match="missing or stale"):
-        ingest_mod.vector_index_topk(spark, store, qs, k=3, route="pq")
-    # auto serves EXACT (sees the new doc) instead of a stale cache
-    got = ingest_mod.vector_index_topk(
-        spark, store, qs, k=41, nprobe=4, route="auto"
-    )
-    assert any(r["neighbor_id"] == 100 for r in got.collect())
-    # rebuild pins the new version and the pq route serves the new doc
-    r = ingest_mod.build_vector_pq_sidecar(spark, store, m=4, n_codes=8)
-    assert r["rebuilt"] is True and r["rows"] == 41
-    got = ingest_mod.vector_index_topk(
-        spark, store, qs, k=41, nprobe=4, route="pq", refine=11
-    )
-    assert any(r["neighbor_id"] == 100 for r in got.collect())
-
-    # forget removes the sidecar entirely
-    ids = spark.createDataFrame([(100,)], "doc_id long")
-    ingest_mod.forget(spark, store, ids, 2)
-    assert acid_mod.latest_version(store.pq_codes) is None
-    assert acid_mod.latest_version(store.pq_books) is None
-    with pytest.raises(ValueError, match="missing or stale"):
-        ingest_mod.vector_index_topk(spark, store, qs, k=3, route="pq")
 
 
 def test_merge_fold_expr_matches_merge_scan(spark):

@@ -482,233 +482,3 @@ def test_sketch_merge_sink_equals_oneshot_and_recovers(spark, tmp_path):
     )
     est2 = hll2.collect()[0]["n_distinct"]
     assert abs(est2 - 50) / 50 <= 0.1  # b2's keys are a subset
-
-
-def test_streaming_ingest_sink_neardup_exactly_once(spark, tmp_path):
-    """foreachBatch face of the incremental ingest: micro-batches run
-    the full admission pipeline (exact + band-index near-dup) with the
-    batch id as the txn version; a second availableNow run on the same
-    checkpoint re-delivers nothing new and replays are no-ops."""
-    from tiki_e_commerce_analytics_etl_spark import acid
-    from tiki_e_commerce_analytics_etl_spark.pipelines.ingest import IngestStore
-    from tiki_e_commerce_analytics_etl_spark.streaming.incremental import (
-        foreach_batch_ingest,
-    )
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    store = IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    schema = "doc_id long, text string"
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu"
-    spark.createDataFrame(
-        [(1, base), (2, "wholly different content on another subject entirely")],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    def run_once():
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .writeStream.option("checkpointLocation", ckpt)
-            .foreachBatch(foreach_batch_ingest(store, near_dup=True))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    assert sorted(
-        r.doc_id for r in acid.read_atomic(spark, store.corpus).collect()
-    ) == [1, 2]
-
-    # second delivery: an exact dup, a near-dup of history, a new doc
-    spark.createDataFrame(
-        [(3, base), (4, base + " extra"), (5, "brand new text with its own words here")],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-    assert sorted(
-        r.doc_id for r in acid.read_atomic(spark, store.corpus).collect()
-    ) == [1, 2, 5]
-
-    # idempotent restart: nothing new to deliver, state unchanged
-    run_once()
-    assert sorted(
-        r.doc_id for r in acid.read_atomic(spark, store.corpus).collect()
-    ) == [1, 2, 5]
-
-
-def test_streaming_ingest_sink_substring_exactly_once(spark, tmp_path):
-    """foreachBatch face of the round-10 substring chain: micro-batches
-    maintain the window-anchor index with the batch id as txn version;
-    the healed index answers the full pair set identically to the
-    one-shot operator, and availableNow replays are no-ops."""
-    from tiki_e_commerce_analytics_etl_spark import acid
-    from tiki_e_commerce_analytics_etl_spark.operators import dedup as dedup_ops
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines.ingest import IngestStore
-    from tiki_e_commerce_analytics_etl_spark.streaming.incremental import (
-        foreach_batch_ingest,
-    )
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    store = IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    schema = "doc_id long, text string"
-    span = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    spark.createDataFrame(
-        [(1, f"{span} first tail"), (2, "wholly different content on another subject")],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    def run_once():
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .writeStream.option("checkpointLocation", ckpt)
-            .foreachBatch(foreach_batch_ingest(store, substring=True))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    # second delivery shares the span with history
-    spark.createDataFrame(
-        [(3, f"other prefix {span} second tail")], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-    run_once()  # idempotent restart: nothing new, replays are no-ops
-
-    corpus = acid.read_atomic(spark, store.corpus)
-    assert sorted(r.doc_id for r in corpus.collect()) == [1, 2, 3]
-    got = sorted(
-        (p["id_a"], p["id_b"], p["shared_windows"], p["max_run_words"])
-        for p in ingest_mod.substring_pairs_from_index(spark, store).collect()
-    )
-    want = sorted(
-        (p["id_a"], p["id_b"], p["shared_windows"], p["max_run_words"])
-        for p in dedup_ops.exact_substring_pairs(
-            corpus, min_words=store.substring_k
-        ).collect()
-    )
-    assert got == want and got  # the (1, 3) span pair is found
-
-    import pytest as _p
-
-    with _p.raises(ValueError, match="one screening mode"):
-        foreach_batch_ingest(store, near_dup=True, substring=True)
-
-
-def test_streaming_ingest_sink_lm_exactly_once(spark, tmp_path):
-    """foreachBatch face of the round-10b LM-count chain: micro-batches
-    maintain the ngrams index with the batch id as txn version; the
-    chain-derived Kneser-Ney model equals the one-shot trainer on the
-    streamed corpus, and availableNow replays are no-ops."""
-    from tiki_e_commerce_analytics_etl_spark import acid
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines.ingest import IngestStore
-    from tiki_e_commerce_analytics_etl_spark.streaming.incremental import (
-        foreach_batch_ingest,
-    )
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    store = IngestStore(str(tmp_path / "root"), m_bits=1 << 12)
-    schema = "doc_id long, text string"
-    spark.createDataFrame(
-        [(1, "the cat sat on the mat"), (2, "the dog sat on the log")],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    def run_once():
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .writeStream.option("checkpointLocation", ckpt)
-            .foreachBatch(foreach_batch_ingest(store, lm=True))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    spark.createDataFrame(
-        [(3, "a cat and a dog and a bird")], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-    run_once()  # idempotent restart
-
-    corpus = acid.read_atomic(spark, store.corpus)
-    assert sorted(r.doc_id for r in corpus.collect()) == [1, 2, 3]
-    got = sorted(
-        tuple(row) for row in ingest_mod.kn_lm_from_chain(spark, store).collect()
-    )
-    want = sorted(tuple(row) for row in text_ops.kn_bigram_lm(corpus).collect())
-    assert got == want and got
-
-    import pytest as _p
-
-    with _p.raises(ValueError, match="one screening mode"):
-        foreach_batch_ingest(store, substring=True, lm=True)
-
-
-def test_streaming_ingest_sink_vectors_exactly_once(spark, tmp_path):
-    """foreachBatch face of the round-10 vector chain: micro-batches
-    maintain the IVF vector index with the batch id as txn version;
-    semantic dups of admitted history are rejected across deliveries,
-    the index serves ANN queries between runs, and availableNow
-    replays are no-ops."""
-    from tiki_e_commerce_analytics_etl_spark import acid
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-    from tiki_e_commerce_analytics_etl_spark.pipelines.ingest import IngestStore
-    from tiki_e_commerce_analytics_etl_spark.streaming.incremental import (
-        foreach_batch_ingest,
-    )
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    store = IngestStore(
-        str(tmp_path / "root"), m_bits=1 << 12, ivf_clusters=2, sem_threshold=0.95
-    )
-    schema = "doc_id long, text string, embedding array<float>"
-    spark.createDataFrame(
-        [(1, "first doc", [1.0, 0.0]), (2, "second doc", [0.0, 1.0])], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    def run_once():
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .writeStream.option("checkpointLocation", ckpt)
-            .foreachBatch(foreach_batch_ingest(store, vectors=True))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    # second delivery: one semantic dup of history, one genuinely new
-    spark.createDataFrame(
-        [(3, "third doc", [0.99, 0.14]), (4, "fourth doc", [-1.0, 0.0])], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-    run_once()  # idempotent restart: nothing new, replays are no-ops
-
-    corpus = acid.read_atomic(spark, store.corpus)
-    assert sorted(r.doc_id for r in corpus.collect()) == [1, 2, 4]
-    vrow_ids = sorted(
-        r["__id"] for r in acid.read_atomic(spark, store.vectors).collect()
-    )
-    assert vrow_ids == [1, 2, 4]
-    queries = spark.createDataFrame(
-        [(100, [0.9, 0.1])], "vec_id long, embedding array<float>"
-    )
-    top = ingest_mod.vector_index_topk(spark, store, queries, k=1, nprobe=2).collect()
-    assert [r["neighbor_id"] for r in top] == [1]
-
-    import pytest as _p
-
-    with _p.raises(ValueError, match="one screening mode"):
-        foreach_batch_ingest(store, lm=True, vectors=True)

@@ -68,7 +68,7 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401  (re-export convenience)
+from pyspark.sql import functions as F
 
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
@@ -438,6 +438,30 @@ def snapshot_files(
     return kept
 
 
+def _read_rel_files(spark: SparkSession, path: str, rel_files: list[str]) -> DataFrame | None:
+    """Union the given manifest-relative data files, per-transaction
+    with that txn's basePath so Hive partition columns are re-derived;
+    None when the list is empty.  Shared by ``read_atomic`` and
+    ``changes_between``."""
+    by_txn: dict[str, list[str]] = {}
+    for rel in rel_files:
+        # rel = data/txn-<id>/[<part dirs>/]file.parquet
+        txn_root = os.path.join(*rel.split(os.sep)[:2])
+        by_txn.setdefault(txn_root, []).append(os.path.join(path, rel))
+    parts = None
+    for txn_root, files in sorted(by_txn.items()):
+        df = (
+            spark.read.option("basePath", os.path.join(path, txn_root))
+            .parquet(*sorted(files))
+        )
+        # allowMissingColumns: a snapshot may mix transactions written
+        # before and after a column was added (schema evolution);
+        # columns absent from an older transaction read as NULL, the
+        # standard add-column semantics.
+        parts = df if parts is None else parts.unionByName(df, allowMissingColumns=True)
+    return parts
+
+
 def read_atomic(
     spark: SparkSession,
     path: str,
@@ -485,24 +509,7 @@ def read_atomic(
     # Every file zone-map-skipped: the predicate provably selects zero
     # rows, but we still need the snapshot's schema — read one file and
     # let the caller's filter produce the empty result.
-    all_files = all_files or skipped[:1]
-    by_txn: dict[str, list[str]] = {}
-    for rel in all_files:
-        # rel = data/txn-<id>/[<part dirs>/]file.parquet
-        txn_root = os.path.join(*rel.split(os.sep)[:2])
-        by_txn.setdefault(txn_root, []).append(os.path.join(path, rel))
-    parts = None
-    for txn_root, files in sorted(by_txn.items()):
-        df = (
-            spark.read.option("basePath", os.path.join(path, txn_root))
-            .parquet(*sorted(files))
-        )
-        # allowMissingColumns: a snapshot may mix transactions written
-        # before and after a column was added (schema evolution);
-        # columns absent from an older transaction read as NULL, the
-        # standard add-column semantics.
-        parts = df if parts is None else parts.unionByName(df, allowMissingColumns=True)
-    return parts
+    return _read_rel_files(spark, path, all_files or skipped[:1])
 
 
 def snapshot_row_count(path: str, version: int | None = None) -> int | None:
@@ -590,24 +597,10 @@ def vacuum(
     path: str,
     keep_versions: int = 2,
     grace_seconds: float = 86400.0,
-    min_retain_version: int | None = None,
 ) -> list[str]:
     """Delete manifests older than the newest ``keep_versions`` and any
     transaction directory no retained manifest references; returns the
     removed paths.
-
-    ``min_retain_version`` is a retention FLOOR: every version >= it is
-    retained regardless of ``keep_versions``, along with the files it
-    references.  This is how the heal-before-vacuum invariant is
-    ENFORCED (not just documented) for direct callers: an ingest-store
-    chain that crashed between its corpus commit and the downstream
-    tables is recovered by replaying the corpus change feed
-    (``pipelines.ingest._heal_chain``), which diffs the un-healed
-    commit's manifest against its predecessor — pruning either manifest
-    makes the crash unrecoverable.  Pass the value from
-    ``pipelines.ingest.unhealed_floor(store)`` (None when every chain
-    is healed, i.e. no constraint); ``pipelines.ingest.vacuum_store``
-    does this automatically after healing.
 
     ``grace_seconds`` (default 24h, same contract as Delta VACUUM's
     retention) protects two kinds of in-flight work an unreferenced
@@ -635,10 +628,6 @@ def vacuum(
 
     versions = _list_versions(path)
     keep = versions[-keep_versions:] if (versions and keep_versions > 0) else []
-    if min_retain_version is not None:
-        keep = sorted(
-            set(keep) | {v for v in versions if v >= min_retain_version}
-        )
     live_txns = set()
     referenced_ever = set()
     for v in versions:
@@ -692,24 +681,6 @@ def vacuum(
                 shutil.rmtree(full)
                 removed.append(full)
     return removed
-
-
-def _read_rel_files(spark: SparkSession, path: str, rel_files: list[str]) -> DataFrame | None:
-    """Union the given manifest-relative data files, per-transaction
-    with that txn's basePath so Hive partition columns are re-derived
-    (same recipe as read_atomic); None when the list is empty."""
-    by_txn: dict[str, list[str]] = {}
-    for rel in rel_files:
-        txn_root = os.path.join(*rel.split(os.sep)[:2])
-        by_txn.setdefault(txn_root, []).append(os.path.join(path, rel))
-    parts = None
-    for txn_root, files in sorted(by_txn.items()):
-        df = (
-            spark.read.option("basePath", os.path.join(path, txn_root))
-            .parquet(*sorted(files))
-        )
-        parts = df if parts is None else parts.unionByName(df, allowMissingColumns=True)
-    return parts
 
 
 def _align_columns(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:

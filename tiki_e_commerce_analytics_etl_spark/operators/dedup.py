@@ -395,29 +395,6 @@ def _expand_bucket_pairs(buckets: DataFrame, doc_struct: bool) -> DataFrame:
     return e2.select(F.col("x").alias("id_a"), F.col("y").alias("id_b"))
 
 
-_MAX_LONG = (1 << 63) - 1
-
-
-def minhash_signature(shingle_arr: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature as array<long>: for hash function i, the
-    minimum of ``xxhash64(shingle, i)`` over the document's shingles.
-
-    Single pass over the shingle array (one AGGREGATE whose accumulator
-    is the running per-function minimum vector) — the naive
-    one-array_min-per-function form re-evaluates the shingle expression
-    ``num_hashes`` times, which turns a text normalization that should
-    run once per row into hundreds of evaluations.  Pure expressions,
-    no UDF, no shuffle.
-    """
-    seeds = F.sequence(F.lit(0).cast("long"), F.lit(num_hashes - 1).cast("long"))
-    init = F.array_repeat(F.lit(_MAX_LONG), num_hashes)
-    return F.aggregate(
-        shingle_arr,
-        init,
-        lambda acc, s: F.zip_with(acc, seeds, lambda a, i: F.least(a, F.xxhash64(s, i))),
-    )
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -1195,7 +1172,7 @@ def window_anchors(
     df: DataFrame, text_col: str, id_col: str, k: int
 ) -> tuple[DataFrame, DataFrame]:
     """The anchor front-end of the suffix-array-style dedup family,
-    factored out so the incremental ingest chain can PERSIST it: the
+    shared by the one-shot and cross-set (decontamination) paths: the
     tokenized corpus (``__id``, ``__w`` word array; docs with < k
     words excluded) and the anchor stream (``__id``, ``__off``
     1-based word offset, ``__h`` xxhash64 of the k-word window) —
@@ -1329,7 +1306,7 @@ def _verify_window_candidates(
     positions) groups on a superset of (id_a, id_b), so this single
     exchange satisfies them all AND ReuseExchange runs the candidate
     join + verification once instead of once per consumer.  Shared by
-    the one-shot family and the incremental ingest index probe."""
+    the one-shot family and the cross-set decontamination path."""
     return (
         cand.join(ta, "id_a")
         .join(tb, "id_b")
@@ -1418,8 +1395,8 @@ def _pair_scores(verified: DataFrame, k: int) -> DataFrame:
     id_b, off_a, off_b, __win): distinct shared window strings +
     the diagonal row_number streak that turns c consecutive verified
     windows into an EXACT longest-common-run of c+k-1 words.  Shared
-    by ``exact_substring_pairs`` and the incremental ingest chain's
-    index-probe path so batch and one-shot scoring cannot drift."""
+    by ``exact_substring_pairs`` and ``substring_decontaminate`` so
+    the two scorings cannot drift."""
     diag = (F.col("off_a") - F.col("off_b")).alias("__d")
     w = Window.partitionBy("id_a", "id_b", "__d").orderBy("off_a")
     streaks = (

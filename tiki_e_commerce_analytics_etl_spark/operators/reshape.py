@@ -62,11 +62,3 @@ def union_concat(frames: list[DataFrame]) -> DataFrame:
     for f in frames[1:]:
         out = out.unionByName(f, allowMissingColumns=True)
     return out
-
-
-def split_projections(df: DataFrame, projections: dict[str, list]) -> dict[str, DataFrame]:
-    """R3 — one wide cleaned table → N conformed outputs in one pass.
-    Caches the parent so the common subplan is computed once, then
-    projects each output (transform_tiki.py:601-749)."""
-    df = df.cache()
-    return {name: df.select(*cols) for name, cols in projections.items()}

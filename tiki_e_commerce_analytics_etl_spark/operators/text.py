@@ -1997,12 +1997,10 @@ def kn_bigram_lm(
 
 def kn_bigram_lm_from_counts(cbg):
     """The model-building back half of ``kn_bigram_lm``, taking a
-    pre-aggregated bigram count table (w1, w2, cbg) — factored out so
-    the incremental ingest chain's persisted count rows build the
-    SAME model through the same code path (incremental ∘ one-shot
-    lockstep): prefix / continuation / scalar statistics re-derive
-    from the count table alone, so two count tables that agree yield
-    bit-identical models."""
+    pre-aggregated bigram count table (w1, w2, cbg): prefix /
+    continuation / scalar statistics re-derive from the count table
+    alone, so two count tables that agree yield bit-identical
+    models."""
     pre = cbg.groupBy("w1").agg(
         F.sum("cbg").alias("cpre"), F.count(F.lit(1)).alias("n1p")
     )

@@ -50,7 +50,6 @@ from .runner import Context, Pipeline
 __all__ = [
     "analytics_pipeline",
     "fx_pipeline",
-    "ingest_maintenance_pipeline",
     "maintenance_pipeline",
     "tiki_pipeline",
     "trends_pipeline",
@@ -338,53 +337,5 @@ def maintenance_pipeline(state_dir: str | None = None, retry_delay: float = 0.0)
             t: len(acid.vacuum(_warehouse(ctx, t), keep_versions=keep, grace_seconds=grace))
             for t in ctx.xcom["discover_tables"]
         }
-
-    return p
-
-
-def ingest_maintenance_pipeline(
-    state_dir: str | None = None, retry_delay: float = 0.0
-) -> Pipeline:
-    """Maintenance for an INGEST STORE (corpus/hashes/bloom/bands) —
-    distinct from the generic ``maintenance_pipeline`` because the
-    store's tables form a commit CHAIN: chain healing must run before
-    any prune (a vacuum that drops a corpus version an un-healed
-    commit still references makes the crash unrecoverable — the
-    heal-before-vacuum ordering ``ingest.vacuum_store`` enforces), and
-    compaction must cover the band index too so its CAS retries see
-    live writers.
-
-    params:
-      store_root     — IngestStore root path
-      app_ids        — chains to heal first (default ("ingest",))
-      keep_versions  — vacuum retention (default 3)
-      grace_seconds  — vacuum in-flight grace (default 3600)
-    """
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    p = Pipeline("ingest_maintenance_pipeline", state_dir)
-
-    def _store(ctx: Context) -> "ingest_mod.IngestStore":
-        return ingest_mod.IngestStore(ctx.params["store_root"])
-
-    @p.task("compact_store", retries=RETRIES, retry_delay=retry_delay)
-    def compact(ctx: Context) -> dict:
-        store = _store(ctx)
-        versions = {}
-        for t in (store.corpus, store.hashes, store.bloom, store.bands):
-            if acid.latest_version(t) is not None:
-                versions[os.path.basename(t)] = acid.compact(ctx.spark, t)
-        return versions
-
-    @p.task("heal_and_vacuum", upstream=("compact_store",), retries=RETRIES, retry_delay=retry_delay)
-    def vac(ctx: Context) -> int:
-        removed = ingest_mod.vacuum_store(
-            ctx.spark,
-            _store(ctx),
-            app_ids=tuple(ctx.params.get("app_ids", ("ingest",))),
-            keep_versions=int(ctx.params.get("keep_versions", 3)),
-            grace_seconds=float(ctx.params.get("grace_seconds", 3600.0)),
-        )
-        return len(removed)
 
     return p

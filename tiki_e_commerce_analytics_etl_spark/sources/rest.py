@@ -6,18 +6,16 @@ the Spark engine they are small driver-side fetch loops whose output
 becomes a DataFrame via ``spark.createDataFrame(rows, schema)``.
 
 Network calls are injected (``fetch=``) so the adapters are testable
-and this module never performs I/O on import.  Politeness pacing,
-retry/backoff-with-jitter, and the response cache mirror the reference
-(api_crawler.js:330-386; trends_dag.py:100-213).
+and this module never performs I/O on import.  Politeness pacing and
+retry/backoff-with-jitter mirror the reference (api_crawler.js:330-386;
+trends_dag.py:100-213).
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import time
 from collections.abc import Callable, Iterable
-from pathlib import Path
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -89,28 +87,6 @@ def fetch_with_retry(
             err = e
             sleep(min(base_delay_s * (2**attempt), max_delay_s))
     raise RuntimeError(f"fetch failed after {retries} retries: {url}") from err
-
-
-class ResponseCache:
-    """Local JSON response cache with TTL (trends_dag.py:160-213):
-    MD5(key) file per request, used to avoid refetching within TTL."""
-
-    def __init__(self, cache_dir: str, ttl_s: float = 6 * 3600):
-        self.dir = Path(cache_dir)
-        self.dir.mkdir(parents=True, exist_ok=True)
-        self.ttl_s = ttl_s
-
-    def _path(self, key: str) -> Path:
-        return self.dir / (hashlib.md5(key.encode()).hexdigest() + ".json")
-
-    def get(self, key: str) -> Any | None:
-        p = self._path(key)
-        if p.exists() and (time.time() - p.stat().st_mtime) < self.ttl_s:
-            return json.loads(p.read_text())
-        return None
-
-    def put(self, key: str, value: Any) -> None:
-        self._path(key).write_text(json.dumps(value))
 
 
 def crawl_listings(

@@ -15,24 +15,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from tiki_e_commerce_analytics_etl_spark.operators.merge import merge_upsert
-
-
-def read_stream_json(
-    spark: SparkSession, path: str, schema: T.StructType, max_files_per_trigger: int = 10
-) -> DataFrame:
-    """File-source stream over the raw zone: each arriving
-    snapshot_date directory becomes micro-batches (S1's streaming
-    shape)."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("multiLine", True)
-        .json(path)
-    )
 
 
 def windowed_scores(events: DataFrame, ts_col: str = "ts", watermark: str = "1 day") -> DataFrame:
@@ -133,21 +117,6 @@ def foreach_batch_upsert_atomic(
     return apply
 
 
-def start_upsert_stream(
-    source: DataFrame,
-    target_path: str,
-    keys: list[str],
-    checkpoint: str,
-    tmp_path: str,
-) -> StreamingQuery:
-    return (
-        source.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(foreach_batch_upsert(target_path, keys, tmp_path))
-        .start()
-    )
-
-
 def foreach_batch_bloom_merge(
     target_path: str,
     key_col: str,
@@ -159,8 +128,7 @@ def foreach_batch_bloom_merge(
     """Exactly-once streaming maintenance of the corpus membership
     bitmap (operators/bloom.py): each micro-batch's keys fold into the
     acid-committed word table with ``bit_or`` — the sketch equivalent
-    of the MERGE sink above, and the streaming half of the incremental
-    ingest-dedup story: a batch ingest probes the continuously-
+    of the MERGE sink above: a batch dedup probes the continuously-
     maintained bitmap instead of joining ever-growing history.
 
     Replayed batches are skipped by (app_id, batch_id) inside the
@@ -205,11 +173,11 @@ def foreach_batch_sketch_merge(
     over ALL history cost a KB-sized read, never a scan.  The 100 TB
     shape for planner statistics over a live stream.
 
-    Crash consistency follows the ingest chain protocol: per-table
-    commits are idempotent under (app_id, batch_id) — each table
-    checks its OWN cursor before merging, because unlike the bloom
-    sink a replayed CMS/HLL fold is NOT naturally idempotent
-    (re-summing a batch's cells would double-count it).  The
+    Crash consistency: per-table commits are idempotent under
+    (app_id, batch_id) — each table checks its OWN cursor before
+    merging, because unlike the bloom sink a replayed CMS/HLL fold is
+    NOT naturally idempotent (re-summing a batch's cells would
+    double-count it).  The
     whole-batch replay check is against the LAST table in the chain
     (hll); a crash between the cms and hll commits re-runs only the
     missing fold on redelivery.
@@ -270,89 +238,3 @@ def read_sketch_stats(
         ),
     )
 
-
-def foreach_batch_ingest(
-    store,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    app_id: str = "stream-ingest",
-    near_dup: bool = False,
-    substring: bool = False,
-    lm: bool = False,
-    vectors: bool = False,
-    vec_col: str = "embedding",
-    nprobe: int = 1,
-) -> Callable[[DataFrame, int], None]:
-    """Streaming face of the incremental corpus ingest
-    (pipelines/ingest.py): each micro-batch runs the full admission
-    pipeline — in-batch dedup, bloom-gated history-wide exact dedup,
-    and (``near_dup=True``) the persistent-band-index near-duplicate
-    screen or (``substring=True``, round 10) the persistent
-    window-anchor exact-substring index — with the micro-batch id as
-    the exactly-once transaction version.  Restart replays are
-    whole-batch no-ops, and a crash inside the multi-table commit
-    chain recovers via the corpus change feed on the next delivery of
-    the same batch id (the pipeline's own crash-consistency protocol;
-    the streaming engine redelivers the batch from the checkpoint).
-    The LSH family for the near-dup screen and the substring window
-    width come from the ``store`` (a persisted index is only
-    probe-able with the family that built it).  The substring mode
-    DETECTS (the per-batch pair output is discarded here — a
-    streaming caller wanting it queries
-    ``substring_pairs_from_index`` on the healed store); choose ONE
-    screening mode per sink — plain ingest maintains whichever
-    indexes already exist either way (variant mixing).  ``lm=True``
-    (round 10b) maintains the incremental LM-count index instead: the
-    stream keeps a Kneser-Ney model of everything admitted current at
-    batch cost (``kn_lm_from_chain`` reads it between or during runs —
-    the CCNet screen of tomorrow's batches against today's corpus).
-    ``vectors=True`` (round 10) runs the incremental SemDeDup screen
-    instead: every micro-batch must carry ``vec_col``, embedding
-    near-dups of all admitted history are rejected via the persistent
-    IVF vector table, and the stream keeps an ANN index of the corpus
-    current at batch cost (``vector_index_topk`` queries it);
-    ``nprobe`` passes through to ``ingest_batch_vectors`` so the
-    streaming path can use the same multi-probe recall lever as the
-    batch path (cross-cell semantic dups are missed at the default
-    ``nprobe=1`` — the standard IVF compromise).  Quality gating
-    (round 11) rides the STORE config, not a flag here: a store
-    constructed with ``quality_mode`` quarantines failing micro-batch
-    rows through whichever entry point the sink uses.
-    """
-    from tiki_e_commerce_analytics_etl_spark.pipelines import ingest as ingest_mod
-
-    if sum([near_dup, substring, lm, vectors]) > 1:
-        raise ValueError(
-            "choose one screening mode: near_dup, substring, lm, or vectors"
-        )
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if near_dup:
-            ingest_mod.ingest_batch_neardup(
-                spark, store, batch, batch_id,
-                text_col=text_col, id_col=id_col, app_id=app_id,
-            )
-        elif substring:
-            ingest_mod.ingest_batch_substring(
-                spark, store, batch, batch_id,
-                text_col=text_col, id_col=id_col, app_id=app_id,
-            )
-        elif lm:
-            ingest_mod.ingest_batch_lm(
-                spark, store, batch, batch_id,
-                text_col=text_col, id_col=id_col, app_id=app_id,
-            )
-        elif vectors:
-            ingest_mod.ingest_batch_vectors(
-                spark, store, batch, batch_id,
-                text_col=text_col, id_col=id_col, vec_col=vec_col,
-                app_id=app_id, nprobe=nprobe,
-            )
-        else:
-            ingest_mod.ingest_batch(
-                spark, store, batch, batch_id,
-                text_col=text_col, id_col=id_col, app_id=app_id,
-            )
-
-    return apply
