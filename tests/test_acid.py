@@ -34,6 +34,15 @@ def _snapshot(spark, path, version=None):
     return len(rows), {r.payload for r in rows}, {r.p for r in rows}
 
 
+def _referenced_txns(path):
+    """Names of the txn dirs that some committed manifest references."""
+    refs = set()
+    for v in acid._list_versions(path):
+        for files in acid._read_manifest(path, v)["partitions"].values():
+            refs |= {rel.split(os.sep)[1] for rel in files}
+    return refs
+
+
 def test_commit_and_read_roundtrip(spark, tmp_path):
     path = str(tmp_path / "t")
     v0 = acid.atomic_overwrite_partitions(_mk(spark, "old"), path, ["p"])
@@ -383,11 +392,7 @@ def test_compact_conflict_with_concurrent_append(spark, tmp_path, monkeypatch):
     assert acid.read_atomic(spark, path).count() == 70
     # the conflicted attempt's staged copy was reclaimed at abort time:
     # every txn dir on disk is referenced by some manifest
-    refs = set()
-    for v in acid._list_versions(path):
-        for files in acid._read_manifest(path, v)["partitions"].values():
-            refs |= {rel.split(os.sep)[1] for rel in files}
-    assert set(os.listdir(os.path.join(path, "data"))) <= refs
+    assert set(os.listdir(os.path.join(path, "data"))) <= _referenced_txns(path)
 
 
 def test_compact_conflict_when_writer_lands_after_snapshot_read(
@@ -395,7 +400,7 @@ def test_compact_conflict_when_writer_lands_after_snapshot_read(
 ):
     """The other CAS instant: a transactional writer commits right
     after compaction READ its snapshot, so the stale compaction must
-    conflict before it stages any data and redo from the new snapshot.
+    conflict and redo from the new snapshot.
     The writer's rows and its (app, version) cursor both survive, so a
     replay of its batch after the compaction is still a no-op."""
     path = str(tmp_path / "t")
@@ -425,12 +430,8 @@ def test_compact_conflict_when_writer_lands_after_snapshot_read(
         late, path, ["p"], mode="append", txn_app="w", txn_version=1
     ) == -1
     assert acid.latest_version(path) == 2
-    # the conflict fired before staging: no unreferenced txn dir
-    refs = set()
-    for ver in acid._list_versions(path):
-        for files in acid._read_manifest(path, ver)["partitions"].values():
-            refs |= {rel.split(os.sep)[1] for rel in files}
-    assert set(os.listdir(os.path.join(path, "data"))) == refs
+    # the stale compaction left no staged copy behind
+    assert set(os.listdir(os.path.join(path, "data"))) == _referenced_txns(path)
 
 
 def test_txn_app_replay_is_skipped(spark, tmp_path):
@@ -498,11 +499,7 @@ def test_txn_app_replay_racing_inside_commit_loop(spark, tmp_path, monkeypatch):
     assert got == -1
     assert acid.latest_version(path) == 1
     assert _snapshot(spark, path)[1] == {"first"}
-    refs = set()
-    for ver in acid._list_versions(path):
-        for files in acid._read_manifest(path, ver)["partitions"].values():
-            refs |= {rel.split(os.sep)[1] for rel in files}
-    assert set(os.listdir(os.path.join(path, "data"))) == refs
+    assert set(os.listdir(os.path.join(path, "data"))) == _referenced_txns(path)
 
 
 def test_partition_layout_mismatch_rejected(spark, tmp_path):
