@@ -425,3 +425,368 @@ def test_pipelines_import_leaves_operator_library_unloaded():
         capture_output=True, text=True, check=True, cwd=repo_root,
     )
     assert out.stdout.strip() == "[]"
+
+
+# ------------------------------------------------- multi-table ingest chains
+#
+# A batch ingest committed across several acid tables, each under the
+# same (app, batch_id) transaction: per-table cursors make every step
+# idempotent, and the LAST table's cursor is the whole-batch replay
+# check (the protocol ``foreach_batch_sketch_merge`` follows).  Built
+# only from kept operators, so these tests pin down what acid promises
+# such a chain: crash redelivery converges, compaction may interleave
+# at any position, and compaction loses a race to the chain cleanly.
+
+_M_BITS = 1 << 12
+
+
+def _mk_docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _chain_tables(root):
+    return {t: os.path.join(root, t) for t in ("hashes", "bloom", "bigrams", "corpus")}
+
+
+def _ingest_chain(spark, root, batch, batch_id, app="ingest"):
+    """Admit ``batch``'s content-new docs (exact dedup in-batch and
+    against the corpus) through four commits: hashes=1, bloom=2,
+    bigrams=3, corpus=4.  Returns the admitted count, or None when the
+    corpus cursor shows the batch already landed."""
+    from tiki_e_commerce_analytics_etl_spark.operators import dedup
+    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
+    from tiki_e_commerce_analytics_etl_spark.streaming.incremental import (
+        foreach_batch_bloom_merge,
+    )
+
+    t = _chain_tables(root)
+    if acid.last_txn_version(t["corpus"], app) >= batch_id:
+        return None
+    fresh = dedup.exact_dedup(batch)
+    if acid.latest_version(t["corpus"]) is not None:
+        seen = acid.read_atomic(spark, t["corpus"]).select("content_hash")
+        fresh = fresh.join(seen, "content_hash", "left_anti")
+    # materialized once: every commit below writes from the same rows
+    fresh = fresh.select("doc_id", "text", "content_hash").localCheckpoint()
+
+    def commit(df, path):
+        acid.atomic_overwrite_partitions(
+            df, path, mode="append", txn_app=app, txn_version=batch_id
+        )
+
+    commit(fresh.select("content_hash"), t["hashes"])
+    foreach_batch_bloom_merge(t["bloom"], "content_hash", app, m_bits=_M_BITS)(
+        fresh, batch_id
+    )
+    commit(text_ops._kn_bigram_stats(fresh, "text", "doc_id")[0], t["bigrams"])
+    commit(fresh, t["corpus"])
+    return fresh.count()
+
+
+def _chain_state(spark, root):
+    """Sorted row multiset of every chain table — byte-comparable."""
+    return {
+        name: sorted(tuple(r) for r in acid.read_atomic(spark, path).collect())
+        for name, path in _chain_tables(root).items()
+    }
+
+
+def _chain_versions(root):
+    return {name: acid.latest_version(p) for name, p in _chain_tables(root).items()}
+
+
+def _assert_chain_invariants(spark, root):
+    from tiki_e_commerce_analytics_etl_spark.operators import bloom
+    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
+
+    t = _chain_tables(root)
+    corpus = acid.read_atomic(spark, t["corpus"])
+    hashes = acid.read_atomic(spark, t["hashes"])
+    # one distinct hash row per admitted doc
+    assert hashes.count() == hashes.distinct().count() == corpus.count()
+    assert sorted(r[0] for r in hashes.collect()) == sorted(
+        r.content_hash for r in corpus.collect()
+    )
+    # the bloom has no false negatives against the hash table
+    flags = bloom.bloom_probe(
+        hashes, acid.read_atomic(spark, t["bloom"]), "content_hash", m_bits=_M_BITS
+    )
+    assert flags.where(~F.col("maybe_seen")).count() == 0
+    # the summed per-batch bigram counts are the corpus's counts
+    counts = acid.read_atomic(spark, t["bigrams"]).groupBy("w1", "w2").agg(
+        F.sum("cbg").alias("cbg")
+    )
+    want = text_ops._kn_bigram_stats(corpus, "text", "doc_id")[0]
+    assert sorted(map(tuple, counts.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_incremental_ingest_dedups_across_batches_exactly_once(spark, tmp_path):
+    """In-batch dups collapse to the smallest id, cross-batch dups of
+    admitted content are rejected, replays are whole-batch no-ops that
+    move no table, and the corpus is exactly the distinct content."""
+    root = str(tmp_path / "root")
+    b0 = _mk_docs(spark, [(1, "alpha beta"), (2, "gamma delta"), (3, "alpha  BETA")])
+    assert _ingest_chain(spark, root, b0, 0) == 2
+
+    b1 = _mk_docs(spark, [(4, "gamma delta"), (5, "epsilon zeta")])
+    assert _ingest_chain(spark, root, b1, 1) == 1
+
+    versions = _chain_versions(root)
+    assert _ingest_chain(spark, root, b1, 1) is None
+    assert _chain_versions(root) == versions
+
+    corpus = acid.read_atomic(spark, _chain_tables(root)["corpus"])
+    assert sorted(r.doc_id for r in corpus.collect()) == [1, 2, 5]
+    assert _ingest_chain(spark, root, _mk_docs(spark, [(6, "eta theta")]), 2) == 1
+    _assert_chain_invariants(spark, root)
+
+
+@pytest.mark.parametrize("crash_at", [1, 2, 3, 4])
+def test_ingest_crash_matrix_invariants(spark, tmp_path, monkeypatch, crash_at):
+    """A crash at EVERY commit of the chain (hashes=1, bloom=2,
+    bigrams=3, corpus=4): redelivering the batch re-runs only the
+    missing commits — the committed tables skip it by their own
+    cursor — and the store ends byte-identical to a crash-free run,
+    with all invariants holding and a further replay moving nothing."""
+    b0 = _mk_docs(spark, [(1, "seed content for the store with many words")])
+    b1 = _mk_docs(
+        spark,
+        [(2, "crashing batch body with distinctive vocabulary here"),
+         (3, "seed content for the store with many words")],
+    )
+
+    clean = str(tmp_path / "clean")
+    _ingest_chain(spark, clean, b0, 0)
+    _ingest_chain(spark, clean, b1, 1)
+
+    root = str(tmp_path / "root")
+    _ingest_chain(spark, root, b0, 0)
+    real_commit = acid.atomic_overwrite_partitions
+    state = {"calls": 0}
+
+    def crashing(df, path, *a, **kw):
+        state["calls"] += 1
+        if state["calls"] == crash_at:
+            raise RuntimeError("injected crash")
+        return real_commit(df, path, *a, **kw)
+
+    monkeypatch.setattr(acid, "atomic_overwrite_partitions", crashing)
+    with pytest.raises(RuntimeError, match="injected"):
+        _ingest_chain(spark, root, b1, 1)
+    monkeypatch.setattr(acid, "atomic_overwrite_partitions", real_commit)
+
+    t = _chain_tables(root)
+    committed = [acid.last_txn_version(t[n], "ingest") for n in t]
+    assert committed == [1] * (crash_at - 1) + [0] * (5 - crash_at)
+
+    assert _ingest_chain(spark, root, b1, 1) == 1
+    assert _chain_state(spark, root) == _chain_state(spark, clean)
+    _assert_chain_invariants(spark, root)
+    versions = _chain_versions(root)
+    assert _ingest_chain(spark, root, b1, 1) is None
+    assert _chain_versions(root) == versions
+
+
+_CHAIN_BATCHES = [
+    [(1, "alpha beta gamma delta epsilon"), (2, "another topic with its own words")],
+    [(3, "alpha beta gamma delta epsilon"), (4, "fresh content for the second batch")],
+    [(5, "third batch document entirely unlike the others")],
+]
+
+
+@pytest.fixture(scope="module")
+def serial_chain_state(spark, tmp_path_factory):
+    """The store after all of ``_CHAIN_BATCHES``, then compaction."""
+    serial = str(tmp_path_factory.mktemp("serial"))
+    for i, rows in enumerate(_CHAIN_BATCHES):
+        _ingest_chain(spark, serial, _mk_docs(spark, rows), i)
+    for p in _chain_tables(serial).values():
+        acid.compact(spark, p)
+    return _chain_state(spark, serial)
+
+
+@pytest.mark.parametrize("compact_after", [1, 2, 3, 4])
+def test_compact_interleaves_mid_ingest_chain(
+    spark, tmp_path, monkeypatch, serial_chain_state, compact_after
+):
+    """Compaction of every table fires at EVERY position inside a live
+    chain (after hashes=1 / bloom=2 / bigrams=3 / corpus=4): the chain
+    keeps committing on top of the compacted versions, a later batch
+    ingests normally, and the store equals the serial schedule (all
+    batches, then compact).  The compactions carry the txn cursors
+    forward, so a replay of the raced batch is still a no-op."""
+    mk = lambda rows: _mk_docs(spark, rows)  # noqa: E731
+    raced = str(tmp_path / "raced")
+    _ingest_chain(spark, raced, mk(_CHAIN_BATCHES[0]), 0)
+    real_commit = acid.atomic_overwrite_partitions
+    state = {"calls": 0, "in_compact": False}
+
+    def interleaving(df, path, *a, **kw):
+        out = real_commit(df, path, *a, **kw)
+        if state["in_compact"]:
+            return out
+        state["calls"] += 1
+        if state["calls"] == compact_after:
+            state["in_compact"] = True
+            try:
+                for p in _chain_tables(raced).values():
+                    acid.compact(spark, p)
+            finally:
+                state["in_compact"] = False
+        return out
+
+    monkeypatch.setattr(acid, "atomic_overwrite_partitions", interleaving)
+    assert _ingest_chain(spark, raced, mk(_CHAIN_BATCHES[1]), 1) == 1
+    monkeypatch.setattr(acid, "atomic_overwrite_partitions", real_commit)
+    _ingest_chain(spark, raced, mk(_CHAIN_BATCHES[2]), 2)
+    for p in _chain_tables(raced).values():
+        acid.compact(spark, p)
+
+    assert _chain_state(spark, raced) == serial_chain_state
+    assert _ingest_chain(spark, raced, mk(_CHAIN_BATCHES[1]), 1) is None
+
+
+def test_compact_loses_race_to_ingest_and_retries(spark, tmp_path, monkeypatch):
+    """The chain lands a whole batch BETWEEN compaction's snapshot read
+    of the corpus and its commit.  The stale compaction must conflict
+    and redo from the new snapshot: the racing batch's rows survive,
+    the store equals the serial schedule, and the batch's replay is
+    still skipped."""
+    b0 = _mk_docs(spark, [(1, "first committed document with several words")])
+    b1 = _mk_docs(spark, [(2, "the racing batch that lands mid compaction")])
+
+    serial = str(tmp_path / "serial")
+    _ingest_chain(spark, serial, b0, 0)
+    _ingest_chain(spark, serial, b1, 1)
+    acid.compact(spark, _chain_tables(serial)["corpus"])
+    want = _chain_state(spark, serial)
+
+    raced = str(tmp_path / "raced")
+    _ingest_chain(spark, raced, b0, 0)
+    corpus = _chain_tables(raced)["corpus"]
+    real_read = acid.read_atomic
+    state = {"injected": False}
+
+    def racing_read(spark_, path, *a, **kw):
+        df = real_read(spark_, path, *a, **kw)
+        if path == corpus and not state["injected"]:
+            state["injected"] = True  # set FIRST: the chain reads too
+            _ingest_chain(spark, raced, b1, 1)
+        return df
+
+    monkeypatch.setattr(acid, "read_atomic", racing_read)
+    v = acid.compact(spark, corpus)
+    monkeypatch.setattr(acid, "read_atomic", real_read)
+
+    assert state["injected"]
+    assert v == acid.latest_version(corpus) == 2  # b0, b1, compacted
+    assert _chain_state(spark, raced) == want
+    assert _ingest_chain(spark, raced, b1, 1) is None
+
+
+def test_lm_ingest_incremental_equals_oneshot(spark, tmp_path):
+    """The chain's per-batch bigram count rows build the SAME
+    Kneser-Ney model as the one-shot trainer over the corpus so far,
+    after every batch and in every column including prob_ppb:
+    ``kn_bigram_lm_from_counts`` re-derives all statistics from the
+    summed count table."""
+    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
+
+    root = str(tmp_path / "root")
+    t = _chain_tables(root)
+    batches = [
+        [(1, "the cat sat on the mat"), (2, "the dog sat on the log")],
+        [(3, "a cat and a dog and a bird"), (4, "one two one two one")],
+        [(5, "the bird sat on the cat quietly")],
+    ]
+    for i, rows in enumerate(batches):
+        assert _ingest_chain(spark, root, _mk_docs(spark, rows), i) == len(rows)
+        counts = acid.read_atomic(spark, t["bigrams"]).groupBy("w1", "w2").agg(
+            F.sum("cbg").alias("cbg")
+        )
+        got = sorted(tuple(r) for r in text_ops.kn_bigram_lm_from_counts(counts).collect())
+        corpus = acid.read_atomic(spark, t["corpus"])
+        want = sorted(tuple(r) for r in text_ops.kn_bigram_lm(corpus).collect())
+        assert got == want and want
+
+    n_before = acid.read_atomic(spark, t["bigrams"]).count()
+    assert _ingest_chain(spark, root, _mk_docs(spark, batches[0]), 0) is None
+    assert acid.read_atomic(spark, t["bigrams"]).count() == n_before
+
+
+def test_substring_ingest_incremental_equals_oneshot(spark, tmp_path):
+    """Batch-incremental exact-substring detection ≡ the one-shot
+    operator on the union.  Per batch, ``exact_substring_pairs`` over
+    the batch finds the in-batch pairs and ``substring_decontaminate``
+    of the batch against the committed corpus finds each new doc's
+    history partners and longest shared run; together they reproduce
+    ``exact_substring_pairs`` over the final corpus."""
+    from tiki_e_commerce_analytics_etl_spark.operators import dedup
+
+    path = str(tmp_path / "corpus")
+    span = "the quick brown fox jumps over the lazy dog tonight"
+    other = "completely different words about ships and harbors on tuesday"
+    batches = [
+        [  # in-batch pair (1, 2)
+            (1, f"intro words then {span} and a tail"),
+            (2, f"{span} with another ending entirely"),
+            (3, other),
+        ],
+        [  # cross-batch pairs (1, 4), (2, 4)
+            (4, f"prefix {span} suffix words here"),
+            (5, "no shared content in this document at all whatsoever"),
+        ],
+        [  # batch-1-vs-batch-3 pair via doc 3's span; a short doc
+            (6, f"{other} trailing extra"),
+            (7, "tiny doc"),
+        ],
+    ]
+    in_batch, cross, batch_of = [], set(), {}
+    for i, rows in enumerate(batches):
+        df = _mk_docs(spark, rows)
+        batch_of.update({doc_id: i for doc_id, _ in rows})
+        in_batch += [tuple(p) for p in dedup.exact_substring_pairs(df).collect()]
+        if i:
+            history = acid.read_atomic(spark, path)
+            cross |= {tuple(r) for r in dedup.substring_decontaminate(df, history).collect()}
+        acid.atomic_overwrite_partitions(
+            df, path, mode="append", txn_app="ingest", txn_version=i
+        )
+
+    want = [tuple(p) for p in dedup.exact_substring_pairs(acid.read_atomic(spark, path)).collect()]
+    assert want  # the fixture genuinely creates pairs
+    assert sorted(in_batch) == sorted(p for p in want if batch_of[p[0]] == batch_of[p[1]])
+    per_new_doc = {}
+    for a, b, _shared, run in want:
+        if batch_of[a] != batch_of[b]:
+            new, old = (a, b) if batch_of[a] > batch_of[b] else (b, a)
+            partners, best = per_new_doc.get(new, (set(), 0))
+            per_new_doc[new] = (partners | {old}, max(best, run))
+    assert cross == {(d, len(ps), run) for d, (ps, run) in per_new_doc.items()}
+    assert acid.atomic_overwrite_partitions(
+        _mk_docs(spark, batches[0]), path, mode="append", txn_app="ingest", txn_version=0
+    ) == -1
+
+
+def test_pair_jaccard_rerank_is_exact(spark):
+    """The exact word-shingle Jaccard that reranks near-dup candidates
+    (``ngram_jaccard_pairs``) is exact, not estimated: identical docs
+    score 1.0, one differing shingle of two scores 1/3, and disjoint
+    docs share no shingle and form no pair."""
+    from tiki_e_commerce_analytics_etl_spark.operators import dedup
+
+    df = _mk_docs(
+        spark,
+        [
+            (1, "a b c d e f"), (2, "a b c d e f"),        # identical: j = 1.0
+            (3, "g h i j k l"), (4, "g h i j k m"),        # 2 shingles, 1 shared: 1/3
+            (5, "n o p q r"), (6, "v w x y z"),            # disjoint singles: no pair
+        ],
+    )
+    got = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in dedup.ngram_jaccard_pairs(df, n=5, threshold=0.0).collect()
+    }
+    assert set(got) == {(1, 2), (3, 4)}
+    assert got[(1, 2)] == 1.0
+    assert abs(got[(3, 4)] - 1 / 3) < 1e-12

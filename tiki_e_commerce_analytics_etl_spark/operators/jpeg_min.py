@@ -60,6 +60,40 @@ _M = np.array(
     ]
 )
 
+# Pixel response of each coefficient: _BASIS[u*8+v, y*8+x] =
+# _M[u, y] * _M[v, x], so a natural-order coefficient row @ _BASIS is
+# the decoder's spatial block.
+_BASIS = np.einsum("uy,vx->uvyx", _M, _M).reshape(64, 64)
+
+
+def _within_one_level(quants: np.ndarray, blocks: np.ndarray) -> None:
+    """Make every pixel of step-1 quantized blocks decode within one
+    gray level, in place.  Rounding each coefficient is off by up to
+    0.5, and in a few blocks those errors add up to 1.5 levels or more
+    at one pixel, which decodes 2 levels off (e.g. a 10x10 noise image
+    from ``default_rng(105)``).  Such a block moves one coefficient by
+    ±1 at a time, choosing the move that most lowers the block's worst
+    pixel error, until every pixel is under 1.5 levels off."""
+    target = blocks.reshape(-1, 64)
+    recon = quants @ _BASIS
+
+    def worst(r, t):
+        return np.abs(np.clip(r, -128.0, 127.0) - t).max(axis=-1)
+
+    for i in np.nonzero(worst(recon, target) >= 1.5)[0]:
+        r, t = recon[i], target[i]
+        while worst(r, t) >= 1.5:
+            e = np.clip(r, -128.0, 127.0) - t
+            p = int(np.argmax(np.abs(e)))
+            step = -np.sign(e[p]) * np.sign(_BASIS[:, p])
+            cand = r + step[:, None] * _BASIS
+            j = int(np.argmin(worst(cand, t)))
+            if worst(cand[j], t) >= worst(r, t):
+                break  # no single move helps; keep the plain rounding
+            quants[i, j] += step[j]
+            r = cand[j]
+
+
 # ITU-T T.81 Annex K.3 example Huffman tables (public spec constants)
 DC_LUM_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
 DC_LUM_VALS = list(range(12))
@@ -438,7 +472,8 @@ def encode_gray(pixels: np.ndarray, qtable: np.ndarray | None = None) -> bytes:
     the Annex K example Huffman tables.  ``qtable`` is a 64-long
     natural-order quantization table; the default all-ones table makes
     constant 8×8 blocks round-trip bit-exactly (see module docstring),
-    which is what the MJPEG arithmetic-oracle fixtures use.
+    which is what the MJPEG arithmetic-oracle fixtures use, and decodes
+    every pixel within one gray level (``_within_one_level``).
     Quantization rounds half away from zero (deterministic)."""
     px = np.asarray(pixels, dtype=np.float64)
     h, w = px.shape
@@ -460,6 +495,8 @@ def encode_gray(pixels: np.ndarray, qtable: np.ndarray | None = None) -> bytes:
     )
     coeffs = np.matmul(np.matmul(_M, all_blocks), _M.T).reshape(-1, 64)
     quants = np.sign(coeffs) * np.floor(np.abs(coeffs) / q + 0.5)
+    if np.all(q == 1):
+        _within_one_level(quants, all_blocks)
     zzs = quants[:, ZIGZAG].astype(np.int64)
     for zz in zzs:
         diff = int(zz[0]) - pred
