@@ -919,223 +919,6 @@ def q_js_clean_literals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-10 neighbors for query vectors vec_id<5
-    (training-data pipeline op; exact baseline for ANN)."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    return similarity.brute_force_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
-
-
-def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard-negative mining for contrastive training: top-5 most
-    cosine-similar DIFFERENT-label neighbors per query (vec_id < 8) —
-    the mined near-misses a dual encoder trains against
-    (similarity.hard_negatives)."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    return similarity.hard_negatives(emb, emb.filter(F.col("vec_id") < 8), k=5)
-
-
-def q_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Int8 scalar-quantized top-10 (FAISS SQ8-style): per-dim max-abs
-    scales, FLOOR quantization, exact integer-dot ranking — the
-    4×-smaller memory-bound brute-force path; bit-exact by
-    construction (similarity.sq_topk)."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    return similarity.sq_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
-
-
-def q_sq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQ8 quality gate: per-query overlap between the int8-quantized
-    top-10 and the exact float top-10 (n_overlap, recall_ppm) — the
-    measured price of 4× compression, deterministic on both sides so
-    the oracle is bit-exact rather than a rows-only check."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 5)
-    exact = similarity.brute_force_topk(emb, qs, k=10).select(
-        "query_id", "neighbor_id"
-    )
-    sq = similarity.sq_topk(emb, qs, k=10).select("query_id", "neighbor_id")
-    ov = exact.join(sq, ["query_id", "neighbor_id"]).groupBy("query_id").agg(
-        F.count(F.lit(1)).alias("n_overlap")
-    )
-    return (
-        qs.select(F.col("vec_id").alias("query_id"))
-        .join(ov, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_overlap", F.lit(0)).cast("long").alias("n_overlap"),
-            (F.coalesce("n_overlap", F.lit(0)) * F.lit(100000))
-            .cast("long")
-            .alias("recall_ppm"),
-        )
-    )
-
-
-def q_similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Random-hyperplane LSH candidate generation + exact rerank — the
-    100 TB-scale ANN path (rows-only check: approximate by design)."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    from tiki_e_commerce_analytics_etl_spark import stats as stats_mod
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    # Plane count auto-sizes to the corpus (constant bucket occupancy)
-    # via the catalog-statistics layer (stats.estimated_row_count reads
-    # the plan's parquet footers — metadata only, no Spark action):
-    # the production default, not an inline footer read.  16 tables
-    # recover recall; bucketing is one numpy matmul per Arrow batch;
-    # rerank is exact cosine.
-    n_rows = stats_mod.estimated_row_count(emb, require_exact=True)
-    return similarity.lsh_topk(
-        emb, emb.filter(F.col("vec_id") < 5), k=10, corpus_size=n_rows
-    )
-
-
-def q_similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-cell ANN: deterministic spherical k-means coarse quantizer,
-    nprobe-cell candidate join, exact rerank (rows-only: approximate by
-    design; recall checked in tests)."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    return similarity.ivf_topk(
-        emb, emb.filter(F.col("vec_id") < 5), k=10, n_clusters=16, nprobe=4
-    )
-
-
-# ANN recall thresholds: both ANN paths are seeded-deterministic, so
-# per-query recall@10 vs the (oracle-exact) brute-force top-k is a
-# stable quantity per dataset.  The registered *_recall queries emit
-# (query_id, recall_ok) and the DuckDB oracle asserts TRUE for every
-# query — a driver-visible gate that fails if the hash family, plane
-# sizing, or quantizer regresses.  Thresholds sit well below measured
-# recall at sf0.001/0.01/0.1 (see tests/test_sessions_similarity.py)
-# but high enough that a broken ANN path cannot pass.
-LSH_RECALL_THRESHOLD = 0.5  # measured min 0.7 across sf0.001/0.01/0.1
-IVF_RECALL_THRESHOLD = 0.3  # measured min 0.5 at nprobe=8; random ≈ 0.02
-
-
-def _recall_vs_exact(exact: DataFrame, ann: DataFrame, threshold: float) -> DataFrame:
-    # Both sides are bounded by k × |queries| rows — broadcast the ANN
-    # side and the per-query hit counts so no sort-merge appears.
-    hits = (
-        exact.join(F.broadcast(ann), ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-    base = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_exact"))
-    return base.join(F.broadcast(hits), "query_id", "left").select(
-        "query_id",
-        (
-            (F.coalesce(F.col("hits"), F.lit(0)) / F.col("n_exact")) >= F.lit(threshold)
-        ).alias("recall_ok"),
-    )
-
-
-def q_similarity_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 gate for the LSH ANN path vs exact brute-force top-k."""
-    exact = q_similarity_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    ann = q_similarity_topk_lsh(spark, sf_dir).select("query_id", "neighbor_id")
-    return _recall_vs_exact(exact, ann, LSH_RECALL_THRESHOLD)
-
-
-def q_similarity_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 gate for the IVF ANN path vs exact brute-force top-k.
-    Probes half the cells (nprobe=8 of 16) so the measured floor (0.5)
-    sits comfortably above the threshold; q_similarity_topk_ivf keeps
-    the cheaper nprobe=4 production shape."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    exact = q_similarity_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    ann = similarity.ivf_topk(
-        emb, emb.filter(F.col("vec_id") < 5), k=10, n_clusters=16, nprobe=8
-    ).select("query_id", "neighbor_id")
-    return _recall_vs_exact(exact, ann, IVF_RECALL_THRESHOLD)
-
-
-PQ_RECALL_THRESHOLD = 0.2  # measured min 0.4 at refine=16 across 3 SFs; random ~ 0.005
-
-
-def q_similarity_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 gate for the product-quantization ANN path vs exact
-    brute-force top-k.  The gate probes a deeper candidate list
-    (refine=16) so the measured floor (0.4 at sf0.1) sits at 2x the
-    threshold; production callers keep the cheaper refine=8 shape.
-    PQ is the compressed-scan leg of the ANN story: the ADC pass reads
-    m=8 4-bit codes + one norm per vector (~21x smaller than raw
-    float32 at dim 64), and only the top refine*k candidates per query
-    ever touch true vectors."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    exact = q_similarity_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    ann = similarity.pq_topk(
-        emb, emb.filter(F.col("vec_id") < 5), k=10, refine=16
-    ).select("query_id", "neighbor_id")
-    return _recall_vs_exact(exact, ann, PQ_RECALL_THRESHOLD)
-
-
-IVFPQ_RECALL_THRESHOLD = 0.2  # measured min 0.5 at nprobe=8/refine=32/n_codes=64 across 3 SFs; random ~ 0.002-0.02
-
-
-def q_similarity_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 gate for the IVFADC composed ANN route (IVF coarse
-    cells × PQ residual codes — similarity.ivfpq_topk; Jégou et al.
-    TPAMI 2011, the FAISS IndexIVFPQ configuration) vs exact
-    brute-force top-k.  The gate probes half the cells with a deep
-    refine list (nprobe=8, refine=32, n_codes=64) so the measured
-    floor (0.5 at every SF) sits at 2.5× the threshold; production
-    callers keep the cheaper nprobe=4/refine=8/n_codes=16 shape.
-    This is the 100 TB serving configuration the flat routes relax
-    toward: pq_topk scans compressed codes but over the WHOLE corpus,
-    ivf_topk scans only probed cells but reads full vectors — IVFADC
-    reads ~1 B/subspace codes within probed cells only, so scan bytes
-    scale with corpus × (nprobe/n_clusters) × (code/dim bytes)."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    exact = q_similarity_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    ann = similarity.ivfpq_topk(
-        emb,
-        emb.filter(F.col("vec_id") < 5),
-        k=10,
-        n_clusters=16,
-        nprobe=8,
-        refine=32,
-        n_codes=64,
-    ).select("query_id", "neighbor_id")
-    return _recall_vs_exact(exact, ann, IVFPQ_RECALL_THRESHOLD)
-
-
-def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label embedding centroid, long form (label, pos, m).
-    Component sums go through DECIMAL(18,6) so the unordered float
-    aggregation is order-free and engine-exact."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    return similarity.label_centroids(emb, "label", "embedding")
-
-
-def q_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-centroid classification of every vector (broadcast
-    centroids, narrow scoring, per-vector ranking window)."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    cents = similarity.label_centroids(emb, "label", "embedding")
-    return similarity.assign_nearest_centroid(emb, cents, "vec_id", "embedding")
-
-
 def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrub (emails → phones, counts on the properly-nested forms)
     on a golden literal corpus; the oracle carries hand-computed
@@ -1539,19 +1322,6 @@ def q_item_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return engagement.item_neighbors(li, "l_orderkey", "l_partkey", k=5, min_pair_count=2)
 
 
-def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space decontamination: max cosine of every corpus
-    vector against the broadcast eval slice (vec_id < 20) — catches
-    the paraphrased leakage n-gram decontamination misses.  Corpus
-    never shuffles; only MAX is kept (tie-free, bit-exact)."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    return similarity.semantic_decontaminate(
-        emb, emb.filter(F.col("vec_id") < 20), threshold=0.95
-    )
-
-
 def q_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM rarity (CCNet-perplexity-shaped quality filter) in
     exact integer arithmetic — tf-weighted mean inverse unigram
@@ -1806,33 +1576,6 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quality_ops.mad_outliers(
         ev.select("event_id", "event_type", "value"), ["event_type"], "value", k=3.0
     ).select("event_id", "event_type", "value", "group_median", "group_mad")
-
-
-def q_semdedup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup gate: clustered (within-cell) embedding dedup must
-    recover a floor fraction of the exact all-pairs near-dups.  On
-    this RANDOM synthetic corpus cell coherence is inherently weak —
-    measured coverage 0.26-0.36 across SFs vs 1/16 ≈ 0.06 chance — so
-    the threshold is 0.15: ~2.5× above chance (a broken quantizer or
-    cell join degrades to chance), comfortably below the floor.
-    Production semantic embeddings cluster far tighter."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    exact = similarity.cosine_neardup_pairs(emb, threshold=0.4, method="exact").select(
-        "id_a", "id_b"
-    )
-    sd = similarity.semdedup_pairs(emb, threshold=0.4, n_clusters=16).select(
-        "id_a", "id_b"
-    )
-    hits = exact.join(sd, ["id_a", "id_b"], "left_semi").agg(
-        F.count(F.lit(1)).alias("n_hit")
-    )
-    total = exact.agg(F.count(F.lit(1)).alias("n_exact"))
-    return total.crossJoin(hits).select(
-        "n_exact",
-        ((F.col("n_hit") / F.col("n_exact")) >= F.lit(0.15)).alias("coverage_ok"),
-    )
 
 
 def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2136,32 +1879,6 @@ def q_blocklist_phrase_screen_join(spark: SparkSession, sf_dir: str) -> DataFram
     docs = read_table(spark, sf_dir, "documents")
     return text_ops.blocklist_screen(
         docs, _BLOCKLIST_PHRASE_JOIN_TERMS, max_hits=1
-    )
-
-
-def q_neardup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Threshold-calibration curve for embedding dedup: for every
-    observed centi-cosine bucket >= 0.20, how many pairs survive a
-    threshold set there — the knee curve a curator reads before
-    pinning a dedup threshold (pairs explode as the threshold drops
-    past the corpus's similarity mode).  One exact scored-pair pass
-    (the same blocked cogroup as embedding_neardup), centi bucketing,
-    then cumulative-from-above via a bounded (<= 100-row) bucket
-    self-join — no window, no second corpus pass."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    pairs = similarity.cosine_neardup_pairs(emb, threshold=0.2, method="exact")
-    buckets = (
-        pairs.select(F.floor(F.col("score") * 100).cast("int").alias("b"))
-        .groupBy("b")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    lo = buckets.select(F.col("b").alias("threshold_centi"))
-    return (
-        lo.join(F.broadcast(buckets), F.col("b") >= F.col("threshold_centi"))
-        .groupBy("threshold_centi")
-        .agg(F.sum("cnt").cast("long").alias("n_pairs"))
     )
 
 
@@ -3929,40 +3646,6 @@ def q_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_pack_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing for LLM training: assign documents to
-    fixed-token-budget bins by exclusive running token count (scan-pack
-    over a deterministic order).  Global-order window here for oracle
-    parity; the scale path packs per shard with the bin id prefixed by
-    shard (no global sort)."""
-    from tiki_e_commerce_analytics_etl_spark.operators import packing
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    docs = read_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", text_ops.words(F.col("text")).alias("__w")
-    ).select("doc_id", text_ops.token_count_from_words(F.col("__w")).alias("tokens"))
-    return packing.pack_global(toks, "tokens", "doc_id", budget=2048)
-
-
-def q_pack_documents_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB packing path: per-shard scan-packing with bin ids
-    namespaced by shard — the window partitions on the shard key, so
-    packing parallelizes across executors instead of funneling the
-    corpus through one global-order sort.  md5 shard hash so the
-    shard+bin arithmetic is exactly reproducible in the SQL oracle."""
-    from tiki_e_commerce_analytics_etl_spark.operators import packing
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    docs = read_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", text_ops.words(F.col("text")).alias("__w")
-    ).select("doc_id", text_ops.token_count_from_words(F.col("__w")).alias("tokens"))
-    return packing.pack_sharded(
-        toks, "tokens", "doc_id", budget=2048, n_shards=32, portable_hash=True
-    )
-
-
 def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/val/test assignment by md5 bucket of the
     document id — reproducible across runs, cluster sizes, and engines
@@ -4053,90 +3736,19 @@ def q_logreg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KMEANS_K = 8
-_KMEANS_ITERS = 3
-
-
-def _kmeans_final(spark: SparkSession, sf_dir: str):
-    from tiki_e_commerce_analytics_etl_spark.operators import clustering
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    return clustering.kmeans_lloyd(
-        emb, n_clusters=_KMEANS_K, iters=_KMEANS_ITERS
-    )
-
-
-def q_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed EXACT k-means (integer micro-unit Lloyd, every
-    vector votes): final centroid table after 3 unrolled iterations,
-    long format (cluster, pos, val).  All arithmetic exact int64 so
-    the full iterative trainer is bit-identical to the DuckDB replay
-    (clustering.kmeans_lloyd)."""
-    from tiki_e_commerce_analytics_etl_spark.operators import clustering
-
-    centroids, _ = _kmeans_final(spark, sf_dir)
-    return clustering.centroid_rows(spark, centroids)
-
-
-def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Final k-means assignment: (vec_id, cluster, dist) against the
-    trained centroids — assignment is k narrow zip_with/aggregate
-    expressions over broadcast literal centroids, no join, no shuffle
-    (clustering.assign_exact)."""
-    from tiki_e_commerce_analytics_etl_spark.operators import clustering
-
-    centroids, q = _kmeans_final(spark, sf_dir)
-    return clustering.assign_exact(q, centroids).select(
-        F.col("id").alias("vec_id"), "cluster", "dist"
-    )
-
-
-def q_kmeans_inertia(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-means fit diagnostics — exact integer inertia (sum of
-    squared micro-unit distances to the assigned centroid), per-
-    cluster sizes folded to one row: the objective an elbow sweep
-    compares across k.  All integers; one narrow pass + one 1-row
-    aggregate over the final assignment."""
-    from tiki_e_commerce_analytics_etl_spark.operators import clustering
-
-    centroids, q = _kmeans_final(spark, sf_dir)
-    assigned = clustering.assign_exact(q, centroids)
-    return assigned.agg(
-        F.count(F.lit(1)).cast("long").alias("n_vecs"),
-        F.countDistinct("cluster").cast("long").alias("n_used_clusters"),
-        F.sum("dist").cast("long").alias("inertia"),
-        F.max("dist").cast("long").alias("max_dist"),
-        F.min("dist").cast("long").alias("min_dist"),
-    )
-
-
-def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-balanced subset: the 8 smallest md5-bucket members of
-    each k-means cluster — the topic-balancing pass that keeps a
-    corpus from being one mode (clustering.cluster_balanced_sample)."""
-    from tiki_e_commerce_analytics_etl_spark.operators import clustering
-
-    centroids, q = _kmeans_final(spark, sf_dir)
-    assigned = clustering.assign_exact(q, centroids)
-    return clustering.cluster_balanced_sample(assigned, per_cluster=8).select(
-        F.col("id").alias("vec_id"), "cluster", "rk"
-    )
-
-
 def q_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document QUALITY DASHBOARD — the round-10 twin of
     curation_report, joining the independent quality/curation signals
     one row per doc: the Gopher pass flag, the CCNet perplexity bucket
     ('unscored' for the training half), the trained classifier margin
-    and prediction, the embedding k-means cluster, and the leakage-safe
-    split assignment.  Every signal is an already-oracle-verified
-    operator; this verifies the JOINED view end-to-end (the oracle
-    nests each signal's full SQL as a derived table and joins the same
-    way)."""
-    # The five signals are independent lineages, but three of them run
+    and prediction, and the leakage-safe split assignment.  Every
+    signal is an already-oracle-verified operator; this verifies the
+    JOINED view end-to-end (the oracle nests each signal's full SQL as
+    a derived table and joins the same way)."""
+    # The four signals are independent lineages, but two of them run
     # driver-side training loops DURING PLAN CONSTRUCTION (logreg
-    # gradient jobs, Lloyd iterations, CC pointer-jumping), so built
-    # sequentially the wall is their SUM with most cores idle
+    # gradient jobs, CC pointer-jumping), so built sequentially the
+    # wall is their SUM with most cores idle
     # (measured: ~14 s construction + ~2 s action at sf0.1).
     # Building them from a small thread pool overlaps those jobs
     # (optimization guide §2.6 — actions are only sequential because
@@ -4148,7 +3760,6 @@ def q_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         f_gq = pool.submit(q_gopher_quality, spark, sf_dir)
         f_ppl = pool.submit(q_perplexity_buckets, spark, sf_dir)
         f_lr = pool.submit(q_logreg_scores, spark, sf_dir)
-        f_km = pool.submit(q_kmeans_assign, spark, sf_dir)
         f_sp = pool.submit(q_leakage_safe_split, spark, sf_dir)
         gq = f_gq.result().select(
             F.col("id").alias("doc_id"), "stop_hits", "pass_gopher"
@@ -4157,14 +3768,10 @@ def q_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("id").alias("doc_id"), F.col("bucket").alias("ppl_bucket")
         )
         lr = f_lr.result().select("doc_id", "margin_u", "pred")
-        km = f_km.result().select(
-            F.col("vec_id").alias("doc_id"), "cluster"
-        )
         sp = f_sp.result().select("doc_id", "split")
     return (
         gq.join(ppl, "doc_id", "left")
         .join(lr, "doc_id")
-        .join(km, "doc_id", "left")
         .join(sp, "doc_id")
         .select(
             "doc_id",
@@ -4173,7 +3780,6 @@ def q_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("ppl_bucket", F.lit("unscored")).alias("ppl_bucket"),
             "margin_u",
             "pred",
-            F.coalesce(F.col("cluster"), F.lit(-1)).cast("int").alias("cluster"),
             "split",
         )
     )
@@ -4216,19 +3822,6 @@ def q_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return graph.cluster_best_members(scores, pairs, "doc_id", "quality")
-
-
-def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs (training-data pipeline op).
-    Threshold 0.4 because the synthetic corpus is random (max pairwise
-    cosine ≈ 0.51) — production default is 0.9.  Exact method runs as
-    a distributed block-pair cogroup (no driver-side corpus
-    materialization); the LSH candidate path trades recall for
-    sub-quadratic work at 100 TB."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    return similarity.cosine_neardup_pairs(emb, threshold=0.4, method="exact")
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4651,14 +4244,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "resample_interp": q_resample_interp,
         "winsorize": q_winsorize,
         "price_discount_corr": q_price_discount_corr,
-        "similarity_topk": q_similarity_topk,
-        "hard_negatives": q_hard_negatives,
-        "sq_topk": q_sq_topk,
-        "sq_recall": q_sq_recall,
-        "similarity_lsh_recall": q_similarity_lsh_recall,
-        "similarity_ivf_recall": q_similarity_ivf_recall,
-        "similarity_pq_recall": q_similarity_pq_recall,
-        "similarity_ivfpq_recall": q_similarity_ivfpq_recall,
         "lang_id": q_lang_id,
         "char_entropy": q_char_entropy,
         "compression_screen": q_compression_screen,
@@ -4692,12 +4277,7 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "byte_bpe_merges": q_byte_bpe_merges,
         "byte_bpe_corpus_merges": q_byte_bpe_corpus_merges,
         "byte_bpe_tokenize": q_byte_bpe_tokenize,
-        "neardup_threshold_curve": q_neardup_threshold_curve,
         "training_export_plan": q_training_export_plan,
-        "kmeans_centroids": q_kmeans_centroids,
-        "kmeans_assign": q_kmeans_assign,
-        "cluster_balanced_sample": q_cluster_balanced_sample,
-        "kmeans_inertia": q_kmeans_inertia,
         "logreg_weights": q_logreg_weights,
         "logreg_scores": q_logreg_scores,
         "logreg_eval": q_logreg_eval,
@@ -4720,7 +4300,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "incremental_agg": q_incremental_agg,
         "incremental_distinct": q_incremental_distinct,
         "bm25_search": q_bm25_search,
-        "semdedup_coverage": q_semdedup_coverage,
         "twap_daily": q_twap_daily,
         "mad_outliers": q_mad_outliers,
         "snapshot_diff": q_snapshot_diff,
@@ -4732,8 +4311,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "decontaminate": q_decontaminate,
         "repetition_stats": q_repetition_stats,
         "token_budget_mix": q_token_budget_mix,
-        "embedding_centroids": q_embedding_centroids,
-        "centroid_assign": q_centroid_assign,
         "pii_redact": q_pii_redact,
         "rollup_sales": q_rollup_sales,
         "snapshot_fact": q_snapshot_fact,
@@ -4761,8 +4338,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "event_transitions": q_event_transitions,
         "hash_split": q_hash_split,
         "price_percentiles": q_price_percentiles,
-        "pack_documents": q_pack_documents,
-        "pack_documents_sharded": q_pack_documents_sharded,
         "sketch_summary": q_sketch_summary,
         "curation_pipeline": q_curation_pipeline,
         "fx_asof": q_fx_asof,
@@ -4779,7 +4354,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stratified_sample": q_stratified_sample,
         "value_outliers": q_value_outliers,
         "hierarchy_roots": q_hierarchy_roots,
-        "embedding_neardup": q_embedding_neardup,
         "sessionize": q_sessionize,
         "event_windows": q_event_windows,
         "quality_checks": q_quality_checks,
@@ -4787,7 +4361,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cohort_retention": q_cohort_retention,
         "rfm_segments": q_rfm_segments,
         "basket_pairs": q_basket_pairs,
-        "semantic_decontaminate": q_semantic_decontaminate,
         "rarity_score": q_rarity_score,
         "subword_vocab": q_subword_vocab,
         "subword_tokenize": q_subword_tokenize,
@@ -4864,119 +4437,6 @@ def _lang_id_oracle() -> str:
         FROM (SELECT *, {best} AS best FROM h)
     """
 
-
-_SIMILARITY_ORACLE = """
-    WITH q AS (
-        SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-        FROM embeddings WHERE vec_id < 5
-    ),
-    c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings),
-    scored AS (
-        SELECT query_id, neighbor_id,
-               list_dot_product(qv, cv)
-                 / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS score
-        FROM c CROSS JOIN q
-        WHERE neighbor_id <> query_id
-    )
-    SELECT query_id, neighbor_id, score, rank FROM (
-        SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
-        FROM scored
-    ) WHERE rank <= 10
-"""
-
-_HARD_NEGATIVES_ORACLE = """
-    WITH q AS (
-        SELECT vec_id AS query_id, label AS query_label,
-               embedding::DOUBLE[] AS qv
-        FROM embeddings WHERE vec_id < 8
-    ),
-    c AS (SELECT vec_id AS neighbor_id, label AS neighbor_label,
-                 embedding::DOUBLE[] AS cv FROM embeddings),
-    scored AS (
-        SELECT query_id, query_label, neighbor_id, neighbor_label,
-               list_dot_product(qv, cv)
-                 / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS score
-        FROM c CROSS JOIN q
-        WHERE neighbor_id <> query_id AND neighbor_label <> query_label
-    )
-    SELECT query_id, query_label, neighbor_id, neighbor_label, score, rank FROM (
-        SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
-        FROM scored
-    ) WHERE rank <= 5
-"""
-
-# Shared int8 scalar-quantization CTEs: per-dim max-abs scales over the
-# corpus, FLOOR(v*127/s) codes (floor of IEEE double ops is
-# bit-deterministic across engines; round ties are not).
-_SQ_CTES = """c0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    ex AS (SELECT unnest(list_transform(v, (x, i) -> struct_pack(pos := i, x := x))) AS s
-           FROM c0),
-    mx AS (SELECT list(m ORDER BY pos) AS scales
-           FROM (SELECT s.pos AS pos, MAX(ABS(s.x)) AS m FROM ex GROUP BY 1)),
-    enc AS (SELECT vec_id,
-                   list_transform(v, (x, i) ->
-                       CASE WHEN scales[i] = 0 THEN CAST(0 AS BIGINT)
-                            ELSE CAST(FLOOR(x * 127.0 / scales[i]) AS BIGINT) END) AS q
-            FROM c0 CROSS JOIN mx)"""
-
-_SQ_TOPK_ORACLE = f"""
-    WITH {_SQ_CTES},
-    qq AS (SELECT vec_id AS query_id, q AS qvec FROM enc WHERE vec_id < 5),
-    scored AS (
-        SELECT query_id, e.vec_id AS neighbor_id,
-               CAST(list_dot_product(qvec::DOUBLE[], e.q::DOUBLE[]) AS BIGINT) AS qdot
-        FROM enc e CROSS JOIN qq WHERE e.vec_id <> query_id
-    )
-    SELECT query_id, neighbor_id, qdot, rank FROM (
-        SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY query_id ORDER BY qdot DESC, neighbor_id ASC) AS rank
-        FROM scored
-    ) WHERE rank <= 10
-"""
-
-_SQ_RECALL_ORACLE = f"""
-    WITH {_SQ_CTES},
-    fq AS (SELECT vec_id AS query_id, v AS qv FROM c0 WHERE vec_id < 5),
-    fscored AS (
-        SELECT query_id, c0.vec_id AS neighbor_id,
-               list_dot_product(qv, v)
-                 / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))) AS score
-        FROM c0 CROSS JOIN fq WHERE c0.vec_id <> query_id
-    ),
-    frank AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (
-                PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
-            FROM fscored
-        ) WHERE rank <= 10
-    ),
-    qq AS (SELECT vec_id AS query_id, q AS qvec FROM enc WHERE vec_id < 5),
-    sscored AS (
-        SELECT query_id, e.vec_id AS neighbor_id,
-               CAST(list_dot_product(qvec::DOUBLE[], e.q::DOUBLE[]) AS BIGINT) AS qdot
-        FROM enc e CROSS JOIN qq WHERE e.vec_id <> query_id
-    ),
-    srank AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (
-                PARTITION BY query_id ORDER BY qdot DESC, neighbor_id ASC) AS rank
-            FROM sscored
-        ) WHERE rank <= 10
-    ),
-    ov AS (
-        SELECT f.query_id, COUNT(*) AS n_overlap
-        FROM frank f JOIN srank s
-          ON f.query_id = s.query_id AND f.neighbor_id = s.neighbor_id
-        GROUP BY 1
-    )
-    SELECT query_id,
-           CAST(COALESCE(n_overlap, 0) AS BIGINT) AS n_overlap,
-           CAST(COALESCE(n_overlap, 0) * 100000 AS BIGINT) AS recall_ppm
-    FROM (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < 5)
-    LEFT JOIN ov USING (query_id)
-"""
 
 _TEXT_QUALITY_ORACLE = f"""
     WITH w AS (
@@ -5124,85 +4584,6 @@ _LOGREG_EVAL_ORACLE = f"""
 """
 
 
-def _kmeans_ctes(k: int = _KMEANS_K, iters: int = _KMEANS_ITERS) -> str:
-    """DuckDB replay of the unrolled integer Lloyd iterations —
-    generated for the same (k, iters) the Spark queries run, so the
-    two can't drift.  All arithmetic exact integers; `//` truncates
-    toward zero exactly like Spark's `div`."""
-    from tiki_e_commerce_analytics_etl_spark.operators.clustering import (
-        KMEANS_SCALE,
-    )
-
-    parts = [
-        f"""q AS (SELECT vec_id, list_transform(embedding,
-                x -> CAST(FLOOR({KMEANS_SCALE}.0 * CAST(x AS DOUBLE)) AS BIGINT))
-                AS qv FROM embeddings),
-        e AS (SELECT vec_id, CAST(i AS INTEGER) AS pos, qv[i + 1] AS x
-              FROM q, unnest(range(0, len(qv))) AS t(i)),
-        c0 AS (SELECT CAST(s.rn - 1 AS INTEGER) AS cluster, e.pos,
-                      CAST(e.x AS BIGINT) AS val
-               FROM (SELECT vec_id,
-                            ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-                     FROM q) s JOIN e USING (vec_id)
-               WHERE s.rn <= {k})"""
-    ]
-    for i in range(1, iters + 2):
-        parts.append(
-            f"""d{i} AS (SELECT e.vec_id, c.cluster,
-                       SUM((e.x - c.val) * (e.x - c.val)) AS dist
-                FROM e JOIN c{i - 1} c USING (pos)
-                GROUP BY e.vec_id, c.cluster),
-        a{i} AS (SELECT vec_id, cluster, CAST(dist AS BIGINT) AS dist
-                 FROM (SELECT vec_id, cluster, dist,
-                              ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY dist, cluster) AS rk
-                       FROM d{i}) WHERE rk = 1)"""
-        )
-        if i <= iters:
-            parts.append(
-                f"""s{i} AS (SELECT a.cluster, e.pos, SUM(e.x) AS sm,
-                        COUNT(*) AS cnt
-                 FROM a{i} a JOIN e ON a.vec_id = e.vec_id
-                 GROUP BY a.cluster, e.pos),
-        c{i} AS (SELECT p.cluster, p.pos,
-                        CAST(COALESCE(s.sm // s.cnt, p.val) AS BIGINT) AS val
-                 FROM c{i - 1} p LEFT JOIN s{i} s
-                   ON p.cluster = s.cluster AND p.pos = s.pos)"""
-            )
-    return ",\n        ".join(parts)
-
-
-_KMEANS_CENTROIDS_ORACLE = f"""
-    WITH {_kmeans_ctes()}
-    SELECT cluster, pos, val FROM c{_KMEANS_ITERS}
-"""
-
-_KMEANS_ASSIGN_ORACLE = f"""
-    WITH {_kmeans_ctes()}
-    SELECT vec_id, cluster, dist FROM a{_KMEANS_ITERS + 1}
-"""
-
-_KMEANS_INERTIA_ORACLE = f"""
-    WITH {_kmeans_ctes()}
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_vecs,
-           CAST(COUNT(DISTINCT cluster) AS BIGINT) AS n_used_clusters,
-           CAST(SUM(dist) AS BIGINT) AS inertia,
-           CAST(MAX(dist) AS BIGINT) AS max_dist,
-           CAST(MIN(dist) AS BIGINT) AS min_dist
-    FROM a{_KMEANS_ITERS + 1}
-"""
-
-_CLUSTER_BALANCED_SAMPLE_ORACLE = f"""
-    WITH {_kmeans_ctes()}
-    SELECT vec_id, cluster, CAST(rk AS INTEGER) AS rk FROM (
-        SELECT vec_id, cluster,
-               ROW_NUMBER() OVER (PARTITION BY cluster ORDER BY
-                   CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 4))
-                        AS INTEGER), vec_id) AS rk
-        FROM a{_KMEANS_ITERS + 1})
-    WHERE rk <= 8
-"""
-
 _LEAKAGE_SAFE_SPLIT_ORACLE = f"""
     WITH RECURSIVE {_JACCARD_PAIRS_CTES},
     pairs AS (SELECT id_a, id_b FROM p WHERE shared / (na + nb - shared) >= 0.5),
@@ -5316,21 +4697,6 @@ _TRAINING_EXPORT_PLAN_ORACLE = f"""
     FROM sharded
 """
 
-_NEARDUP_THRESHOLD_CURVE_ORACLE = """
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    scored AS (
-        SELECT list_dot_product(a.e, b.e)
-                 / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))) AS score
-        FROM v a JOIN v b ON a.vec_id < b.vec_id
-    ),
-    buckets AS (
-        SELECT CAST(FLOOR(score * 100) AS INTEGER) AS b, COUNT(*) AS cnt
-        FROM scored WHERE score >= 0.2 GROUP BY 1
-    )
-    SELECT lo.b AS threshold_centi, CAST(SUM(hi.cnt) AS BIGINT) AS n_pairs
-    FROM buckets lo JOIN buckets hi ON hi.b >= lo.b
-    GROUP BY 1
-"""
 
 _BLOCKLIST_SCREEN_ORACLE = f"""
     WITH w AS (SELECT doc_id, {_NORM_WORDS_SQL} AS ws FROM documents),
@@ -6451,12 +5817,6 @@ _SALTED_JOIN_ORACLE = """
 """
 
 
-_ANN_RECALL_ORACLE = """
-    SELECT DISTINCT vec_id AS query_id, TRUE AS recall_ok
-    FROM embeddings WHERE vec_id < 5
-"""
-
-
 _DECONTAMINATE_ORACLE = f"""
     WITH w AS (SELECT doc_id, {_NORM_WORDS_SQL} AS ws FROM documents),
     s AS (
@@ -6512,36 +5872,6 @@ _TOKEN_BUDGET_MIX_ORACLE = f"""
                 1.0) * 65536)
 """
 
-_CENTROIDS_SQL = """
-    v AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
-    x AS (SELECT vec_id, label, unnest(range(1, len(e) + 1)) - 1 AS pos, unnest(e) AS val FROM v),
-    cs AS (
-        SELECT label, pos,
-               CAST(SUM(CAST(val AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS m
-        FROM x GROUP BY label, pos
-    )
-"""
-
-_EMBEDDING_CENTROIDS_ORACLE = f"""
-    WITH {_CENTROIDS_SQL}
-    SELECT label, CAST(pos AS INTEGER) AS pos, m FROM cs
-"""
-
-_CENTROID_ASSIGN_ORACLE = f"""
-    WITH {_CENTROIDS_SQL},
-    c AS (SELECT label, list(m ORDER BY pos) AS cv FROM cs GROUP BY label),
-    scored AS (
-        SELECT vec_id, c.label,
-               list_dot_product(e, cv)
-                 / (sqrt(list_dot_product(e, e)) * sqrt(list_dot_product(cv, cv))) AS score
-        FROM v CROSS JOIN c
-    )
-    SELECT vec_id, label AS assigned_label, score FROM (
-        SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY vec_id ORDER BY score DESC, label ASC) AS rn
-        FROM scored
-    ) WHERE rn = 1
-"""
 
 _PII_REDACT_ORACLE = """
     SELECT * FROM (VALUES
@@ -6554,16 +5884,6 @@ _PII_REDACT_ORACLE = """
     ) AS t(case_id, redacted, n_emails, n_phones)
 """
 
-_EMBEDDING_NEARDUP_ORACLE = """
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    scored AS (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               list_dot_product(a.e, b.e)
-                 / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))) AS score
-        FROM v a JOIN v b ON a.vec_id < b.vec_id
-    )
-    SELECT id_a, id_b, score FROM scored WHERE score >= 0.4
-"""
 
 _SESSIONIZE_ORACLE = """
     WITH flagged AS (
@@ -6867,7 +6187,7 @@ def _kn_oracles() -> dict[str, str]:
 
 
 def _quality_report_oracle() -> str:
-    """Composes the five already-verified signal oracles as derived
+    """Composes the four already-verified signal oracles as derived
     tables (each keeps its own WITH scope) and joins them exactly like
     q_quality_report."""
     ppl = _kn_oracles()["perplexity_buckets"]
@@ -6875,12 +6195,10 @@ def _quality_report_oracle() -> str:
         SELECT g.id AS doc_id, g.stop_hits, g.pass_gopher,
                COALESCE(p.bucket, 'unscored') AS ppl_bucket,
                l.margin_u, l.pred,
-               CAST(COALESCE(k.cluster, -1) AS INTEGER) AS cluster,
                s.split
         FROM ({_gopher_quality_oracle()}) g
         LEFT JOIN ({ppl}) p ON g.id = p.id
         JOIN ({_LOGREG_SCORES_ORACLE}) l ON g.id = l.doc_id
-        LEFT JOIN ({_KMEANS_ASSIGN_ORACLE}) k ON g.id = k.vec_id
         JOIN ({_LEAKAGE_SAFE_SPLIT_ORACLE}) s ON g.id = s.doc_id
     """
 
@@ -7355,10 +6673,6 @@ def oracle_sql() -> dict[str, str]:
         "dsir_weights": _dsir_weights_oracle(),
         "substring_decontam": _SUBSTRING_DECONTAM_ORACLE,
         "strip_contam_spans": _STRIP_CONTAM_SPANS_ORACLE,
-        "similarity_topk": _SIMILARITY_ORACLE,
-        "hard_negatives": _HARD_NEGATIVES_ORACLE,
-        "sq_topk": _SQ_TOPK_ORACLE,
-        "sq_recall": _SQ_RECALL_ORACLE,
         "snapshot_fact": """
             SELECT * FROM (VALUES
                 (DATE '2024-03-01', 101, 24500000, 27000000, 9, 5500, 1250, 4.8,
@@ -7423,49 +6737,6 @@ def oracle_sql() -> dict[str, str]:
                    quantile_cont(l_extendedprice, 0.95) AS p95,
                    COUNT(*) AS n
             FROM lineitem GROUP BY l_returnflag
-        """,
-        "pack_documents": f"""
-            WITH w AS (SELECT doc_id, {_NORM_WORDS_SQL} AS ws FROM documents),
-            t AS (
-                SELECT doc_id,
-                       CAST(list_aggregate(
-                           list_transform(ws, x -> 1 + CAST(FLOOR(GREATEST(len(x) - 4, 0) / 4) AS BIGINT)),
-                           'sum') AS BIGINT) AS tokens
-                FROM w
-            ),
-            c AS (
-                SELECT doc_id, tokens,
-                       SUM(tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum
-                FROM t
-            )
-            SELECT doc_id, tokens,
-                   CAST(FLOOR((cum - tokens) / 2048.0) AS BIGINT) AS bin_id
-            FROM c
-        """,
-        "pack_documents_sharded": f"""
-            WITH w AS (SELECT doc_id, {_NORM_WORDS_SQL} AS ws FROM documents),
-            t AS (
-                SELECT doc_id,
-                       CAST(list_aggregate(
-                           list_transform(ws, x -> 1 + CAST(FLOOR(GREATEST(len(x) - 4, 0) / 4) AS BIGINT)),
-                           'sum') AS BIGINT) AS tokens
-                FROM w
-            ),
-            sh AS (
-                SELECT doc_id, tokens,
-                       CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INTEGER) % 32 AS shard
-                FROM t
-            ),
-            c AS (
-                SELECT doc_id, tokens, shard,
-                       CAST(SUM(tokens) OVER (PARTITION BY shard ORDER BY doc_id
-                                              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-                FROM sh
-            )
-            SELECT doc_id, tokens,
-                   CAST(shard AS BIGINT) * 4294967296
-                     + CAST(FLOOR((cum - tokens) / 2048.0) AS BIGINT) AS bin_id
-            FROM c
         """,
         "hash_split": """
             SELECT doc_id,
@@ -7746,7 +7017,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE 1000000.0 * sh.shared_hashes / least(na.n, nb.n) >= 500000
         """,
         "image_neardup_pairs": _IMAGE_NEARDUP_ORACLE,
-        "embedding_neardup": _EMBEDDING_NEARDUP_ORACLE,
         "sessionize": _SESSIONIZE_ORACLE,
         "event_windows": _EVENT_WINDOWS_ORACLE,
         "quality_checks": _quality_checks_oracle(),
@@ -7779,12 +7049,7 @@ def oracle_sql() -> dict[str, str]:
         "byte_bpe_corpus_merges": _BYTE_BPE_CORPUS_MERGES_ORACLE,
         "bpe_corpus_merges": _BPE_CORPUS_MERGES_ORACLE,
         "byte_bpe_tokenize": _BYTE_BPE_TOKENIZE_ORACLE,
-        "neardup_threshold_curve": _NEARDUP_THRESHOLD_CURVE_ORACLE,
         "training_export_plan": _TRAINING_EXPORT_PLAN_ORACLE,
-        "kmeans_centroids": _KMEANS_CENTROIDS_ORACLE,
-        "kmeans_assign": _KMEANS_ASSIGN_ORACLE,
-        "cluster_balanced_sample": _CLUSTER_BALANCED_SAMPLE_ORACLE,
-        "kmeans_inertia": _KMEANS_INERTIA_ORACLE,
         "logreg_weights": _LOGREG_WEIGHTS_ORACLE,
         "logreg_scores": _LOGREG_SCORES_ORACLE,
         "logreg_eval": _LOGREG_EVAL_ORACLE,
@@ -7974,10 +7239,6 @@ def oracle_sql() -> dict[str, str]:
             FROM lineitem GROUP BY l_returnflag
         """,
         "bm25_search": _bm25_oracle(),
-        "semdedup_coverage": f"""
-            SELECT COUNT(*) AS n_exact, TRUE AS coverage_ok
-            FROM ({_EMBEDDING_NEARDUP_ORACLE})
-        """,
         "twap_daily": """
             WITH b AS (
                 SELECT user_id, CAST(ts AS DATE) AS day,
@@ -8200,15 +7461,9 @@ def oracle_sql() -> dict[str, str]:
         "simhash_hamming": _SIMHASH_HAMMING_ORACLE,
         "minhash_pairs": _minhash_portable_oracle(),
         "simhash": _SIMHASH_PORTABLE_ORACLE,
-        "similarity_lsh_recall": _ANN_RECALL_ORACLE,
-        "similarity_ivf_recall": _ANN_RECALL_ORACLE,
-        "similarity_pq_recall": _ANN_RECALL_ORACLE,
-        "similarity_ivfpq_recall": _ANN_RECALL_ORACLE,
         "decontaminate": _DECONTAMINATE_ORACLE,
         "repetition_stats": _REPETITION_ORACLE,
         "token_budget_mix": _TOKEN_BUDGET_MIX_ORACLE,
-        "embedding_centroids": _EMBEDDING_CENTROIDS_ORACLE,
-        "centroid_assign": _CENTROID_ASSIGN_ORACLE,
         "pii_redact": _PII_REDACT_ORACLE,
         "rollup_sales": """
             SELECT l_returnflag, l_linestatus,
@@ -9014,22 +8269,6 @@ def oracle_sql() -> dict[str, str]:
                     PARTITION BY item ORDER BY score DESC, neighbor ASC) AS rank
                 FROM scored
             ) WHERE rank <= 5
-        """,
-        "semantic_decontaminate": """
-            WITH e AS (
-                SELECT embedding::DOUBLE[] AS ev FROM embeddings WHERE vec_id < 20
-            ),
-            c AS (SELECT vec_id AS id, embedding::DOUBLE[] AS cv FROM embeddings),
-            scored AS (
-                SELECT id,
-                       list_dot_product(cv, ev)
-                         / (sqrt(list_dot_product(cv, cv))
-                            * sqrt(list_dot_product(ev, ev))) AS score
-                FROM c CROSS JOIN e
-            )
-            SELECT id, COALESCE(MAX(score), 0.0) AS max_eval_score,
-                   COALESCE(MAX(score), 0.0) >= 0.95 AS is_contaminated
-            FROM scored GROUP BY id
         """,
         "subword_vocab": f"""
             WITH wf AS (

@@ -65,3 +65,11 @@ def test_line_handles_fewer_than_ten():
     parsed = json.loads(format_stdout_line(_fake_timings(3), sf=None))
     assert len(parsed["queries"]) == 3
     assert parsed["sf"] is None
+
+
+def test_headline_names_are_registry_queries():
+    """bench.py looks every HEADLINE name up as ``qs[name]``, so a name
+    the registry no longer has would only fail mid-run."""
+    import __spark_entry__ as entrymod
+
+    assert sorted(set(HEADLINE) - set(entrymod.queries())) == []

@@ -1,46 +1,12 @@
-"""Model-based coverage for semantic (embedding-space)
-decontamination and the exact-integer unigram rarity score."""
+"""Model-based coverage for the exact-integer unigram and bigram
+rarity scores."""
 
 from __future__ import annotations
 
-import math
 import re
 from collections import Counter
 
-from tiki_e_commerce_analytics_etl_spark.operators import similarity
 from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-
-def test_semantic_decontaminate_planted(spark):
-    evals = spark.createDataFrame(
-        [(100, [1.0, 0.0, 0.0]), (101, [0.0, 1.0, 0.0])],
-        "vec_id long, embedding array<float>",
-    )
-    corpus = spark.createDataFrame(
-        [
-            (1, [2.0, 0.0, 0.0]),      # parallel to eval 100 -> cos 1.0
-            (2, [0.0, 0.0, 5.0]),      # orthogonal to both -> cos 0.0
-            (3, [1.0, 1.0, 0.0]),      # 45 deg to both -> cos ~0.707
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    out = {
-        r["id"]: r
-        for r in similarity.semantic_decontaminate(corpus, evals, threshold=0.9).collect()
-    }
-    assert out[1]["is_contaminated"] and out[1]["max_eval_score"] == 1.0
-    assert not out[2]["is_contaminated"] and out[2]["max_eval_score"] == 0.0
-    assert not out[3]["is_contaminated"]
-    assert math.isclose(out[3]["max_eval_score"], 1 / math.sqrt(2), rel_tol=1e-12)
-
-
-def test_semantic_decontaminate_covers_every_corpus_row(spark):
-    evals = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<float>")
-    corpus = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(10)], "vec_id long, embedding array<float>"
-    )
-    out = similarity.semantic_decontaminate(corpus, evals, threshold=0.5)
-    assert out.count() == 10  # clean rows are reported too, with their scores
 
 
 def _model_rarity(docs: list[tuple[int, str]], scale: int = 1_000_000):
@@ -78,22 +44,6 @@ def test_rarity_score_partition_invariant(spark):
     r1 = sorted(map(tuple, text_ops.rarity_score(df1).collect()))
     r8 = sorted(map(tuple, text_ops.rarity_score(df8).collect()))
     assert r1 == r8
-
-
-def test_semantic_decontaminate_zero_vector_reports_clean(spark):
-    """An all-zero corpus embedding has undefined cosine (NULL per
-    pair); it must surface as clean with score 0.0 — not vanish from
-    both filter branches as NULL."""
-    evals = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<float>")
-    corpus = spark.createDataFrame(
-        [(1, [0.0, 0.0]), (2, [1.0, 0.0])], "vec_id long, embedding array<float>"
-    )
-    out = {
-        r["id"]: r
-        for r in similarity.semantic_decontaminate(corpus, evals, threshold=0.9).collect()
-    }
-    assert out[1]["max_eval_score"] == 0.0 and out[1]["is_contaminated"] is False
-    assert out[2]["is_contaminated"] is True
 
 
 def _model_bigram_rarity(docs, scale=1_000_000):

@@ -1,5 +1,5 @@
 """Operator-level tests: dedup, merge (incl. idempotence), reshape,
-quality, similarity, text."""
+quality, text."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,7 +9,6 @@ from tiki_e_commerce_analytics_etl_spark.operators import (
     merge,
     quality,
     reshape,
-    similarity,
     text,
 )
 
@@ -91,6 +90,22 @@ def test_spread_small_scan_reads_size_suffixed_max_partition_bytes(spark, tmp_pa
         assert spread_small_scan(df) is df
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_spread_small_scan_spreads_frames_without_size_stats(spark):
+    """An RDD-backed frame has no size statistics and reports
+    ``spark.sql.defaultSizeInBytes``: that means unknown, not wide, so a
+    one-partition frame must still come back spread."""
+    from tiki_e_commerce_analytics_etl_spark.io import spread_small_scan
+
+    rows = [(i, f"doc {i}") for i in range(50)]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1), "id long, text string"
+    )
+    assert df.rdd.getNumPartitions() == 1
+    out = spread_small_scan(df)
+    assert out.rdd.getNumPartitions() > 1
+    assert sorted(map(tuple, out.collect())) == rows
 
 
 def test_write_partitioned_publishes_distinct_sidecars(spark, tmp_path):
@@ -257,15 +272,6 @@ def test_quality_checks_fail_and_pass(spark):
         quality.run_checks(bad, quality.mart_checks())
 
 
-def test_cosine_and_topk(spark):
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0])],
-        "vec_id: long, embedding: array<double>",
-    )
-    out = similarity.brute_force_topk(df, df.filter(F.col("vec_id") == 1), k=2).collect()
-    assert [r.neighbor_id for r in sorted(out, key=lambda r: r.rank)] == [2, 3]
-
-
 def test_lang_id_and_quality(spark):
     df = spark.createDataFrame(
         [
@@ -360,18 +366,6 @@ def test_pii_short_digit_runs_not_phones(spark):
     df = spark.createDataFrame([(1, "order 12345678 shipped")], "case_id: long, text: string")
     r = text.redact_pii_df(df, "text", "case_id").collect()[0]
     assert r.redacted == "order 12345678 shipped" and r.n_phones == 0
-
-
-def test_centroid_assignment_routes_to_own_cluster(spark):
-    rows = [
-        (1, [1.0, 0.0], "x"), (2, [0.9, 0.1], "x"),
-        (3, [0.0, 1.0], "y"), (4, [0.1, 0.9], "y"),
-    ]
-    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>, label: string")
-    cents = similarity.label_centroids(df, "label", "embedding")
-    got = {r.vec_id: r.assigned_label for r in
-           similarity.assign_nearest_centroid(df, cents, "vec_id", "embedding").collect()}
-    assert got == {1: "x", 2: "x", 3: "y", 4: "y"}
 
 
 def test_vectorized_gram_stage_matches_expression_tokenization(spark):

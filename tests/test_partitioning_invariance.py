@@ -5,7 +5,7 @@ different execution layouts (shuffle-partition count swing + AQE
 toggled) and the canonicalized results must match bit-for-bit.
 
 Queries chosen for order-sensitivity risk: windows with tiebreaks
-(sessionize, scd2), running-sum packing, hash-threshold sampling,
+(sessionize, scd2), hash-threshold sampling,
 inverted-index pair generation, and the Arrow-vectorized gram stage.
 """
 
@@ -18,7 +18,6 @@ SF_DIR = "/root/testdata/sf0.001"
 QUERIES = [
     "sessionize",
     "scd2_products",
-    "pack_documents",
     "token_budget_mix",
     "ngram_jaccard",
     "hash_split",
@@ -63,7 +62,6 @@ QUERIES = [
     # percentile boundary scalars, integer-division lift math, bounded
     # explode + double dedupe, floor-div surprisal sums, greedy Arrow
     # matcher over a collected vocab with top-k tiebreaks
-    "semantic_decontaminate",
     "rfm_segments",
     "basket_pairs",
     "rolling_active_users",

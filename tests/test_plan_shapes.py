@@ -130,18 +130,6 @@ def test_token_budget_mix_is_narrow_filter(spark):
     assert "BroadcastHashJoin" in p
 
 
-def test_centroid_assign_broadcasts_centroids(spark):
-    """Scoring must stream the corpus against broadcast centroid
-    arrays; the per-vector ranking window partitions on the vector id
-    (never a single-partition sort of all scores)."""
-    import re
-
-    df = entrymod.queries()["centroid_assign"](spark, SF_DIR)
-    p = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
-    assert re.search(r"windowspecdefinition\(vec_id", p)
-
-
 def test_bm25_broadcasts_query_vocabulary(spark):
     """The query-term side and derived per-term stats must broadcast;
     the corpus token stream must never sit on the build side."""
@@ -284,11 +272,6 @@ def test_engagement_and_tokenizer_plan_shapes(spark):
     # basket key, never a cross product.
     p = _plan(spark, "basket_pairs")
     assert "CartesianProduct" not in p
-    # semantic_decontaminate: eval side broadcast (nested-loop against
-    # a broadcast KB-sized eval set is the intended shape); the corpus
-    # must not sort-merge.
-    p = _plan(spark, "semantic_decontaminate")
-    assert "BroadcastNestedLoopJoin" in p and "SortMergeJoin" not in p
     # subword_tokenize: exactly ONE Arrow stage — Python sees the
     # unique-word vocabulary once; a per-occurrence or per-doc second
     # Arrow pass would be the 100x regression.
@@ -383,7 +366,8 @@ def _unbounded_empty_partition_windows(df) -> int:
     everything-through-one-task-over-raw-data shape that cannot
     survive 100 TB.  (fx_asof's bin-carry and quantile_sketch's
     histogram-cumsum windows are global but sit above Aggregates over
-    ~n_bins rows; pack_global's sits directly on the document scan.)"""
+    ~n_bins rows; sketch_summary's exact-percentile window has no such
+    bound.)"""
 
     def subtree_bounded(node) -> bool:
         stack = [node]
@@ -416,7 +400,6 @@ def _unbounded_empty_partition_windows(df) -> int:
 # sharded or approximate production twin, and exists so the twin can
 # be exactly oracle-checked.
 _EMPTY_WINDOW_ALLOWED = {
-    "pack_documents",  # pack_global oracle (scale twin: pack_documents_sharded)
     "sketch_summary",  # exact-percentile side of the approx-vs-exact gate
 }
 
@@ -424,11 +407,10 @@ _EMPTY_WINDOW_ALLOWED = {
 def test_empty_partition_windows_fenced_to_allowlist(spark):
     """Round-6 judge #4 made structural: NO queries() entry outside
     the documented oracle/gate allow-list may plan an
-    empty-partitionBy Window over unaggregated data — if pack_global
-    (or a future global running total) leaks into a production
-    pipeline, this fails and names it.  The allow-list is also
-    checked to stay TIGHT: an entry that no longer plans a global
-    window must be removed."""
+    empty-partitionBy Window over unaggregated data — if a global
+    running total leaks into a production pipeline, this fails and
+    names it.  The allow-list is also checked to stay TIGHT: an entry
+    that no longer plans a global window must be removed."""
     qs = entrymod.queries()
     leaked = {}
     allowed_hits = set()

@@ -1,6 +1,6 @@
 """Round-10 third-wave operators: the non-repetition Gopher quality
-suite, leakage-safe cluster splits, distributed integer-Lloyd k-means,
-and the integer-quantized logistic-regression quality classifier.
+suite, leakage-safe cluster splits, and the integer-quantized
+logistic-regression quality classifier.
 
 Each test plants a hand-computable corpus and checks EXACT values or
 published invariants — the oracle gate (tools/check.py) separately
@@ -128,141 +128,6 @@ def test_cluster_safe_split_no_pair_straddles(spark):
         len({naive[i] for i in comp}) > 1 for comp in ([0, 1, 2], [10, 150])
     )
     assert leaked, "planted components chosen to demonstrate the leak"
-
-
-# ---------------------------------------------------------------------------
-# Distributed exact k-means (integer Lloyd)
-# ---------------------------------------------------------------------------
-
-
-def _py_lloyd(vecs, k, iters, scale=1_000_000):
-    """Independent pure-Python reference of the integer Lloyd
-    contract: floor-quantize, init = k smallest ids, argmin with
-    smallest-cluster tie-break, truncating-division update, empty
-    cluster keeps its centroid."""
-    import math
-
-    q = {i: [math.floor(scale * float(x)) for x in v] for i, v in vecs.items()}
-    cents = [q[i][:] for i in sorted(q)[:k]]
-    for _ in range(iters):
-        sums = [None] * k
-        cnts = [0] * k
-        for i in sorted(q):
-            ds = [sum((a - b) ** 2 for a, b in zip(q[i], c)) for c in cents]
-            cl = ds.index(min(ds))
-            if sums[cl] is None:
-                sums[cl] = [0] * len(q[i])
-            for p, x in enumerate(q[i]):
-                sums[cl][p] += x
-            cnts[cl] += 1
-        for c in range(k):
-            if cnts[c]:
-                # Spark `div` / DuckDB `//`: truncation toward zero
-                cents[c] = [
-                    -((-s) // cnts[c]) if s < 0 else s // cnts[c]
-                    for s in sums[c]
-                ]
-    assign = {}
-    for i in sorted(q):
-        ds = [sum((a - b) ** 2 for a, b in zip(q[i], c)) for c in cents]
-        assign[i] = (ds.index(min(ds)), min(ds))
-    return cents, assign
-
-
-def test_kmeans_lloyd_matches_independent_reference(spark):
-    from tiki_e_commerce_analytics_etl_spark.operators import clustering
-
-    # three obvious blobs plus stragglers, negative coords included
-    vecs = {
-        0: [-1.0, -1.1],
-        1: [-0.9, -1.0],
-        2: [-1.05, -0.95],
-        3: [1.0, 1.0],
-        4: [1.1, 0.9],
-        5: [0.95, 1.05],
-        6: [0.0, 3.0],
-        7: [0.1, 2.9],
-        8: [-0.1, 3.1],
-        9: [0.5, 0.4],
-    }
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in vecs.items()],
-        "vec_id long, embedding array<float>",
-    )
-    cents, q = clustering.kmeans_lloyd(df, n_clusters=3, iters=4)
-    # quantization happens on the FLOAT32 the table stores
-    import numpy as np
-
-    f32 = {i: [float(np.float32(x)) for x in v] for i, v in vecs.items()}
-    ref_cents, ref_assign = _py_lloyd(f32, 3, 4)
-    assert cents == ref_cents
-    got = {
-        r["id"]: (r["cluster"], r["dist"])
-        for r in clustering.assign_exact(q, cents).collect()
-    }
-    assert got == ref_assign
-
-
-def test_kmeans_partitioning_invariance(spark):
-    # exact integer arithmetic -> identical centroids under any
-    # partitioning / reduction order
-    from tiki_e_commerce_analytics_etl_spark.operators import clustering
-
-    import random
-
-    rnd = random.Random(7)
-    rows = [
-        (i, [rnd.uniform(-1, 1) for _ in range(8)]) for i in range(60)
-    ]
-    df1 = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    c1, _ = clustering.kmeans_lloyd(df1, n_clusters=4, iters=3)
-    c2, _ = clustering.kmeans_lloyd(
-        df1.repartition(13, "vec_id"), n_clusters=4, iters=3
-    )
-    assert c1 == c2
-
-
-def test_kmeans_empty_cluster_keeps_centroid(spark):
-    from tiki_e_commerce_analytics_etl_spark.operators import clustering
-
-    # ids 0..2 are the init centroids; id 0's blob is remote while ids
-    # 1,2 sit inside one dense far blob — cluster 0 keeps its members,
-    # one of {1,2} starves and must keep its PREVIOUS centroid
-    rows = [
-        (0, [0.0, 0.0]),
-        (1, [5.0, 5.0]),
-        (2, [5.0, 5.01]),
-        (3, [5.0, 4.99]),
-        (4, [5.01, 5.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cents, _ = clustering.kmeans_lloyd(df, n_clusters=3, iters=2)
-    import math
-    import numpy as np
-
-    # cluster 2 seeded at (5, 5.01): every far-blob point is closer to
-    # it or ties toward cluster 1 — verify against the reference
-    f32 = {i: [float(np.float32(x)) for x in v] for i, v in rows}
-    ref_cents, _ = _py_lloyd(f32, 3, 2)
-    assert cents == ref_cents
-
-
-def test_cluster_balanced_sample_cap(spark):
-    from tiki_e_commerce_analytics_etl_spark.operators import clustering
-
-    assigned = spark.createDataFrame(
-        [(i, i % 3) for i in range(90)], "id long, cluster int"
-    )
-    out = clustering.cluster_balanced_sample(assigned, per_cluster=5)
-    rows = out.collect()
-    assert len(rows) == 15
-    per = {}
-    for r in rows:
-        per.setdefault(r["cluster"], []).append(r["rk"])
-    assert all(sorted(v) == [1, 2, 3, 4, 5] for v in per.values())
-    # deterministic under re-run
-    again = {(r["id"], r["cluster"]) for r in clustering.cluster_balanced_sample(assigned, per_cluster=5).collect()}
-    assert again == {(r["id"], r["cluster"]) for r in rows}
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,6 @@
 """Round-10 fourth-wave operators: cluster representative selection,
-hard-negative mining, and int8 scalar-quantized embedding search.
+word-stutter collapse, stratified quotas, vocabulary growth and
+training-shard export.
 
 Each test plants a hand-computable input and checks EXACT values; the
 oracle gate (tools/check.py) separately proves bit-exactness against
@@ -66,86 +67,6 @@ def test_cluster_best_members_exactly_one_keeper_per_component(spark):
         assert len(ks) == 1
         best = max(members, key=lambda m: (m["quality"], -m["doc_id"]))
         assert ks[0]["doc_id"] == best["doc_id"]
-
-
-# ---------------------------------------------------------------------------
-# hard_negatives — mined negatives exclude self and same-label rows
-# ---------------------------------------------------------------------------
-
-
-def _emb(spark, rows):
-    return spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-
-
-def test_hard_negatives_excludes_same_label_and_ranks(spark):
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    # Query 0 (label 1) points along +x.  Same-label vec 1 is the
-    # nearest overall but must be excluded; among different labels,
-    # vec 2 (cos=1 direction) beats vec 3 (orthogonal-ish).
-    rows = [
-        (0, [1.0, 0.0], 1),
-        (1, [0.99, 0.1], 1),   # same label: excluded
-        (2, [2.0, 0.0], 2),    # cos = 1.0
-        (3, [0.0, 1.0], 2),    # cos = 0.0
-        (4, [-1.0, 0.0], 3),   # cos = -1.0
-    ]
-    emb = _emb(spark, rows)
-    out = similarity.hard_negatives(
-        emb, emb.filter(F.col("vec_id") == 0), k=3
-    ).collect()
-    got = [(r["neighbor_id"], r["rank"]) for r in sorted(out, key=lambda r: r["rank"])]
-    assert got == [(2, 1), (3, 2), (4, 3)]
-    assert all(r["neighbor_label"] != r["query_label"] for r in out)
-
-
-# ---------------------------------------------------------------------------
-# int8 scalar quantization
-# ---------------------------------------------------------------------------
-
-
-def test_sq_encode_codes_and_zero_scale_dim(spark):
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    # Dim 0 max-abs = 4.0, dim 1 max-abs = 2.0, dim 2 all-zero.
-    rows = [
-        (0, [4.0, -2.0, 0.0], 0),
-        (1, [-4.0, 1.0, 0.0], 0),
-        (2, [2.0, 0.5, 0.0], 0),
-    ]
-    emb = _emb(spark, rows)
-    scales = similarity.sq_corpus_scales(emb)
-    assert scales.collect()[0]["scales"] == [4.0, 2.0, 0.0]
-    enc = {r["vec_id"]: r["qvec"] for r in similarity.sq_encode(emb, scales).collect()}
-    # floor semantics: 4/4*127 = 127; -2/2*127 = -127; zero-scale dim -> 0
-    assert enc[0] == [127, -127, 0]
-    assert enc[1] == [-127, 63, 0]     # floor(1.0/2*127) = floor(63.5) = 63
-    assert enc[2] == [63, 31, 0]       # floor(63.5)=63, floor(31.75)=31
-    # Codes never escape int8 range.
-    for q in enc.values():
-        assert all(-127 <= v <= 127 for v in q)
-
-
-def test_sq_topk_matches_exact_on_well_separated_corpus(spark):
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    # Well-separated directions: quantization cannot flip the ranking.
-    rows = [
-        (0, [1.0, 0.0, 0.0], 0),
-        (1, [0.9, 0.1, 0.0], 0),
-        (2, [0.0, 1.0, 0.0], 0),
-        (3, [0.0, 0.0, 1.0], 0),
-        (4, [-1.0, 0.0, 0.0], 0),
-    ]
-    emb = _emb(spark, rows)
-    qs = emb.filter(F.col("vec_id") == 0)
-    sq = [r["neighbor_id"] for r in similarity.sq_topk(emb, qs, k=2)
-          .orderBy("rank").collect()]
-    exact = [r["neighbor_id"] for r in similarity.brute_force_topk(emb, qs, k=2)
-             .orderBy("rank").collect()]
-    assert sq == exact == [1, 2]
 
 
 # ---------------------------------------------------------------------------
@@ -411,39 +332,6 @@ def test_cluster_best_members_matches_python_reference_on_random_graphs(spark):
             for r in graph.cluster_best_members(scores, pairs).collect()
         }
         assert got == want, f"trial {trial}: {edges}"
-
-
-def test_sq_encode_matches_numpy_reference_on_random_vectors(spark):
-    import math
-    import random
-
-    rng = random.Random(99)
-    dim = 6
-    rows = [
-        (i, [rng.uniform(-3, 3) for _ in range(dim)], 0) for i in range(30)
-    ]
-    # float32 narrowing happens at createDataFrame; mirror it
-    import numpy as np
-
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = _emb(spark, rows)
-    vecs = {r[0]: np.array(r[1], dtype=np.float32).astype(np.float64) for r in rows}
-    scales = np.max(
-        np.abs(np.stack(list(vecs.values()))), axis=0
-    )
-    got = {
-        r["vec_id"]: list(r["qvec"])
-        for r in similarity.sq_encode(
-            emb, similarity.sq_corpus_scales(emb)
-        ).collect()
-    }
-    for vid, v in vecs.items():
-        want = [
-            0 if s == 0.0 else math.floor(x * 127.0 / s)
-            for x, s in zip(v, scales)
-        ]
-        assert got[vid] == want, vid
 
 
 def test_collapse_word_stutter_matches_python_reference(spark):

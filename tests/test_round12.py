@@ -1,6 +1,5 @@
-"""Round-12 surface: multi-word PHRASE blocklist route, IVF×PQ
-(IVFADC) composed ANN, self-healing bench canary, and the round-11
-ADVICE fixes."""
+"""Round-12 surface: multi-word PHRASE blocklist route, self-healing
+bench canary, and the round-11 ADVICE fixes."""
 
 from __future__ import annotations
 
@@ -168,88 +167,6 @@ def test_solo_candidates_rank_both_drift_directions():
     timings = {"slow": 3.0, "fast": 1.0, "mild": 2.1}
     out = bench.solo_candidates(["slow", "fast", "mild"], timings, prior, cap=2)
     assert out == ["fast", "slow"]
-
-
-# ---------------------------------------------------------------------------
-# Round 12 #3: IVF×PQ (IVFADC) composed ANN route
-# ---------------------------------------------------------------------------
-
-
-def _mk_embeddings(spark, n=64, dim=8, seed=7):
-    import random
-
-    rng = random.Random(seed)
-    rows = [
-        (i, [round(rng.uniform(-1.0, 1.0), 3) for _ in range(dim)])
-        for i in range(n)
-    ]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_ivfpq_total_candidate_law(spark):
-    """Probing every cell with a total refine budget must EQUAL brute
-    force bit-exactly (same score expressions in the rerank): the
-    provable-correctness law every approximate knob relaxes from."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = _mk_embeddings(spark)
-    qs = emb.filter(F.col("vec_id") < 6)
-    exact = similarity.brute_force_topk(emb, qs, k=5).collect()
-    ann = similarity.ivfpq_topk(
-        emb, qs, k=5, n_clusters=4, nprobe=4, m=4, n_codes=8, refine=13
-    ).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    exact_m = {key(r): (r["neighbor_id"], r["score"]) for r in exact}
-    ann_m = {key(r): (r["neighbor_id"], r["score"]) for r in ann}
-    assert ann_m == exact_m
-
-
-def test_ivfpq_partial_probe_shape_and_determinism(spark):
-    """At nprobe<n_clusters the result is a legal top-k (<=k rows per
-    query, ranks contiguous from 1, no self pairs) and two runs are
-    identical (seeded sample, first-index ties)."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = _mk_embeddings(spark)
-    qs = emb.filter(F.col("vec_id") < 6)
-    kw = dict(k=5, n_clusters=4, nprobe=2, m=4, n_codes=8, refine=3)
-    a = similarity.ivfpq_topk(emb, qs, **kw).collect()
-    b = similarity.ivfpq_topk(emb, qs, **kw).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    per_q = {}
-    for r in a:
-        assert r["neighbor_id"] != r["query_id"]
-        per_q.setdefault(r["query_id"], []).append(r["rank"])
-    for ranks in per_q.values():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1))
-        assert len(ranks) <= 5
-
-
-def test_ivfpq_encode_is_compact_and_cell_consistent(spark):
-    """Encoded rows carry (cluster, m codes, norm) only; the cluster
-    matches the cosine-nearest coarse centroid; codes index within
-    n_codes."""
-    import math
-
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = _mk_embeddings(spark, n=32)
-    C, books = similarity.train_ivfpq(
-        emb, n_clusters=4, m=4, n_codes=8
-    )
-    enc = {r["neighbor_id"]: r for r in similarity.ivfpq_encode(
-        emb, C, books
-    ).collect()}
-    vecs = {r["vec_id"]: r["embedding"] for r in emb.collect()}
-    assert len(enc) == 32
-    for vid, r in enc.items():
-        v = [float(x) for x in vecs[vid]]
-        nrm = math.sqrt(sum(x * x for x in v))
-        sims = [sum(a * b for a, b in zip(v, c)) / nrm for c in C.tolist()]
-        assert r["cluster"] == max(range(4), key=lambda i: (sims[i], -i))
-        assert len(r["codes"]) == 4
-        assert all(0 <= c < 8 for c in r["codes"])
-        assert abs(r["__neighbor_id_norm"] - nrm) < 1e-9
 
 
 def test_byte_bpe_corpus_oracle_twin_lockstep(spark, tmp_path):

@@ -1,11 +1,11 @@
-"""Unit tests for sessionization, embedding near-dup, and the
+"""Unit tests for sessionization, daily gap-fill resampling, and the
 checks-report operator (golden-pair style, SURVEY.md §5)."""
 
 import datetime as dt
 
 from pyspark.sql import functions as F
 
-from tiki_e_commerce_analytics_etl_spark.operators import quality, sessions, similarity
+from tiki_e_commerce_analytics_etl_spark.operators import quality, sessions
 
 
 def _ts(minute: int) -> dt.datetime:
@@ -29,87 +29,6 @@ def test_sessionize_splits_on_gap(spark):
     assert by_key[(100, 1)]["n_events"] == 2
     assert by_key[(100, 1)]["session_end"] == _ts(10)
     assert by_key[(100, 2)]["n_events"] == 1
-
-
-def test_cosine_neardup_exact_and_lsh_agree_on_obvious_dups(spark):
-    base = [1.0] + [0.0] * 63
-    near = [0.99] + [0.01] * 63
-    ortho = ([0.0] * 32 + [1.0] * 32)
-    df = spark.createDataFrame(
-        [(1, base), (2, near), (3, ortho)], "vec_id: long, embedding: array<double>"
-    )
-    exact = similarity.cosine_neardup_pairs(df, threshold=0.9, method="exact").collect()
-    assert [(r["id_a"], r["id_b"]) for r in exact] == [(1, 2)]
-    assert exact[0]["score"] > 0.99
-
-    lsh = similarity.cosine_neardup_pairs(
-        df, threshold=0.9, method="lsh", n_planes=4, n_tables=8
-    ).collect()
-    assert [(r["id_a"], r["id_b"]) for r in lsh] == [(1, 2)]
-
-
-def test_cosine_neardup_blocked_matches_broadcast_bitexact(spark):
-    """The distributed block-cogroup exact path must reproduce the
-    collect-and-broadcast baseline bit for bit (same sequential dim
-    fold), across block boundaries and input partitionings."""
-    import random
-
-    rng = random.Random(11)
-    rows = [
-        (i, [rng.gauss(0, 1) * 0.2 + (i % 7) for _ in range(16)]) for i in range(80)
-    ]
-    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>").repartition(5)
-    blocked = {
-        (r["id_a"], r["id_b"]): r["score"]
-        for r in similarity.cosine_neardup_pairs(df, threshold=0.8, method="exact").collect()
-    }
-    broadcast = {
-        (r["id_a"], r["id_b"]): r["score"]
-        for r in similarity.cosine_neardup_pairs(
-            df, threshold=0.8, method="exact_broadcast"
-        ).collect()
-    }
-    assert blocked == broadcast  # exact float equality, not approx
-    assert len(blocked) > 10
-
-
-def test_lsh_topk_recall_vs_brute_force(spark):
-    """LSH candidates + exact rerank should recover most of the true
-    top-k on a clustered corpus (deterministic seeded vectors)."""
-    import random
-
-    rng = random.Random(7)
-    rows = []
-    for cid in range(8):
-        center = [rng.gauss(0, 1) for _ in range(64)]
-        for j in range(25):
-            rows.append(
-                (cid * 25 + j, [c + rng.gauss(0, 0.15) for c in center])
-            )
-    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-    q = df.filter(F.col("vec_id") % 50 == 0)
-    truth = {
-        (r["query_id"], r["neighbor_id"])
-        for r in similarity.brute_force_topk(df, q, k=5).collect()
-    }
-    approx = {
-        (r["query_id"], r["neighbor_id"])
-        # corpus_size passed: the corpus is an in-memory relation with
-        # no catalog stats, and the caller (unlike the engine) knows
-        # its count — exactly what the no-stats warning asks for
-        for r in similarity.lsh_topk(
-            df, q, k=5, n_tables=16, corpus_size=len(rows)
-        ).collect()
-    }
-    recall = len(truth & approx) / len(truth)
-    assert recall >= 0.9, f"lsh recall {recall}"
-
-    ivf = {
-        (r["query_id"], r["neighbor_id"])
-        for r in similarity.ivf_topk(df, q, k=5, n_clusters=8, nprobe=2).collect()
-    }
-    ivf_recall = len(truth & ivf) / len(truth)
-    assert ivf_recall >= 0.9, f"ivf recall {ivf_recall}"
 
 
 def test_resample_ffill_daily(spark):
@@ -161,114 +80,6 @@ def test_checks_report_rows(spark):
     assert rows["no_null_k"]["violations"] == 1
     assert rows["nonempty"]["violations"] is None
     assert rows["nonempty"]["passed"] is True
-
-
-def test_semdedup_pairs_subset_of_exact_with_identical_scores(spark):
-    from tiki_e_commerce_analytics_etl_spark.io import read_table
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
-    exact = {
-        (r.id_a, r.id_b): r.score
-        for r in similarity.cosine_neardup_pairs(emb, 0.4, method="exact").collect()
-    }
-    sd = similarity.semdedup_pairs(emb, threshold=0.4, n_clusters=16).collect()
-    assert len(sd) > 0
-    for r in sd:
-        # every within-cell pair is a true near-dup with the exact
-        # path's bit-identical score
-        assert (r.id_a, r.id_b) in exact
-        assert r.score == exact[(r.id_a, r.id_b)]
-
-
-def test_exact_neardup_supports_string_ids(spark):
-    """Advisor regression: the default blocked exact path hardcoded
-    int64 pair ids; string ids must work end to end."""
-    from tiki_e_commerce_analytics_etl_spark.operators import similarity
-
-    df = spark.createDataFrame(
-        [
-            ("doc-a", [1.0, 0.0, 0.0]),
-            ("doc-b", [1.0, 0.001, 0.0]),
-            ("doc-c", [0.0, 1.0, 0.0]),
-        ],
-        "vec_id string, embedding array<double>",
-    )
-    pairs = similarity.cosine_neardup_pairs(
-        df, threshold=0.9, method="exact", id_col="vec_id"
-    ).collect()
-    assert [(p.id_a, p.id_b) for p in pairs] == [("doc-a", "doc-b")]
-
-
-def test_pq_topk_recall_and_laws(spark):
-    """PQ/ADC path: (a) with refine*k covering the whole corpus the
-    result EQUALS brute force (total-candidate law — rerank is exact
-    cosine, same expression shape); (b) at the production refine the
-    clustered-corpus recall stays high; (c) codes are m ints in
-    [0, n_codes) and two runs are identical (seeded determinism)."""
-    import random
-
-    rng = random.Random(11)
-    rows = []
-    for cid in range(8):
-        center = [rng.gauss(0, 1) for _ in range(64)]
-        for j in range(25):
-            rows.append(
-                (cid * 25 + j, [c + rng.gauss(0, 0.15) for c in center])
-            )
-    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-    q = df.filter(F.col("vec_id") % 50 == 0)
-
-    truth = [
-        (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in similarity.brute_force_topk(df, q, k=5)
-        .orderBy("query_id", "rank")
-        .collect()
-    ]
-    # (a) total-candidate law: refine*k >= corpus size -> exact equality
-    total = [
-        (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in similarity.pq_topk(df, q, k=5, refine=40)
-        .orderBy("query_id", "rank")
-        .collect()
-    ]
-    assert total == truth
-
-    # (b) production shape recall on the clustered corpus
-    approx = {
-        (r["query_id"], r["neighbor_id"])
-        for r in similarity.pq_topk(df, q, k=5, refine=8).collect()
-    }
-    recall = len(set((a, b) for a, b, _ in truth) & approx) / len(truth)
-    assert recall >= 0.8, f"pq recall {recall}"
-
-    # (c) encoding invariants + determinism
-    books = similarity.train_pq_codebooks(df, m=8, n_codes=16)
-    assert books.shape == (8, 16, 8)
-    enc1 = similarity.pq_encode(df, books).orderBy("neighbor_id").collect()
-    enc2 = similarity.pq_encode(df, books).orderBy("neighbor_id").collect()
-    assert [r["codes"] for r in enc1] == [r["codes"] for r in enc2]
-    for r in enc1:
-        assert len(r["codes"]) == 8
-        assert all(0 <= c < 16 for c in r["codes"])
-
-    books2 = similarity.train_pq_codebooks(df, m=8, n_codes=16)
-    import numpy as np
-
-    assert np.array_equal(books, books2)
-
-
-def test_pq_validation_errors(spark):
-    df = spark.createDataFrame(
-        [(i, [float(i)] * 10) for i in range(40)],
-        "vec_id: long, embedding: array<double>",
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="not divisible"):
-        similarity.train_pq_codebooks(df, m=3, n_codes=8)
-    with _pytest.raises(ValueError, match="sample rows"):
-        similarity.train_pq_codebooks(df.limit(4), m=2, n_codes=16)
 
 
 def test_resample_interp_daily(spark):

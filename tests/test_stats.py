@@ -4,13 +4,11 @@ from __future__ import annotations
 
 import json
 import os
-import warnings
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from tiki_e_commerce_analytics_etl_spark import io, stats
-from tiki_e_commerce_analytics_etl_spark.operators import similarity
 
 SF = "/root/testdata/sf0.001"
 
@@ -66,23 +64,11 @@ def test_write_partitioned_stats_partitioned_mode(spark, tmp_path):
     assert spark.read.parquet(path).count() == 50
 
 
-def test_lsh_topk_defaults_plane_count_from_stats(spark):
-    """Parquet-backed corpus + no corpus_size: plane count comes from
-    footer stats — no fixed-8-planes warning."""
-    emb = io.read_table(spark, SF, "embeddings")
-    queries = emb.limit(3)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        out = similarity.lsh_topk(emb, queries, k=5, corpus_size=None)
-        out.write.format("noop").mode("overwrite").save()
-    assert not [w for w in caught if "lsh_topk" in str(w.message)]
-
-
 def test_sidecar_row_count_when_footers_unreadable(spark, tmp_path, monkeypatch):
     """Judge ask (round 8): engine-written tables publish _stats.json
     sidecars — when local parquet footers are unavailable (remote
     storage), estimated_row_count must fall back to the sidecar, so
-    lsh_topk's constant-occupancy sizing holds with no caller hint."""
+    stats-sized operators need no caller hint."""
     path = str(tmp_path / "tbl")
     df = spark.createDataFrame([Row(k=i, p="a" if i % 2 else "b") for i in range(40)])
     io.write_partitioned(df, path, ["p"])
@@ -105,26 +91,10 @@ def test_sidecar_row_count_when_footers_unreadable(spark, tmp_path, monkeypatch)
     ) else None
     assert stats.estimated_row_count(spark.read.parquet(bare)) is None
 
-    # and lsh_topk sizes silently from the sidecar route
-    emb = spark.createDataFrame(
-        [Row(vec_id=i, embedding=[float(i % 7), 1.0, 0.5]) for i in range(30)]
-    )
-    epath = str(tmp_path / "emb")
-    io.write_partitioned(emb, epath, [])
-    eback = spark.read.parquet(epath)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        similarity.lsh_topk(eback, eback.limit(2), k=3, dim=3)
-    assert not [w for w in caught if "lsh_topk" in str(w.message)]
-
-
-def test_lsh_topk_warns_without_any_stats(spark):
-    emb = io.read_table(spark, SF, "embeddings")
-    mem = spark.createDataFrame(emb.limit(20).collect())
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        similarity.lsh_topk(mem, mem.limit(2), k=3)
-    assert [w for w in caught if "lsh_topk" in str(w.message)]
+    # an unpartitioned engine-written table sizes from its sidecar too
+    flat = str(tmp_path / "flat")
+    io.write_partitioned(df.select("k"), flat, [])
+    assert stats.estimated_row_count(spark.read.parquet(flat)) == 40
 
 
 def test_stats_json_atomic_publish(tmp_path):

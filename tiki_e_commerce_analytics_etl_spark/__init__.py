@@ -17,8 +17,8 @@ Layout:
                 snapshot reads, compaction and vacuum
   io          — plain partitioned parquet read/write and bucketed
                 tables (not transactional; the DAGs write through acid)
-  operators   — dedup, merge/upsert, reshape, quality, similarity,
-                text analysis, multimodal plumbing
+  operators   — dedup, merge/upsert, reshape, quality, text analysis,
+                multimodal plumbing
   plans       — end-to-end query plans (golden join, snapshot
                 transform, trends, fx)
   sources     — driver-side ingest adapters (REST → DataFrame)

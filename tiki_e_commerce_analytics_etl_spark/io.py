@@ -25,7 +25,12 @@ from tiki_e_commerce_analytics_etl_spark.plans.snapshot import conform_schema
 from tiki_e_commerce_analytics_etl_spark.plans.testdata_mapping import read_table
 
 
-def spread_small_scan(df: DataFrame, bytes_per_task: int | None = None) -> DataFrame:
+# Spread-width floor: one task per 64 KiB of estimated input (hundreds
+# of documents, ~0.5 s of interpreted higher-order-function work).
+_SPREAD_BYTES_PER_TASK = 65536
+
+
+def spread_small_scan(df: DataFrame) -> DataFrame:
     """Round-robin-spread ``df`` ahead of expensive per-row map work
     IFF its scan is too small to split wide on its own — the guarded
     form of "repartition immediately after the read" (optimization
@@ -40,47 +45,37 @@ def spread_small_scan(df: DataFrame, bytes_per_task: int | None = None) -> DataF
     amortize the shuffle: a blanket floor in ``read_table`` was
     measured end-to-end and rejected (see ``read_table``'s note).
 
-    Round 13 (VERDICT r12 items 3-4):
-
     - The size probe is the OPTIMIZED LOGICAL plan's estimated bytes
       (parquet footer sizes for scans), not ``df.rdd.getNumPartitions()``
-      — the RDD conversion compiled a full physical plan per call on
-      the driver and bypassed AQE's view of the plan.
-    - The spread width is floored at one task per ``bytes_per_task``
-      estimated input bytes (default 64 KiB ≈ hundreds of documents,
-      i.e. ~0.5 s of interpreted-HOF work) instead of always fanning
-      to ``defaultParallelism``: the driver's round-12 local[32] bench
-      measured every consumer of the unconditional 32-way fan-out
-      SLOWER at 32 cores than at 8 (PERF_r12 scaling 0.31-0.8) — a
-      tiny corpus split 32 ways pays 32 task launches + 32 concurrent
-      Python/HOF evaluations for milliseconds of work each.
-    - ``SPARK_GRAFT_SPREAD=0`` disables the spread outright (the
-      bisect kill the round-12 verdict asked for);
-      ``SPARK_GRAFT_SPREAD_BYTES_PER_TASK`` overrides the floor.
+      — the RDD conversion compiles a full physical plan per call on
+      the driver and bypasses AQE's view of the plan.
+    - Plans without size statistics (RDD-backed frames,
+      ``createDataFrame``, ``localCheckpoint``) report
+      ``spark.sql.defaultSizeInBytes`` (``Long.MaxValue`` by default).
+      That sentinel means "unknown", not "wide": such a frame falls
+      back to its partition count and is spread to the default
+      parallelism when it has fewer partitions.
+    - The spread width is floored at one task per
+      ``_SPREAD_BYTES_PER_TASK`` estimated input bytes instead of
+      always fanning to ``defaultParallelism``: at 32 local cores the
+      unconditional 32-way fan-out made every consumer slower than at
+      8 (0.31-0.8× scaling), since a tiny corpus split 32 ways pays 32
+      task launches and 32 concurrent Python/HOF evaluations for
+      milliseconds of work each.
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":
-        return df
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
+    par = df.sparkSession.sparkContext.defaultParallelism
     if par <= 1:
         return df
-    if bytes_per_task is None:
-        try:
-            bytes_per_task = int(
-                os.environ.get("SPARK_GRAFT_SPREAD_BYTES_PER_TASK", "65536")
-            )
-        except ValueError:
-            bytes_per_task = 65536
+    # The SQLConf getters parse size-suffixed values ("64m") to bytes.
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
     est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    # The SQLConf getter parses size-suffixed values ("64m") to bytes.
-    max_pb = int(
-        df.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    )
-    if est >= par * max_pb:
+    if est >= int(conf.defaultSizeInBytes()):
+        if df._jdf.rdd().getNumPartitions() >= par:
+            return df
+        return df.repartition(par)
+    if est >= par * int(conf.filesMaxPartitionBytes()):
         return df  # the scan already yields >= parallelism splits
-    width = min(par, max(2, -(-est // max(bytes_per_task, 1))))
+    width = min(par, max(2, -(-est // _SPREAD_BYTES_PER_TASK)))
     return df.repartition(width)
 
 
@@ -108,13 +103,13 @@ def write_partitioned(
     row count + byte size) is published next to the data: the row count
     rides the write itself as an ``Observation`` metric (zero extra
     passes — BigQuery gives the reference these numbers for free) and
-    feeds downstream sizing (``similarity.lsh_topk`` plane count,
-    ``multimodal.repartition_for_payload``).  Cost per mode: full
-    replace and append are O(batch) — observed rows, plus the previous
-    sidecar for append; a dynamic PARTITION overwrite can't be
-    decomposed that way (unknown partitions were replaced), so it
-    re-sums footers, O(table files) of metadata reads.  Remote paths
-    skip the sidecar (stats.write_stats is a no-op there).
+    feeds downstream sizing (``dedup.keep_latest_auto``,
+    ``sampling.auto_shards``, ``multimodal.repartition_for_payload``).
+    Cost per mode: full replace and append are O(batch) — observed
+    rows, plus the previous sidecar for append; a dynamic PARTITION
+    overwrite can't be decomposed that way (unknown partitions were
+    replaced), so it re-sums footers, O(table files) of metadata reads.
+    Remote paths skip the sidecar (stats.write_stats is a no-op there).
 
     ``key_cols`` declares the table's logical key columns: an
     approx-distinct cardinality rides the same Observation (HLL partial

@@ -1,7 +1,7 @@
 """Operator library: dedup, merge/upsert, reshape, quality, sessions,
-similarity, graph clustering, lexical ranking, text analysis,
-multimodal plumbing, sampling, skew mitigation, diffing, and
-grouped-map time-series repair.
+graph clustering, lexical ranking, text analysis, multimodal
+plumbing, sampling, skew mitigation, diffing, and grouped-map
+time-series repair.
 
 Submodules (import the module, call its functions):
   dedup       keep_latest, exact_dedup, minhash_lsh_candidates
@@ -13,9 +13,6 @@ Submodules (import the module, call its functions):
   quality     Check, run_checks, checks_report, summary,
               zscore_outliers, mad_outliers, histogram
   sessions    sessionize, session_stats
-  similarity  brute_force_topk, lsh_topk, ivf_topk,
-              cosine_neardup_pairs, semdedup_pairs, label_centroids,
-              assign_nearest_centroid
   graph       connected_components, keep_canonical
   ranking     bm25_topk
   text        words, token_count, lang_id, quality_score, fingerprint,
@@ -30,5 +27,4 @@ Submodules (import the module, call its functions):
   range_join  range_join_points, interval_overlap_join
   time_rollup multi-granularity rollup
   hierarchy   pointer-jumping root resolution
-  packing     sequence packing (global + sharded)
 """

@@ -993,8 +993,7 @@ def hex_hamming_pairs(
     buckets are 16-256-way → candidates ~n²/32; agree=3 buckets are
     ~16^4-16^6-way).  Requires ``radius + agree <= hex_len``.
 
-    Measured (radius 8, uniform-random sigs, local[32] —
-    ``tools/scaling_bench.py --hamming``): agree=1 wins while the
+    Measured (radius 8, uniform-random sigs, local[32]): agree=1 wins while the
     n²/32 candidate volume stays cheap (200k distinct: 30 s vs 44 s)
     and degrades quadratically past it (632k: 362 s); agree=3 grows
     sub-quadratically (63k/200k/632k = 21/44/166 s) and takes over

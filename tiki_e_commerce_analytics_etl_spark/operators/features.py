@@ -230,7 +230,7 @@ def logreg_train(
     Returns (weights, bias): a {feature: micro_weight} dict over the
     features present in the corpus plus the bias, both bounded by
     ``dim`` — the ONLY driver traffic, collected once per iteration
-    (the bounded-model-state pattern of kmeans_lloyd / bpe_train).
+    (the bounded-model-state pattern of bpe_train).
 
     Scale shape per iteration: margins are one broadcast join of the
     bounded weight table against the sparse (doc, feature, tf)

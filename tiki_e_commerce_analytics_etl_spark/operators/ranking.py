@@ -1,8 +1,7 @@
-"""Lexical retrieval scoring (BM25) — the text twin of the embedding
-top-k: score documents against small keyword queries and return the
-top-k per query.  Training-data pipelines use this shape for targeted
-corpus slicing ("pull the docs about X") and for hybrid dedup/quality
-heuristics.
+"""Lexical retrieval scoring (BM25): score documents against small
+keyword queries and return the top-k per query.  Training-data
+pipelines use this shape for targeted corpus slicing ("pull the docs
+about X") and for hybrid dedup/quality heuristics.
 
 Scale shape: the inverted statistics (term frequency, document
 frequency, document length) are plain hash aggregates over the

@@ -2161,11 +2161,11 @@ def gopher_repetition(
     only ever consume a gram's COUNT and LENGTH, so shuffling the
     ~12-byte (hash, len) pair instead of up-to-10-word strings cuts
     the dominant shuffle's width ~5× (the round-11 10× decade read
-    5.04× — shuffle-bytes-bound — against ~linear expected; measured
-    re-read after this change in SCALING.md).  Trade: a 64-bit
-    collision WITHIN one (doc, n) group would merge two grams'
-    counts; at ≤ |doc| grams per group that is ~1e-13 per document,
-    far below the float-determinism bar everything else clears.
+    5.04× — shuffle-bytes-bound — against ~linear expected).  Trade:
+    a 64-bit collision WITHIN one (doc, n) group would merge two
+    grams' counts; at ≤ |doc| grams per group that is ~1e-13 per
+    document, far below the float-determinism bar everything else
+    clears.
     """
     ns = sorted(set(tuple(top_ns) + tuple(dup_ns)))
     # guarded spread (guide §2.5): the len(ns)-way gram explode does
@@ -3064,13 +3064,13 @@ def blocklist_screen(
       re-aggregate per doc, zero-hit docs rejoin via a left join on
       the doc spine.  Scales to arbitrarily long lists; costs one
       explode per distinct size + two hash aggregates (measured at a
-      100k-phrase list in SCALING.md round-12).
+      100k-phrase list).
     * ``"auto"`` (default) — ``join`` when the normalized list
       exceeds ``join_threshold`` else ``literal``.  The 256 default
-      is the measured crossover (SCALING.md round-11 blocklist ladder
-      at sf0.1: literal 0.65 s vs join 0.81 s at 256 terms, 1.25 s vs
-      0.69 s at 512, 5.83 s vs 0.65 s at 2,600 — the join route is
-      flat in list size, the literal route linear; the crossover in
+      is the measured crossover (blocklist ladder at sf0.1: literal
+      0.65 s vs join 0.81 s at 256 terms, 1.25 s vs 0.69 s at 512,
+      5.83 s vs 0.65 s at 2,600 — the join route is flat in list
+      size, the literal route linear; the crossover in
       TERM COUNT is roughly scale-free because both the per-term
       compare and the per-gram hash probe are per-gram costs).
 

@@ -24,10 +24,10 @@ sources that cost **no data scan**:
    mirroring ``ANALYZE TABLE ... COMPUTE STATISTICS`` at zero cost.
    The underscore prefix keeps it invisible to Spark's directory scans.
 
-Consumers: ``operators.similarity.lsh_topk`` auto-sizes its hyperplane
-count from (1) when the caller passes neither ``n_planes`` nor
-``corpus_size`` — replacing the round-3 fixed-8-planes warning path,
-whose bucket occupancy grew linearly with corpus size;
+Consumers: ``operators.dedup.keep_latest_auto`` picks its formulation
+from (1)'s row count and (3)'s distinct-key counts;
+``operators.sampling.auto_shards`` sizes its shard count from (1),
+falling back to (3)'s sidecar and then to one ``count()``;
 ``operators.multimodal.repartition_for_payload`` accepts (3)'s
 ``total_bytes`` for remote-storage inputs where its own local
 file-size probe sees nothing.
