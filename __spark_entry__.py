@@ -575,52 +575,6 @@ def q_contiguous_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "n_chars", "row_id")
 
 
-def q_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trainable classifier machinery gate (operators/ml.py): JVM
-    array_to_vector features, LogisticRegression on 4 of 5
-    deterministic vec_id folds, held-out accuracy gate.
-
-    The testdata's stored labels (embeddings.label, documents.lang)
-    are RANDOM relative to the features (measured: held-out accuracy
-    ≈ chance for every model), so the benchmark uses the standard
-    linearly-separable teacher construction: label = sign of a fixed
-    ±1-alternating projection of the embedding.  Recovering that
-    boundary from TRAIN folds and generalizing to the held-out fold
-    is a real end-to-end test of the distributed training path;
-    threshold 0.7 sits far above the 0.5 chance level and holds for
-    any regenerated embedding distribution (the boundary is
-    structural, not data-luck)."""
-    from pyspark.ml.functions import array_to_vector
-
-    from tiki_e_commerce_analytics_etl_spark.operators import ml as ml_ops
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    vec = F.col("embedding").cast("array<double>")
-    signs = F.transform(
-        F.sequence(F.lit(0), F.size(vec) - 1),
-        lambda i: F.when(i % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0)),
-    )
-    teacher = (
-        F.aggregate(
-            F.zip_with(vec, signs, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        > 0
-    ).cast("double")
-    df = emb.select(
-        "vec_id",
-        array_to_vector(vec).alias("features"),
-        teacher.alias("label"),
-    )
-    _, pred = ml_ops.train_eval_classifier(
-        df, "features", "label", split_key="vec_id", n_folds=5, test_fold=0
-    )
-    return ml_ops.accuracy_summary(pred, "label", threshold=0.7).select(
-        "n_test", "accuracy_ok"
-    )
-
-
 def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable quantile sketch (sketch.quantile_histogram): fixed-
     width histogram of l_extendedprice, quantiles read from cumulative
@@ -937,163 +891,6 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_ops.redact_pii_df(df, "text", "case_id")
 
 
-def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE merge training (Sennrich 2016) on the paper's canonical
-    corpus (low*5 lower*2 newest*6 widest*3): 8 rounds of weighted
-    pair-count -> merge-everywhere, (count DESC, left ASC, right ASC)
-    tiebreak.  The oracle carries the merge table computed by an
-    independent reference implementation (tests/test_round7_properties
-    re-derives it property-style on random corpora), so the check is
-    engine-independent truth — the iterative rewrite itself is not
-    SQL-expressible."""
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    corpus = " ".join(
-        ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
-    )
-    df = spark.createDataFrame([(1, corpus)], "case_id: long, text: string")
-    return text_ops.bpe_train(df, n_merges=8)
-
-
-def q_bpe_corpus_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE trainer over the REAL sf documents corpus (round 8 — the
-    round-7 judge asked for the trainer exercised against the sf
-    table, not only the canonical fixture): 10 merges on
-    documents.text.  STRICT since round 12: the iterative rewrite IS
-    SQL-expressible after all — the generated chained-CTE twin
-    (`_char_bpe_corpus_oracle`) runs the same pair-count → argmax →
-    resume-after rewrite per stage, with the leftmost-greedy merge as
-    a non-overlapping replace() over separator-wrapped symbols.  The
-    independent pure-Python reference check from round 7 remains in
-    pytest (tests/test_round7_properties.py)."""
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    docs = read_table(spark, sf_dir, "documents")
-    return text_ops.bpe_train(docs, text_col="text", n_merges=10)
-
-
-def q_wordpiece_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WordPiece merge training (Schuster & Nakajima 2012, round 10 —
-    completes the trainer family next to bpe_merges and unigram_vocab)
-    on the same Sennrich canonical corpus (low*5 lower*2 newest*6
-    widest*3): 8 rounds of likelihood-gain argmax
-    score = count(ab) / (count(a)·count(b)) compared as EXACT
-    rationals, (left ASC, right ASC) tiebreak, ``##`` continuation
-    convention.  Note the contrast with BPE on the IDENTICAL corpus:
-    likelihood scoring merges the rare 'wid' symbols first where
-    frequency scoring starts at ('e','s').  The oracle carries the
-    merge table computed by an independent pure-Python reference
-    implementation (tests/test_round10.py re-derives it
-    property-style on random corpora); the iterative rewrite itself
-    is not SQL-expressible, the fixed-corpus VALUES table is."""
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    corpus = " ".join(
-        ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
-    )
-    df = spark.createDataFrame([(1, corpus)], "case_id: long, text: string")
-    return text_ops.wordpiece_train(df, n_merges=8)
-
-
-def q_wordpiece_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WordPiece APPLY (round 10): tokenize documents by replaying the
-    merge table ``wordpiece_train`` learns on the canonical corpus —
-    train ∘ apply share ``_merge_scan`` + ``_wp_syms`` so they cannot
-    drift.  The oracle carries hand-derived expected counts (e.g.
-    'lowest' → [low, ##est] = 2 tokens under those merges, 'wide' →
-    [wid, ##e]); the rank-ordered resume-after-merge scan itself is
-    not SQL-expressible.  tests/test_round10.py re-derives apply
-    against an independent reference on random corpora."""
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    corpus = " ".join(
-        ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
-    )
-    train = spark.createDataFrame([(1, corpus)], "case_id: long, text: string")
-    merges = text_ops.wordpiece_train(train, n_merges=8)
-    docs = spark.createDataFrame(
-        [
-            (1, "lowest widest low"),
-            (2, "newest newest lower"),
-            (3, "wide low lows"),
-        ],
-        "doc_id: long, text: string",
-    )
-    return text_ops.wordpiece_token_counts(merges_df=merges, df=docs)
-
-
-def q_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-LM (SentencePiece-style) tokenizer training (Kudo
-    2018, round 9) on the canonical unigram example corpus (hug*10
-    pug*5 pun*12 bun*4 hugs*5): seed-substring counts -> hard-EM
-    Viterbi recounts -> prune to vocab_size=10, per
-    text.unigram_train's pinned algorithm.  The oracle carries the
-    vocabulary computed by an independent pure-Python reference
-    implementation (tests/test_round9.py re-derives it property-style
-    on random corpora too); the EM loop itself is not SQL-expressible,
-    the fixed-corpus VALUES table is."""
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    wc = {"hug": 10, "pug": 5, "pun": 12, "bun": 4, "hugs": 5}
-    corpus = " ".join(w for w, c in wc.items() for _ in range(c))
-    df = spark.createDataFrame([(1, corpus)], "case_id: long, text: string")
-    return text_ops.unigram_train(df, vocab_size=10, seed_max_len=3)
-
-
-def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE APPLY: tokenize documents with the merge table learned by
-    ``bpe_train`` on the Sennrich canonical corpus (the 8 merges the
-    bpe_merges oracle pins), returning per-doc word/char/BPE-token
-    counts.  The oracle carries hand-derived expected counts (e.g.
-    'lowest' → [low, est] = 2 tokens under those merges); the
-    rank-ordered resume-after-merge scan itself is not
-    SQL-expressible.  tests/test_round7_properties.py re-derives
-    apply against an independent reference on random corpora."""
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    corpus = " ".join(
-        ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
-    )
-    train = spark.createDataFrame([(1, corpus)], "case_id: long, text: string")
-    merges = text_ops.bpe_train(train, n_merges=8)
-    docs = spark.createDataFrame(
-        [
-            (1, "lowest widest low"),
-            (2, "newest newest lower"),
-            (3, "wide low lows"),
-        ],
-        "doc_id: long, text: string",
-    )
-    return text_ops.bpe_token_counts(merges_df=merges, df=docs)
-
-
-def q_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-LM APPLY (round 9): tokenize fixed documents with the
-    vocabulary ``unigram_train`` learns on the canonical corpus (the
-    10 pieces the unigram_vocab oracle pins), returning per-doc
-    word/char/token counts — train ∘ apply share ``_unigram_viterbi``
-    so they cannot drift.  The oracle carries hand-derived counts
-    ('hugs' → [hug, s] = 2; 'bun' → 3 chars after its piece was
-    pruned; unseen-charset 'zebra' → per-char fallback = 5); the
-    Viterbi DP itself is not SQL-expressible.  tests/test_round9.py
-    re-derives apply against an independent exhaustive-DP reference."""
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    wc = {"hug": 10, "pug": 5, "pun": 12, "bun": 4, "hugs": 5}
-    corpus = " ".join(w for w, c in wc.items() for _ in range(c))
-    train = spark.createDataFrame([(1, corpus)], "case_id: long, text: string")
-    vocab = text_ops.unigram_train(train, vocab_size=10, seed_max_len=3)
-    docs = spark.createDataFrame(
-        [
-            (1, "hug hugs pun"),
-            (2, "bun bun pug"),
-            (3, "zebra hug"),
-        ],
-        "doc_id: long, text: string",
-    )
-    return text_ops.unigram_token_counts(docs, vocab)
-
-
 def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Information-density screen (round 8): per-document char-level
     Shannon entropy in integer micro-nats.  Bit-exact oracle: both
@@ -1185,21 +982,6 @@ def q_embedding_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         for j in range(i, _N_MOMENT_DIMS)
     ]
     return base.agg(*aggs)
-
-
-def q_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PCA gate (round 8): pyspark.ml PCA over the embeddings table —
-    one treeAggregate Gram pass + driver eigh + broadcast projection.
-    Raw projections carry an eigenvector sign convention, so the
-    oracle gates on exact eigen-LAWS of the full-rank fit instead
-    (non-increasing spectrum; proportions sum to 1 — rotation
-    preserves variance): data-independent, never stale, yet broken by
-    a wrong distributed covariance pass.  Reconstruction and
-    orthonormality laws live in pytest."""
-    from tiki_e_commerce_analytics_etl_spark.operators import ml as ml_ops
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    return ml_ops.pca_spectrum_gate(emb, dim=64)
 
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1377,29 +1159,6 @@ def q_bigram_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = read_table(spark, sf_dir, "documents")
     return text_ops.bigram_rarity(docs, "text", "doc_id")
-
-
-def q_subword_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Subword-tokenizer training: top-200 character n-grams (len 2-6)
-    of the corpus's words, occurrence-weighted, deterministic tiebreak
-    — gram extraction runs once per UNIQUE word (text.subword_vocab)."""
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    docs = read_table(spark, sf_dir, "documents")
-    return text_ops.subword_vocab(docs, "text", min_len=2, max_len=6, k=200)
-
-
-def q_subword_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy longest-match subword tokenization (WordPiece apply)
-    against the corpus-derived vocab: per-doc word + subword counts.
-    The Arrow matcher tokenizes the unique-word vocabulary only; doc
-    counts come from joining word frequencies back
-    (text.subword_token_counts)."""
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    docs = read_table(spark, sf_dir, "documents")
-    vocab = text_ops.subword_vocab(docs, "text", min_len=2, max_len=6, k=200)
-    return text_ops.subword_token_counts(docs, vocab, "text", "doc_id", max_len=6)
 
 
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1647,155 +1406,6 @@ def q_collapse_stutter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = read_table(spark, sf_dir, "documents")
     return text_ops.collapse_word_stutter(docs, "text", "doc_id")
-
-
-def q_training_export_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end training-export plan — the composition a corpus
-    release actually runs, one row per surviving doc with its full
-    routing: (1) near-dup clusters keep their highest-quality member
-    (graph.cluster_best_members — ONE pointer-jumping CC pass feeds
-    both the drop decision and the split key), (2) quality floor
-    0.3, (3) leakage-safe split hashed on the COMPONENT id so no
-    near-dup pair straddles train/val/test, (4) the train slice gets
-    deterministic (shard, pos) serving order (the md5 permutation of
-    sampling.shuffle_shards, seed 7; val/test ride shard -1).  The
-    shard count is the SCALE-PROPORTIONAL default
-    (sampling.auto_shards: corpus rows / 4M, floor 8) — the rank
-    windows sort corpus/n_shards rows per task, so the parallelism
-    lever now sizes itself; at every test SF the floor keeps it at 8,
-    bit-identical to the pinned oracle.  Output (doc_id, component,
-    quality, split, shard, pos).  Oracle: closure + argmax window +
-    the md5 CASE + per-(split, shard) rank windows, all composed."""
-    from tiki_e_commerce_analytics_etl_spark.operators import graph
-    from tiki_e_commerce_analytics_etl_spark.operators import sampling as samp_ops
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    docs = read_table(spark, sf_dir, "documents")
-    n_shards = samp_ops.auto_shards(docs)
-    pairs = dedup_ops.ngram_jaccard_pairs(docs, "text", "doc_id", n=5, threshold=0.5)
-    scores = docs.select(
-        "doc_id", "text", text_ops.words(F.col("text")).alias("__w")
-    ).select(
-        "doc_id",
-        text_ops.quality_score_from_words(F.col("text"), F.col("__w")).alias(
-            "quality"
-        ),
-    )
-    best = graph.cluster_best_members(scores, pairs, "doc_id", "quality")
-    losers = best.filter(~F.col("is_keeper")).select("doc_id")
-    kept = (
-        scores.join(losers, "doc_id", "left_anti")
-        .join(best.select("doc_id", "component"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("component", "doc_id").alias("component"),
-            "quality",
-        )
-        .filter(F.col("quality") >= 0.3)
-    )
-    b = F.conv(
-        F.substring(F.md5(F.col("component").cast("string")), 1, 4), 16, 10
-    ).cast("int")
-    split = (
-        F.when(b < F.floor(F.lit(0.8) * 65536).cast("int"), F.lit("train"))
-        .when(b < F.floor(F.lit(0.9) * 65536).cast("int"), F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    h = F.md5(F.concat_ws("|", F.lit("7"), F.col("doc_id").cast("string")))
-    routed = kept.select("doc_id", "component", "quality", split.alias("split"))
-    shard = (
-        F.when(
-            F.col("split") == "train",
-            F.pmod(
-                F.conv(F.substring(h, 1, 4), 16, 10).cast("long"),
-                F.lit(n_shards),
-            ).cast("int"),
-        )
-        .otherwise(F.lit(-1))
-    )
-    routed = routed.withColumn("shard", shard)
-    w = Window.partitionBy("split", "shard").orderBy(h, F.col("doc_id"))
-    return routed.withColumn("pos", F.row_number().over(w))
-
-
-_BYTE_BPE_CORPUS = (
-    "low low low lower lower newest newest newest newest "
-    "widest widest it's café 42"
-)
-
-
-def q_byte_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-level GPT-2-style BPE training (round 11 — completes the
-    trainer family at the level production LLM tokenizers actually
-    train): GPT-2 pre-tokenizer regex (pieces keep their leading
-    space), UTF-8 bytes mapped through the bytes_to_unicode table,
-    then 10 rounds of the shared count-pairs → argmax → rewrite loop.
-    The canonical corpus extends Sennrich's with a contraction
-    ("it's" splits to ' it' + "'s"), a multi-byte UTF-8 word ('café'
-    → 6 byte symbols), and digits — ranks 8-9 merge the 'Ġ' space
-    prefix, the byte-level signature the char trainer cannot
-    produce.  The oracle carries the merge table computed by an
-    independent pure-Python reference (scanner-based pre-tokenizer,
-    re-derived byte table; tests/test_round11.py re-derives it
-    property-style on random corpora); the iterative rewrite itself
-    is not SQL-expressible, the fixed-corpus VALUES table is."""
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    df = spark.createDataFrame(
-        [(1, _BYTE_BPE_CORPUS)], "case_id: long, text: string"
-    )
-    return text_ops.byte_bpe_train(df, n_merges=10)
-
-
-def q_byte_bpe_corpus_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-level BPE trained on a pinned SUBCORPUS of the documents
-    table (doc_id % 5 = 2) — the corpus-scale oracle row the round-11
-    verdict asked for (#7): unlike byte_bpe_merges' canonical VALUES
-    corpus, this drives the trainer through the real piece-frequency
-    distribution at every SF, and the DuckDB twin REIMPLEMENTS the
-    trainer in SQL (8 chained merge stages: pair-count → (cnt DESC,
-    l, r) argmax → leftmost-greedy resume-after rewrite via
-    non-overlapping replace() on a separator-wrapped symbol string)
-    rather than pinning literals — strict value-match, rows-only
-    budget untouched.  The twin's pre-tokenizer is the simple-split
-    specialization of the GPT-2 regex, valid because the corpus
-    inventory is exactly [a-z ] with single spaces (verified at all 3
-    SFs); the Spark side runs the REAL regex, so a corpus that ever
-    grew punctuation/whitespace runs would surface here as a
-    mismatch — which is precisely the gate's job."""
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    docs = read_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 5 == 2
-    )
-    return text_ops.byte_bpe_train(docs, n_merges=8)
-
-
-def q_byte_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-level BPE APPLY (round 11): tokenize documents by
-    replaying the merge table ``byte_bpe_train`` learns on the
-    canonical corpus — train ∘ apply share ``_merge_scan``, the byte
-    table, and the pre-tokenizer, so they cannot drift.  The oracle
-    carries reference-derived counts (e.g. 'lowest widest low' → 3
-    pieces, 17 bytes, 7 tokens: [low|est], [Ġ|w|i|dest] via the
-    rank-10 'dest' merge, [Ġlow] whole); ' café' stays 6 untouched
-    byte symbols — no merge covers it, yet it still tokenizes: the
-    no-<unk> guarantee of the 256-symbol base alphabet."""
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    train = spark.createDataFrame(
-        [(1, _BYTE_BPE_CORPUS)], "case_id: long, text: string"
-    )
-    merges = text_ops.byte_bpe_train(train, n_merges=10)
-    docs = spark.createDataFrame(
-        [
-            (1, "lowest widest low"),
-            (2, "it's newest café"),
-            (3, "42 low lows"),
-        ],
-        "doc_id: long, text: string",
-    )
-    return text_ops.byte_bpe_token_counts(docs, merges)
 
 
 def q_blocklist_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2847,10 +2457,10 @@ def q_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     to_png = mm.text_to_png_udf(max_bytes=64)
     # NOTE: a guarded spread was A/B-measured here and REJECTED: it
-    # won ~30% on this query alone but its consumers
-    # (image_neardup_pairs' agree-auto probe, curation_report)
-    # re-execute the dhash lineage per pass and regressed — the
-    # in-batch curation_report median doubled with the spread in.
+    # won ~30% on this query alone but consumers that re-execute the
+    # dhash lineage per pass (image_neardup_pairs' agree-auto probe, a
+    # composite report) regressed — the report's in-batch median
+    # doubled with the spread in.
     media = docs.select(
         F.col("doc_id").alias("media_id"),
         F.lit("image").alias("media_type"),
@@ -3029,56 +2639,6 @@ def q_strip_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_ops.strip_duplicate_spans(docs, "text", "doc_id", min_words=6)
 
 
-def q_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document CURATION DASHBOARD (round 9) — the composition a
-    training-data pipeline actually runs before dropping/trimming
-    documents, one row per doc joining the independent dedup signals:
-    exact partners (md5 of normalized text, count of other docs in the
-    group), duplicated-span words (n_words − kept after
-    strip_duplicate_spans at 6 words), and perceptual image partners
-    (the image_neardup_pairs radius-8 set).  Every signal is an
-    already-oracle-verified operator; this query verifies the JOINED
-    view end-to-end (the oracle recomputes all three in SQL and joins
-    the same way)."""
-    from tiki_e_commerce_analytics_etl_spark.operators.dedup import _normalized
-
-    docs = read_table(spark, sf_dir, "documents")
-    stripped = dedup_ops.strip_duplicate_spans(
-        docs, "text", "doc_id", min_words=6
-    ).select("doc_id", "n_words", "kept_words")
-    exact = (
-        docs.select("doc_id", F.md5(_normalized(F.col("text"))).alias("__h"))
-        .withColumn(
-            "exact_partners",
-            (F.count(F.lit(1)).over(Window.partitionBy("__h")) - 1).cast("long"),
-        )
-        .select("doc_id", "exact_partners")
-    )
-    pairs = q_image_neardup_pairs(spark, sf_dir)
-    img = (
-        pairs.select(F.col("id_a").alias("doc_id"))
-        .unionAll(pairs.select(F.col("id_b").alias("doc_id")))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("image_partners"))
-    )
-    return (
-        stripped.join(exact, "doc_id")
-        .join(img, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_words",
-            "kept_words",
-            (F.col("n_words") - F.col("kept_words"))
-            .cast("int")
-            .alias("dup_span_words"),
-            "exact_partners",
-            F.coalesce("image_partners", F.lit(0)).cast("long").alias(
-                "image_partners"
-            ),
-        )
-    )
-
-
 def q_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RefinedWeb/CCNet-style duplicated-span REMOVAL: every
     non-overlapping 3-word tile appearing in >= 4 distinct documents
@@ -3186,40 +2746,6 @@ def q_jsonl_corpus_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             F.col("_corrupt_record").alias("raw_line"),
         )
-    )
-
-
-def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full training-data curation chain as ONE lazy plan:
-    language filter (en) → quality screen (≥0.3) → exact dedup (md5,
-    min id wins) → near-dup removal (n-gram Jaccard ≥0.5, higher id of
-    each pair dropped) → deterministic train/val/test assignment.
-    Every stage is an operator that is also individually
-    oracle-checked; this query checks their composition."""
-    from tiki_e_commerce_analytics_etl_spark.operators import sampling
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    docs = read_table(spark, sf_dir, "documents")
-    feat = docs.select(
-        "doc_id", "text", text_ops.words(F.col("text")).alias("__w")
-    ).select(
-        "doc_id",
-        "text",
-        text_ops.lang_id_from_words(F.col("__w")).alias("lang"),
-        text_ops.quality_score_from_words(F.col("text"), F.col("__w")).alias("quality"),
-        text_ops.token_count_from_words(F.col("__w")).alias("token_est"),
-    )
-    kept = feat.filter((F.col("lang") == "en") & (F.col("quality") >= 0.3))
-    # deduped feeds BOTH the pair generation and the anti-join; without
-    # a cache the whole scan→features→dedup prefix runs twice.
-    deduped = dedup_ops.exact_dedup(kept, "text", "doc_id").cache()
-    pairs = dedup_ops.ngram_jaccard_pairs(deduped, "text", "doc_id", n=5, threshold=0.5)
-    near_dup_ids = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-    final = deduped.join(near_dup_ids, "doc_id", "left_anti")
-    return sampling.hash_split(
-        final.select("doc_id", "lang", "quality", "token_est"),
-        "doc_id",
-        {"train": 0.8, "val": 0.1, "test": 0.1},
     )
 
 
@@ -3658,133 +3184,6 @@ def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LOGREG_DIM = 512
-_LOGREG_ITERS = 5
-_LOGREG_LR_DEN = 2
-
-
-def _logreg_final(spark: SparkSession, sf_dir: str):
-    from tiki_e_commerce_analytics_etl_spark.operators import features as feat_ops
-
-    docs = read_table(spark, sf_dir, "documents")
-    weights, bias = feat_ops.logreg_train(
-        docs,
-        label_col=(F.col("source") == "src0"),
-        dim=_LOGREG_DIM,
-        iters=_LOGREG_ITERS,
-        lr_den=_LOGREG_LR_DEN,
-    )
-    return docs, weights, bias
-
-
-def q_logreg_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trainable quality-classifier weights (CCNet / GPT-3 filtering
-    recipe): full-batch GD logistic regression over hashed unigram
-    counts, every training step exact integer micro-units so the
-    5-iteration trainer is bit-identical to the DuckDB unrolled-CTE
-    replay (features.logreg_train).  Bias rides as feature -1."""
-    _, weights, bias = _logreg_final(spark, sf_dir)
-    rows = [(int(f), int(w)) for f, w in sorted(weights.items())]
-    rows.append((-1, int(bias)))
-    return spark.createDataFrame(rows, "feature long, w long")
-
-
-def q_logreg_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document quality-classifier margins under the trained
-    weights: (doc_id, y, margin_u, pred) — all exact integers
-    (features.logreg_margins)."""
-    from tiki_e_commerce_analytics_etl_spark.operators import features as feat_ops
-    from tiki_e_commerce_analytics_etl_spark.operators.bloom import md5_48
-    from tiki_e_commerce_analytics_etl_spark.operators.text import words
-
-    docs, weights, bias = _logreg_final(spark, sf_dir)
-    lab = docs.select(
-        F.col("doc_id").alias("id"),
-        (F.col("source") == "src0").cast("int").alias("y"),
-    )
-    feats = (
-        docs.select(
-            F.col("doc_id").alias("id"),
-            F.explode(words(F.col("text"))).alias("term"),
-        )
-        .filter(F.col("term") != "")
-        .select("id", (md5_48(F.col("term")) % F.lit(_LOGREG_DIM)).alias("f"))
-        .groupBy("id", "f")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-    return feat_ops.logreg_margins(lab, feats, weights, bias).select(
-        F.col("id").alias("doc_id"),
-        "y",
-        F.col("m").alias("margin_u"),
-        (F.col("m") > 0).alias("pred"),
-    )
-
-
-def q_logreg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Confusion counts + accuracy (ppm) of the trained quality
-    classifier on its corpus — exact integers only."""
-    scores = q_logreg_scores(spark, sf_dir)
-    return scores.agg(
-        F.sum(((F.col("y") == 1) & F.col("pred")).cast("long")).alias("tp"),
-        F.sum(((F.col("y") == 0) & F.col("pred")).cast("long")).alias("fp"),
-        F.sum(((F.col("y") == 0) & ~F.col("pred")).cast("long")).alias("tn"),
-        F.sum(((F.col("y") == 1) & ~F.col("pred")).cast("long")).alias("fn"),
-        F.expr(
-            "(1000000 * sum(CASE WHEN (y = 1) = pred THEN 1 ELSE 0 END))"
-            " div count(*)"
-        ).cast("long").alias("accuracy_ppm"),
-    )
-
-
-def q_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document QUALITY DASHBOARD — the round-10 twin of
-    curation_report, joining the independent quality/curation signals
-    one row per doc: the Gopher pass flag, the CCNet perplexity bucket
-    ('unscored' for the training half), the trained classifier margin
-    and prediction, and the leakage-safe split assignment.  Every
-    signal is an already-oracle-verified operator; this verifies the
-    JOINED view end-to-end (the oracle nests each signal's full SQL as
-    a derived table and joins the same way)."""
-    # The four signals are independent lineages, but two of them run
-    # driver-side training loops DURING PLAN CONSTRUCTION (logreg
-    # gradient jobs, CC pointer-jumping), so built sequentially the
-    # wall is their SUM with most cores idle
-    # (measured: ~14 s construction + ~2 s action at sf0.1).
-    # Building them from a small thread pool overlaps those jobs
-    # (optimization guide §2.6 — actions are only sequential because
-    # the driver calls them sequentially); each component's result is
-    # computed exactly as before, so the joined output is unchanged.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_gq = pool.submit(q_gopher_quality, spark, sf_dir)
-        f_ppl = pool.submit(q_perplexity_buckets, spark, sf_dir)
-        f_lr = pool.submit(q_logreg_scores, spark, sf_dir)
-        f_sp = pool.submit(q_leakage_safe_split, spark, sf_dir)
-        gq = f_gq.result().select(
-            F.col("id").alias("doc_id"), "stop_hits", "pass_gopher"
-        )
-        ppl = f_ppl.result().select(
-            F.col("id").alias("doc_id"), F.col("bucket").alias("ppl_bucket")
-        )
-        lr = f_lr.result().select("doc_id", "margin_u", "pred")
-        sp = f_sp.result().select("doc_id", "split")
-    return (
-        gq.join(ppl, "doc_id", "left")
-        .join(lr, "doc_id")
-        .join(sp, "doc_id")
-        .select(
-            "doc_id",
-            "stop_hits",
-            "pass_gopher",
-            F.coalesce("ppl_bucket", F.lit("unscored")).alias("ppl_bucket"),
-            "margin_u",
-            "pred",
-            "split",
-        )
-    )
-
-
 def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe train/val/test split: n-gram Jaccard near-dup
     pairs → connected components → the split decision hashes the
@@ -3798,30 +3197,6 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.cluster_safe_split(
         docs, pairs, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}
     )
-
-
-def q_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster representative selection — the decision step after
-    transitive closure: near-dup pairs (word-5-gram Jaccard >= 0.5) →
-    connected components → keep the highest-quality member per cluster
-    (tie toward the smaller doc_id), flag the rest droppable
-    (graph.cluster_best_members).  keep_canonical picks min-id blindly;
-    production curation keeps the BEST copy.  Oracle: the pair SQL +
-    WITH RECURSIVE closure + a per-component quality argmax window."""
-    from tiki_e_commerce_analytics_etl_spark.operators import graph
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    docs = read_table(spark, sf_dir, "documents")
-    pairs = dedup_ops.ngram_jaccard_pairs(docs, "text", "doc_id", n=5, threshold=0.5)
-    scores = docs.select(
-        "doc_id", "text", text_ops.words(F.col("text")).alias("__w")
-    ).select(
-        "doc_id",
-        text_ops.quality_score_from_words(F.col("text"), F.col("__w")).alias(
-            "quality"
-        ),
-    )
-    return graph.cluster_best_members(scores, pairs, "doc_id", "quality")
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4224,13 +3599,11 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "gopher_quality": q_gopher_quality,
         "dsir_weights": q_dsir_weights,
         "strip_dup_spans": q_strip_dup_spans,
-        "curation_report": q_curation_report,
         "bloom_screen": q_bloom_screen,
         "cms_counts": q_cms_counts,
         "pagerank_parts": q_pagerank_parts,
         "hashed_tfidf": q_hashed_tfidf,
         "contiguous_ids": q_contiguous_ids,
-        "classifier_eval": q_classifier_eval,
         "quantile_sketch": q_quantile_sketch,
         "skew_join_hybrid": q_skew_join_hybrid,
         "simhash_hamming": q_simhash_hamming,
@@ -4248,16 +3621,8 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "char_entropy": q_char_entropy,
         "compression_screen": q_compression_screen,
         "embedding_moments": q_embedding_moments,
-        "embedding_pca": q_embedding_pca,
         "psi_drift": q_psi_drift,
         "benford": q_benford,
-        "bpe_merges": q_bpe_merges,
-        "bpe_corpus_merges": q_bpe_corpus_merges,
-        "bpe_tokenize": q_bpe_tokenize,
-        "wordpiece_merges": q_wordpiece_merges,
-        "wordpiece_tokenize": q_wordpiece_tokenize,
-        "unigram_vocab": q_unigram_vocab,
-        "unigram_tokenize": q_unigram_tokenize,
         "text_quality": q_text_quality,
         "doc_fingerprint": q_doc_fingerprint,
         "trends_csv_scan": q_trends_csv_scan,
@@ -4265,7 +3630,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "orc_roundtrip": q_orc_roundtrip,
         "catalog_stats": q_catalog_stats,
         "neardup_clusters": q_neardup_clusters,
-        "cluster_keep_best": q_cluster_keep_best,
         "leakage_safe_split": q_leakage_safe_split,
         "stratified_quota": q_stratified_quota,
         "collapse_stutter": q_collapse_stutter,
@@ -4274,14 +3638,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "blocklist_screen_join": q_blocklist_screen_join,
         "blocklist_phrase_screen": q_blocklist_phrase_screen,
         "blocklist_phrase_screen_join": q_blocklist_phrase_screen_join,
-        "byte_bpe_merges": q_byte_bpe_merges,
-        "byte_bpe_corpus_merges": q_byte_bpe_corpus_merges,
-        "byte_bpe_tokenize": q_byte_bpe_tokenize,
-        "training_export_plan": q_training_export_plan,
-        "logreg_weights": q_logreg_weights,
-        "logreg_scores": q_logreg_scores,
-        "logreg_eval": q_logreg_eval,
-        "quality_report": q_quality_report,
         "vocab_top_ngrams": q_vocab_top_ngrams,
         "heavy_hitters": q_heavy_hitters,
         "skew_profile": q_skew_profile,
@@ -4339,7 +3695,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hash_split": q_hash_split,
         "price_percentiles": q_price_percentiles,
         "sketch_summary": q_sketch_summary,
-        "curation_pipeline": q_curation_pipeline,
         "fx_asof": q_fx_asof,
         "nearest_event": q_nearest_event,
         "triangle_count": q_triangle_count,
@@ -4362,8 +3717,6 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rfm_segments": q_rfm_segments,
         "basket_pairs": q_basket_pairs,
         "rarity_score": q_rarity_score,
-        "subword_vocab": q_subword_vocab,
-        "subword_tokenize": q_subword_tokenize,
         "rolling_actives_sketch": q_rolling_actives_sketch,
         "ab_test": q_ab_test,
         "scd2_lookup": q_scd2_lookup,
@@ -4505,84 +3858,6 @@ _NEARDUP_CLUSTERS_ORACLE = f"""
     SELECT node, LEAST(node, MIN(peer)) AS component FROM reach GROUP BY node
 """
 
-def _logreg_ctes(
-    dim: int = _LOGREG_DIM,
-    iters: int = _LOGREG_ITERS,
-    lr_den: int = _LOGREG_LR_DEN,
-) -> str:
-    """DuckDB replay of the unrolled integer-GD logistic regression —
-    the term formula is imported from the operator so the two engines
-    share one sigmoid text."""
-    from tiki_e_commerce_analytics_etl_spark.operators.features import (
-        LOGREG_TERM_SQL,
-    )
-
-    bias_term = LOGREG_TERM_SQL.replace("CAST(tf AS DOUBLE)", "1.0E0")
-    parts = [
-        f"""tok AS (SELECT doc_id AS id,
-                  CAST('0x' || substr(md5(t.w), 1, 12) AS BIGINT) % {dim} AS f
-           FROM (SELECT doc_id, unnest({_NORM_WORDS_SQL}) AS w
-                 FROM documents) t(doc_id, w)
-           WHERE t.w <> ''),
-        feats AS (SELECT id, f, CAST(COUNT(*) AS BIGINT) AS tf
-                  FROM tok GROUP BY id, f),
-        lab AS (SELECT doc_id AS id,
-                       CASE WHEN source = 'src0' THEN 1 ELSE 0 END AS y
-                FROM documents),
-        nn AS (SELECT COUNT(*) AS n FROM lab),
-        w0 AS (SELECT DISTINCT f, CAST(0 AS BIGINT) AS w FROM feats),
-        b0 AS (SELECT CAST(0 AS BIGINT) AS b)"""
-    ]
-    for i in range(1, iters + 2):
-        parts.append(
-            f"""m{i} AS (SELECT l.id, l.y,
-                       CAST(COALESCE(s.s, 0) + b.b AS BIGINT) AS m
-                FROM lab l
-                LEFT JOIN (SELECT fe.id, SUM(w.w * fe.tf) AS s
-                           FROM feats fe JOIN w{i - 1} w USING (f)
-                           GROUP BY fe.id) s ON l.id = s.id
-                CROSS JOIN b{i - 1} b)"""
-        )
-        if i <= iters:
-            parts.append(
-                f"""g{i} AS (SELECT fe.f, SUM({LOGREG_TERM_SQL}) AS g
-                 FROM m{i} mm JOIN feats fe ON mm.id = fe.id
-                 GROUP BY fe.f),
-        bg{i} AS (SELECT SUM({bias_term}) AS g FROM m{i} mm),
-        w{i} AS (SELECT w.f,
-                        CAST(w.w - (COALESCE(g.g, 0) // ({lr_den} * nn.n))
-                             AS BIGINT) AS w
-                 FROM w{i - 1} w LEFT JOIN g{i} g USING (f) CROSS JOIN nn),
-        b{i} AS (SELECT CAST(b.b - (bg.g // ({lr_den} * nn.n)) AS BIGINT) AS b
-                 FROM b{i - 1} b CROSS JOIN bg{i} bg CROSS JOIN nn)"""
-            )
-    return ",\n        ".join(parts)
-
-
-_LOGREG_WEIGHTS_ORACLE = f"""
-    WITH {_logreg_ctes()}
-    SELECT CAST(f AS BIGINT) AS feature, w FROM w{_LOGREG_ITERS}
-    UNION ALL
-    SELECT -1, b FROM b{_LOGREG_ITERS}
-"""
-
-_LOGREG_SCORES_ORACLE = f"""
-    WITH {_logreg_ctes()}
-    SELECT id AS doc_id, y, m AS margin_u, m > 0 AS pred
-    FROM m{_LOGREG_ITERS + 1}
-"""
-
-_LOGREG_EVAL_ORACLE = f"""
-    WITH {_logreg_ctes()}
-    SELECT CAST(SUM(CASE WHEN y = 1 AND m > 0 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-           CAST(SUM(CASE WHEN y = 0 AND m > 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-           CAST(SUM(CASE WHEN y = 0 AND m <= 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn,
-           CAST(SUM(CASE WHEN y = 1 AND m <= 0 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-           CAST((1000000 * SUM(CASE WHEN (y = 1) = (m > 0) THEN 1 ELSE 0 END))
-                // COUNT(*) AS BIGINT) AS accuracy_ppm
-    FROM m{_LOGREG_ITERS + 1}
-"""
-
 
 _LEAKAGE_SAFE_SPLIT_ORACLE = f"""
     WITH RECURSIVE {_JACCARD_PAIRS_CTES},
@@ -4634,69 +3909,6 @@ _COLLAPSE_STUTTER_ORACLE = f"""
     FROM k
 """
 
-_TRAINING_EXPORT_PLAN_ORACLE = f"""
-    WITH RECURSIVE {_JACCARD_PAIRS_CTES},
-    pairs AS (SELECT id_a, id_b FROM p WHERE shared / (na + nb - shared) >= 0.5),
-    bidir AS (SELECT id_a AS a, id_b AS b FROM pairs
-              UNION SELECT id_b AS a, id_a AS b FROM pairs),
-    reach AS (
-        SELECT a AS node, b AS peer FROM bidir
-        UNION
-        SELECT r.node, e.b FROM reach r JOIN bidir e ON r.peer = e.a
-    ),
-    comp AS (SELECT node, LEAST(node, MIN(peer)) AS component
-             FROM reach GROUP BY node),
-    qual AS (SELECT doc_id, {_QUALITY_EXPR_SQL} AS quality
-             FROM (SELECT doc_id, text, {_NORM_WORDS_SQL} AS ws FROM documents)),
-    members AS (
-        SELECT c.node AS doc_id, c.component, q.quality
-        FROM comp c JOIN qual q ON q.doc_id = c.node
-    ),
-    keep AS (
-        SELECT component, doc_id AS keep_id FROM (
-            SELECT component, doc_id,
-                   ROW_NUMBER() OVER (PARTITION BY component
-                                      ORDER BY quality DESC, doc_id ASC) AS rn
-            FROM members
-        ) WHERE rn = 1
-    ),
-    losers AS (
-        SELECT m.doc_id FROM members m JOIN keep k USING (component)
-        WHERE m.doc_id <> k.keep_id
-    ),
-    kept AS (
-        SELECT q.doc_id, COALESCE(c.component, q.doc_id) AS component,
-               q.quality
-        FROM qual q LEFT JOIN comp c ON c.node = q.doc_id
-        WHERE q.doc_id NOT IN (SELECT doc_id FROM losers)
-          AND q.quality >= 0.3
-    ),
-    routed AS (
-        SELECT doc_id, component, quality,
-               CASE WHEN b < CAST(FLOOR(0.8 * 65536) AS INTEGER) THEN 'train'
-                    WHEN b < CAST(FLOOR(0.9 * 65536) AS INTEGER) THEN 'val'
-                    ELSE 'test' END AS split
-        FROM (
-            SELECT *, CAST(('0x' || substr(md5(CAST(component AS VARCHAR)), 1, 4))
-                           AS INTEGER) AS b
-            FROM kept
-        )
-    ),
-    sharded AS (
-        SELECT doc_id, component, quality, split,
-               CASE WHEN split = 'train'
-                    THEN CAST(CAST(('0x' || substr(md5('7|' || CAST(doc_id AS VARCHAR)), 1, 4))
-                                   AS BIGINT) % 8 AS INTEGER)
-                    ELSE -1 END AS shard,
-               md5('7|' || CAST(doc_id AS VARCHAR)) AS h
-        FROM routed
-    )
-    SELECT doc_id, component, quality, split, shard,
-           CAST(ROW_NUMBER() OVER (
-               PARTITION BY split, shard ORDER BY h, doc_id) AS INTEGER) AS pos
-    FROM sharded
-"""
-
 
 _BLOCKLIST_SCREEN_ORACLE = f"""
     WITH w AS (SELECT doc_id, {_NORM_WORDS_SQL} AS ws FROM documents),
@@ -4711,118 +3923,6 @@ _BLOCKLIST_SCREEN_ORACLE = f"""
     FROM h
 """
 
-def _byte_bpe_corpus_oracle(n_merges: int, sub: str) -> str:
-    """Full SQL twin of ``text.byte_bpe_train`` over a pinned
-    subcorpus — generated as ``n_merges`` chained CTE stages so the
-    iterative trainer has a strict DuckDB oracle at corpus scale
-    (round-11 verdict #7).  Each stage: adjacent-pair counts weighted
-    by piece frequency, (cnt DESC, l ASC, r ASC) argmax, then the
-    leftmost-greedy resume-after rewrite — expressed as ONE
-    ``replace()`` per piece over a symbol string where every symbol
-    is individually wrapped in chr(31) separators ("␟l␟␟r␟" →
-    "␟lr␟"): SQL replace is non-overlapping left-to-right, which is
-    exactly the ``_merge_scan`` semantics (``a a a`` + (a,a) →
-    ``aa a``), and the per-symbol wrapping keeps a pattern from
-    matching inside a longer symbol or across a consumed separator.
-    Pre-tokenization is the simple-split specialization of the GPT-2
-    regex (first word bare, later words 'Ġ'-prefixed — chr(288) =
-    U+0120), valid for this corpus's verified [a-z ] inventory; see
-    q_byte_bpe_corpus_merges."""
-    pt_ctes = f"""w AS (SELECT string_split(text, ' ') AS ws FROM documents WHERE {sub}),
-    pieces AS (SELECT CASE WHEN i = 1 THEN ws[i] ELSE chr(288) || ws[i] END AS pc
-               FROM w, unnest(range(1, len(ws) + 1)) AS t(i)),
-    pt AS (SELECT pc, CAST(COUNT(*) AS BIGINT) AS wcnt FROM pieces GROUP BY pc)"""
-    return _bpe_chain_oracle(n_merges, pt_ctes)
-
-
-def _char_bpe_corpus_oracle(n_merges: int) -> str:
-    """Full SQL twin of the CHAR-level ``text.bpe_train`` over the
-    whole documents corpus — upgrades bpe_corpus_merges from the
-    rows-only check it carried since round 8 to a strict value match.
-    Pieces are the ``words()`` tokens (the shared ``_NORM_WORDS_SQL``
-    normalization the kn-LM twins use), symbols their characters; the
-    merge chain is the same generated stage machinery as the
-    byte-level twin (``_bpe_chain_oracle``) — the trainer's
-    resume-after rewrite IS expressible as non-overlapping replace()
-    once every symbol is individually separator-wrapped."""
-    pt_ctes = f"""w AS (SELECT unnest({_NORM_WORDS_SQL}) AS pc FROM documents),
-    pt AS (SELECT pc, CAST(COUNT(*) AS BIGINT) AS wcnt FROM w
-           WHERE pc IS NOT NULL AND pc <> '' GROUP BY pc)"""
-    return _bpe_chain_oracle(n_merges, pt_ctes)
-
-
-def _bpe_chain_oracle(n_merges: int, pt_ctes: str) -> str:
-    """The shared merge-chain SQL generator: given CTEs defining
-    ``pt(pc, wcnt)`` (unique pieces + frequencies), emit n_merges
-    chained stages of pair-count → (cnt DESC, l, r) argmax →
-    leftmost-greedy resume-after rewrite (separator-wrapped
-    replace()), returning the merge table."""
-    sep = "chr(31)"
-    ctes = [
-        f"""{pt_ctes},
-    s0 AS (SELECT {sep} || array_to_string([pc[i:i] FOR i IN range(1, len(pc) + 1)], {sep} || {sep}) || {sep} AS s, wcnt FROM pt)"""
-    ]
-    for k in range(1, n_merges + 1):
-        p = k - 1
-        ctes.append(
-            f"""p{k} AS (
-        SELECT syms[i] AS l, syms[i+1] AS r, SUM(wcnt) AS cnt FROM (
-            SELECT string_split(trim(s, {sep}), {sep} || {sep}) AS syms, wcnt FROM s{p}
-        ), unnest(range(1, len(syms))) AS t(i)
-        GROUP BY 1, 2
-    ),
-    m{k} AS (SELECT l, r, l || r AS m, cnt FROM p{k} ORDER BY cnt DESC, l ASC, r ASC LIMIT 1),
-    s{k} AS (SELECT replace(s, {sep}||l||{sep}||{sep}||r||{sep}, {sep}||m||{sep}) AS s, wcnt
-             FROM s{p} CROSS JOIN m{k})"""
-        )
-    union = "\nUNION ALL\n".join(
-        f"SELECT CAST({k} AS INTEGER) AS merge_rank, l AS left, r AS right,"
-        f" m AS merged, CAST(cnt AS BIGINT) AS pair_count FROM m{k}"
-        for k in range(1, n_merges + 1)
-    )
-    return "WITH " + ",\n    ".join(ctes) + "\n" + union + "\nORDER BY merge_rank"
-
-
-_BYTE_BPE_CORPUS_MERGES_ORACLE = _byte_bpe_corpus_oracle(8, "doc_id % 5 = 2")
-_BPE_CORPUS_MERGES_ORACLE = _char_bpe_corpus_oracle(10)
-
-
-# Independent pure-Python reference derivation (scanner pre-tokenizer
-# + re-derived byte table + Counter argmax); Ġ is U+0120 (mapped
-# space), ranks 8-9 are the byte-level space-prefix merges.
-_BYTE_BPE_MERGES_ORACLE = """
-    SELECT CAST(merge_rank AS INTEGER) AS merge_rank, left_sym AS left,
-           right_sym AS right, merged,
-           CAST(pair_count AS BIGINT) AS pair_count
-    FROM (VALUES
-        (1, 'e', 's', 'es', 6),
-        (2, 'es', 't', 'est', 6),
-        (3, 'l', 'o', 'lo', 5),
-        (4, 'lo', 'w', 'low', 5),
-        (5, 'e', 'w', 'ew', 4),
-        (6, 'ew', 'est', 'ewest', 4),
-        (7, 'n', 'ewest', 'newest', 4),
-        (8, 'Ġ', 'low', 'Ġlow', 4),
-        (9, 'Ġ', 'newest', 'Ġnewest', 4),
-        (10, 'd', 'est', 'dest', 2)
-    ) AS t(merge_rank, left_sym, right_sym, merged, pair_count)
-"""
-
-# Reference-derived under the pinned 10-merge byte-level table:
-#   'lowest widest low' → [low|est] [Ġ|w|i|dest] [Ġlow]   = 3/17/7
-#   "it's newest café"  → [i|t] ['|s] [Ġnewest] [Ġ|Ã|©|...] = 4/17/11
-#   '42 low lows'       → [4|2] [Ġlow] [Ġlow|s]            = 3/11/5
-_BYTE_BPE_TOKENIZE_ORACLE = """
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(n_pieces AS BIGINT) AS n_pieces,
-           CAST(n_bytes AS BIGINT) AS n_bytes,
-           CAST(n_tokens AS BIGINT) AS n_tokens
-    FROM (VALUES
-        (1, 3, 17, 7),
-        (2, 4, 17, 11),
-        (3, 3, 11, 5)
-    ) AS t(doc_id, n_pieces, n_bytes, n_tokens)
-"""
 
 _BLOCKLIST_JOIN_TERMS_SQL = ", ".join(
     f"'{t}'" for t in _BLOCKLIST_JOIN_TERMS
@@ -4916,36 +4016,6 @@ _STRATIFIED_QUOTA_ORACLE = """
                                 WHEN lang = 'es' THEN 10 ELSE 0 END
 """
 
-_CLUSTER_KEEP_BEST_ORACLE = f"""
-    WITH RECURSIVE {_JACCARD_PAIRS_CTES},
-    pairs AS (SELECT id_a, id_b FROM p WHERE shared / (na + nb - shared) >= 0.5),
-    bidir AS (SELECT id_a AS a, id_b AS b FROM pairs
-              UNION SELECT id_b AS a, id_a AS b FROM pairs),
-    reach AS (
-        SELECT a AS node, b AS peer FROM bidir
-        UNION
-        SELECT r.node, e.b FROM reach r JOIN bidir e ON r.peer = e.a
-    ),
-    comp AS (SELECT node, LEAST(node, MIN(peer)) AS component
-             FROM reach GROUP BY node),
-    qual AS (SELECT doc_id, {_QUALITY_EXPR_SQL} AS quality
-             FROM (SELECT doc_id, text, {_NORM_WORDS_SQL} AS ws FROM documents)),
-    members AS (
-        SELECT c.node AS doc_id, c.component, q.quality
-        FROM comp c JOIN qual q ON q.doc_id = c.node
-    ),
-    keep AS (
-        SELECT component, doc_id AS keep_id FROM (
-            SELECT component, doc_id,
-                   ROW_NUMBER() OVER (PARTITION BY component
-                                      ORDER BY quality DESC, doc_id ASC) AS rn
-            FROM members
-        ) WHERE rn = 1
-    )
-    SELECT m.doc_id, m.component, m.quality,
-           (m.doc_id = k.keep_id) AS is_keeper
-    FROM members m JOIN keep k USING (component)
-"""
 
 _VOCAB_TOP_NGRAMS_ORACLE = f"""
     WITH w AS (SELECT doc_id, {_NORM_WORDS_SQL} AS ws FROM documents),
@@ -5032,12 +4102,6 @@ def _quantile_sketch_oracle(lo=0.0, hi=105000.0, n_bins=1024, q_pcts=(25, 50, 75
 _SKEW_JOIN_HYBRID_ORACLE = """
     SELECT l.l_partkey AS partkey, l.l_orderkey, l.l_quantity, p.p_name
     FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-"""
-
-
-_CLASSIFIER_EVAL_ORACLE = """
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_test, TRUE AS accuracy_ok
-    FROM embeddings WHERE vec_id % 5 = 0
 """
 
 
@@ -5345,79 +4409,6 @@ _TRIANGLE_COUNT_ORACLE = """
 """
 
 
-_BPE_MERGES_ORACLE = """
-    SELECT CAST(merge_rank AS INTEGER) AS merge_rank, left_sym AS left,
-           right_sym AS right, merged, CAST(pair_count AS BIGINT) AS pair_count
-    FROM (VALUES
-        (1, 'e', 's', 'es', 9),
-        (2, 'es', 't', 'est', 9),
-        (3, 'l', 'o', 'lo', 7),
-        (4, 'lo', 'w', 'low', 7),
-        (5, 'e', 'w', 'ew', 6),
-        (6, 'ew', 'est', 'ewest', 6),
-        (7, 'n', 'ewest', 'newest', 6),
-        (8, 'd', 'est', 'dest', 3)
-    ) AS t(merge_rank, left_sym, right_sym, merged, pair_count)
-"""
-
-
-# Hand-derived under the pinned 8-merge table (see _BPE_MERGES_ORACLE):
-#   lowest → [low, est]   widest → [w, i, dest]   low → [low]
-#   newest → [newest]     lower  → [low, e, r]
-#   wide   → [w, i, d, e] lows   → [low, s]
-_BPE_TOKENIZE_ORACLE = """
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(n_words AS BIGINT) AS n_words,
-           CAST(n_chars AS BIGINT) AS n_chars,
-           CAST(n_tokens AS BIGINT) AS n_tokens
-    FROM (VALUES
-        (1, 3, 15, 6),
-        (2, 3, 17, 5),
-        (3, 3, 11, 7)
-    ) AS t(doc_id, n_words, n_chars, n_tokens)
-"""
-
-
-# Computed by the independent pure-Python WordPiece reference
-# (tests/test_round10.py `ref_wordpiece`) on the Sennrich canonical
-# corpus; exact-rational scores, (left ASC, right ASC) tiebreak.
-_WORDPIECE_MERGES_ORACLE = """
-    SELECT CAST(merge_rank AS INTEGER) AS merge_rank, left_sym AS left,
-           right_sym AS right, merged,
-           CAST(pair_count AS BIGINT) AS pair_count,
-           CAST(left_count AS BIGINT) AS left_count,
-           CAST(right_count AS BIGINT) AS right_count
-    FROM (VALUES
-        (1, '##i', '##d', '##id', 3, 3, 3),
-        (2, 'w', '##id', 'wid', 3, 3, 3),
-        (3, 'l', '##o', 'lo', 7, 7, 7),
-        (4, '##s', '##t', '##st', 9, 9, 9),
-        (5, 'lo', '##w', 'low', 7, 7, 13),
-        (6, '##e', '##r', '##er', 2, 17, 2),
-        (7, 'low', '##er', 'lower', 2, 7, 2),
-        (8, '##e', '##st', '##est', 9, 15, 9)
-    ) AS t(merge_rank, left_sym, right_sym, merged,
-           pair_count, left_count, right_count)
-"""
-
-
-# Hand-derived under the pinned 8-merge WordPiece table:
-#   lowest → [low, ##est]         widest → [wid, ##est]   low → [low]
-#   newest → [n, ##e, ##w, ##est] lower  → [lower]
-#   wide   → [wid, ##e]           lows   → [low, ##s]
-_WORDPIECE_TOKENIZE_ORACLE = """
-    SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(n_words AS BIGINT) AS n_words,
-           CAST(n_chars AS BIGINT) AS n_chars,
-           CAST(n_tokens AS BIGINT) AS n_tokens
-    FROM (VALUES
-        (1, 3, 15, 5),
-        (2, 3, 17, 9),
-        (3, 3, 11, 5)
-    ) AS t(doc_id, n_words, n_chars, n_tokens)
-"""
-
-
 _NEAREST_EVENT_ORACLE = """
     WITH e AS (
         SELECT event_id, user_id, ts FROM events
@@ -5491,12 +4482,6 @@ _EMBEDDING_MOMENTS_ORACLE = (
     )
     + " FROM q"
 )
-
-
-_EMBEDDING_PCA_ORACLE = """
-    SELECT CAST(64 AS INTEGER) AS dim,
-           TRUE AS monotone_ok, TRUE AS total_ok
-"""
 
 
 # Shared dHash recomputation (text bytes -> 1xN gray -> block-mean
@@ -5991,63 +4976,6 @@ _TOKEN_EXPR_SQL = (
 )
 
 
-def _curation_oracle() -> str:
-    from tiki_e_commerce_analytics_etl_spark.operators.text import LANG_STOPWORDS
-
-    hit_cols = []
-    for lg, sw in LANG_STOPWORDS.items():
-        lst = ", ".join("'" + w.replace("'", "''") + "'" for w in sw)
-        hit_cols.append(
-            f"len(list_filter(ws, x -> list_contains([{lst}], x))) AS {lg}_hits"
-        )
-    langs = list(LANG_STOPWORDS)
-    case_arms = " ".join(f"WHEN {lg}_hits = best AND best > 0 THEN '{lg}'" for lg in langs)
-    best = "GREATEST(" + ", ".join(f"{lg}_hits" for lg in langs) + ")"
-    return f"""
-        WITH w AS (SELECT doc_id, text, {_NORM_WORDS_SQL} AS ws FROM documents),
-        h AS (SELECT doc_id, text, ws, {', '.join(hit_cols)} FROM w),
-        feat AS (
-            SELECT doc_id, text, ws,
-                   CASE {case_arms} ELSE 'und' END AS lang,
-                   {_QUALITY_EXPR_SQL} AS quality,
-                   {_TOKEN_EXPR_SQL} AS token_est
-            FROM (SELECT *, {best} AS best FROM h)
-        ),
-        kept AS (SELECT * FROM feat WHERE lang = 'en' AND quality >= 0.3),
-        dedup AS (
-            SELECT * FROM (
-                SELECT *, MD5(TRIM(REGEXP_REPLACE(LOWER(text), '\\s+', ' ', 'g'))) AS ch
-                FROM kept
-            ) QUALIFY ROW_NUMBER() OVER (PARTITION BY ch ORDER BY doc_id ASC) = 1
-        ),
-        s AS (
-            SELECT doc_id,
-                   CASE WHEN len(ws) > 5 THEN
-                       list_distinct(list_transform(range(1, len(ws) - 3),
-                                                    i -> array_to_string(ws[i:i+4], ' ')))
-                   ELSE [array_to_string(ws, ' ')] END AS grams
-            FROM dedup
-        ),
-        g AS (SELECT doc_id AS id, len(grams) AS n_grams, unnest(grams) AS gram FROM s),
-        p AS (
-            SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS shared,
-                   ANY_VALUE(a.n_grams) AS na, ANY_VALUE(b.n_grams) AS nb
-            FROM g a JOIN g b ON a.gram = b.gram AND a.id < b.id
-            GROUP BY a.id, b.id
-        ),
-        nd AS (SELECT DISTINCT id_b FROM p WHERE shared / (na + nb - shared) >= 0.5),
-        final AS (SELECT * FROM dedup WHERE doc_id NOT IN (SELECT id_b FROM nd))
-        SELECT doc_id, lang, quality, token_est,
-               CASE WHEN b < CAST(FLOOR(0.8 * 65536) AS INTEGER) THEN 'train'
-                    WHEN b < CAST(FLOOR(0.9 * 65536) AS INTEGER) THEN 'val'
-                    ELSE 'test' END AS split
-        FROM (
-            SELECT *, CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS INTEGER) AS b
-            FROM final
-        )
-    """
-
-
 # Shared by avi_frame_sample and mp4_frame_sample: both muxers slice
 # text bytes identically (4 frames of step = max(L//4, 1), empty
 # slices dropped, tail unframed) and both samplers keep every 2nd
@@ -6184,23 +5112,6 @@ def _kn_oracles() -> dict[str, str]:
             FROM lpq CROSS JOIN bounds
         """,
     }
-
-
-def _quality_report_oracle() -> str:
-    """Composes the four already-verified signal oracles as derived
-    tables (each keeps its own WITH scope) and joins them exactly like
-    q_quality_report."""
-    ppl = _kn_oracles()["perplexity_buckets"]
-    return f"""
-        SELECT g.id AS doc_id, g.stop_hits, g.pass_gopher,
-               COALESCE(p.bucket, 'unscored') AS ppl_bucket,
-               l.margin_u, l.pred,
-               s.split
-        FROM ({_gopher_quality_oracle()}) g
-        LEFT JOIN ({ppl}) p ON g.id = p.id
-        JOIN ({_LOGREG_SCORES_ORACLE}) l ON g.id = l.doc_id
-        JOIN ({_LEAKAGE_SAFE_SPLIT_ORACLE}) s ON g.id = s.doc_id
-    """
 
 
 def _gopher_repetition_oracle(
@@ -7033,7 +5944,6 @@ def oracle_sql() -> dict[str, str]:
         """,
         "neardup_clusters": _NEARDUP_CLUSTERS_ORACLE,
         "leakage_safe_split": _LEAKAGE_SAFE_SPLIT_ORACLE,
-        "cluster_keep_best": _CLUSTER_KEEP_BEST_ORACLE,
         "stratified_quota": _STRATIFIED_QUOTA_ORACLE,
         "collapse_stutter": _COLLAPSE_STUTTER_ORACLE,
         "vocab_growth": _VOCAB_GROWTH_ORACLE,
@@ -7045,15 +5955,6 @@ def oracle_sql() -> dict[str, str]:
         "blocklist_phrase_screen_join": _blocklist_phrase_oracle(
             _BLOCKLIST_PHRASE_JOIN_TERMS, 1
         ),
-        "byte_bpe_merges": _BYTE_BPE_MERGES_ORACLE,
-        "byte_bpe_corpus_merges": _BYTE_BPE_CORPUS_MERGES_ORACLE,
-        "bpe_corpus_merges": _BPE_CORPUS_MERGES_ORACLE,
-        "byte_bpe_tokenize": _BYTE_BPE_TOKENIZE_ORACLE,
-        "training_export_plan": _TRAINING_EXPORT_PLAN_ORACLE,
-        "logreg_weights": _LOGREG_WEIGHTS_ORACLE,
-        "logreg_scores": _LOGREG_SCORES_ORACLE,
-        "logreg_eval": _LOGREG_EVAL_ORACLE,
-        "quality_report": _quality_report_oracle(),
         "vocab_top_ngrams": _VOCAB_TOP_NGRAMS_ORACLE,
         # Same exact-SQL twin as the vocab builder, k=20: the MG
         # candidate pass is invisible when coverage holds (see
@@ -7062,43 +5963,6 @@ def oracle_sql() -> dict[str, str]:
         "skew_profile": _SKEW_PROFILE_ORACLE,
         "salted_join": _SALTED_JOIN_ORACLE,
         "nearest_event": _NEAREST_EVENT_ORACLE,
-        "bpe_merges": _BPE_MERGES_ORACLE,
-        # independent pure-Python reference implementation's output on
-        # the canonical corpus (re-derived property-style in
-        # tests/test_round9.py): vocab_size=10 = 7 chars + 3 multis
-        "unigram_vocab": """
-            SELECT CAST(rank AS INTEGER) AS rank, piece,
-                   CAST(piece_len AS INTEGER) AS piece_len,
-                   CAST(count AS BIGINT) AS count
-            FROM (VALUES
-                (1, 'hug', 3, 15),
-                (2, 'pun', 3, 12),
-                (3, 'pug', 3, 5),
-                (4, 's', 1, 5),
-                (5, 'b', 1, 4),
-                (6, 'n', 1, 4),
-                (7, 'u', 1, 4),
-                (8, 'g', 1, 0),
-                (9, 'h', 1, 0),
-                (10, 'p', 1, 0)
-            ) AS t(rank, piece, piece_len, count)
-        """,
-        # hand-derived under the pinned canonical vocabulary (see
-        # q_unigram_tokenize docstring); independent exhaustive-DP
-        # reference in tests/test_round9.py
-        "unigram_tokenize": """
-            SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
-                   CAST(n_chars AS BIGINT) AS n_chars,
-                   CAST(n_tokens AS BIGINT) AS n_tokens
-            FROM (VALUES
-                (1, 3, 10, 4),
-                (2, 3, 9, 7),
-                (3, 2, 8, 6)
-            ) AS t(doc_id, n_words, n_chars, n_tokens)
-        """,
-        "bpe_tokenize": _BPE_TOKENIZE_ORACLE,
-        "wordpiece_merges": _WORDPIECE_MERGES_ORACLE,
-        "wordpiece_tokenize": _WORDPIECE_TOKENIZE_ORACLE,
         "triangle_count": _TRIANGLE_COUNT_ORACLE,
         "winsorize": _WINSORIZE_ORACLE,
         "zorder_key": _zorder_oracle(),
@@ -7412,34 +6276,6 @@ def oracle_sql() -> dict[str, str]:
             FROM sh JOIN agg USING (id_a, id_b)
         """,
         "strip_dup_spans": _STRIP_DUP_SPANS_ORACLE,
-        # joined view of three independently-verified signals: the
-        # oracle recomputes each (nested CTE subqueries over the
-        # lifted constants) and joins identically
-        "curation_report": f"""
-            WITH strip AS (SELECT * FROM ({_STRIP_DUP_SPANS_ORACLE})),
-            ex AS (
-                SELECT doc_id,
-                       CAST(COUNT(*) OVER (PARTITION BY md5(trim(
-                           regexp_replace(lower(text), '\\s+', ' ', 'g')
-                       ))) - 1 AS BIGINT) AS exact_partners
-                FROM documents
-            ),
-            imgp AS (SELECT * FROM ({_IMAGE_NEARDUP_ORACLE})),
-            ic AS (
-                SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS image_partners
-                FROM (SELECT id_a AS doc_id FROM imgp
-                      UNION ALL SELECT id_b FROM imgp)
-                GROUP BY doc_id
-            )
-            SELECT strip.doc_id, strip.n_words, strip.kept_words,
-                   CAST(strip.n_words - strip.kept_words AS INTEGER)
-                       AS dup_span_words,
-                   ex.exact_partners,
-                   COALESCE(ic.image_partners, 0) AS image_partners
-            FROM strip
-            JOIN ex USING (doc_id)
-            LEFT JOIN ic USING (doc_id)
-        """,
         "bloom_screen": _bloom_screen_oracle(),
         "cms_counts": _cms_counts_oracle(),
         "cms_join_size": _cms_join_size_oracle(),
@@ -7455,7 +6291,6 @@ def oracle_sql() -> dict[str, str]:
         "pagerank_parts": _pagerank_oracle(),
         "hashed_tfidf": _HASHED_TFIDF_ORACLE,
         "contiguous_ids": _CONTIGUOUS_IDS_ORACLE,
-        "classifier_eval": _CLASSIFIER_EVAL_ORACLE,
         "quantile_sketch": _quantile_sketch_oracle(),
         "skew_join_hybrid": _SKEW_JOIN_HYBRID_ORACLE,
         "simhash_hamming": _SIMHASH_HAMMING_ORACLE,
@@ -7472,7 +6307,6 @@ def oracle_sql() -> dict[str, str]:
             FROM lineitem
             GROUP BY ROLLUP (l_returnflag, l_linestatus)
         """,
-        "curation_pipeline": _curation_oracle(),
         "hierarchy_roots": """
             WITH RECURSIVE nodes AS (
                 SELECT DISTINCT o_orderkey AS k FROM orders WHERE o_orderkey < 10000
@@ -7659,7 +6493,6 @@ def oracle_sql() -> dict[str, str]:
         # compression_screen: deliberately no oracle — DEFLATE output
         # size is not SQL-expressible; driver records rows-only.
         "embedding_moments": _EMBEDDING_MOMENTS_ORACLE,
-        "embedding_pca": _EMBEDDING_PCA_ORACLE,
         "psi_drift": _PSI_DRIFT_ORACLE,
         "benford": _BENFORD_ORACLE,
         "text_quality": _TEXT_QUALITY_ORACLE,
@@ -8269,56 +7102,6 @@ def oracle_sql() -> dict[str, str]:
                     PARTITION BY item ORDER BY score DESC, neighbor ASC) AS rank
                 FROM scored
             ) WHERE rank <= 5
-        """,
-        "subword_vocab": f"""
-            WITH wf AS (
-                SELECT w, COUNT(*) AS wcnt
-                FROM (SELECT unnest({_NORM_WORDS_SQL}) AS w FROM documents)
-                GROUP BY w
-            ),
-            grams AS (
-                SELECT substr(wf.w, s.s, l.l) AS tok, wf.wcnt
-                FROM wf,
-                     (SELECT unnest(range(2, 7)) AS l) l,
-                     LATERAL (SELECT unnest(range(1, length(wf.w) - l.l + 2)) AS s) s
-            )
-            SELECT tok, CAST(SUM(wcnt) AS BIGINT) AS cnt
-            FROM grams GROUP BY tok
-            ORDER BY cnt DESC, tok ASC LIMIT 200
-        """,
-        "subword_tokenize": f"""
-            WITH RECURSIVE
-            wf AS (
-                SELECT id, w, COUNT(*) AS tf
-                FROM (SELECT doc_id AS id, unnest({_NORM_WORDS_SQL}) AS w FROM documents)
-                GROUP BY id, w
-            ),
-            uwf AS (SELECT w, SUM(tf) AS wcnt FROM wf GROUP BY w),
-            grams AS (
-                SELECT substr(uwf.w, s.s, l.l) AS tok, uwf.wcnt
-                FROM uwf,
-                     (SELECT unnest(range(2, 7)) AS l) l,
-                     LATERAL (SELECT unnest(range(1, length(uwf.w) - l.l + 2)) AS s) s
-            ),
-            vocab AS (
-                SELECT tok FROM (
-                    SELECT tok, SUM(wcnt) AS cnt FROM grams GROUP BY tok
-                    ORDER BY cnt DESC, tok ASC LIMIT 200
-                )
-            ),
-            steps(w, pos, n) AS (
-                SELECT w, 1, 0 FROM (SELECT DISTINCT w FROM wf)
-                UNION ALL
-                SELECT w,
-                       pos + COALESCE((SELECT MAX(LENGTH(tok)) FROM vocab
-                                       WHERE tok = substr(steps.w, steps.pos, LENGTH(tok))), 1),
-                       n + 1
-                FROM steps WHERE pos <= LENGTH(w)
-            ),
-            ns AS (SELECT w, n AS n_sub FROM steps WHERE pos > LENGTH(w))
-            SELECT id, CAST(SUM(tf) AS BIGINT) AS n_words,
-                   CAST(SUM(tf * n_sub) AS BIGINT) AS n_subwords
-            FROM wf JOIN ns USING (w) GROUP BY id
         """,
         "curriculum_stages": f"""
             WITH toks AS (

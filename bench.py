@@ -59,7 +59,6 @@ HEADLINE = [
     "text_quality",
     "doc_fingerprint",
     "multimodal_features",
-    "curation_pipeline",
     # custom operators Spark lacks natively
     "fx_asof",
     "twap_daily",
@@ -84,7 +83,6 @@ HEADLINE = [
     "pagerank_parts",
     "hashed_tfidf",
     "contiguous_ids",
-    "classifier_eval",
     "quantile_sketch",
     "skew_join_hybrid",
     "simhash_hamming",
@@ -93,8 +91,6 @@ HEADLINE = [
     "rfm_segments",
     "basket_pairs",
     "rarity_score",
-    "subword_vocab",
-    "subword_tokenize",
     "rolling_actives_sketch",
     "ab_test",
     "scd2_lookup",
@@ -134,18 +130,11 @@ HEADLINE = [
     "resample_interp",
     "nearest_event",
     "orc_roundtrip",
-    "bpe_merges",
-    "bpe_tokenize",
-    "unigram_vocab",
-    "unigram_tokenize",
-    "wordpiece_merges",
-    "wordpiece_tokenize",
     "salted_join",
     "mp4_frag_frame_sample",
     "char_entropy",
     "compression_screen",
     "embedding_moments",
-    "embedding_pca",
     "psi_drift",
     "benford",
     "audio_window_energy",
@@ -156,7 +145,6 @@ HEADLINE = [
     "video_neardup_pairs",
     "audio_neardup_pairs",
     "strip_dup_spans",
-    "curation_report",
     "substring_decontam",
     "kn_bigram_lm",
     "kn_trigram_lm",
@@ -168,25 +156,18 @@ HEADLINE = [
     "dsir_weights",
     "gopher_quality",
     "leakage_safe_split",
-    "logreg_eval",
-    "quality_report",
     "strip_contam_spans",
     "kn_4gram_lm",
     "kn4_doc_logprob",
-    "cluster_keep_best",
     "stratified_quota",
     "collapse_stutter",
     "vocab_growth",
-    "training_export_plan",
     "blocklist_screen",
     # round-11 additions
     "blocklist_screen_join",
-    "byte_bpe_merges",
-    "byte_bpe_tokenize",
     # round-12 additions
     "blocklist_phrase_screen",
     "blocklist_phrase_screen_join",
-    "byte_bpe_corpus_merges",
 ]
 
 
@@ -408,8 +389,8 @@ def main() -> None:
         # only when the JVM GC collects their driver-side references;
         # over ~80 queries x 4 executions the backlog grows until a
         # mid-query full GC lands the cost on whichever query is
-        # running (measured: curation_pipeline 3.4 s standalone but
-        # 12-20 s late in the suite).  Collect between queries so the
+        # running (measured: a composite query took 3.4 s standalone
+        # but 12-20 s late in the suite).  Collect between queries so the
         # cleanup is never billed to a measured rep.
         spark.sparkContext._jvm.System.gc()
         if qi % CANARY_EVERY == 0 or qi == len(names):

@@ -1,7 +1,6 @@
-"""Unit coverage for the round-4 featurization/ids/ml additions:
+"""Unit coverage for the round-4 featurization/ids additions:
 contiguous id assignment equals global ROW_NUMBER for any shard count,
-hashed TF-IDF matches an independent model, and the sparse→dense
-vector assembly is exact."""
+and hashed TF-IDF matches an independent model."""
 
 import hashlib
 import math
@@ -10,7 +9,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from tiki_e_commerce_analytics_etl_spark.operators import features, ids, ml
+from tiki_e_commerce_analytics_etl_spark.operators import features, ids
 
 
 @pytest.mark.parametrize("n_shards", [1, 3, 16, 100])
@@ -67,38 +66,3 @@ def test_hashed_tfidf_matches_model(spark):
     assert set(got) == set(want)
     for k in want:
         assert math.isclose(got[k], want[k], rel_tol=1e-9), k
-
-
-def test_dense_features_roundtrip(spark):
-    triples = spark.createDataFrame(
-        [(0, 1, 2.5), (0, 3, 1.0), (1, 0, 4.0)],
-        "doc_id long, feature long, weight double",
-    )
-    out = ml.dense_features_from_triples(triples, "doc_id", dim=4)
-    vecs = {r.doc_id: list(r.features) for r in out.collect()}
-    assert vecs == {0: [0.0, 2.5, 0.0, 1.0], 1: [4.0, 0.0, 0.0, 0.0]}
-
-
-def test_train_eval_classifier_learns_linear_boundary(spark):
-    # 2-D linearly separable data WITH A MARGIN (points exactly on the
-    # x+y=0 boundary predict by float-tiny sign and flip run to run);
-    # the held-out fold must classify near-perfectly.
-    from pyspark.ml.functions import array_to_vector
-
-    rows = [
-        Row(i=i, x=float(i % 17) - 8.0, y=float((i * 7) % 13) - 6.0)
-        for i in range(300)
-        if (i % 17) - 8 + (i * 7) % 13 - 6 != 0
-    ]
-    df = (
-        spark.createDataFrame(rows)
-        .withColumn("label", (F.col("x") + F.col("y") > 0).cast("double"))
-        .select(
-            "i",
-            array_to_vector(F.array("x", "y")).alias("features"),
-            "label",
-        )
-    )
-    _, pred = ml.train_eval_classifier(df, "features", "label", split_key="i")
-    row = ml.accuracy_summary(pred, "label", threshold=0.9).collect()[0]
-    assert row.accuracy_ok and row.n_test > 0

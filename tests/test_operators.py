@@ -498,18 +498,6 @@ def test_connected_components_reversed_edges(spark):
     assert comp == {1: 1, 5: 1, 9: 1}
 
 
-def test_keep_canonical_drops_non_canonical_members(spark):
-    from tiki_e_commerce_analytics_etl_spark.operators import graph
-
-    df = spark.createDataFrame(
-        [(i, f"doc {i}") for i in [1, 2, 3, 10, 11, 50]], "doc_id long, text string"
-    )
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
-    kept = sorted(r.doc_id for r in graph.keep_canonical(df, pairs).collect())
-    # cluster {1,2,3} -> 1, cluster {10,11} -> 10, 50 untouched
-    assert kept == [1, 10, 50]
-
-
 def test_bm25_ranks_denser_match_higher(spark):
     from tiki_e_commerce_analytics_etl_spark.operators import ranking
 

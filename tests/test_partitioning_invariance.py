@@ -22,7 +22,6 @@ QUERIES = [
     "ngram_jaccard",
     "hash_split",
     "dedup_latest",
-    "curation_pipeline",
     # round-3 additions with order-sensitivity risk: band-bucket pair
     # expansion, top-k ties, integer division over window leads,
     # full-outer status classification, quantile strata boundaries,
@@ -58,17 +57,14 @@ QUERIES = [
     "quantile_sketch",
     "skew_join_hybrid",
     "simhash_hamming",
-    # engagement + tokenizer additions: double max across partial aggs,
-    # percentile boundary scalars, integer-division lift math, bounded
-    # explode + double dedupe, floor-div surprisal sums, greedy Arrow
-    # matcher over a collected vocab with top-k tiebreaks
+    # engagement additions: double max across partial aggs, percentile
+    # boundary scalars, integer-division lift math, bounded explode +
+    # double dedupe, floor-div surprisal sums
     "rfm_segments",
     "basket_pairs",
     "rolling_active_users",
     "cohort_retention",
     "rarity_score",
-    "subword_vocab",
-    "subword_tokenize",
     "rolling_actives_sketch",  # HLL register maxes are order-insensitive
     "scd2_lookup",       # interval residual over window-built spans
     "item_neighbors",    # per-item top-k ties broken by neighbor id

@@ -259,8 +259,8 @@ def test_pagerank_no_cartesian_and_hash_joins_only(spark):
 
 
 def test_engagement_and_tokenizer_plan_shapes(spark):
-    """Scale-critical plan properties of the engagement + tokenizer
-    queries added late in round 4."""
+    """Scale-critical plan properties of the engagement queries added
+    late in round 4."""
     # rolling_active_users / rfm_segments: the whole point of their
     # formulations is avoiding the global-window shapes (COUNT(DISTINCT)
     # OVER RANGE / ntile) — no Window operator may appear.
@@ -272,11 +272,6 @@ def test_engagement_and_tokenizer_plan_shapes(spark):
     # basket key, never a cross product.
     p = _plan(spark, "basket_pairs")
     assert "CartesianProduct" not in p
-    # subword_tokenize: exactly ONE Arrow stage — Python sees the
-    # unique-word vocabulary once; a per-occurrence or per-doc second
-    # Arrow pass would be the 100x regression.
-    physical = _plan(spark, "subword_tokenize").split("== Physical Plan ==")[-1]
-    assert physical.count("MapInPandas") == 1
     # rarity_score: aggregated-tables join only — no cross product
     # (the single-row total rides in via broadcast nested loop).
     p = _plan(spark, "rarity_score")

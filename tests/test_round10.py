@@ -4,9 +4,7 @@
    an unresolvable foreign traf must be skipped (its data end is
    unknowable), not abort the whole demux — the target track's trafs
    may all carry explicit base offsets and demux fine.
-2. unigram_train on an empty/whitespace-only corpus returns an empty
-   vocabulary DataFrame instead of crashing in the E-step.
-3. shared_windows counts DISTINCT window STRINGS (collision-proof),
+2. shared_windows counts DISTINCT window STRINGS (collision-proof),
    matching the docstring and the DuckDB oracle — verified via the
    __win column carried on the verified-match relation.
 """
@@ -15,7 +13,6 @@ import pytest
 
 from tiki_e_commerce_analytics_etl_spark.operators import dedup as dedup_ops
 from tiki_e_commerce_analytics_etl_spark.operators import isobmff as bm
-from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
 
 
 def test_mp4_foreign_traf_after_unresolvable_foreign_traf():
@@ -189,165 +186,6 @@ def test_frame_dhash_widen_shift_fixes_degenerate_signatures(spark):
 
     with pytest.raises(ValueError):
         mm.frame_dhash(frames, widen_shift=-1)
-
-
-def test_unigram_train_empty_corpus(spark):
-    """Empty / whitespace-only corpora yield an empty vocabulary (same
-    schema), not a ValueError from max() over an empty seed charset."""
-    df = spark.createDataFrame([("",), ("   ",), (None,)], "text: string")
-    out = text_ops.unigram_train(df, vocab_size=10)
-    assert out.columns == ["rank", "piece", "piece_len", "count"]
-    assert out.count() == 0
-
-
-def _ref_wp_scan(s, l, r, m):
-    """Independent reference in-word merge scan (resume after merge)."""
-    res, i = [], 0
-    while i < len(s):
-        if i + 1 < len(s) and s[i] == l and s[i + 1] == r:
-            res.append(m)
-            i += 2
-        else:
-            res.append(s[i])
-            i += 1
-    return res
-
-
-def _ref_wordpiece(word_counts, n_merges):
-    """Independent pure-Python WordPiece trainer (Schuster & Nakajima
-    2012): likelihood-gain score count(ab)/(count(a)*count(b)) as an
-    EXACT Fraction, (left ASC, right ASC) tiebreak, ## continuation."""
-    from fractions import Fraction
-
-    segs = {w: [w[0]] + ["##" + c for c in w[1:]] for w in word_counts}
-    out = []
-    for rank in range(1, n_merges + 1):
-        sc, pc = {}, {}
-        for w, c in word_counts.items():
-            syms = segs[w]
-            for s in syms:
-                sc[s] = sc.get(s, 0) + c
-            for a, b in zip(syms, syms[1:]):
-                pc[(a, b)] = pc.get((a, b), 0) + c
-        if not pc:
-            break
-        best, bf = None, None
-        for (a, b), c in sorted(pc.items()):
-            fr = Fraction(c, sc[a] * sc[b])
-            if bf is None or fr > bf or (fr == bf and (a, b) < best[:2]):
-                best, bf = (a, b, c, sc[a], sc[b]), fr
-        a, b, c, ca, cb = best
-        m = a + b[2:]
-        out.append((rank, a, b, m, c, ca, cb))
-        for w in segs:
-            segs[w] = _ref_wp_scan(segs[w], a, b, m)
-    return out, segs
-
-
-def test_wordpiece_train_matches_reference(spark):
-    """wordpiece_train must reproduce the independent reference
-    bit-for-bit on random corpora — a tiny alphabet forces score ties
-    so the exact-rational comparison and the (left, right) tiebreak
-    are both exercised."""
-    import random
-
-    from tiki_e_commerce_analytics_etl_spark.operators import text as tx
-
-    rng = random.Random(1234)
-    for trial in range(3):
-        words_ = ["aaaa", "aaab"] + [
-            "".join(rng.choice("abc") for _ in range(rng.randint(1, 6)))
-            for _ in range(12)
-        ]
-        counts = {w: rng.randint(1, 9) for w in set(words_)}
-        corpus = " ".join(w for w, c in counts.items() for _ in range(c))
-        df = spark.createDataFrame([(1, corpus)], "i: long, text: string")
-        got = [
-            (
-                r["merge_rank"], r["left"], r["right"], r["merged"],
-                r["pair_count"], r["left_count"], r["right_count"],
-            )
-            for r in tx.wordpiece_train(df, n_merges=6)
-            .orderBy("merge_rank")
-            .collect()
-        ]
-        assert got == _ref_wordpiece(counts, 6)[0], f"trial {trial}: {counts}"
-
-    # fewer possible merges than n_merges -> early stop, not an error
-    df = spark.createDataFrame([(1, "xy")], "i: long, text: string")
-    assert tx.wordpiece_train(df, n_merges=5).count() == 1
-    with pytest.raises(ValueError):
-        tx.wordpiece_train(df, n_merges=0)
-
-
-def test_wordpiece_token_counts_matches_reference(spark):
-    """The apply twin replays the merge table with the same scan the
-    trainer uses — verified against the independent reference on a
-    random corpus with out-of-training words present."""
-    import random
-
-    from tiki_e_commerce_analytics_etl_spark.operators import text as tx
-
-    rng = random.Random(77)
-    train_words = {
-        "".join(rng.choice("abcd") for _ in range(rng.randint(2, 6))): rng.randint(1, 5)
-        for _ in range(10)
-    }
-    corpus = " ".join(w for w, c in train_words.items() for _ in range(c))
-    train = spark.createDataFrame([(1, corpus)], "i: long, text: string")
-    merges_df = tx.wordpiece_train(train, n_merges=5)
-    table, _segs = _ref_wordpiece(train_words, 5)
-    merges = [(a, b, m) for (_rk, a, b, m, _c, _ca, _cb) in table]
-
-    docs = [
-        (i, " ".join(
-            "".join(rng.choice("abcde") for _ in range(rng.randint(1, 7)))
-            for _ in range(rng.randint(1, 8))
-        ))
-        for i in range(1, 6)
-    ]
-    df = spark.createDataFrame(docs, "doc_id: long, text: string")
-    got = {
-        r["doc_id"]: (r["n_words"], r["n_chars"], r["n_tokens"])
-        for r in tx.wordpiece_token_counts(df, merges_df).collect()
-    }
-    for doc_id, text in docs:
-        ws = text.split()
-        n_tok = 0
-        for w in ws:
-            syms = [w[0]] + ["##" + c for c in w[1:]]
-            for a, b, m in merges:
-                syms = _ref_wp_scan(syms, a, b, m)
-            n_tok += len(syms)
-        assert got[doc_id] == (len(ws), sum(len(w) for w in ws), n_tok)
-
-
-def test_wordpiece_train_on_real_corpus(spark):
-    """Scale-shape sanity on the sf0.001 documents table: the Spark
-    trainer's 10-merge table equals the independent reference run on
-    the corpus's own collected word counts (the bpe_corpus_merges
-    verification pattern, kept in pytest so the driver rows-only set
-    does not grow)."""
-    import collections
-
-    from tiki_e_commerce_analytics_etl_spark.operators import text as tx
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    got = [
-        (r["left"], r["right"], r["merged"], r["pair_count"])
-        for r in tx.wordpiece_train(docs, text_col="text", n_merges=10)
-        .orderBy("merge_rank")
-        .collect()
-    ]
-    texts = [r["text"] for r in docs.select("text").collect()]
-    counts = collections.Counter(
-        w for t in texts for w in (t or "").lower().split() if w
-    )
-    want = [
-        (a, b, m, c)
-        for (_rk, a, b, m, c, _ca, _cb) in _ref_wordpiece(dict(counts), 10)[0]
-    ]
-    assert got == want
 
 
 def test_capped_substring_pairs_subset_law(spark):

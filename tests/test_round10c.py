@@ -1,6 +1,5 @@
 """Round-10 third-wave operators: the non-repetition Gopher quality
-suite, leakage-safe cluster splits, and the integer-quantized
-logistic-regression quality classifier.
+suite and leakage-safe cluster splits.
 
 Each test plants a hand-computable corpus and checks EXACT values or
 published invariants — the oracle gate (tools/check.py) separately
@@ -131,133 +130,6 @@ def test_cluster_safe_split_no_pair_straddles(spark):
 
 
 # ---------------------------------------------------------------------------
-# Logistic-regression quality classifier (integer-GD)
-# ---------------------------------------------------------------------------
-
-
-def _py_logreg(texts_labels, dim=512, iters=5, lr_den=2):
-    """Independent pure-Python reference of the integer-GD contract:
-    md5_48 hashed features, exact int64 margins, floor-quantized
-    sigmoid terms, truncating-division updates."""
-    import hashlib
-    import math
-
-    def md5_48(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:12], 16)
-
-    def tdiv(a, d):
-        q = abs(a) // d
-        return -q if a < 0 else q
-
-    feats = {}
-    labels = {}
-    for i, (t, y) in enumerate(texts_labels):
-        labels[i] = y
-        fs = {}
-        for w in t.lower().split():
-            f = md5_48(w) % dim
-            fs[f] = fs.get(f, 0) + 1
-        feats[i] = fs
-    n = len(labels)
-    weights = {f: 0 for fs in feats.values() for f in fs}
-    bias = 0
-    for _ in range(iters):
-        grad = {f: 0 for f in weights}
-        bgrad = 0
-        for i in sorted(labels):
-            m = bias + sum(weights[f] * tf for f, tf in feats[i].items())
-            p = 1.0 / (1.0 + math.exp(-(m / 1_000_000.0)))
-            r = p - labels[i]
-            for f, tf in feats[i].items():
-                grad[f] += math.floor(1_000_000.0 * r * tf)
-            bgrad += math.floor(1_000_000.0 * r)
-        weights = {f: w - tdiv(grad[f], lr_den * n) for f, w in weights.items()}
-        bias -= tdiv(bgrad, lr_den * n)
-    margins = {
-        i: bias + sum(weights[f] * tf for f, tf in feats[i].items())
-        for i in labels
-    }
-    return weights, bias, margins
-
-
-def test_logreg_matches_independent_reference_and_learns(spark):
-    from tiki_e_commerce_analytics_etl_spark.operators import features as feat_ops
-
-    # separable: class 1 speaks 'excellent prose', class 0 'spam junk'
-    corpus = (
-        [("excellent prose flows here", 1)] * 6
-        + [("fine excellent writing prose", 1)] * 5
-        + [("spam junk click buy", 0)] * 6
-        + [("junk spam noise buy now", 0)] * 5
-    )
-    rows = [(i, t, "good" if y else "bad") for i, (t, y) in enumerate(corpus)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    weights, bias = feat_ops.logreg_train(
-        docs, label_col=(F.col("source") == "good"), dim=64, iters=6
-    )
-    ref_w, ref_b, ref_m = _py_logreg(corpus, dim=64, iters=6)
-    assert weights == ref_w
-    assert bias == ref_b
-    # and it actually separates: every margin on the right side
-    from tiki_e_commerce_analytics_etl_spark.operators.bloom import md5_48
-    from tiki_e_commerce_analytics_etl_spark.operators.text import words
-
-    lab = docs.select(
-        F.col("doc_id").alias("id"),
-        (F.col("source") == "good").cast("int").alias("y"),
-    )
-    feats = (
-        docs.select(F.col("doc_id").alias("id"), F.explode(words(F.col("text"))).alias("w"))
-        .select("id", (md5_48(F.col("w")) % F.lit(64)).alias("f"))
-        .groupBy("id", "f")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-    out = feat_ops.logreg_margins(lab, feats, weights, bias).collect()
-    assert all((r["m"] > 0) == (r["y"] == 1) for r in out)
-    assert {r["id"]: r["m"] for r in out} == ref_m
-
-
-def test_logreg_empty_doc_carries_bias_only(spark):
-    from tiki_e_commerce_analytics_etl_spark.operators import features as feat_ops
-
-    docs = spark.createDataFrame(
-        [(0, "word soup text", "a"), (1, "", "b"), (2, "more words", "a")],
-        "doc_id long, text string, source string",
-    )
-    weights, bias = feat_ops.logreg_train(
-        docs, label_col=(F.col("source") == "a"), dim=32, iters=2
-    )
-    ref_w, ref_b, ref_m = _py_logreg(
-        [("word soup text", 1), ("", 0), ("more words", 1)], dim=32, iters=2
-    )
-    assert (weights, bias) == (ref_w, ref_b)
-    # the empty doc's margin is exactly the bias
-    assert ref_m[1] == ref_b
-
-
-def test_logreg_partitioning_invariance(spark):
-    from tiki_e_commerce_analytics_etl_spark.operators import features as feat_ops
-
-    import random
-
-    rnd = random.Random(11)
-    vocab = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
-    rows = [
-        (i, " ".join(rnd.choices(vocab, k=12)), rnd.choice(["x", "z"]))
-        for i in range(80)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    w1, b1 = feat_ops.logreg_train(docs, label_col=(F.col("source") == "x"), dim=64, iters=3)
-    w2, b2 = feat_ops.logreg_train(
-        docs.repartition(17, "doc_id"),
-        label_col=(F.col("source") == "x"),
-        dim=64,
-        iters=3,
-    )
-    assert (w1, b1) == (w2, b2)
-
-
-# ---------------------------------------------------------------------------
 # Decontamination removal (strip_contaminated_spans)
 # ---------------------------------------------------------------------------
 
@@ -323,66 +195,6 @@ def test_strip_contaminated_no_keeper_side(spark):
         ).collect()
     }
     assert out == {0: "tail a", 1: "tail b"}
-
-
-def test_logreg_l2_decay_shrinks_weights(spark):
-    from tiki_e_commerce_analytics_etl_spark.operators import features as feat_ops
-
-    corpus = (
-        [("excellent prose flows here", 1)] * 6
-        + [("spam junk click buy", 0)] * 6
-    )
-    rows = [(i, t, "good" if y else "bad") for i, (t, y) in enumerate(corpus)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    plain_w, plain_b = feat_ops.logreg_train(
-        docs, label_col=(F.col("source") == "good"), dim=64, iters=6
-    )
-    reg_w, reg_b = feat_ops.logreg_train(
-        docs, label_col=(F.col("source") == "good"), dim=64, iters=6, reg_den=4
-    )
-    # decay shrinks the L1 mass of the weight vector
-    assert sum(abs(w) for w in reg_w.values()) < sum(
-        abs(w) for w in plain_w.values()
-    )
-    # the decay rule is the documented truncating division: replay it
-    # in the pure-Python reference
-    import hashlib
-    import math
-
-    def md5_48(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:12], 16)
-
-    def tdiv(a, d):
-        q = abs(a) // d
-        return -q if a < 0 else q
-
-    feats, labels = {}, {}
-    for i, (t, y) in enumerate(corpus):
-        labels[i] = y
-        fs = {}
-        for w in t.lower().split():
-            f = md5_48(w) % 64
-            fs[f] = fs.get(f, 0) + 1
-        feats[i] = fs
-    n = len(labels)
-    weights = {f: 0 for fs in feats.values() for f in fs}
-    bias = 0
-    for _ in range(6):
-        grad = {f: 0 for f in weights}
-        bgrad = 0
-        for i in sorted(labels):
-            m = bias + sum(weights[f] * tf for f, tf in feats[i].items())
-            p = 1.0 / (1.0 + math.exp(-(m / 1_000_000.0)))
-            r = p - labels[i]
-            for f, tf in feats[i].items():
-                grad[f] += math.floor(1_000_000.0 * r * tf)
-            bgrad += math.floor(1_000_000.0 * r)
-        weights = {
-            f: w - tdiv(grad[f], 2 * n) - tdiv(w, 4)
-            for f, w in weights.items()
-        }
-        bias -= tdiv(bgrad, 2 * n)
-    assert reg_w == weights and reg_b == bias
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,5 @@
-"""Round-10 fourth-wave operators: cluster representative selection,
-word-stutter collapse, stratified quotas, vocabulary growth and
-training-shard export.
+"""Round-10 fourth-wave operators: word-stutter collapse, stratified
+quotas, vocabulary growth and training-shard export.
 
 Each test plants a hand-computable input and checks EXACT values; the
 oracle gate (tools/check.py) separately proves bit-exactness against
@@ -9,64 +8,6 @@ DuckDB at three SFs for the query-level compositions.
 
 import pytest
 from pyspark.sql import functions as F
-
-from tiki_e_commerce_analytics_etl_spark.operators import graph
-
-
-# ---------------------------------------------------------------------------
-# cluster_best_members — keep the best copy, not the min id
-# ---------------------------------------------------------------------------
-
-
-def test_cluster_best_members_picks_max_quality(spark):
-    # Component {1,2,3} via edges 1-2, 2-3; component {7,8}.
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
-    )
-    # Doc 3 has the best quality in its cluster — min-id (1) must NOT win.
-    scores = spark.createDataFrame(
-        [(1, 0.2), (2, 0.5), (3, 0.9), (7, 0.4), (8, 0.1), (99, 1.0)],
-        "doc_id long, quality double",
-    )
-    out = graph.cluster_best_members(scores, pairs, "doc_id", "quality")
-    rows = {r["doc_id"]: r for r in out.collect()}
-    # Singleton 99 has no edges: not emitted (connected_components contract).
-    assert set(rows) == {1, 2, 3, 7, 8}
-    assert rows[3]["is_keeper"] and not rows[1]["is_keeper"] and not rows[2]["is_keeper"]
-    assert rows[7]["is_keeper"] and not rows[8]["is_keeper"]
-    assert all(rows[i]["component"] == 1 for i in (1, 2, 3))
-    assert all(rows[i]["component"] == 7 for i in (7, 8))
-    # Quality rides through unchanged.
-    assert rows[3]["quality"] == 0.9
-
-
-def test_cluster_best_members_tie_breaks_to_min_id(spark):
-    pairs = spark.createDataFrame([(10, 11), (11, 12)], "id_a long, id_b long")
-    scores = spark.createDataFrame(
-        [(10, 0.7), (11, 0.7), (12, 0.3)], "doc_id long, quality double"
-    )
-    out = graph.cluster_best_members(scores, pairs, "doc_id", "quality")
-    keepers = [r["doc_id"] for r in out.collect() if r["is_keeper"]]
-    assert keepers == [10]
-
-
-def test_cluster_best_members_exactly_one_keeper_per_component(spark):
-    # A denser random-ish graph: chain 0..19 plus a few chords.
-    edges = [(i, i + 1) for i in range(19)] + [(0, 5), (7, 15)]
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    scores = spark.createDataFrame(
-        [(i, float((i * 37) % 11)) for i in range(20)],
-        "doc_id long, quality double",
-    )
-    out = graph.cluster_best_members(scores, pairs, "doc_id", "quality").collect()
-    comps = {}
-    for r in out:
-        comps.setdefault(r["component"], []).append(r)
-    for comp, members in comps.items():
-        ks = [m for m in members if m["is_keeper"]]
-        assert len(ks) == 1
-        best = max(members, key=lambda m: (m["quality"], -m["doc_id"]))
-        assert ks[0]["doc_id"] == best["doc_id"]
 
 
 # ---------------------------------------------------------------------------
@@ -243,95 +184,9 @@ def test_vocab_growth_monotone_and_exact_on_planted_corpus(spark):
     assert out[-1][2] == 20  # 2 tokens per doc
 
 
-def test_training_export_plan_invariants(spark):
-    """The composed release plan: no near-dup pair straddles a split,
-    every surviving cluster kept exactly its best member, train rows
-    carry dense (shard, pos) serving order, val/test ride shard -1."""
-    import __spark_entry__ as entry
-
-    out = entry.q_training_export_plan(spark, "/root/testdata/sf0.001").collect()
-    assert out
-    by_comp = {}
-    for r in out:
-        by_comp.setdefault(r["component"], set()).add(r["split"])
-    assert all(len(s) == 1 for s in by_comp.values()), "split leaked a cluster"
-    # one surviving member per multi-doc component at most
-    from collections import Counter
-
-    comp_counts = Counter(r["component"] for r in out)
-    # components that had near-dups were reduced to their keeper; a
-    # component id can appear once only (plus unrelated singletons
-    # keyed by their own id, which are distinct ids by construction)
-    assert max(comp_counts.values()) == 1
-    for r in out:
-        if r["split"] == "train":
-            assert 0 <= r["shard"] < 8
-        else:
-            assert r["shard"] == -1
-    pos_per = {}
-    for r in out:
-        pos_per.setdefault((r["split"], r["shard"]), []).append(r["pos"])
-    for key, ps in pos_per.items():
-        assert sorted(ps) == list(range(1, len(ps) + 1)), key
-    assert all(r["quality"] >= 0.3 for r in out)
-
-
 # ---------------------------------------------------------------------------
 # randomized cross-checks against pure-Python references
 # ---------------------------------------------------------------------------
-
-
-def test_cluster_best_members_matches_python_reference_on_random_graphs(spark):
-    """Seeded random graphs: pointer-jumping CC + max_by argmax must
-    agree with a brute-force union-find + python argmax."""
-    import random
-
-    rng = random.Random(421)
-    for trial in range(4):
-        n = rng.randint(5, 25)
-        edges = sorted(
-            {
-                tuple(sorted(rng.sample(range(n), 2)))
-                for _ in range(rng.randint(1, 2 * n))
-            }
-        )
-        quality = {i: rng.randint(0, 5) / 4.0 for i in range(n)}
-
-        parent = list(range(n))
-
-        def find(a):
-            while parent[a] != a:
-                parent[a] = parent[parent[a]]
-                a = parent[a]
-            return a
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        comp = {}
-        for i in range(n):
-            comp.setdefault(find(i), []).append(i)
-        want = {}
-        for members in comp.values():
-            if len(members) < 2:
-                continue
-            label = min(members)
-            keeper = max(members, key=lambda m: (quality[m], -m))
-            for m in members:
-                want[m] = (label, keeper == m)
-
-        from tiki_e_commerce_analytics_etl_spark.operators import graph
-
-        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        scores = spark.createDataFrame(
-            [(i, quality[i]) for i in range(n)], "doc_id long, quality double"
-        )
-        got = {
-            r["doc_id"]: (r["component"], r["is_keeper"])
-            for r in graph.cluster_best_members(scores, pairs).collect()
-        }
-        assert got == want, f"trial {trial}: {edges}"
 
 
 def test_collapse_word_stutter_matches_python_reference(spark):

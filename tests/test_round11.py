@@ -1,5 +1,5 @@
 """Round 11: regression tests for the round-10 ADVICE items plus the
-new round-11 surface (blocklist broadcast-join route, byte-level BPE,
+new round-11 surface (blocklist broadcast-join route,
 scale-proportional shard default, _auto_agree sidecar hint)."""
 
 import pytest
@@ -99,265 +99,6 @@ def test_blocklist_auto_route_picks_join_for_long_lists(spark):
     assert "Join" in long._jdf.queryExecution().executedPlan().toString()
     with pytest.raises(ValueError, match="route"):
         text_ops.blocklist_screen(docs, ["x"], route="bogus")
-
-
-# ---------------------------------------------------------------------------
-# Round 11 #2: byte-level GPT-2 BPE — independent pure-Python reference
-# (no engine imports: scanner pre-tokenizer with Java-regex semantics,
-# re-derived byte table, Counter-based merge loop)
-# ---------------------------------------------------------------------------
-
-_ASCII_WS = set(" \t\n\x0b\f\r")
-_CONTRACTIONS = ["'s", "'t", "'re", "'ve", "'m", "'ll", "'d"]
-
-
-def _cat(c):
-    import unicodedata
-
-    return unicodedata.category(c)
-
-
-def _ref_pieces(text):
-    def is_l(c):
-        return _cat(c).startswith("L")
-
-    def is_n(c):
-        return _cat(c).startswith("N")
-
-    def is_ws(c):
-        return c in _ASCII_WS
-
-    out, i, n = [], 0, len(text)
-    while i < n:
-        m = None
-        for c in _CONTRACTIONS:
-            if text.startswith(c, i):
-                m = c
-                break
-        if m is None:
-            ch = text[i]
-            if ch == " " and i + 1 < n and is_l(text[i + 1]):
-                k = i + 1
-                while k < n and is_l(text[k]):
-                    k += 1
-                m = text[i:k]
-            elif is_l(ch):
-                k = i
-                while k < n and is_l(text[k]):
-                    k += 1
-                m = text[i:k]
-            elif ch == " " and i + 1 < n and is_n(text[i + 1]):
-                k = i + 1
-                while k < n and is_n(text[k]):
-                    k += 1
-                m = text[i:k]
-            elif is_n(ch):
-                k = i
-                while k < n and is_n(text[k]):
-                    k += 1
-                m = text[i:k]
-            elif (ch == " " and i + 1 < n and not is_ws(text[i + 1])
-                  and not is_l(text[i + 1]) and not is_n(text[i + 1])):
-                k = i + 1
-                while (k < n and not is_ws(text[k]) and not is_l(text[k])
-                       and not is_n(text[k])):
-                    k += 1
-                m = text[i:k]
-            elif not is_ws(ch):
-                k = i
-                while (k < n and not is_ws(text[k]) and not is_l(text[k])
-                       and not is_n(text[k])):
-                    k += 1
-                m = text[i:k]
-            else:
-                k = i
-                while k < n and is_ws(text[k]):
-                    k += 1
-                if k == n or k - i == 1:
-                    m = text[i:k]
-                else:
-                    m = text[i:k - 1]
-        out.append(m)
-        i += len(m)
-    return out
-
-
-def _ref_b2u():
-    bs = (list(range(ord("!"), ord("~") + 1))
-          + list(range(ord("¡"), ord("¬") + 1))
-          + list(range(ord("®"), ord("ÿ") + 1)))
-    cs = bs[:]
-    n = 0
-    for b in range(256):
-        if b not in bs:
-            bs.append(b)
-            cs.append(256 + n)
-            n += 1
-    return dict(zip(bs, (chr(c) for c in cs)))
-
-
-def _ref_scan(s, l, r, m):
-    res, i, n = [], 0, len(s)
-    while i < n:
-        if i + 1 < n and s[i] == l and s[i + 1] == r:
-            res.append(m)
-            i += 2
-        else:
-            res.append(s[i])
-            i += 1
-    return res
-
-
-def _ref_byte_bpe(texts, n_merges):
-    from collections import Counter
-
-    b2u = _ref_b2u()
-    pieces = Counter()
-    for t in texts:
-        pieces.update(_ref_pieces(t))
-    state = {p: [b2u[b] for b in p.encode("utf-8")] for p in pieces}
-    merges = []
-    for rank in range(1, n_merges + 1):
-        pc = Counter()
-        for p, syms in state.items():
-            w = pieces[p]
-            for a, b in zip(syms, syms[1:]):
-                pc[(a, b)] += w
-        if not pc:
-            break
-        (l, r), cnt = min(
-            pc.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        merges.append((rank, l, r, l + r, cnt))
-        state = {p: _ref_scan(s, l, r, l + r) for p, s in state.items()}
-    return merges
-
-
-_TRICKY_TEXTS = [
-    "low low lower it's café 42",
-    "I'll say we've done it'd work don't",
-    "a  b   c\t\td\n\ne",          # multi-ws runs: lookahead trim
-    "hello,world!!!  ...ok?",
-    "x1y2z3 12ab 3.14 -42",
-    " leading and trailing  ",
-    "tabs\tand\nnewlines\r\nmixed",
-    "naïve façade coöperate Ångström",
-    "đường phố Hà Nội giá 5.000 ₫",   # Vietnamese + currency
-    "emoji 🙂 mixed 🚀🚀 runs",
-    "a'b c'd e's f'sx",               # contraction vs bare apostrophe
-    "",
-    "   ",
-    " nbsp run",            # U+00A0 is NOT Java \s
-]
-
-
-def test_bytes_to_unicode_is_a_printable_bijection():
-    """All 256 bytes map to 256 DISTINCT printable characters (no
-    symbol collisions — a collision would silently merge different
-    byte sequences), and the published anchor points hold."""
-    from tiki_e_commerce_analytics_etl_spark.operators.text import bytes_to_unicode
-
-    b2u = bytes_to_unicode()
-    assert len(b2u) == 256 and len(set(b2u.values())) == 256
-    assert all(c.isprintable() for c in b2u.values())
-    assert b2u[ord(" ")] == "Ġ" and b2u[ord("\n")] == "Ċ"
-    assert b2u[ord("a")] == "a" and b2u[ord("!")] == "!"  # printable: identity
-
-
-def test_gpt2_pieces_matches_independent_reference(spark):
-    """The JVM regex pre-tokenizer and the pure-Python scanner must
-    agree piece-for-piece on contractions, space-prefixing, lookahead
-    whitespace trimming, unicode letters/digits, and non-ASCII spaces
-    — plus random corpora."""
-    import random
-
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    rng = random.Random(11)
-    alphabet = list("ab 1!'é\t\n")
-    randoms = [
-        "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 40)))
-        for _ in range(60)
-    ]
-    texts = _TRICKY_TEXTS + randoms
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "i long, text string"
-    )
-    got = {
-        r["i"]: list(r["p"])
-        for r in df.select(
-            "i", text_ops.gpt2_pieces(F.col("text")).alias("p")
-        ).collect()
-    }
-    for i, t in enumerate(texts):
-        assert got[i] == _ref_pieces(t), (i, t, got[i], _ref_pieces(t))
-    # pieces must reassemble the original text exactly (lossless)
-    for t in texts:
-        assert "".join(_ref_pieces(t)) == t
-
-
-def test_byte_bpe_train_matches_independent_reference(spark):
-    """Property: on random corpora the distributed trainer reproduces
-    the independent reference's merge table exactly (ranks, symbols,
-    counts) — argmax tiebreaks, resume-after-merge rewrites, byte
-    mapping, and pre-tokenization all in lockstep."""
-    import random
-
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    rng = random.Random(42)
-    vocab = ["low", "lower", "it's", "café", "42", "ab", "a", "xyz!"]
-    for trial in range(3):
-        texts = [
-            " ".join(rng.choice(vocab) for _ in range(rng.randrange(3, 15)))
-            for _ in range(rng.randrange(2, 6))
-        ]
-        df = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-        )
-        got = [
-            (r["merge_rank"], r["left"], r["right"], r["merged"],
-             r["pair_count"])
-            for r in text_ops.byte_bpe_train(df, n_merges=6)
-            .orderBy("merge_rank").collect()
-        ]
-        want = _ref_byte_bpe(texts, 6)
-        assert got == want, (trial, texts, got, want)
-
-
-def test_byte_bpe_tokenize_out_of_training(spark):
-    """Apply on words never seen in training still tokenizes (the
-    no-<unk> guarantee) and matches the reference's replay — including
-    a multi-byte word no merge covers."""
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    train = spark.createDataFrame(
-        [(1, "low low lower newest newest widest")], "i long, text string"
-    )
-    merges_df = text_ops.byte_bpe_train(train, n_merges=6)
-    merges = [
-        (r["merge_rank"], r["left"], r["right"], r["merged"], 0)
-        for r in merges_df.orderBy("merge_rank").collect()
-    ]
-    docs = [(1, "lowest đường 🙂"), (2, "it's 99 bottles")]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["n_pieces"], r["n_bytes"], r["n_tokens"])
-        for r in text_ops.byte_bpe_token_counts(df, merges_df).collect()
-    }
-    b2u = _ref_b2u()
-    for did, t in docs:
-        pieces = _ref_pieces(t)
-        n_bytes = sum(len(p.encode("utf-8")) for p in pieces)
-        n_tok = 0
-        for p in pieces:
-            syms = [b2u[b] for b in p.encode("utf-8")]
-            for _, l, r, m, _ in merges:
-                if len(syms) < 2:
-                    break
-                syms = _ref_scan(syms, l, r, m)
-            n_tok += len(syms)
-        assert got[did] == (len(pieces), n_bytes, n_tok)
 
 
 # ---------------------------------------------------------------------------

@@ -3,9 +3,6 @@ bench canary, and the round-11 ADVICE fixes."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 
 def _mk_docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id int, text string")
@@ -167,140 +164,3 @@ def test_solo_candidates_rank_both_drift_directions():
     timings = {"slow": 3.0, "fast": 1.0, "mild": 2.1}
     out = bench.solo_candidates(["slow", "fast", "mild"], timings, prior, cap=2)
     assert out == ["fast", "slow"]
-
-
-def test_byte_bpe_corpus_oracle_twin_lockstep(spark, tmp_path):
-    """The generated DuckDB twin (_byte_bpe_corpus_oracle) must equal
-    the Spark trainer bit-for-bit on random clean corpora (the [a-z ]
-    single-space inventory the specialization is valid for) — merge
-    chains, tie-breaks, and the replace()-based rewrite all in
-    lockstep, including repeated-letter words that exercise the
-    overlapping-pair (resume-after) semantics."""
-    import random
-
-    import duckdb
-
-    import __spark_entry__ as entry
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    rng = random.Random(12)
-    vocab = ["aaa", "abab", "banana", "scan", "a", "loop", "pool", "zz"]
-    for case in range(3):
-        docs = [
-            (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 30))))
-            for i in range(25)
-        ]
-        df = spark.createDataFrame(docs, "doc_id long, text string")
-        got = [
-            tuple(r)
-            for r in text_ops.byte_bpe_train(df, n_merges=6)
-            .orderBy("merge_rank")
-            .collect()
-        ]
-        con = duckdb.connect()
-        con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
-        con.executemany("INSERT INTO documents VALUES (?, ?)", docs)
-        want = con.execute(
-            entry._byte_bpe_corpus_oracle(6, "TRUE")
-        ).fetchall()
-        assert got == [tuple(r) for r in want], f"case {case} diverged"
-
-
-def test_merge_fold_expr_matches_merge_scan(spark):
-    """Round-12 optimization guard: the JVM fold rewrite used inside
-    the trainer loops must reproduce ``_merge_scan``'s
-    resume-after-merge semantics bit-for-bit, including the l == r
-    overlap regime (``a a a`` + (a,a) -> ``aa a``) and the
-    cannot-merge-at-last-position edge."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from tiki_e_commerce_analytics_etl_spark.operators.text import (
-        _merge_fold_expr,
-        _merge_scan,
-    )
-
-    rng = random.Random(1207)
-    alphabet = ["a", "b", "c", "##a", "##b", "ab"]
-    cases = [
-        [rng.choice(alphabet) for _ in range(rng.randint(0, 12))]
-        for _ in range(600)
-    ]
-    cases += [[], ["a"], ["a", "b"], ["a", "a", "a"], ["b", "a", "b", "a"]]
-    df = spark.createDataFrame([(c,) for c in cases], "syms: array<string>")
-    for l, r, m in [("a", "b", "ab"), ("a", "a", "aa"), ("ab", "##a", "aba")]:
-        got = [
-            list(row["o"])
-            for row in df.select(
-                _merge_fold_expr(F.col("syms"), l, r, m).alias("o")
-            ).collect()
-        ]
-        want = [_merge_scan(list(c), l, r, m) for c in cases]
-        assert got == want
-
-
-# ---------------------------------------------------------------------------
-# Round 12 optimization: driver-local trainer route (guide §1.2) —
-# below _trainer_local_rows the BPE / byte-BPE / WordPiece merge loops
-# collect the unique word/piece table and train driver-side; the
-# results must be BIT-IDENTICAL to the distributed loop.
-# ---------------------------------------------------------------------------
-
-
-def _random_trainer_corpus(spark):
-    import random
-
-    rng = random.Random(1207)
-    vocab = [
-        "low", "lower", "lowest", "newer", "wider", "wide", "new",
-        "a", "ab", "abc", "aaa", "aaaa",      # l == r overlap regime
-        "café", "naïve",                       # multi-byte UTF-8
-        "x1", "42", "it's",                    # GPT-2 regex splits
-    ]
-    rows = [
-        (i, " ".join(rng.choices(vocab, k=rng.randint(1, 12))))
-        for i in range(80)
-    ]
-    return spark.createDataFrame(rows, "doc_id: long, text: string")
-
-
-@pytest.mark.parametrize("trainer", ["bpe_train", "byte_bpe_train", "wordpiece_train"])
-def test_trainer_local_route_lockstep(spark, trainer):
-    """local_rows=huge (forced driver-local) ≡ local_rows=0 (forced
-    distributed) for every trainer, merge by merge, on a corpus
-    covering the l == r overlap regime, multi-byte UTF-8, and
-    GPT-2-regex punctuation splits."""
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    docs = _random_trainer_corpus(spark)
-    fn = getattr(text_ops, trainer)
-    local = fn(docs, n_merges=8, local_rows=1_000_000_000).collect()
-    dist = fn(docs, n_merges=8, local_rows=0).collect()
-    assert [tuple(r) for r in local] == [tuple(r) for r in dist]
-    assert len(local) == 8
-
-
-def test_trainer_local_route_empty_corpus(spark):
-    """Both routes return an empty merge table (same schema) when the
-    corpus has no adjacent pairs at all."""
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id: long, text: string")
-    local = text_ops.bpe_train(docs, n_merges=3, local_rows=1_000_000_000)
-    dist = text_ops.bpe_train(docs, n_merges=3, local_rows=0)
-    assert local.schema == dist.schema
-    assert local.count() == dist.count() == 0
-
-
-def test_unigram_trainer_local_route_lockstep(spark):
-    """unigram_train's driver-local route (seed count + every EM/prune
-    round in the driver) ≡ the distributed route, rank by rank — the
-    EM segmentation is the same _unigram_viterbi either way."""
-    from tiki_e_commerce_analytics_etl_spark.operators import text as text_ops
-
-    docs = _random_trainer_corpus(spark)
-    local = text_ops.unigram_train(docs, vocab_size=25, local_rows=1_000_000_000).collect()
-    dist = text_ops.unigram_train(docs, vocab_size=25, local_rows=0).collect()
-    assert [tuple(r) for r in local] == [tuple(r) for r in dist]
-    assert len(local) == 25

@@ -92,3 +92,6 @@ def test_bench_full_covers_every_query():
     # --full mode iterates sorted(qs) by construction (bench.main);
     # assert the registry is what the oracle layer covers too
     assert set(entrymod.oracle_sql()) <= qs
+    # compression_screen (rows-only check) is the one query without a
+    # DuckDB twin; README names it
+    assert qs - set(entrymod.oracle_sql()) == {"compression_screen"}

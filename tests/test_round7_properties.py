@@ -369,150 +369,6 @@ def test_triangle_stats_hand_built_graphs(request):
     assert (r["n_nodes"], r["n_edges"], r["n_triangles"], r["gcc_ppm"]) == (0, 0, 0, 0)
 
 
-def _ref_bpe(word_counts, n_merges):
-    """Independent reference BPE (Sennrich-style), tiebreak
-    (count desc, left asc, right asc) — the law bpe_train must obey."""
-    vocab = {tuple(w): c for w, c in word_counts.items()}
-    merges = []
-    for _ in range(n_merges):
-        pc = {}
-        for syms, c in vocab.items():
-            for i in range(len(syms) - 1):
-                k = (syms[i], syms[i + 1])
-                pc[k] = pc.get(k, 0) + c
-        if not pc:
-            break
-        (l, r), cnt = min(
-            pc.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        merges.append((l, r, l + r, cnt))
-        new = {}
-        for syms, c in vocab.items():
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == l and syms[i + 1] == r:
-                    out.append(l + r)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            t = tuple(out)
-            new[t] = new.get(t, 0) + c
-        vocab = new
-    return merges
-
-
-def test_bpe_train_matches_reference(request):
-    spark = request.getfixturevalue("spark")
-    from tiki_e_commerce_analytics_etl_spark.operators import text as tx
-    import random
-
-    rng = random.Random(99)
-    # random corpora incl. the aaa-restart case and repeated chars
-    alphabet = "abc"
-    for trial in range(3):
-        words_ = ["aaaa", "aaab"] + [
-            "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 6)))
-            for _ in range(12)
-        ]
-        counts = {w: rng.randint(1, 9) for w in set(words_)}
-        corpus = " ".join(w for w, c in counts.items() for _ in range(c))
-        df = spark.createDataFrame([(1, corpus)], "i: long, text: string")
-        got = [
-            (r["left"], r["right"], r["merged"], r["pair_count"])
-            for r in tx.bpe_train(df, n_merges=6).orderBy("merge_rank").collect()
-        ]
-        assert got == _ref_bpe(counts, 6), f"trial {trial}: {counts}"
-
-    # merge application restarts AFTER a merged pair: 'aaa' x1 ->
-    # round1 merges (a,a) cnt 2; round2 pairs are (aa,a) only
-    df = spark.createDataFrame([(1, "aaa")], "i: long, text: string")
-    got = [
-        (r["left"], r["right"], r["pair_count"])
-        for r in tx.bpe_train(df, n_merges=2).orderBy("merge_rank").collect()
-    ]
-    assert got == [("a", "a", 2), ("aa", "a", 1)]
-
-    # fewer pairs than n_merges -> early stop, not an error
-    df = spark.createDataFrame([(1, "xy")], "i: long, text: string")
-    assert tx.bpe_train(df, n_merges=5).count() == 1
-
-    import pytest as _p
-
-    with _p.raises(ValueError):
-        tx.bpe_train(df, n_merges=0)
-
-
-def _ref_bpe_apply(word, merges):
-    """Independent reference BPE APPLY: merges in rank order, each a
-    left-to-right scan resuming after a merged pair."""
-    syms = list(word)
-    for l, r, m in merges:
-        out, i = [], 0
-        while i < len(syms):
-            if i + 1 < len(syms) and syms[i] == l and syms[i + 1] == r:
-                out.append(m)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        syms = out
-    return syms
-
-
-def test_bpe_token_counts_matches_reference(request):
-    """bpe_token_counts (the apply step) must agree with an
-    independent reference tokenizer on random corpora, using merge
-    tables produced by bpe_train on OTHER random corpora — train and
-    apply corpora deliberately differ so unseen words exercise the
-    partial-merge path."""
-    spark = request.getfixturevalue("spark")
-    from tiki_e_commerce_analytics_etl_spark.operators import text as tx
-    import random
-
-    rng = random.Random(1234)
-    alphabet = "abcd"
-
-    def rand_words(n, lo=1, hi=7):
-        return [
-            "".join(rng.choice(alphabet) for _ in range(rng.randint(lo, hi)))
-            for _ in range(n)
-        ]
-
-    for trial in range(3):
-        train_corpus = " ".join(rand_words(25))
-        tdf = spark.createDataFrame([(1, train_corpus)], "i: long, text: string")
-        mdf = tx.bpe_train(tdf, n_merges=5)
-        merges = [
-            (r["left"], r["right"], r["merged"])
-            for r in mdf.orderBy("merge_rank").collect()
-        ]
-
-        docs = [(i, " ".join(rand_words(rng.randint(1, 8)))) for i in range(4)]
-        ddf = spark.createDataFrame(docs, "doc_id: long, text: string")
-        got = {
-            r["doc_id"]: (r["n_words"], r["n_chars"], r["n_tokens"])
-            for r in tx.bpe_token_counts(ddf, mdf).collect()
-        }
-        for doc_id, text in docs:
-            ws = [w for w in text.lower().split() if w]
-            exp = (
-                len(ws),
-                sum(len(w) for w in ws),
-                sum(len(_ref_bpe_apply(w, merges)) for w in ws),
-            )
-            assert got[doc_id] == exp, f"trial {trial} doc {doc_id}: {text!r}"
-
-    # identity merge table (0 merges trained on a 2-char corpus cap):
-    # every word tokenizes to its characters
-    empty_merges = spark.createDataFrame(
-        [], "merge_rank: int, left: string, right: string, merged: string"
-    )
-    ddf = spark.createDataFrame([(1, "ab ba")], "doc_id: long, text: string")
-    r = tx.bpe_token_counts(ddf, empty_merges).collect()[0]
-    assert (r["n_words"], r["n_chars"], r["n_tokens"]) == (2, 4, 4)
-
-
 def test_char_entropy_and_compression_screen(request):
     """Round 8 information-density screens.  Entropy: hand-computable
     values, degenerate-vs-natural ordering, empty/NULL → 0.
@@ -561,50 +417,6 @@ def test_char_entropy_and_compression_screen(request):
     # deterministic across runs
     again = {r["doc_id"]: r["compressed_bytes"] for r in tx.compression_screen(cdocs).collect()}
     assert again == {k: v["compressed_bytes"] for k, v in comp.items()}
-
-
-def test_embedding_pca_laws(request):
-    """Round 8 PCA laws: the principal-component basis is orthonormal,
-    the full-rank projection preserves total variance (rotation), the
-    spectrum is non-increasing, and the top-k eigenvalues match a
-    numpy eigendecomposition of the same covariance up to sign-free
-    tolerance."""
-    import numpy as np
-
-    spark = request.getfixturevalue("spark")
-    from tiki_e_commerce_analytics_etl_spark.operators import ml as ml_ops
-
-    rng = np.random.default_rng(42)
-    d, n = 6, 400
-    # anisotropic data: two dominant directions
-    base = rng.normal(size=(n, d))
-    base[:, 0] *= 5.0
-    base[:, 1] *= 3.0
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(base)],
-        "vec_id: long, embedding: array<double>",
-    )
-    proj, model = ml_ops.embedding_pca(df, k=d)
-    P = np.array(model.pc.toArray())  # d x k
-    assert np.allclose(P.T @ P, np.eye(d), atol=1e-9)  # orthonormal
-
-    X = base - base.mean(axis=0)
-    cov = (X.T @ X) / (n - 1)
-    eig = np.sort(np.linalg.eigvalsh(cov))[::-1]
-    ev = np.array(model.explainedVariance) * eig.sum()
-    assert np.allclose(ev, eig, rtol=1e-6)
-
-    # projected per-component variances == eigenvalues (order matches)
-    rows = {r["vec_id"]: r["components"] for r in proj.collect()}
-    Y = np.array([rows[i] for i in range(n)])
-    Yc = Y - Y.mean(axis=0)
-    pvar = (Yc**2).sum(axis=0) / (n - 1)
-    assert np.allclose(pvar, eig, rtol=1e-6)
-    # dominant direction recovered (sign-free)
-    assert abs(P[0, 0]) > 0.99
-
-    gate = ml_ops.pca_spectrum_gate(df, dim=d).collect()[0]
-    assert (gate["dim"], gate["monotone_ok"], gate["total_ok"]) == (d, True, True)
 
 
 def test_psi_drift_hand_computed(request):
@@ -664,36 +476,6 @@ def test_benford_screen_hand_computed(request):
         assert r["observed_ppm"] == 1_000_000 * r["n"] // total
         assert r["expected_ppm"] == math.floor(1_000_000 * math.log10(1 + 1 / d))
         assert r["dev_ppm"] == r["observed_ppm"] - r["expected_ppm"]
-
-
-def test_bpe_corpus_merges_matches_reference_on_real_docs(request):
-    """The registered real-corpus BPE query (rows-only at the driver)
-    is VALUE-verified here: the expected 10-merge table is recomputed
-    by the independent reference implementation from the sf0.001
-    documents table's own collected word counts."""
-    spark = request.getfixturevalue("spark")
-    import __spark_entry__ as entry
-
-    got = [
-        (r["left"], r["right"], r["merged"], r["pair_count"])
-        for r in entry.q_bpe_corpus_merges(spark, "/root/testdata/sf0.001")
-        .orderBy("merge_rank")
-        .collect()
-    ]
-    # reference word counts straight off the corpus
-    import collections
-
-    texts = [
-        r["text"]
-        for r in spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("text")
-        .collect()
-    ]
-    counts = collections.Counter(
-        w for t in texts for w in (t or "").lower().split() if w
-    )
-    assert got == _ref_bpe(dict(counts), 10)
-    assert len(got) == 10
 
 
 def test_audio_window_energy_hand_computed(request):

@@ -230,134 +230,6 @@ def test_fmp4_single_traf_implicit_base_unchanged():
     assert got == frames
 
 
-# ---------------------------------------------------------------------------
-# Unigram-LM trainer: independent pure-Python reference implementation
-# (structured over a word-count dict, written separately from the
-# operator) — the value oracle for text.unigram_train.
-# ---------------------------------------------------------------------------
-
-def _ref_unigram(word_counts, vocab_size, seed_max_len=4, seed_multi=1000,
-                 shrink=0.75):
-    import math
-    from collections import Counter
-
-    seed = Counter()
-    for w, c in word_counts.items():
-        for s in range(len(w)):
-            for e in range(s + 1, min(s + seed_max_len, len(w)) + 1):
-                seed[w[s:e]] += c
-    chars = {p: n for p, n in seed.items() if len(p) == 1}
-    multis = sorted(
-        (p for p in seed if len(p) > 1), key=lambda p: (-seed[p], p)
-    )[:seed_multi]
-    counts = dict(chars)
-    counts.update({p: seed[p] for p in multis})
-    target = max(vocab_size - len(chars), 0)
-
-    def viterbi(w, logp, ml):
-        n = len(w)
-        best = [0.0] + [None] * n
-        back = [0] * (n + 1)
-        for i in range(1, n + 1):
-            bs = bj = None
-            for ln in range(1, min(ml, i) + 1):
-                j = i - ln
-                if best[j] is None:
-                    continue
-                lp = logp.get(w[j:i])
-                if lp is None:
-                    continue
-                sc = best[j] + lp
-                if bs is None or sc > bs or (sc == bs and j < bj):
-                    bs, bj = sc, j
-            best[i], back[i] = bs, bj
-        out, i = [], n
-        while i > 0:
-            out.append(w[back[i]:i])
-            i = back[i]
-        return out[::-1]
-
-    import math as _m
-    while True:
-        total = sum(counts.values())
-        logp = {
-            p: _m.log(max(c, 0.5)) - _m.log(total) for p, c in counts.items()
-        }
-        ml = max(len(p) for p in logp)
-        from collections import Counter as _C
-        used = _C()
-        for w, c in word_counts.items():
-            for piece in viterbi(w, logp, ml):
-                used[piece] += c
-        counts = {ch: used.get(ch, 0) for ch in chars}
-        counts.update({p: n for p, n in used.items() if len(p) > 1})
-        ms = [p for p in counts if len(p) > 1]
-        if len(ms) <= target:
-            break
-        keep_n = max(target, min(len(ms) - 1, _m.ceil(len(ms) * shrink)))
-        keep = sorted(ms, key=lambda p: (-counts[p], p))[:keep_n]
-        counts = {
-            **{ch: counts[ch] for ch in chars},
-            **{p: counts[p] for p in keep},
-        }
-    return sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-
-
-def test_unigram_train_matches_independent_reference(request):
-    """text.unigram_train must reproduce the independent reference on
-    the canonical corpus AND random corpora (random word shapes, dup
-    structure, vocab sizes)."""
-    import random
-
-    spark = request.getfixturevalue("spark")
-    from tiki_e_commerce_analytics_etl_spark.operators import text as t
-
-    def run_case(word_counts, vocab_size, seed_max_len):
-        corpus = " ".join(w for w, c in word_counts.items() for _ in range(c))
-        df = spark.createDataFrame([(1, corpus)], "id: long, text: string")
-        got = [
-            (r["rank"], r["piece"], r["piece_len"], r["count"])
-            for r in t.unigram_train(
-                df, vocab_size=vocab_size, seed_max_len=seed_max_len
-            ).collect()
-        ]
-        ref = _ref_unigram(
-            word_counts, vocab_size=vocab_size, seed_max_len=seed_max_len
-        )
-        want = [(i + 1, p, len(p), c) for i, (p, c) in enumerate(ref)]
-        assert got == want, (word_counts, vocab_size, seed_max_len)
-
-    # canonical fixture (the unigram_vocab oracle)
-    run_case({"hug": 10, "pug": 5, "pun": 12, "bun": 4, "hugs": 5}, 10, 3)
-
-    rng = random.Random(91)
-    alphabet = "abcdef"
-    for trial in range(4):
-        words = {
-            "".join(
-                rng.choice(alphabet) for _ in range(rng.randint(2, 7))
-            ): rng.randint(1, 20)
-            for _ in range(rng.randint(5, 25))
-        }
-        run_case(words, rng.randint(8, 24), rng.choice((3, 4)))
-
-
-def test_unigram_train_vocab_size_and_chars_kept(request):
-    """Every seen character survives; multi-char pieces respect the
-    vocab budget; ranks are dense from 1."""
-    spark = request.getfixturevalue("spark")
-    from tiki_e_commerce_analytics_etl_spark.operators import text as t
-
-    df = spark.createDataFrame(
-        [(1, "aaab aaab aaab bbbc bbbc ccc")], "id: long, text: string"
-    )
-    rows = t.unigram_train(df, vocab_size=5, seed_max_len=4).collect()
-    pieces = {r["piece"] for r in rows}
-    assert {"a", "b", "c"} <= pieces
-    assert sum(1 for p in pieces if len(p) > 1) <= max(5 - 3, 0)
-    assert sorted(r["rank"] for r in rows) == list(range(1, len(rows) + 1))
-
-
 def test_frame_signature_pairs_reencoded_twin(request):
     """Video near-dup catches what exact md5 cannot: a rendition with
     every pixel brightness-shifted by +1 keeps all frame dHashes
@@ -408,67 +280,6 @@ def test_frame_signature_pairs_reencoded_twin(request):
     assert ac["containment_ppm"] == 1_000_000
     assert ac["max_run_frames"] == 3
     assert (1, 4) not in pairs and (2, 4) not in pairs
-
-
-def test_unigram_token_counts_lockstep_with_trainer(request):
-    """Apply must segment with the SAME Viterbi as the trainer's
-    E-step: per-word token counts equal the reference segmentation
-    lengths; train∘apply consistency means re-counting pieces from
-    apply's segmentation reproduces the trainer's final counts."""
-    import math
-
-    spark = request.getfixturevalue("spark")
-    from tiki_e_commerce_analytics_etl_spark.operators import text as t
-
-    wc = {"hug": 10, "pug": 5, "pun": 12, "bun": 4, "hugs": 5}
-    corpus = " ".join(w for w, c in wc.items() for _ in range(c))
-    train_df = spark.createDataFrame([(1, corpus)], "id: long, text: string")
-    vocab = t.unigram_train(train_df, vocab_size=10, seed_max_len=3)
-
-    # independent expected counts: reference viterbi over the reference
-    # vocabulary (already proven equal to the trainer's)
-    ref = dict(_ref_unigram(wc, vocab_size=10, seed_max_len=3))
-    total = sum(ref.values())
-    logp = {p: math.log(max(c, 0.5)) - math.log(total) for p, c in ref.items()}
-
-    def ref_tokens(w):
-        # exhaustive DP (independent of _unigram_viterbi's structure)
-        n = len(w)
-        best = {0: (0.0, [])}
-        for i in range(1, n + 1):
-            cands = []
-            for j in range(i):
-                piece = w[j:i]
-                if piece in logp and j in best:
-                    sc, seg = best[j]
-                    cands.append((sc + logp[piece], j, seg + [piece]))
-            if cands:
-                # max score; tie -> smaller j (longer last piece)
-                sc = max(c[0] for c in cands)
-                js = [c for c in cands if c[0] == sc]
-                best[i] = (sc, min(js, key=lambda c: c[1])[2])
-        return best[n][1] if n in best else list(w)
-
-    docs = [
-        (1, "hug hugs pun"),
-        (2, "bun bun pug"),
-        (3, "zebra hug"),  # 'z','e','r','a' unseen -> per-char fallback
-    ]
-    df = spark.createDataFrame(docs, "doc_id: long, text: string")
-    got = {
-        r["doc_id"]: (r["n_words"], r["n_chars"], r["n_tokens"])
-        for r in t.unigram_token_counts(df, vocab).collect()
-    }
-    for doc_id, text in docs:
-        ws = text.split()
-        want = (
-            len(ws),
-            sum(len(w) for w in ws),
-            sum(len(ref_tokens(w)) for w in ws),
-        )
-        assert got[doc_id] == want, (doc_id, got[doc_id], want)
-    # sanity: the learned multis actually compress
-    assert got[1][2] < got[1][1]
 
 
 def test_hex_hamming_pairs_auto_agree(request):

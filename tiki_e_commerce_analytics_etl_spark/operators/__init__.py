@@ -13,7 +13,7 @@ Submodules (import the module, call its functions):
   quality     Check, run_checks, checks_report, summary,
               zscore_outliers, mad_outliers, histogram
   sessions    sessionize, session_stats
-  graph       connected_components, keep_canonical
+  graph       connected_components, pagerank_integer, triangle_stats
   ranking     bm25_topk
   text        words, token_count, lang_id, quality_score, fingerprint,
               repetition_stats, redact_pii_df, top_ngrams

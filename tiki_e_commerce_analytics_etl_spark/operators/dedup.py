@@ -1003,10 +1003,9 @@ def hex_hamming_pairs(
 
     ``agree="auto"`` picks the route from the MEASURED crossover: one
     eager ``approx_count_distinct`` pass over the signature column
-    (±5%, plenty for a 300k threshold decision — same
-    eager-job-inside-the-builder pattern as ``bpe_train``) chooses
-    agree=1 below ``auto_threshold`` distinct signatures and the
-    largest valid agree ≤ 3 above it.  Callers who know their corpus
+    (±5%, plenty for a 300k threshold decision) chooses agree=1
+    below ``auto_threshold`` distinct signatures and the largest valid
+    agree ≤ 3 above it.  Callers who know their corpus
     shape pass the integer directly and skip the pass; under
     ``agree="auto"``, ``sig_count_hint`` (exact/estimated distinct
     signature count) or ``stats_path`` (an engine-written table whose

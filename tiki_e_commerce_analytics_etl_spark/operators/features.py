@@ -6,8 +6,7 @@ fastText-style filtering): each token maps to a fixed-width feature
 index through the portable 48-bit md5 hash (no vocabulary build, no
 driver state, new tokens never change the schema), weighted by
 tf × rational-idf.  Output is SPARSE (doc, feature, weight) triples —
-the relational form that joins, aggregates, and feeds
-``ml.assemble_sparse_vectors`` for pyspark.ml estimators.
+the relational form that joins and aggregates.
 
 Determinism: idf uses the RATIONAL form (n_docs + 1) / (df + 1) — no
 transcendental log whose libm rounding could differ across engines —
@@ -169,168 +168,4 @@ def dsir_weights(
         "id",
         "n_tokens",
         F.floor(F.lit(1.0e6) * total).cast("long").alias("dsir_unats"),
-    )
-
-
-# Logistic-regression training term: ONE shared double formula so
-# Spark and the DuckDB oracle produce the identical double before the
-# floor quantization.  m is the exact int64 margin in micro-units,
-# y the 0/1 label, tf the integer feature count; the per-(doc,feature)
-# gradient contribution floor-quantizes to an exact int64 so the
-# feature-keyed SUM is order-independent (same trick as the k-means
-# update).  exp() parity between the JVM and libm holds across the
-# strict gate exactly as ln/pow do for DSIR / KN / temperature_mix.
-LOGREG_TERM_SQL = (
-    "CAST(FLOOR(1000000.0E0 * ("
-    "1.0E0 / (1.0E0 + exp(-(CAST(m AS DOUBLE) / 1000000.0E0)))"
-    " - CAST(y AS DOUBLE)) * CAST(tf AS DOUBLE)) AS BIGINT)"
-)
-
-
-def _trunc_div(a: int, d: int) -> int:
-    """Truncation-toward-zero integer division — the Python twin of
-    Spark `div` / DuckDB `//` (Python's // floors, which differs on
-    negatives)."""
-    q = abs(a) // d
-    return -q if a < 0 else q
-
-
-def logreg_train(
-    docs: DataFrame,
-    label_col,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    dim: int = 512,
-    iters: int = 5,
-    lr_den: int = 2,
-    reg_den: int | None = None,
-):
-    """Full-batch gradient-descent logistic regression over hashed
-    unigram counts — the trainable corpus-quality classifier of the
-    CCNet / GPT-3 filtering recipe (Wenzek et al. 2020 §4.4; Brown et
-    al. 2020 App. A), as exact distributed arithmetic.
-
-    feature = md5_48(token) mod ``dim`` (hashing trick, no
-    vocabulary); weights live in integer micro-units.  Per iteration
-    the margin m = b + Σ_f w[f]·tf[f] is EXACT int64, the per-
-    (doc, feature) gradient contribution floor-quantizes the shared
-    sigmoid formula (LOGREG_TERM_SQL) to int64, and the update is
-    w[f] -= G[f] div (lr_den·N) — so every training step is bit-
-    reproducible under any partitioning and replayable by the DuckDB
-    oracle's unrolled CTEs (learning rate = 1/lr_den).
-
-    ``label_col`` is a Column evaluating to 0/1 over ``docs``.
-    ``reg_den`` adds L2 weight decay in the same exact-integer
-    discipline: each step additionally shrinks every weight by
-    w div ``reg_den`` (decay rate lr·λ = 1/reg_den folded into one
-    truncating division; the bias is unregularized, as usual).  The
-    decay runs driver-side on the bounded weight dict, so it costs
-    nothing distributed and stays bit-reproducible.
-
-    Returns (weights, bias): a {feature: micro_weight} dict over the
-    features present in the corpus plus the bias, both bounded by
-    ``dim`` — the ONLY driver traffic, collected once per iteration
-    (the bounded-model-state pattern of bpe_train).
-
-    Scale shape per iteration: margins are one broadcast join of the
-    bounded weight table against the sparse (doc, feature, tf)
-    relation plus a doc-keyed hash aggregate; gradients are one
-    feature-keyed hash aggregate with dim-bounded output (map-side
-    partial combine absorbs hot features).  The corpus tokenizes and
-    feature-hashes ONCE (checkpointed) — iterations rescan the narrow
-    sparse relation only.
-    """
-    from .text import words
-
-    lab = docs.select(
-        F.col(id_col).alias("id"), label_col.cast("int").alias("y")
-    ).localCheckpoint(eager=False)
-    tok = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(words(F.col(text_col))).alias("term"),
-    ).filter(F.col("term") != "")
-    feats = (
-        tok.select("id", (md5_48(F.col("term")) % F.lit(dim)).alias("f"))
-        .groupBy("id", "f")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .localCheckpoint(eager=False)
-    )
-    n_docs = lab.count()
-    # Weight-key init without its own distinct+collect job: iteration
-    # 1 runs with an EMPTY weight dict — logreg_margins under no
-    # weights ≡ margins under all-zero weights (both evaluate to the
-    # bare bias for every doc) — and the key set is recovered from the
-    # first gradient collect, which emits exactly one row per feature
-    # present in ``feats`` (every (doc, f, tf) row contributes a term
-    # row, so no feature can be missing).  Bit-identical to the old
-    # zero-init, one fewer boundary job per training run (guide §1.2:
-    # fewer passes).
-    weights: dict[int, int] | None = None
-    bias = 0
-    for _ in range(iters):
-        margins = logreg_margins(lab, feats, weights or {}, bias)
-        terms = margins.join(feats, "id").select(
-            "f", F.expr(LOGREG_TERM_SQL).alias("t")
-        )
-        # Feature gradient AND bias gradient in ONE action: the bias
-        # rides as feature -1 through a unioned one-row aggregate, so
-        # each iteration is a single boundary job instead of two (the
-        # shared ``margins`` exchanges dedupe via ReuseExchange).
-        # md5_48 % dim is non-negative, so -1 cannot collide.
-        bias_branch = (
-            margins.agg(
-                F.sum(
-                    F.expr(
-                        LOGREG_TERM_SQL.replace("CAST(tf AS DOUBLE)", "1.0E0")
-                    )
-                ).alias("g")
-            ).select(F.lit(-1).cast("long").alias("f"), "g")
-        )
-        grad = {
-            r["f"]: r["g"]
-            for r in terms.groupBy("f")
-            .agg(F.sum("t").alias("g"))
-            .unionByName(bias_branch)
-            .collect()
-        }
-        bias_grad = grad.pop(-1)
-        if weights is None:
-            weights = {f: 0 for f in grad}
-        weights = {
-            f: w
-            - _trunc_div(grad.get(f, 0), lr_den * n_docs)
-            - (_trunc_div(w, reg_den) if reg_den else 0)
-            for f, w in weights.items()
-        }
-        bias = bias - _trunc_div(bias_grad, lr_den * n_docs)
-    if weights is None:  # iters == 0: preserve the zero-weight contract
-        weights = {
-            r["f"]: 0 for r in feats.select("f").distinct().collect()
-        }
-    return weights, bias
-
-
-def logreg_margins(
-    lab: DataFrame,
-    feats: DataFrame,
-    weights: dict[int, int],
-    bias: int,
-) -> DataFrame:
-    """(id, y, tf-weighted margin m in exact micro-units) for every
-    labeled doc — docs with no features carry the bias alone.  The
-    bounded weight table broadcasts; one doc-keyed hash aggregate."""
-    spark = lab.sparkSession
-    w_rows = [(int(f), int(w)) for f, w in sorted(weights.items())]
-    wdf = spark.createDataFrame(w_rows or [(0, 0)], "f long, w long")
-    sums = (
-        feats.join(F.broadcast(wdf), "f")
-        .groupBy("id")
-        .agg(F.sum(F.col("w") * F.col("tf")).alias("__s"))
-    )
-    return lab.join(sums, "id", "left").select(
-        "id",
-        "y",
-        (F.coalesce(F.col("__s"), F.lit(0)) + F.lit(int(bias)))
-        .cast("long")
-        .alias("m"),
     )

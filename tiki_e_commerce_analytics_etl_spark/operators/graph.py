@@ -4,8 +4,7 @@ A near-duplicate pipeline (MinHash/SimHash/Jaccard/embedding) produces
 candidate PAIRS; turning pairs into delete decisions needs the
 transitive closure — documents A~B and B~C must land in ONE cluster
 even though (A, C) was never emitted.  ``connected_components`` labels
-every endpoint with its component's minimum id; ``keep_canonical``
-then deletes every non-canonical member in one anti-join.
+every endpoint with its component's minimum id.
 
 Scale shape: min-label propagation with POINTER JUMPING — each round
 is two hash-partitioned joins (neighbor-min, then label-of-label), so
@@ -125,23 +124,6 @@ def connected_components(
             stacklevel=2,
         )
     return labels.select("node", F.col("comp").alias("component"))
-
-
-def keep_canonical(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    src: str = "id_a",
-    dst: str = "id_b",
-) -> DataFrame:
-    """Drop every near-duplicate that is not its cluster's canonical
-    (minimum-id) member: rows absent from the pair graph survive
-    untouched; one anti-join against the non-canonical node set."""
-    comps = connected_components(pairs, src, dst)
-    losers = comps.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")
 
 
 def pagerank_integer(
@@ -310,48 +292,4 @@ def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
             .otherwise(F.lit(0).cast("long"))
             .alias("gcc_ppm"),
         )
-    )
-
-
-def cluster_best_members(
-    scores: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    score_col: str = "quality",
-    src: str = "id_a",
-    dst: str = "id_b",
-) -> DataFrame:
-    """Representative selection — the decision step a dedup pipeline
-    runs AFTER transitive closure: inside every near-duplicate cluster
-    keep the single highest-``score_col`` member (ties broken toward
-    the smaller id) and mark the rest as droppable.  ``keep_canonical``
-    picks the minimum id blindly; real curation keeps the *best* copy
-    (longest / highest quality / least boilerplate), which is how
-    production web-corpus dedup resolves clusters.
-
-    Returns one row per node appearing in the pair graph:
-    ``(id_col, component, score_col, is_keeper)``.  Rows absent from
-    the graph are singletons — callers keep them untouched (same
-    contract as ``connected_components``).
-
-    Scale shape: pointer-jumping CC (O(log diameter) rounds of hash
-    joins), one hash join to attach scores keyed on the node id, one
-    hash agg per component (``max_by`` over the (score, -id) struct —
-    lexicographic argmax, no window sort), one hash join back on the
-    component id.  Component count ~ cluster count, so both join sides
-    stay partition-parallel; nothing collects.
-    """
-    comps = connected_components(pairs, src, dst)
-    members = comps.join(
-        scores.select(F.col(id_col).alias("node"), F.col(score_col).alias("__s")),
-        "node",
-    )
-    keepers = members.groupBy("component").agg(
-        F.expr("max_by(node, struct(__s, -node))").alias("__keep_id")
-    )
-    return members.join(keepers, "component").select(
-        F.col("node").alias(id_col),
-        "component",
-        F.col("__s").alias(score_col),
-        (F.col("node") == F.col("__keep_id")).alias("is_keeper"),
     )

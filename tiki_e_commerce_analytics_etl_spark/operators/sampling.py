@@ -243,9 +243,9 @@ def auto_shards(
     """Scale-proportional shard-count default (round 11): size
     ``n_shards`` so each shard's per-task rank-window sort holds about
     ``rows_per_shard`` rows — the parallelism lever of
-    ``shuffle_shards`` / ``training_export_plan``, derived from the
-    data instead of pinned (a pinned 8 measured 32.6× at 100× because
-    every task sorted corpus/8 rows).
+    ``shuffle_shards``, derived from the data instead of pinned (a
+    pinned 8 measured 32.6× at 100× because every task sorted
+    corpus/8 rows).
 
     The estimate is metadata-cost-only where possible
     (``stats.estimated_row_count``: parquet footers, then stats

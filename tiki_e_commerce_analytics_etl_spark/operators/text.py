@@ -5,11 +5,8 @@ pure Column expressions (JVM-side; no Python in the hot path).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Tiny deterministic stopword lists per language.  A real deployment
 # would load fastText lid or cld3 via a pandas_udf; the operator shape
@@ -158,107 +155,6 @@ def repetition_stats(df, text_col: str = "text", id_col: str = "doc_id"):
         top.alias("top_word_count"),
         (distinct_words.cast("double") / n_words.cast("double")).alias("distinct_ratio"),
         (top.cast("double") / n_words.cast("double")).alias("top_word_frac"),
-    )
-
-
-def subword_vocab(
-    df,
-    text_col: str = "text",
-    min_len: int = 2,
-    max_len: int = 6,
-    k: int = 200,
-):
-    """Corpus-derived subword vocabulary: the ``k`` most frequent
-    character n-grams (lengths ``min_len``..``max_len``) of the
-    corpus's words, weighted by word occurrence count, deterministic
-    tiebreak (count DESC, token ASC).  The "train a subword tokenizer
-    on your corpus" step, as two hash aggregations: word frequencies
-    first (so gram extraction runs once per UNIQUE word, not per
-    occurrence), then gram counts.  The (length × position) fan-out is
-    bounded by max_len per character of unique-word text.
-    """
-    wf = (
-        df.select(F.explode(words(F.col(text_col))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wcnt"))
-    )
-    # (l, s) pairs guarded so sequence() never sees start > stop
-    # (Spark's sequence DESCENDS for start > stop instead of yielding
-    # an empty array)
-    grams = (
-        wf.select("w", "wcnt", F.explode(F.sequence(F.lit(min_len), F.lit(max_len))).alias("l"))
-        .filter(F.length("w") >= F.col("l"))
-        .select(
-            "w",
-            "wcnt",
-            "l",
-            F.explode(F.sequence(F.lit(1), F.length("w") - F.col("l") + 1)).alias("s"),
-        )
-        .select(F.expr("substring(w, s, l)").alias("tok"), "wcnt")
-    )
-    return (
-        grams.groupBy("tok")
-        .agg(F.sum("wcnt").alias("cnt"))
-        .orderBy(F.desc("cnt"), F.asc("tok"))
-        .limit(k)
-    )
-
-
-def subword_token_counts(
-    df,
-    vocab_df,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_len: int = 6,
-):
-    """Greedy longest-match subword tokenization (the WordPiece
-    application step) against ``vocab_df`` (tok column, e.g. from
-    ``subword_vocab``): per document, word count and subword-token
-    count.  Characters with no vocab match consume one position as a
-    single-char token (no <unk> loss — counts stay exact).
-
-    Scale shape: tokenization runs once per UNIQUE word — the
-    Arrow-batched greedy matcher (mapInPandas, broadcast vocab set)
-    sees the corpus VOCABULARY, typically millions of rows where the
-    corpus has trillions of tokens — and per-doc counts come from
-    joining word frequencies back on the word key.  The vocabulary is
-    ``k`` bounded rows, collected once and shipped in the UDF closure.
-    """
-    vocab = frozenset(r["tok"] for r in vocab_df.select("tok").collect())
-
-    tf = (
-        df.select(F.col(id_col).alias("id"), F.explode(words(F.col(text_col))).alias("w"))
-        .groupBy("id", "w")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    uw = tf.select("w").distinct()
-
-    def tok_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            outs = []
-            for w in pdf["w"]:
-                pos, n = 0, 0
-                while pos < len(w):
-                    adv = 1
-                    for ln in range(min(max_len, len(w) - pos), 1, -1):
-                        if w[pos : pos + ln] in vocab:
-                            adv = ln
-                            break
-                    pos += adv
-                    n += 1
-                outs.append(n)
-            yield pd.DataFrame({"w": pdf["w"], "n_sub": outs})
-
-    subs = uw.mapInPandas(tok_batches, "w string, n_sub long")
-    return (
-        tf.join(subs, "w")
-        .groupBy("id")
-        .agg(
-            F.sum("tf").alias("n_words"),
-            F.sum(F.col("tf") * F.col("n_sub")).alias("n_subwords"),
-        )
     )
 
 
@@ -617,1180 +513,6 @@ def strip_common_tiles(
             "n_tiles",
             F.coalesce("kept_tiles", F.lit(0)).alias("kept_tiles"),
         )
-    )
-
-
-def _merge_scan(s: list, l: str, r: str, m: str) -> list:
-    """The reference BPE in-word merge: ONE left-to-right scan that
-    resumes AFTER a merged pair (``a a a`` + merge (a,a) → ``aa a``).
-    Shared by the trainer's per-round rewrite and the tokenizer's
-    apply so train ∘ apply can never drift."""
-    res, i, n = [], 0, len(s)
-    while i < n:
-        if i + 1 < n and s[i] == l and s[i + 1] == r:
-            res.append(m)
-            i += 2
-        else:
-            res.append(s[i])
-            i += 1
-    return res
-
-
-def _merge_fold_expr(syms_col, l: str, r: str, m: str):
-    """JVM-side single-merge rewrite: the reference left-to-right
-    resume-after-merge scan (``_merge_scan``'s exact semantics) as one
-    ``aggregate`` fold over (symbol, next-symbol) pairs — state is
-    (accumulated output, skip-next flag); a matched (l, r) emits ``m``
-    and skips its right side, and the scan resumes AFTER the merged
-    pair (``a a a`` + (a,a) → ``aa a``).  ``arrays_zip`` pads the last
-    element's lookahead with NULL, whose ``= r`` comparison is
-    three-valued false, so the final symbol can never start a merge.
-
-    Exists so the per-round trainer rewrite stays INSIDE the JVM
-    (guide §4.1): the previous Arrow stage cost a fixed ~0.25 s
-    JVM↔Python round trip per merge round, and the per-row Python
-    scan was interpreted anyway — measured on a 50k-row unique-word
-    table the fold is ~3× faster than the Arrow stage, and bit-exact
-    against ``_merge_scan`` on 4k random symbol arrays including the
-    l == r overlap regime (pytest-pinned).  The APPLY twins keep
-    their one-pass Arrow stage: they replay the WHOLE merge table per
-    word, which amortizes one boundary crossing over the full replay
-    (a chain of n_merges folds would bloat the plan instead)."""
-    nxt = F.slice(syms_col, 2, F.greatest(F.size(syms_col) - 1, F.lit(0)))
-    zipped = F.arrays_zip(syms_col.alias("c"), nxt.alias("n"))
-    init = F.struct(
-        F.expr("cast(array() as array<string>)").alias("acc"),
-        F.lit(False).alias("skip"),
-    )
-
-    def step(st, p):
-        return (
-            F.when(
-                st["skip"],
-                F.struct(st["acc"].alias("acc"), F.lit(False).alias("skip")),
-            )
-            .when(
-                (p["c"] == F.lit(l)) & (p["n"] == F.lit(r)),
-                F.struct(
-                    F.array_append(st["acc"], F.lit(m)).alias("acc"),
-                    F.lit(True).alias("skip"),
-                ),
-            )
-            .otherwise(
-                F.struct(
-                    F.array_append(st["acc"], p["c"]).alias("acc"),
-                    F.lit(False).alias("skip"),
-                )
-            )
-        )
-
-    return F.aggregate(zipped, init, step, lambda st: st["acc"])
-
-
-def _trainer_local_rows(override: int | None = None) -> int:
-    """Row bound under which a tokenizer trainer collects its unique
-    word/piece table and runs the merge loop driver-side (guide §1.2:
-    the distributed algorithm first — and for a table this small the
-    right distributed algorithm is "don't distribute the iteration").
-    Each merge round of the cluster loop is 1-2 boundary jobs whose
-    scheduling round-trips dominate for any vocabulary-sized table
-    (measured ~0.4-1 s/round at bench scale for MILLISECONDS of
-    arithmetic); below the bound, one count + one collect replace
-    ~2·n_merges jobs.  65536 rows × ~200 B is ~13 MB of driver memory
-    (vs the 16 GB driver heap); a 100 TB web corpus's unique-piece
-    table exceeds the bound and keeps the distributed loop.  Override
-    with SPARK_GRAFT_TRAINER_LOCAL_ROWS (0 forces distributed)."""
-    if override is not None:
-        return int(override)
-    return int(os.environ.get("SPARK_GRAFT_TRAINER_LOCAL_ROWS", "65536"))
-
-
-def _pair_present(s: list, l: str, r: str) -> bool:
-    """True iff the adjacent pair (l, r) occurs in symbol list ``s`` —
-    the cheap pre-check that lets the local rewrite skip reallocating
-    untouched words (``_merge_scan`` is the identity on them)."""
-    for i in range(len(s) - 1):
-        if s[i] == l and s[i + 1] == r:
-            return True
-    return False
-
-
-def _bpe_merge_loop_local(
-    items: list[tuple[list, int]], n_merges: int
-) -> list[tuple[int, str, str, str, int]]:
-    """Driver-side BPE merge loop over a collected (syms, wcnt) table —
-    bit-identical to the distributed loop by construction: the pair
-    count is the same wcnt-weighted adjacent-pair sum, the argmax
-    tiebreak is the same (count DESC, left ASC, right ASC) — Python's
-    code-point string order equals Spark's UTF8 binary order, since
-    UTF-8 byte order preserves code-point order — and the rewrite is
-    the shared ``_merge_scan``.  Lockstep vs the distributed route is
-    pytest-pinned on random corpora."""
-    merges: list[tuple[int, str, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
-        cnt: dict[tuple[str, str], int] = {}
-        for syms, w in items:
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                cnt[p] = cnt.get(p, 0) + w
-        if not cnt:
-            break
-        (l, r), c = min(cnt.items(), key=lambda kv: (-kv[1], kv[0]))
-        m = l + r
-        merges.append((rank, l, r, m, int(c)))
-        items = [
-            (_merge_scan(s, l, r, m), w) if _pair_present(s, l, r) else (s, w)
-            for s, w in items
-        ]
-    return merges
-
-
-def _bpe_merge_loop(
-    cur, n_merges: int, local_rows: int | None = None
-) -> list[tuple[int, str, str, str, int]]:
-    """The shared BPE training loop over a checkpointed
-    (syms array<string>, wcnt long) unique-word/piece table: per round
-    one uniform-key pair-count shuffle + a TakeOrdered(1) argmax (a
-    one-row boundary collect) + one narrow JVM fold rewrite
-    (``_merge_fold_expr`` — ``_merge_scan`` semantics without a
-    Python stage), ``localCheckpoint``-truncated lineage.  Used by
-    both the character-level trainer (``bpe_train``) and the
-    byte-level one (``byte_bpe_train``) — the loop is symbol-agnostic;
-    only the initial symbolization differs.
-
-    Scale-adaptive route (round 12, guide §1.2): when the unique table
-    is under ``_trainer_local_rows`` the loop collects it once and
-    trains driver-side (``_bpe_merge_loop_local`` — same counts, same
-    tiebreak, same ``_merge_scan``), replacing ~2·n_merges boundary
-    jobs with two; above the bound the distributed loop below runs
-    unchanged.  The count probe materializes the symbolization
-    checkpoint either way, so the large-corpus path pays only one
-    extra block-read job."""
-    if cur.count() <= _trainer_local_rows(local_rows):
-        rows = cur.collect()
-        cur.unpersist()
-        return _bpe_merge_loop_local(
-            [(list(r["syms"]), int(r["wcnt"])) for r in rows], n_merges
-        )
-    merges: list[tuple[int, str, str, str, int]] = []
-    # Lazy-checkpoint round discipline (guide §1.2 — fewer passes):
-    # each round's rewrite is a LAZY localCheckpoint, so the Arrow
-    # rewrite of round N materializes INSIDE round N+1's pair-count
-    # job (one boundary job per round instead of an eager-checkpoint
-    # job plus the argmax job), and the final round's rewrite — which
-    # nothing consumes — never executes at all.  The superseded
-    # table's blocks are released only AFTER its child materializes
-    # (a lazy checkpoint's lineage is truncated, so unpersisting the
-    # parent first would make the child uncomputable).
-    prev = None
-    try:
-        for rank in range(1, n_merges + 1):
-            pairs = (
-                cur.filter(F.size("syms") >= 2)
-                .select(
-                    F.explode(
-                        F.arrays_zip(
-                            F.expr("slice(syms, 1, size(syms) - 1)").alias("l"),
-                            F.expr("slice(syms, 2, size(syms) - 1)").alias("r"),
-                        )
-                    ).alias("p"),
-                    "wcnt",
-                )
-                .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-                .agg(F.sum("wcnt").alias("cnt"))
-            )
-            best = (
-                pairs.orderBy(F.desc("cnt"), F.asc("l"), F.asc("r"))
-                .limit(1)
-                .collect()
-            )
-            # the argmax job materialized cur's checkpoint blocks, so
-            # its parent is now safe to release
-            if prev is not None:
-                prev.unpersist()
-                prev = None
-            if not best:
-                break  # no adjacent pairs left anywhere
-            l, r, cnt = best[0]["l"], best[0]["r"], int(best[0]["cnt"])
-            merges.append((rank, l, r, l + r, cnt))
-
-            # JVM-side rewrite (see _merge_fold_expr): no Python
-            # boundary inside the training loop
-            nxt = cur.select(
-                _merge_fold_expr(F.col("syms"), l, r, l + r).alias("syms"),
-                "wcnt",
-            ).localCheckpoint(eager=False)
-            prev = cur
-            cur = nxt
-    finally:
-        if prev is not None:
-            prev.unpersist()
-        cur.unpersist()
-    return merges
-
-
-def bpe_train(
-    df,
-    text_col: str = "text",
-    n_merges: int = 10,
-    local_rows: int | None = None,
-):
-    """Byte-pair-encoding merge training (Sennrich et al. 2016) over a
-    corpus column: ``n_merges`` rounds of "count adjacent symbol pairs
-    weighted by word frequency → merge the most frequent pair
-    everywhere", returning the learned merge table
-    (merge_rank, left, right, merged, pair_count).
-
-    Deterministic by construction: the argmax tiebreak is
-    (count DESC, left ASC, right ASC), and in-word merge application
-    is the reference left-to-right scan that resumes AFTER a merged
-    pair (``a a a`` + merge (a,a) → ``aa a`` in one pass) — semantics
-    a non-overlapping string replace cannot reproduce, hence the
-    Arrow-batched pandas stage for the rewrite (the one part of BPE
-    that is genuinely sequential per word).
-
-    Scale shape: training state is the UNIQUE-WORD table (word symbol
-    arrays + counts) — the classic BPE trick; 100 TB of text collapses
-    to its vocabulary before round 1.  Each round is one uniform-key
-    pair-count shuffle + a TakeOrdered(1) argmax (a one-row boundary
-    collect) + one narrow mapInPandas rewrite; ``localCheckpoint``
-    truncates the per-round lineage exactly like the pagerank loop, so
-    round N never re-executes rounds 1..N-1.
-    """
-    if n_merges < 1:
-        raise ValueError("n_merges must be >= 1")
-    spark = df.sparkSession
-    wf = (
-        df.select(F.explode(words(F.col(text_col))).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wcnt"))
-    )
-    cur = wf.select(
-        F.split(F.col("w"), "").alias("syms"), F.col("wcnt")
-    ).localCheckpoint(eager=False)
-    merges = _bpe_merge_loop(cur, n_merges, local_rows)
-    return spark.createDataFrame(
-        merges,
-        "merge_rank: int, left: string, right: string, "
-        "merged: string, pair_count: long",
-    )
-
-
-def bpe_token_counts(
-    df,
-    merges_df,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """BPE tokenization (the APPLY step consuming ``bpe_train``'s
-    merge table): per document, word count, character count and BPE
-    token count after applying every merge in ``merge_rank`` order —
-    each merge the same resume-after-merge left-to-right scan the
-    trainer uses (``_merge_scan``), so train ∘ apply are in lockstep
-    by construction.
-
-    Returns (id_col, n_words, n_chars, n_tokens); ``n_chars`` is the
-    pre-merge symbol count, so ``n_chars / n_tokens`` is the corpus
-    compression the learned vocabulary achieves.
-
-    Scale shape (the WordPiece-apply pattern at
-    ``subword_token_counts``): the sequential scan runs once per
-    UNIQUE word via an Arrow-batched ``mapInPandas`` over the corpus
-    vocabulary — never per occurrence — and per-document counts come
-    from joining word frequencies back on the word key.  The merge
-    table is bounded (``n_merges`` rows), collected once, ordered by
-    rank, and shipped in the UDF closure.
-    """
-    merges = [
-        (r["left"], r["right"], r["merged"])
-        for r in merges_df.select("merge_rank", "left", "right", "merged")
-        .orderBy("merge_rank")
-        .collect()
-    ]
-
-    def replay(syms: list) -> int:
-        """Token count of one symbol sequence after the full merge
-        replay — shared verbatim by the distributed Arrow stage and
-        the driver-local route so they cannot drift."""
-        for l, r, m in merges:
-            if len(syms) < 2:
-                break
-            syms = _merge_scan(syms, l, r, m)
-        return len(syms)
-
-    tf = (
-        df.select(
-            F.col(id_col).alias("id"), F.explode(words(F.col(text_col))).alias("w")
-        )
-        .filter(F.col("w") != "")
-        .groupBy("id", "w")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    uw = tf.select("w").distinct()
-
-    # Scale-adaptive route (round 12 — the trainer gate applied to the
-    # APPLY pass): a vocabulary-sized unique-word table replays the
-    # merge table driver-side and ships the bounded result back as a
-    # broadcast relation, removing the Python stage and its exchange;
-    # above the gate the Arrow pass runs unchanged.
-    spark = df.sparkSession
-    if uw.count() <= _trainer_local_rows():
-        rows = [
-            (w, len(w), replay(list(w)))
-            for (w,) in uw.collect()
-        ]
-        toks = F.broadcast(
-            spark.createDataFrame(rows, "w string, n_sym long, n_tok long")
-        ) if rows else spark.createDataFrame(
-            [], "w string, n_sym long, n_tok long"
-        )
-    else:
-        def tok_batches(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                n_sym = [len(w) for w in pdf["w"]]
-                n_tok = [replay(list(w)) for w in pdf["w"]]
-                yield pd.DataFrame(
-                    {"w": pdf["w"], "n_sym": n_sym, "n_tok": n_tok}
-                )
-
-        toks = uw.mapInPandas(tok_batches, "w string, n_sym long, n_tok long")
-    return (
-        tf.join(toks, "w")
-        .groupBy("id")
-        .agg(
-            F.sum("tf").alias("n_words"),
-            F.sum(F.col("tf") * F.col("n_sym")).alias("n_chars"),
-            F.sum(F.col("tf") * F.col("n_tok")).alias("n_tokens"),
-        )
-        .withColumnRenamed("id", id_col)
-    )
-
-
-# GPT-2 pre-tokenizer (Radford et al. 2019; the regex is public via
-# the released gpt-2 encoder and tiktoken): contractions first, then
-# optional-space + letter run / number run / other-punct run, then the
-# lookahead-trimmed whitespace run.  Java regex (what Spark's
-# regexp_extract_all compiles): \p{L} and \p{N} are Unicode
-# categories, \s is the ASCII class — the independent pure-Python
-# reference in tests/test_round11.py reproduces exactly those
-# semantics character-by-character, no regex engine shared.
-GPT2_SPLIT_REGEX = (
-    r"'s|'t|'re|'ve|'m|'ll|'d"
-    r"| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+"
-    r"|\s+(?!\S)|\s+"
-)
-
-
-def gpt2_pieces(text: Column) -> Column:
-    """Pre-tokenizer pieces of a text column under the GPT-2 split
-    regex — JVM-side (``regexp_extract_all``), no Python in the hot
-    path.  Pieces keep their leading space (byte-level BPE's 'Ġ'
-    convention after byte mapping)."""
-    return F.regexp_extract_all(text, F.lit(GPT2_SPLIT_REGEX), 0)
-
-
-def bytes_to_unicode() -> dict[int, str]:
-    """The GPT-2 byte↔unicode table: the 188 printable latin-1 bytes
-    map to themselves; the other 68 (controls, space, DEL, soft
-    hyphen, …) map to U+0100.. in byte order, so every byte gets a
-    PRINTABLE, distinct character and merge symbols stay plain
-    strings.  Re-derived from the published construction (openai
-    gpt-2 encoder.py / tiktoken — public); e.g. space → 'Ġ' (U+0120),
-    newline → 'Ċ' (U+010A)."""
-    bs = (
-        list(range(ord("!"), ord("~") + 1))
-        + list(range(ord("¡"), ord("¬") + 1))
-        + list(range(ord("®"), ord("ÿ") + 1))
-    )
-    cs = bs[:]
-    n = 0
-    for b in range(256):
-        if b not in bs:
-            bs.append(b)
-            cs.append(256 + n)
-            n += 1
-    return dict(zip(bs, (chr(c) for c in cs)))
-
-
-def _byte_syms(piece: str, b2u: dict[int, str]) -> list[str]:
-    """A pre-tokenizer piece as its byte-symbol sequence: UTF-8
-    encode, then map every byte through the GPT-2 table — one symbol
-    per BYTE (a multi-byte character like 'é' becomes two symbols),
-    which is what makes byte-level BPE closed over arbitrary input
-    with a 256-symbol base alphabet and no <unk>."""
-    return [b2u[b] for b in piece.encode("utf-8")]
-
-
-def byte_bpe_train(
-    df,
-    text_col: str = "text",
-    n_merges: int = 10,
-    local_rows: int | None = None,
-):
-    """Byte-level BPE merge training — the GPT-2/Llama construction
-    (Radford et al. 2019 §2.2; Sennrich et al. 2016 merges over byte
-    symbols): pre-tokenize with the GPT-2 regex (pieces keep their
-    leading space), map each piece's UTF-8 bytes through the
-    ``bytes_to_unicode`` table, then run the same
-    count-pairs → argmax → rewrite loop as the character-level
-    trainer.  Returns (merge_rank, left, right, merged, pair_count);
-    symbols are the printable mapped characters ('Ġ' = space prefix).
-
-    Deterministic: (count DESC, left ASC, right ASC) argmax tiebreak,
-    resume-after-merge rewrite via the shared ``_merge_scan`` — the
-    identical loop (``_bpe_merge_loop``) as ``bpe_train``, so the
-    char- and byte-level trainers cannot drift procedurally.
-
-    Scale shape: the corpus collapses to its UNIQUE pre-token piece
-    table before round 1 (the classic trick — 100 TB of text becomes
-    its piece vocabulary); the regex split is JVM-side; the one
-    Python step (UTF-8 byte mapping) is a single Arrow-batched pass
-    over the bounded unique-piece table, never per occurrence.
-    """
-    import pandas as pd
-
-    if n_merges < 1:
-        raise ValueError("n_merges must be >= 1")
-    spark = df.sparkSession
-    pf = (
-        df.select(F.explode(gpt2_pieces(F.col(text_col))).alias("p"))
-        .groupBy("p")
-        .agg(F.count(F.lit(1)).alias("wcnt"))
-    )
-    b2u = bytes_to_unicode()
-
-    def to_syms(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame(
-                {
-                    "syms": [_byte_syms(p, b2u) for p in pdf["p"]],
-                    "wcnt": pdf["wcnt"].to_numpy(),
-                }
-            )
-
-    cur = pf.mapInPandas(
-        to_syms, "syms array<string>, wcnt long"
-    ).localCheckpoint(eager=False)
-    merges = _bpe_merge_loop(cur, n_merges, local_rows)
-    return spark.createDataFrame(
-        merges,
-        "merge_rank: int, left: string, right: string, "
-        "merged: string, pair_count: long",
-    )
-
-
-def byte_bpe_token_counts(
-    df,
-    merges_df,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Byte-level BPE tokenization (the APPLY step for
-    ``byte_bpe_train``): per document, pre-token piece count, UTF-8
-    byte count, and token count after replaying every merge in
-    ``merge_rank`` order — the same resume-after-merge ``_merge_scan``
-    and the same ``bytes_to_unicode`` mapping the trainer uses, so
-    train ∘ apply are in lockstep by construction.
-
-    Returns (id_col, n_pieces, n_bytes, n_tokens); ``n_bytes /
-    n_tokens`` is the bytes-per-token compression the learned
-    vocabulary achieves (the metric tokenizer papers report).
-
-    Scale shape: the sequential merge replay runs once per UNIQUE
-    piece via Arrow-batched ``mapInPandas``; per-document counts come
-    from joining piece frequencies back on the piece key.  The merge
-    table is bounded, collected once, shipped in the closure.
-    """
-    merges = [
-        (r["left"], r["right"], r["merged"])
-        for r in merges_df.select("merge_rank", "left", "right", "merged")
-        .orderBy("merge_rank")
-        .collect()
-    ]
-    b2u = bytes_to_unicode()
-
-    tf = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(gpt2_pieces(F.col(text_col))).alias("p"),
-        )
-        .groupBy("id", "p")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    up = tf.select("p").distinct()
-
-    def tok_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            n_b, n_tok = [], []
-            for p in pdf["p"]:
-                syms = _byte_syms(p, b2u)
-                n_b.append(len(syms))
-                for l, r, m in merges:
-                    if len(syms) < 2:
-                        break
-                    syms = _merge_scan(syms, l, r, m)
-                n_tok.append(len(syms))
-            yield pd.DataFrame({"p": pdf["p"], "n_b": n_b, "n_tok": n_tok})
-
-    toks = up.mapInPandas(tok_batches, "p string, n_b long, n_tok long")
-    return (
-        tf.join(toks, "p")
-        .groupBy("id")
-        .agg(
-            F.sum("tf").alias("n_pieces"),
-            F.sum(F.col("tf") * F.col("n_b")).alias("n_bytes"),
-            F.sum(F.col("tf") * F.col("n_tok")).alias("n_tokens"),
-        )
-        .withColumnRenamed("id", id_col)
-    )
-
-
-def _unigram_viterbi(word: str, logp: dict, max_len: int) -> list:
-    """Viterbi segmentation of ``word`` into vocabulary pieces
-    maximizing total log-probability — the unigram-LM E-step
-    (Kudo 2018).  Deterministic tiebreak: on exactly-equal score the
-    LONGER last piece wins (smaller split point).  Falls back to
-    per-character pieces only if the word is unsegmentable (cannot
-    happen while every seen character stays in the vocab)."""
-    n = len(word)
-    best = [0.0] + [None] * n
-    back = [0] * (n + 1)
-    for i in range(1, n + 1):
-        bs, bj = None, None
-        for ln in range(1, min(max_len, i) + 1):
-            j = i - ln
-            if best[j] is None:
-                continue
-            lp = logp.get(word[j:i])
-            if lp is None:
-                continue
-            s = best[j] + lp
-            if bs is None or s > bs or (s == bs and j < bj):
-                bs, bj = s, j
-        best[i], back[i] = bs, bj
-    if best[n] is None:
-        return list(word)
-    pieces, i = [], n
-    while i > 0:
-        j = back[i]
-        pieces.append(word[j:i])
-        i = j
-    pieces.reverse()
-    return pieces
-
-
-def unigram_train(
-    df,
-    text_col: str = "text",
-    vocab_size: int = 30,
-    seed_max_len: int = 4,
-    seed_multi: int = 1000,
-    shrink: float = 0.75,
-    local_rows: int | None = None,
-):
-    """Unigram-LM (SentencePiece-style) tokenizer training (Kudo
-    2018) — the third industry-standard trainer next to ``bpe_train``
-    and the WordPiece apply, sharing their unique-word-collapse
-    skeleton: 100 TB of text reduces to its vocabulary before the
-    first EM round.
-
-    Algorithm (pinned, so an independent reference implementation
-    reproduces it bit-for-bit — the tests do):
-
-    1. Seed: every substring of every unique word with length <=
-       ``seed_max_len``, counted per OCCURRENCE (overlaps included)
-       weighted by word frequency.  The vocabulary starts as all
-       single characters (never pruned) plus the top ``seed_multi``
-       multi-char substrings by (count DESC, piece ASC).
-    2. EM round (hard EM): piece log-probs are
-       ``log(max(count, 0.5)) - log(sum counts)`` (0.5 pseudo-count
-       keeps required chars usable); every unique word is Viterbi-
-       segmented (``_unigram_viterbi``, longer-last-piece tiebreak)
-       and pieces are recounted weighted by word frequency.  Multi-
-       char pieces the segmentation stopped using drop out.
-    3. Prune: while more than ``vocab_size - n_chars`` multi-char
-       pieces survive, keep the top ``max(target, ceil(n*shrink))``
-       (strictly decreasing) by (count DESC, piece ASC) and rerun the
-       EM round, so reported counts always come from a segmentation
-       under the FINAL vocabulary.
-
-    Returns (rank, piece, piece_len, count) ordered by
-    (count DESC, piece ASC) — integer counts only, no float columns,
-    so the oracle comparison is exact.
-
-    Scale shape: the E-step is one Arrow-batched ``mapInPandas`` over
-    the UNIQUE-word table per round with the bounded vocabulary
-    (<= seed_multi + charset) broadcast, followed by one uniform-key
-    aggregate; the only collects are the bounded vocab/count tables
-    (same boundary class as bpe_train's one-row argmax).  The prune
-    loop is O(log_{1/shrink}(seed_multi / vocab_size)) rounds.
-    """
-    import math
-
-    import pandas as pd
-
-    if vocab_size < 1:
-        raise ValueError("vocab_size must be >= 1")
-    if not 0.0 < shrink < 1.0:
-        raise ValueError("shrink must be in (0, 1)")
-    spark = df.sparkSession
-    wf = (
-        df.select(F.explode(words(F.col(text_col))).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wcnt"))
-        .localCheckpoint(eager=True)
-    )
-    try:
-        # Scale-adaptive route (round 12, guide §1.2 — the
-        # _bpe_merge_loop gate): a vocabulary-sized unique-word table
-        # collects once and the seed count + every EM/prune round run
-        # driver-side — the EM segmentation is ``_unigram_viterbi``
-        # (the SAME function the distributed Arrow stage calls) and
-        # the accumulation is the same integer-weighted sum, so the
-        # routes are bit-identical (lockstep-pinned in pytest).
-        # Replaces ~2 + n_rounds boundary jobs (each EM round is a
-        # broadcast + Arrow stage + collect) with the one checkpoint
-        # job + one collect.  Above the bound the distributed loop
-        # runs unchanged.
-        local_items: list[tuple[str, int]] | None = None
-        if wf.count() <= _trainer_local_rows(local_rows):
-            local_items = [(r["w"], int(r["wcnt"])) for r in wf.collect()]
-
-        if local_items is not None:
-            seed_counts: dict[str, int] = {}
-            for w, c in local_items:
-                n = len(w)
-                for s in range(n):
-                    for ln in range(1, min(seed_max_len, n - s) + 1):
-                        p = w[s : s + ln]
-                        seed_counts[p] = seed_counts.get(p, 0) + c
-            chars = {p: c for p, c in seed_counts.items() if len(p) == 1}
-            multi = dict(
-                sorted(
-                    ((p, c) for p, c in seed_counts.items() if len(p) > 1),
-                    key=lambda kv: (-kv[1], kv[0]),
-                )[:seed_multi]
-            )
-        else:
-            subs = F.flatten(
-                F.transform(
-                    F.sequence(F.lit(1), F.length("w")),
-                    lambda s: F.transform(
-                        F.sequence(
-                            F.lit(1),
-                            F.least(F.lit(seed_max_len), F.length("w") - s + 1),
-                        ),
-                        lambda ln: F.col("w").substr(s, ln),
-                    ),
-                )
-            )
-            seed = (
-                wf.select(F.explode(subs).alias("piece"), "wcnt")
-                .groupBy("piece")
-                .agg(F.sum("wcnt").alias("cnt"))
-            )
-            # bounded collects: the charset and the capped multi-char seed
-            chars = {
-                r["piece"]: int(r["cnt"])
-                for r in seed.where(F.length("piece") == 1).collect()
-            }
-            multi = {
-                r["piece"]: int(r["cnt"])
-                for r in seed.where(F.length("piece") > 1)
-                .orderBy(F.desc("cnt"), F.asc("piece"))
-                .limit(seed_multi)
-                .collect()
-            }
-        target_multi = max(vocab_size - len(chars), 0)
-        counts = {**chars, **multi}
-        if not counts:
-            # empty/whitespace-only corpus: no seed charset, nothing
-            # to estimate — return an empty vocabulary, not a crash
-            return spark.createDataFrame(
-                [], "rank: int, piece: string, piece_len: int, count: long"
-            )
-
-        def _merge_used(used: dict) -> dict:
-            # chars always survive (0-count allowed); multis must be used
-            out = {c: used.get(c, 0) for c in chars}
-            out.update({p: n for p, n in used.items() if len(p) > 1})
-            return out
-
-        def estep(vocab_counts: dict) -> dict:
-            total = sum(vocab_counts.values())
-            logp = {
-                p: math.log(max(c, 0.5)) - math.log(total)
-                for p, c in vocab_counts.items()
-            }
-            max_len = max(len(p) for p in logp)
-            if local_items is not None:
-                agg: dict = {}
-                for w, c in local_items:
-                    for piece in _unigram_viterbi(w, logp, max_len):
-                        agg[piece] = agg.get(piece, 0) + c
-                return _merge_used(agg)
-            bc = spark.sparkContext.broadcast((logp, max_len))
-
-            def seg_batches(batches):
-                lp, ml = bc.value
-                for pdf in batches:
-                    agg: dict = {}
-                    for w, c in zip(pdf["w"], pdf["wcnt"]):
-                        for piece in _unigram_viterbi(w, lp, ml):
-                            agg[piece] = agg.get(piece, 0) + int(c)
-                    yield pd.DataFrame(
-                        {"piece": list(agg), "cnt": list(agg.values())}
-                    )
-
-            try:
-                rows = (
-                    wf.mapInPandas(seg_batches, "piece string, cnt long")
-                    .groupBy("piece")
-                    .agg(F.sum("cnt").alias("cnt"))
-                    .collect()  # bounded by |vocab|
-                )
-            finally:
-                # one broadcast per EM/prune round: release it once the
-                # round's collect is done, or long sessions leak them
-                bc.destroy()
-            return _merge_used({r["piece"]: int(r["cnt"]) for r in rows})
-
-        while True:
-            counts = estep(counts)
-            multis = [p for p in counts if len(p) > 1]
-            if len(multis) <= target_multi:
-                break
-            keep_n = max(
-                target_multi, min(len(multis) - 1, math.ceil(len(multis) * shrink))
-            )
-            keep = sorted(multis, key=lambda p: (-counts[p], p))[:keep_n]
-            counts = {
-                **{c: counts[c] for c in chars},
-                **{p: counts[p] for p in keep},
-            }
-    finally:
-        wf.unpersist()
-    ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-    return spark.createDataFrame(
-        [
-            (i + 1, p, len(p), int(c))
-            for i, (p, c) in enumerate(ranked)
-        ],
-        "rank: int, piece: string, piece_len: int, count: long",
-    )
-
-
-def unigram_token_counts(
-    df,
-    vocab_df,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Unigram-LM tokenization (the APPLY step consuming
-    ``unigram_train``'s vocabulary): per document, word count,
-    character count and unigram token count under the SAME Viterbi
-    segmentation the trainer's E-step uses (``_unigram_viterbi``,
-    piece log-probs ``log(max(count, 0.5)) - log(total)``) — train ∘
-    apply cannot drift by construction, the same lockstep guarantee
-    as ``bpe_token_counts``/``_merge_scan``.
-
-    A word containing characters outside the vocabulary is
-    unsegmentable and falls back to one token per character for that
-    whole word (the documented ``_unigram_viterbi`` fallback) — apply
-    must be total over unseen text.
-
-    Returns (id_col, n_words, n_chars, n_tokens).
-
-    Scale shape (the established apply pattern): the vocabulary is
-    bounded → collected once and broadcast; Viterbi runs once per
-    UNIQUE word in one Arrow stage; per-document totals come from
-    joining word frequencies back on the word key.
-    """
-    import math
-
-    import pandas as pd
-
-    spark = df.sparkSession
-    rows = vocab_df.select("piece", "count").collect()  # bounded vocab
-    total = sum(max(int(r["count"]), 0) for r in rows) or 1
-    logp = {
-        r["piece"]: math.log(max(int(r["count"]), 0.5)) - math.log(total)
-        for r in rows
-    }
-    max_len = max((len(p) for p in logp), default=1)
-    bc = spark.sparkContext.broadcast((logp, max_len))
-
-    tf = (
-        df.select(F.col(id_col).alias("id"), words(F.col(text_col)).alias("__ws"))
-        .select("id", F.explode("__ws").alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("id", "w")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    uw = tf.select("w").distinct()
-
-    def tok_batches(batches):
-        lp, ml = bc.value
-        for pdf in batches:
-            n_sym = [len(w) for w in pdf["w"]]
-            n_tok = [
-                len(_unigram_viterbi(w, lp, ml)) for w in pdf["w"]
-            ]
-            yield pd.DataFrame({"w": pdf["w"], "n_sym": n_sym, "n_tok": n_tok})
-
-    toks = uw.mapInPandas(tok_batches, "w string, n_sym long, n_tok long")
-    return (
-        tf.join(toks, "w")
-        .groupBy("id")
-        .agg(
-            F.sum("tf").alias("n_words"),
-            F.sum(F.col("tf") * F.col("n_sym")).alias("n_chars"),
-            F.sum(F.col("tf") * F.col("n_tok")).alias("n_tokens"),
-        )
-        .withColumnRenamed("id", id_col)
-    )
-
-
-def _wp_syms(word: str) -> list:
-    """WordPiece initial segmentation: first character bare, every
-    continuation character ``##``-prefixed (the Schuster & Nakajima /
-    BERT convention shared with ``subword_token_counts``'s greedy
-    matcher)."""
-    return [word[0]] + ["##" + c for c in word[1:]]
-
-
-def _wp_merge_loop_local(
-    items: list[tuple[list, int]], n_merges: int
-) -> list[tuple[int, str, str, str, int, int, int]]:
-    """Driver-side WordPiece merge loop over a collected (syms, wcnt)
-    table — bit-identical to the distributed loop: the same
-    wcnt-weighted symbol/pair counts, scores compared as EXACT
-    rationals (``fractions.Fraction`` — the distributed route's
-    near-tie band resolves to the same argmax by construction), the
-    same (left ASC, right ASC) tiebreak on exact equality, and the
-    shared ``_merge_scan`` rewrite.  Lockstep vs the distributed route
-    is pytest-pinned on random corpora."""
-    from fractions import Fraction
-
-    merges: list[tuple[int, str, str, str, int, int, int]] = []
-    for rank in range(1, n_merges + 1):
-        scnt: dict[str, int] = {}
-        pcnt: dict[tuple[str, str], int] = {}
-        for syms, w in items:
-            for s in syms:
-                scnt[s] = scnt.get(s, 0) + w
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                pcnt[p] = pcnt.get(p, 0) + w
-        if not pcnt:
-            break
-        best = None
-        best_fr = None
-        for (l, r), c in pcnt.items():
-            fr = Fraction(c, scnt[l] * scnt[r])
-            if (
-                best is None
-                or fr > best_fr
-                or (fr == best_fr and (l, r) < (best[0], best[1]))
-            ):
-                best, best_fr = (l, r, c), fr
-        l, r, c = best
-        m = l + r[2:]  # the right side is always a ##-continuation
-        merges.append((rank, l, r, m, int(c), int(scnt[l]), int(scnt[r])))
-        items = [
-            (_merge_scan(s, l, r, m), w) if _pair_present(s, l, r) else (s, w)
-            for s, w in items
-        ]
-    return merges
-
-
-def wordpiece_train(
-    df,
-    text_col: str = "text",
-    n_merges: int = 10,
-    local_rows: int | None = None,
-):
-    """WordPiece merge training (Schuster & Nakajima 2012; the BERT
-    tokenizer's trainer) — completes the tokenizer-trainer family
-    next to ``bpe_train`` (frequency argmax) and ``unigram_train``
-    (EM prune): per round, adjacent symbol pairs are scored by
-    LIKELIHOOD GAIN ``score(a,b) = count(ab) / (count(a) · count(b))``
-    and the best pair is merged everywhere; the merged symbol drops
-    the right side's ``##`` prefix (``low`` + ``##er`` → ``lower``).
-
-    Deterministic by construction (so an independent reference
-    reproduces it bit-for-bit — the tests do):
-
-    - initial symbols per word: ``_wp_syms`` (first char bare, rest
-      ``##``-prefixed);
-    - ``count(x)`` is the occurrence count of symbol x across the
-      CURRENT segmentation of the corpus, weighted by word frequency
-      (multiple occurrences inside one word all count);
-    - pair scores are compared as EXACT RATIONALS — the engine takes
-      the double-score argmax, re-collects every pair within a 1e-9
-      relative band of it (a bounded sliver: exact ties plus float
-      neighbors), and resolves the winner driver-side with
-      ``fractions.Fraction`` — so float rounding can never pick a
-      different merge than exact arithmetic;
-    - tiebreak on exactly-equal score: (left ASC, right ASC);
-    - in-word rewrite is the shared ``_merge_scan`` (resume after a
-      merged pair), the same scan ``bpe_train`` and the apply twin
-      use, so train ∘ apply cannot drift.
-
-    Returns (merge_rank, left, right, merged, pair_count, left_count,
-    right_count) — integer counts only (the exact score is
-    pair_count / (left_count · right_count)), so the oracle
-    comparison is exact.
-
-    Scale shape (the ``bpe_train`` skeleton): training state is the
-    UNIQUE-WORD table; each round is one uniform-key pair-count
-    shuffle, one symbol-count shuffle joined back on the pair's two
-    sides (scored once into an eager checkpoint), a one-row double
-    argmax plus the bounded near-tie collect (block-read probes), and
-    one narrow Arrow rewrite riding a LAZY ``localCheckpoint`` that
-    materializes inside the NEXT round's scoring job; checkpoint
-    truncation keeps round N from re-executing rounds 1..N-1.
-    """
-    from fractions import Fraction
-
-    if n_merges < 1:
-        raise ValueError("n_merges must be >= 1")
-    spark = df.sparkSession
-    wf = (
-        df.select(F.explode(words(F.col(text_col))).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("wcnt"))
-    )
-    first = F.array(F.element_at("chars", 1))
-    rest = F.transform(
-        F.slice("chars", 2, F.greatest(F.size("chars") - 1, F.lit(0))),
-        lambda c: F.concat(F.lit("##"), c),
-    )
-    cur = (
-        wf.select(F.split("w", "").alias("chars"), "wcnt")
-        .select(F.concat(first, rest).alias("syms"), "wcnt")
-        .localCheckpoint(eager=False)
-    )
-
-    # Scale-adaptive route (round 12, guide §1.2 — same gate as
-    # _bpe_merge_loop): a vocabulary-sized unique-word table trains
-    # driver-side in one count + one collect instead of ~3 boundary
-    # jobs per round; above the bound the distributed loop runs
-    # unchanged.
-    if cur.count() <= _trainer_local_rows(local_rows):
-        rows = cur.collect()
-        cur.unpersist()
-        return spark.createDataFrame(
-            _wp_merge_loop_local(
-                [(list(r["syms"]), int(r["wcnt"])) for r in rows], n_merges
-            ),
-            "merge_rank: int, left: string, right: string, merged: string, "
-            "pair_count: long, left_count: long, right_count: long",
-        )
-
-    merges: list[tuple[int, str, str, str, int, int, int]] = []
-    # Round discipline (measured A/B, guide §1.1): `scored` keeps its
-    # EAGER checkpoint — the argmax and near-tie band are two trivial
-    # block-read probes against it, and an in-plan
-    # max-broadcast-filter variant that fused them into one job
-    # re-computed the whole scoring subtree twice and measured ~50%
-    # SLOWER per round — but the per-round Arrow REWRITE is now a
-    # LAZY checkpoint that materializes inside round N+1's scoring
-    # job (one fewer job per round, and the final round's rewrite,
-    # which nothing consumes, never executes).  The superseded
-    # table's blocks release only after its child materializes.
-    prev = None
-    try:
-        for rank in range(1, n_merges + 1):
-            sym_counts = (
-                cur.select(F.explode("syms").alias("s"), "wcnt")
-                .groupBy("s")
-                .agg(F.sum("wcnt").alias("scnt"))
-            )
-            pairs = (
-                cur.filter(F.size("syms") >= 2)
-                .select(
-                    F.explode(
-                        F.arrays_zip(
-                            F.expr("slice(syms, 1, size(syms) - 1)").alias("l"),
-                            F.expr("slice(syms, 2, size(syms) - 1)").alias("r"),
-                        )
-                    ).alias("p"),
-                    "wcnt",
-                )
-                .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-                .agg(F.sum("wcnt").alias("cnt"))
-            )
-            # sym_counts is vocabulary-bounded (distinct live symbols
-            # ≤ alphabet + merges) at ANY corpus size — an explicit
-            # broadcast (guide §3.1) keeps both score joins
-            # shuffle-free and saves two sequential AQE shuffle
-            # stages per round (measured: the per-round wall on a
-            # tiny corpus is almost entirely stage round-trips).
-            scored = (
-                pairs.join(
-                    F.broadcast(
-                        sym_counts.select(
-                            F.col("s").alias("l"), F.col("scnt").alias("ca")
-                        )
-                    ),
-                    "l",
-                )
-                .join(
-                    F.broadcast(
-                        sym_counts.select(
-                            F.col("s").alias("r"), F.col("scnt").alias("cb")
-                        )
-                    ),
-                    "r",
-                )
-                .withColumn(
-                    "score",
-                    F.col("cnt").cast("double")
-                    / (F.col("ca") * F.col("cb")).cast("double"),
-                )
-                .localCheckpoint(eager=True)  # scored once, probed twice
-            )
-            # the scoring job materialized cur's lazy rewrite blocks,
-            # so the superseded round is now safe to release
-            if prev is not None:
-                prev.unpersist()
-                prev = None
-            try:
-                top = (
-                    scored.orderBy(F.desc("score"), F.asc("l"), F.asc("r"))
-                    .limit(1)
-                    .collect()
-                )
-                if not top:
-                    break  # no adjacent pairs left anywhere
-                # exact-rational resolution over the near-tie band:
-                # every pair within 1e-9 RELATIVE of the double max —
-                # float error is ~1e-16/op, so the true argmax is
-                # always inside; exact ties are all inside
-                band = top[0]["score"] * (1.0 - 1e-9)
-                cands = scored.where(F.col("score") >= band).collect()
-            finally:
-                scored.unpersist()
-            best = None
-            best_fr = None
-            for row in cands:
-                fr = Fraction(int(row["cnt"]), int(row["ca"]) * int(row["cb"]))
-                if (
-                    best is None
-                    or fr > best_fr
-                    or (fr == best_fr and (row["l"], row["r"]) < (best[0], best[1]))
-                ):
-                    best, best_fr = (row["l"], row["r"], row), fr
-            l, r, row = best[0], best[1], best[2]
-            m = l + r[2:]  # the right side is always a ##-continuation
-            merges.append(
-                (rank, l, r, m, int(row["cnt"]), int(row["ca"]), int(row["cb"]))
-            )
-
-            # JVM-side rewrite (see _merge_fold_expr): no Python
-            # boundary inside the training loop
-            nxt = cur.select(
-                _merge_fold_expr(F.col("syms"), l, r, m).alias("syms"),
-                "wcnt",
-            ).localCheckpoint(eager=False)
-            prev = cur
-            cur = nxt
-    finally:
-        if prev is not None:
-            prev.unpersist()
-        cur.unpersist()
-    return spark.createDataFrame(
-        merges,
-        "merge_rank: int, left: string, right: string, merged: string, "
-        "pair_count: long, left_count: long, right_count: long",
-    )
-
-
-def wordpiece_token_counts(
-    df,
-    merges_df,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """WordPiece tokenization (the APPLY step consuming
-    ``wordpiece_train``'s merge table): per document, word count,
-    character count, and WordPiece token count after replaying every
-    merge in ``merge_rank`` order over the ``_wp_syms`` initial
-    segmentation — the SAME ``_merge_scan`` the trainer uses, so
-    train ∘ apply are in lockstep by construction (the
-    ``bpe_token_counts`` guarantee; greedy longest-match inference
-    against a flat vocabulary is the separate ``subword_token_counts``
-    operator).
-
-    Returns (id_col, n_words, n_chars, n_tokens); ``n_chars`` is the
-    pre-merge symbol count, so ``n_chars / n_tokens`` is the corpus
-    compression the learned vocabulary achieves.
-
-    Scale shape (the established apply pattern): the bounded merge
-    table is collected once and shipped in the closure; the scan runs
-    once per UNIQUE word in one Arrow stage; per-document totals come
-    from joining word frequencies back on the word key.
-    """
-    merges = [
-        (r["left"], r["right"], r["merged"])
-        for r in merges_df.select("merge_rank", "left", "right", "merged")
-        .orderBy("merge_rank")
-        .collect()
-    ]
-
-    tf = (
-        df.select(
-            F.col(id_col).alias("id"), F.explode(words(F.col(text_col))).alias("w")
-        )
-        .filter(F.col("w") != "")
-        .groupBy("id", "w")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    uw = tf.select("w").distinct()
-
-    def tok_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            n_sym, n_tok = [], []
-            for w in pdf["w"]:
-                syms = _wp_syms(w)
-                n_sym.append(len(syms))
-                for l, r, m in merges:
-                    if len(syms) < 2:
-                        break
-                    syms = _merge_scan(syms, l, r, m)
-                n_tok.append(len(syms))
-            yield pd.DataFrame(
-                {"w": pdf["w"], "n_sym": n_sym, "n_tok": n_tok}
-            )
-
-    toks = uw.mapInPandas(tok_batches, "w string, n_sym long, n_tok long")
-    return (
-        tf.join(toks, "w")
-        .groupBy("id")
-        .agg(
-            F.sum("tf").alias("n_words"),
-            F.sum(F.col("tf") * F.col("n_sym")).alias("n_chars"),
-            F.sum(F.col("tf") * F.col("n_tok")).alias("n_tokens"),
-        )
-        .withColumnRenamed("id", id_col)
     )
 
 
