@@ -902,3 +902,144 @@ def test_next_changes_cursor_lifecycle(spark, tmp_path):
     commit3(); commit_b()
     assert acid.next_changes(spark, path, cursor)[0] is None
     assert acid.next_changes(spark, path, cursor, consumer="b")[0] is None
+
+
+# ------------------------------------------------------ recorded schemas
+
+
+def _strip_schemas(path):
+    """Rewrite every manifest as a commit before schemas were recorded."""
+    for v in acid._list_versions(path):
+        m = acid._read_manifest(path, v)
+        m.pop("schemas")
+        m.pop("txn_schema")
+        with open(acid._manifest_path(path, v), "w") as f:
+            json.dump(m, f)
+
+
+def _jobs_planning_read(spark, path, group):
+    """Spark jobs started while ``read_atomic`` plans (no action)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "plan read_atomic")
+    try:
+        df = acid.read_atomic(spark, path)
+        df.schema  # analysis, no action
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _three_txns(spark, path):
+    for tag, part in (("t0", "a"), ("t1", "b"), ("t2", "c")):
+        acid.atomic_overwrite_partitions(_mk(spark, tag, n=4, parts=(part,)), path, ["p"])
+
+
+def test_schema_recorded_once_per_manifest_and_pruned(spark, tmp_path):
+    path = str(tmp_path / "t")
+    _three_txns(spark, path)
+    m = acid._read_manifest(path, 2)
+    assert m["schemas"] == ["k BIGINT,payload STRING,p STRING"]
+    live = {acid._txn_root(f) for fs in m["partitions"].values() for f in fs}
+    assert set(m["txn_schema"]) == live and len(live) == 3
+    # replacing every partition leaves one live txn and one map entry
+    acid.atomic_overwrite_partitions(_mk(spark, "all", n=6, parts=("a", "b", "c")), path, ["p"])
+    m = acid._read_manifest(path, 3)
+    assert m["txn_schema"] == {acid._txn_root(m["partitions"]["p=a"][0]): 0}
+
+
+def test_read_atomic_planning_starts_no_spark_job(spark, tmp_path):
+    path = str(tmp_path / "t")
+    _three_txns(spark, path)
+    assert _jobs_planning_read(spark, path, "acid-plan-recorded") == 0
+    # the same snapshot without recorded schemas infers one per txn
+    _strip_schemas(path)
+    assert _jobs_planning_read(spark, path, "acid-plan-inferred") > 0
+
+
+def test_manifest_without_schema_reads_same_rows(spark, tmp_path):
+    path = str(tmp_path / "t")
+    _three_txns(spark, path)
+    acid.atomic_overwrite_partitions(
+        _mk(spark, "wide", n=4, parts=("a",)).withColumn("extra", F.lit(1).cast("long")),
+        path, ["p"],
+    )
+    with_schema = acid.read_atomic(spark, path)
+    want = sorted(map(tuple, with_schema.collect()))
+    _strip_schemas(path)
+    old_path = acid.read_atomic(spark, path)
+    assert old_path.schema == with_schema.schema
+    assert sorted(map(tuple, old_path.collect())) == want
+    # a commit over a pre-schema manifest records its own txn only; the
+    # carried-forward txns keep reading through inference
+    acid.atomic_overwrite_partitions(_mk(spark, "new", n=4, parts=("c",)), path, ["p"])
+    m = acid._read_manifest(path, acid.latest_version(path))
+    assert list(m["txn_schema"]) == [acid._txn_root(m["partitions"]["p=c"][0])]
+    got = {(r.p, r.payload) for r in acid.read_atomic(spark, path).collect()}
+    assert got == {("a", "wide"), ("b", "t1"), ("c", "new")}
+
+
+def test_compact_records_schema_and_keeps_read_schema(spark, tmp_path):
+    path = str(tmp_path / "t")
+    _three_txns(spark, path)
+    before = acid.read_atomic(spark, path)
+    rows = sorted(map(tuple, before.collect()))
+    v = acid.compact(spark, path)
+    m = acid._read_manifest(path, v)
+    assert m["schemas"] and set(m["txn_schema"]) == {
+        acid._txn_root(f) for fs in m["partitions"].values() for f in fs
+    }
+    after = acid.read_atomic(spark, path)
+    assert after.schema == before.schema
+    assert sorted(map(tuple, after.collect())) == rows
+
+
+def test_string_partition_value_keeps_written_type(spark, tmp_path):
+    """'007' is a string partition value: inference would read it back
+    as the int 7 (or, once an 'abc' partition is live, as the string
+    '7'); the recorded schema keeps the written string."""
+    path = str(tmp_path / "t")
+    v0 = acid.atomic_overwrite_partitions(
+        spark.createDataFrame([(1, "007")], "k long, code string"), path, ["code"]
+    )
+    df = acid.read_atomic(spark, path)
+    assert df.schema["code"].dataType.simpleString() == "string"
+    assert [r.code for r in df.collect()] == ["007"]
+    v1 = acid.atomic_overwrite_partitions(
+        spark.createDataFrame([(2, "abc")], "k long, code string"), path, ["code"]
+    )
+    assert sorted(r.code for r in acid.read_atomic(spark, path).collect()) == ["007", "abc"]
+    feed = acid.changes_between(spark, path, None, v1)
+    assert feed.schema["code"].dataType.simpleString() == "string"
+    assert sorted(r.code for r in feed.collect()) == ["007", "abc"]
+    assert [r.code for r in acid.changes_between(spark, path, None, v0).collect()] == ["007"]
+
+
+def test_partition_columns_keep_written_types(spark, tmp_path):
+    """The date, long and timestamp partition columns the DAGs and
+    streaming sinks write read back with their written types (inference
+    would read the long 5 as an int)."""
+    import datetime
+
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(1, datetime.date(2024, 1, 2), 5, datetime.datetime(2024, 1, 2, 10, 30))],
+        "k long, d date, n long, ts timestamp",
+    )
+    acid.atomic_overwrite_partitions(df, path, ["d", "n", "ts"])
+    got = acid.read_atomic(spark, path)
+    assert [(f.name, f.dataType.simpleString()) for f in got.schema.fields] == [
+        ("k", "bigint"), ("d", "date"), ("n", "bigint"), ("ts", "timestamp"),
+    ]
+    assert [tuple(r) for r in got.collect()] == [tuple(df.first())]
+
+
+def test_commit_and_parquet_row_counts_from_metadata(spark, tmp_path):
+    path = str(tmp_path / "t")
+    acid.atomic_overwrite_partitions(_mk(spark, "old", n=10), path, ["p"])
+    v1 = acid.atomic_overwrite_partitions(_mk(spark, "new", n=4).filter(F.col("p") == "a"), path, ["p"])
+    # only partition a's 2 new rows, not the carried-forward partition b
+    assert acid.commit_row_count(path, v1) == 2
+    assert acid.snapshot_row_count(path, v1) == 7
+    plain = str(tmp_path / "plain")
+    _mk(spark, "x", n=9).write.parquet(plain)
+    assert acid.parquet_row_count(plain) == 9

@@ -252,6 +252,28 @@ def test_platform_end_to_end(spark, platform_dirs):
     assert summary["ds"] == DS and summary["mart_rows"] == 3
     assert all(summary["checks"].values())
 
+    # Every row count the DAGs take from manifests or footers equals a
+    # recount of what it names.
+    def xcom(pipeline, task):
+        return _json.load(open(os.path.join(state_dir, f"{pipeline}__{DS}.json")))[task]["xcom"]
+
+    def table_rows(table):
+        return acid.read_atomic(spark, os.path.join(data_dir, "warehouse", table)).count()
+
+    staged = xcom("tiki_etl_pipeline", "transform_to_parquet")
+    assert xcom("tiki_etl_pipeline", "load_to_bigquery") == {
+        "fact_daily_snapshot": spark.read.parquet(staged["fact_daily_snapshot"]).count(),
+        "dim_products": table_rows("dim_products"),
+        "dim_categories": table_rows("dim_categories"),
+    }
+    fetched = xcom("trends_pipeline", "fetch_trends_data")
+    assert fetched["row_count"] == spark.read.parquet(fetched["raw_path"]).count() > 0
+    transformed = xcom("trends_pipeline", "transform_trends_data")
+    assert transformed["transform_row_count"] == spark.read.parquet(transformed["parquet_file"]).count()
+    assert xcom("trends_pipeline", "merge_to_fact")["fact_rows"] == table_rows("fact_google_trends")
+    fx_staged = xcom("fx_pipeline", "transform_fx_data")["parquet_path"]
+    assert xcom("fx_pipeline", "load_to_bigquery")["rows"] == spark.read.parquet(fx_staged).count() == 1
+
     mart = acid.read_atomic(spark, os.path.join(data_dir, "warehouse", "mart_daily_analytics"))
     rows = mart.collect()
     # 3 valid fixture products (101 deduped, 102, 103); ghost/freebie rejected.

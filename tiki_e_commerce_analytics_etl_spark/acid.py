@@ -19,7 +19,11 @@ Layout under a table root::
                                       partitioned); INVISIBLE until a
                                       manifest references it
     <path>/_manifests/v00000042.json  immutable snapshot: partition ->
-                                      [relative data file paths]
+                                      [relative data file paths], per-
+                                      partition row counts, and the
+                                      schema each live txn wrote (each
+                                      distinct DDL string stored once,
+                                      ``txn_schema`` maps txn -> index)
 
 Commit protocol (``atomic_overwrite_partitions``):
 
@@ -46,7 +50,9 @@ Commit protocol (``atomic_overwrite_partitions``):
 Readers (``read_atomic``) list ``_manifests/``, pick the max version
 (or an explicit ``version=`` for time travel), and read exactly the
 files it names — an old-or-new snapshot across ALL partitions, which
-is *stronger* than BigQuery's per-partition atomicity.  Old snapshots
+is *stronger* than BigQuery's per-partition atomicity.  Each file is
+read with the schema its transaction recorded, so planning a read
+opens no parquet footer and starts no Spark job.  Old snapshots
 stay readable until ``vacuum`` drops them, so an in-flight reader is
 never broken by a concurrent commit (the paths it resolved still
 exist) — the failure mode plain dynamic overwrite cannot avoid.
@@ -69,6 +75,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
@@ -119,6 +126,29 @@ def _escape_partition_value(value: str | None) -> str:
     )
 
 
+def _txn_root(rel: str) -> str:
+    """``data/txn-<id>`` of a manifest-relative data file path."""
+    return os.path.join(*rel.split(os.sep)[:2])
+
+
+def _txn_schemas(manifest: dict) -> dict[str, str]:
+    """``{data/txn-<id>: DDL}`` for the manifest's transactions whose
+    commit recorded a schema; empty for manifests written before
+    schemas were recorded."""
+    ddls = manifest.get("schemas", [])
+    return {root: ddls[i] for root, i in manifest.get("txn_schema", {}).items()}
+
+
+def _written_schema_ddl(df: DataFrame, partition_cols: list[str]) -> str:
+    """``df``'s schema with the partition columns moved to the end — the
+    column order (and, for partition columns, the types) a Hive-
+    partitioned read of the written files must produce — as the DDL
+    string ``DataFrameReader.schema`` accepts."""
+    fields = [f for f in df.schema.fields if f.name not in partition_cols]
+    fields += [df.schema[c] for c in partition_cols]
+    return StructType(fields).toDDL()
+
+
 def latest_version(path: str) -> int | None:
     """Highest committed snapshot version, or None for an empty table."""
     versions = _list_versions(path)
@@ -137,6 +167,13 @@ def _relative_parquet_files(root: str) -> dict[str, list[str]]:
             part = "" if rel_dir == "." else rel_dir
             out.setdefault(part, []).append(os.path.join(dirpath, name))
     return out
+
+
+def _footer_rows(files) -> int:
+    """Total rows of the given parquet files, from their footers."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
 def _json_stat(value):
@@ -241,6 +278,7 @@ def atomic_overwrite_partitions(
             f"{path}: expected base v{expected_base_version} but latest is "
             f"v{latest_version(path)}; re-read and redo the read-modify-write"
         )
+    written_ddl = _written_schema_ddl(df, list(partition_cols))
     txn = uuid.uuid4().hex[:12]
     txn_rel = os.path.join(_DATA_DIR, f"txn-{txn}")
     txn_dir = os.path.join(path, txn_rel)
@@ -259,10 +297,8 @@ def atomic_overwrite_partitions(
     # (metadata-only) — carried in the manifest so table-level stats
     # need no file listing at read time
     try:
-        import pyarrow.parquet as pq
-
         new_rows = {
-            part: sum(pq.ParquetFile(os.path.join(path, f)).metadata.num_rows for f in files)
+            part: _footer_rows(os.path.join(path, f) for f in files)
             for part, files in new_parts.items()
         }
     except ImportError:  # pragma: no cover - pyarrow is baked in
@@ -334,6 +370,16 @@ def atomic_overwrite_partitions(
             for rel, st in {**base.get("file_stats", {}), **new_file_stats}.items()
             if rel in live
         }
+        # Schemas: likewise carried forward and pruned to live txns, each
+        # distinct DDL stored once (a daily-partitioned table's txns
+        # share one schema, so the manifest grows by a map entry per txn).
+        live_roots = {_txn_root(f) for f in live}
+        txn_ddls = {
+            root: ddl
+            for root, ddl in {**_txn_schemas(base), txn_rel: written_ddl}.items()
+            if root in live_roots
+        }
+        ddls = sorted(set(txn_ddls.values()))
         manifest = {
             "version": next_v,
             "txn": txn,
@@ -342,6 +388,8 @@ def atomic_overwrite_partitions(
             "partition_rows": merged_rows,
             "app_versions": app_versions,
             "file_stats": merged_stats,
+            "schemas": ddls,
+            "txn_schema": {root: ddls.index(ddl) for root, ddl in txn_ddls.items()},
         }
         payload = json.dumps(manifest, sort_keys=True).encode()
         # THE commit point — and it must be CONTENT-atomic, not just
@@ -438,22 +486,26 @@ def snapshot_files(
     return kept
 
 
-def _read_rel_files(spark: SparkSession, path: str, rel_files: list[str]) -> DataFrame | None:
+def _read_rel_files(
+    spark: SparkSession, path: str, rel_files: list[str], schemas: dict[str, str]
+) -> DataFrame | None:
     """Union the given manifest-relative data files, per-transaction
     with that txn's basePath so Hive partition columns are re-derived;
-    None when the list is empty.  Shared by ``read_atomic`` and
-    ``changes_between``."""
+    None when the list is empty.  ``schemas`` (``_txn_schemas``) gives
+    the schema each txn wrote: Spark then infers none from a footer, so
+    building the frame starts no job, and partition columns keep their
+    written types.  A txn without one (committed before schemas were
+    recorded) is read with inference, as it always was.  Shared by
+    ``read_atomic`` and ``changes_between``."""
     by_txn: dict[str, list[str]] = {}
     for rel in rel_files:
-        # rel = data/txn-<id>/[<part dirs>/]file.parquet
-        txn_root = os.path.join(*rel.split(os.sep)[:2])
-        by_txn.setdefault(txn_root, []).append(os.path.join(path, rel))
+        by_txn.setdefault(_txn_root(rel), []).append(os.path.join(path, rel))
     parts = None
     for txn_root, files in sorted(by_txn.items()):
-        df = (
-            spark.read.option("basePath", os.path.join(path, txn_root))
-            .parquet(*sorted(files))
-        )
+        reader = spark.read.option("basePath", os.path.join(path, txn_root))
+        if txn_root in schemas:
+            reader = reader.schema(schemas[txn_root])
+        df = reader.parquet(*sorted(files))
         # allowMissingColumns: a snapshot may mix transactions written
         # before and after a column was added (schema evolution);
         # columns absent from an older transaction read as NULL, the
@@ -472,6 +524,11 @@ def read_atomic(
     """Read a committed snapshot (latest by default; ``version=`` for
     time travel).  Only files named by that manifest are opened, so a
     concurrent commit can never tear the result.
+
+    Planning is metadata-only: the files and each transaction's schema
+    come from the manifest, so building the DataFrame opens no parquet
+    footer and starts no Spark job (a transaction committed before
+    schemas were recorded falls back to footer inference).
 
     ``partitions={"snapshot_date": "2024-01-01"}`` prunes at the
     MANIFEST level — only the matching partitions' files are even
@@ -509,7 +566,7 @@ def read_atomic(
     # Every file zone-map-skipped: the predicate provably selects zero
     # rows, but we still need the snapshot's schema — read one file and
     # let the caller's filter produce the empty result.
-    return _read_rel_files(spark, path, all_files or skipped[:1])
+    return _read_rel_files(spark, path, all_files or skipped[:1], _txn_schemas(manifest))
 
 
 def snapshot_row_count(path: str, version: int | None = None) -> int | None:
@@ -522,6 +579,26 @@ def snapshot_row_count(path: str, version: int | None = None) -> int | None:
             return None
     rows = _read_manifest(path, version).get("partition_rows")
     return sum(rows.values()) if rows else None
+
+
+def commit_row_count(path: str, version: int) -> int:
+    """Rows in the partitions that ``version``'s own transaction filled,
+    from its manifest alone — for an overwrite commit, exactly the rows
+    it wrote, so a caller needs no ``count()`` that re-runs the plan."""
+    manifest = _read_manifest(path, version)
+    root = os.path.join(_DATA_DIR, f"txn-{manifest['txn']}")
+    rows = manifest.get("partition_rows", {})
+    return sum(
+        rows.get(part, 0)
+        for part, files in manifest["partitions"].items()
+        if any(_txn_root(f) == root for f in files)
+    )
+
+
+def parquet_row_count(root: str) -> int:
+    """Rows in the parquet files under ``root`` (a plain Spark write),
+    summed from their footers — a recount that starts no Spark job."""
+    return _footer_rows(f for files in _relative_parquet_files(root).values() for f in files)
 
 
 def last_txn_version(path: str, app: str) -> int:
@@ -632,7 +709,7 @@ def vacuum(
     referenced_ever = set()
     for v in versions:
         refs = {
-            os.path.join(*rel.split(os.sep)[:2])
+            _txn_root(rel)
             for files in _read_manifest(path, v)["partitions"].values()
             for rel in files
         }
@@ -738,14 +815,18 @@ def changes_between(
         if to_version is None:
             raise FileNotFoundError(f"no committed snapshot under {path}")
     old_files: set[str] = set()
+    schemas: dict[str, str] = {}
     if from_version is not None:
         old = _read_manifest(path, from_version)
         old_files = {f for fs in old.get("partitions", {}).values() for f in fs}
+        schemas = _txn_schemas(old)
     new = _read_manifest(path, to_version)
     new_files = {f for fs in new.get("partitions", {}).values() for f in fs}
+    # a txn's recorded schema never changes, so the two maps merge
+    schemas.update(_txn_schemas(new))
 
-    df_add = _read_rel_files(spark, path, sorted(new_files - old_files))
-    df_rm = _read_rel_files(spark, path, sorted(old_files - new_files))
+    df_add = _read_rel_files(spark, path, sorted(new_files - old_files), schemas)
+    df_rm = _read_rel_files(spark, path, sorted(old_files - new_files), schemas)
 
     if df_add is None and df_rm is None:
         base = read_atomic(spark, path, version=to_version).limit(0)

@@ -112,11 +112,11 @@ def tiki_pipeline(state_dir: str | None = None, retry_delay: float = 0.0) -> Pip
         counts: dict[str, int] = {}
 
         # Fact: partition-replace of this ds only (K3, load_to_bq.py:185-188).
+        # Row counts come from each commit's manifest, not a recount.
         fact = spark.read.parquet(staged["fact_daily_snapshot"])
-        acid.atomic_overwrite_partitions(
-            fact, _warehouse(ctx, "fact_daily_snapshot"), ["snapshot_date"]
-        )
-        counts["fact_daily_snapshot"] = fact.count()
+        path = _warehouse(ctx, "fact_daily_snapshot")
+        version = acid.atomic_overwrite_partitions(fact, path, ["snapshot_date"])
+        counts["fact_daily_snapshot"] = acid.commit_row_count(path, version)
 
         # Dims: MERGE upsert (K4 keep-created_at / K5 manual-wins).
         for table, keys, kw in (
@@ -127,8 +127,9 @@ def tiki_pipeline(state_dir: str | None = None, retry_delay: float = 0.0) -> Pip
             kw = {k: [c for c in v if c in source.columns] for k, v in kw.items()}
             target = _read_if_exists(ctx, table)
             merged = source if target is None else merge_upsert(target, source, keys, **kw)
-            acid.atomic_overwrite_partitions(merged, _warehouse(ctx, table))
-            counts[table] = merged.count()
+            path = _warehouse(ctx, table)
+            version = acid.atomic_overwrite_partitions(merged, path)
+            counts[table] = acid.snapshot_row_count(path, version)
         return counts
 
     return p
@@ -206,7 +207,7 @@ def trends_pipeline(state_dir: str | None = None, retry_delay: float = 0.0) -> P
             wide = trends_csv.read_trends_csv(ctx.spark, ctx.params["trends_csv_path"])
         raw_path = os.path.join(ctx.params["data_dir"], "raw", "trends", f"ds={ctx.ds}")
         wide.write.mode("overwrite").parquet(raw_path)
-        return {"raw_path": raw_path, "row_count": wide.count()}
+        return {"raw_path": raw_path, "row_count": acid.parquet_row_count(raw_path)}
 
     @p.task("transform_trends_data", upstream=("fetch_trends_data",), retries=RETRIES, retry_delay=retry_delay)
     def transform(ctx: Context) -> dict:
@@ -214,7 +215,7 @@ def trends_pipeline(state_dir: str | None = None, retry_delay: float = 0.0) -> P
         long_df = trends.transform_trends(wide)
         path = os.path.join(ctx.params["data_dir"], "staging", f"ds={ctx.ds}", "trends")
         long_df.write.mode("overwrite").parquet(path)
-        return {"parquet_file": path, "transform_row_count": long_df.count()}
+        return {"parquet_file": path, "transform_row_count": acid.parquet_row_count(path)}
 
     @p.task("load_to_staging", upstream=("transform_trends_data",), retries=RETRIES, retry_delay=retry_delay)
     def staging(ctx: Context) -> dict:
@@ -232,8 +233,8 @@ def trends_pipeline(state_dir: str | None = None, retry_delay: float = 0.0) -> P
         target = _read_if_exists(ctx, "fact_google_trends")
         merged = source if target is None else trends.upsert_trends(target, source)
         path = _warehouse(ctx, "fact_google_trends")
-        acid.atomic_overwrite_partitions(merged, path)
-        return {"fact_rows": merged.count()}
+        version = acid.atomic_overwrite_partitions(merged, path)
+        return {"fact_rows": acid.snapshot_row_count(path, version)}
 
     @p.task("log_success", upstream=("merge_to_fact",), retries=0)
     def log_success(ctx: Context) -> dict:
@@ -284,7 +285,7 @@ def fx_pipeline(state_dir: str | None = None, retry_delay: float = 0.0) -> Pipel
         df = ctx.spark.read.parquet(ctx.xcom["transform_fx_data"]["parquet_path"])
         path = _warehouse(ctx, "dim_exchange_rate")
         version = acid.atomic_overwrite_partitions(df, path, ["date"])
-        return {"rows": df.count(), "version": version}
+        return {"rows": acid.commit_row_count(path, version), "version": version}
 
     return p
 
